@@ -551,15 +551,14 @@ def q_ann_topk(spark, sf):
 
 
 def q_embedding_neardup(spark, sf):
-    from b_pdf_parser_spark.operators.similarity import cosine
+    from b_pdf_parser_spark.operators.similarity import _np_cosine_score
 
     e = _t(spark, sf, "embeddings")
     a = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cosine(F.col("va"), F.col("vb")) >= 0.4)
+        _np_cosine_score(a.crossJoin(b).filter(F.col("id_a") < F.col("id_b")), "va", "vb")
+        .filter(F.col("score") >= 0.4)
         .select("id_a", "id_b")
     )
 
@@ -632,22 +631,8 @@ def q_lsh_ann_topk(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# extraction pipeline (rows-only: the whole point is non-SQL byte walking)
+# extraction pipeline
 # ---------------------------------------------------------------------------
-
-_CORPUS_N = 150
-_CORPUS_SEED = 7
-
-
-def _corpus_extracted(spark):
-    import b_pdf_parser_spark
-    from b_pdf_parser_spark.operators.extract import extract_pages
-    from b_pdf_parser_spark.sources.pages import synth_pages_df
-
-    b_pdf_parser_spark.ship_package(spark)  # --py-files equivalent for workers
-    pages = synth_pages_df(spark, _CORPUS_N, seed=_CORPUS_SEED, num_partitions=8)
-    return extract_pages(pages, num_partitions=16)
-
 
 # the FULL bench corpus (the 100k-doc RNG corpus the headline measures):
 # size matches bench.py's SPARK_GRAFT_DOCS so the two share one cache and
@@ -919,45 +904,6 @@ def q_gopher_quality(spark, sf):
     return gopher_quality_frame(_t(spark, sf, "documents"))
 
 
-def q_extract_txn_crosscheck(spark, sf):
-    """Self-oracle for the extraction hot path: the per-doc UDF cursor walk
-    and the pure-relational window re-derivation (posexplode → running-sum
-    sessionization → positional classifiers) must emit identical transaction
-    rows on column-layout documents. Expected single row with
-    n_only_udf = n_only_relational = 0 and n_udf = n_relational.
-
-    No DuckDB oracle BY DESIGN: the query's whole point is comparing two
-    in-engine implementations against each other (a third, SQL-side
-    restatement would just be `extract_transactions`' oracle again, which
-    already hash-checks the UDF path in the driver window). Pinned by:
-    the zero/equal-count contract asserted in tests, plus both sides'
-    independent oracles (`extract_transactions` hash row, and
-    `sessionize_events` for the window machinery)."""
-    from b_pdf_parser_spark.plans.transactions_relational import transactions_relational
-    from b_pdf_parser_spark.plans.verify import transactions_table
-
-    cols = ["url", "seq", "date", "description", "user", "debit", "credit", "balance"]
-    # column-layout docs only: table/inline layouts are the other strategies'
-    # domain, outside the relational line grammar
-    ext = (
-        _corpus_extracted(spark)
-        .filter(F.col("txn_strategy") == "column")
-        .localCheckpoint(eager=False)
-    )
-    a = transactions_table(ext).select(cols).localCheckpoint(eager=False)
-    b = transactions_relational(ext).select(cols).localCheckpoint(eager=False)
-
-    def cnt(df, name):
-        return df.agg(F.count("*").alias(name))
-
-    return (
-        cnt(a, "n_udf")
-        .crossJoin(cnt(b, "n_relational"))
-        .crossJoin(cnt(a.exceptAll(b), "n_only_udf"))
-        .crossJoin(cnt(b.exceptAll(a), "n_only_relational"))
-    )
-
-
 def q_extract_strategy_stats(spark, sf):
     """Per-strategy benchmark aggregate (A6 parity: the reference's
     aggregate_by_parser, benchmark.py:227-251): docs, avg transactions,
@@ -1004,32 +950,11 @@ def q_quality_filter(spark, sf):
 def q_url_audit(spark, sf):
     """Unique-key audit, exact half (SQL-expressible → DuckDB oracle):
     row count + exact distinct. At 10^12 the exact distinct is a full
-    shuffle — the approx variant below is the one-pass scale path."""
+    shuffle — ``hll_distinct`` is the one-pass sketch form."""
     d = _t(spark, sf, "documents")
     return d.agg(
         F.count("*").alias("n_rows"),
         F.count_distinct("doc_id").alias("n_exact_distinct"),
-    )
-
-
-def q_url_audit_approx(spark, sf):  # rows-only: HLL sketch is engine-specific
-    """Unique-key audit, sketch half: approx_count_distinct is one pass, no
-    shuffle of the key — the metrics-table audit SURVEY §2.4 calls out.
-    rsd=0.01 keeps the sketch within 1% of exact.
-
-    No DuckDB oracle BY DESIGN: the value is a HyperLogLog++ estimate
-    whose exact bits are engine-specific (DuckDB's approx_count_distinct
-    uses a different sketch — equal inputs give different estimates).
-    Pinned by: `tests/test_entry_oracle.py`'s rows-only check plus the
-    exact twin `url_audit`-style count_distinct queries in the driver
-    window, against which the 1%-rsd bound is asserted in tests. The
-    EXACT-oracle-able counterpart is the round-6 from-scratch sketch row
-    `hll_distinct` (operators/sketches.py): same algorithm family, but
-    its registers are a DataFrame the DuckDB oracle replays bit-for-bit
-    — use it when the sketch itself must be auditable."""
-    d = _t(spark, sf, "documents")
-    return d.agg(
-        F.approx_count_distinct("doc_id", rsd=0.01).alias("n_approx_distinct"),
     )
 
 
@@ -1831,8 +1756,8 @@ def q_web_pipeline(spark, sf):
 
 def q_hll_distinct(spark, sf):
     """From-scratch HyperLogLog distinct-URL counting with an EXACT value
-    oracle — the upgrade over the opaque `approx_count_distinct` in
-    `url_audit_approx` (which the driver can only row-check): here the
+    oracle — unlike Spark's opaque `approx_count_distinct`, whose
+    estimate bits are engine-specific and no oracle can replay, the
     sketch IS a DataFrame of (register, max-rho) rows, merge = groupBy
     max (the property that makes a 10^12-row distinct count one
     m-row-per-partition shuffle), and the estimate is deterministic —
@@ -2573,21 +2498,6 @@ def q_duplicate_spans(spark, sf):
     )
 
 
-def q_compression_ratio(spark, sf):
-    """zlib compressed/raw byte ratio per document (RefinedWeb-style
-    redundancy signal). No SQL zlib exists → no DuckDB oracle (rows-only);
-    the value itself is pinned by ``tests/test_functions.py`` against direct
-    ``zlib.compress`` on the same strings."""
-    from b_pdf_parser_spark.operators.textstats import with_compression_ratio
-
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    return (
-        with_compression_ratio(d)
-        .select("doc_id", "zlib_ratio")
-        .orderBy("doc_id")
-    )
-
-
 # ---------------------------------------------------------------------------
 # contract surface
 # ---------------------------------------------------------------------------
@@ -2688,14 +2598,13 @@ def queries() -> dict[str, _T]:
 
 def extra_queries() -> dict[str, _T]:
     """Oracle-parity demos outside the driver's 50-entry window. Each is
-    either an input stage of a registered query (minhash → lsh → near_dup),
-    a quadratic correctness demo whose scale path IS registered
-    (shingle_overlap_jaccard, dup_clusters, embedding_neardup), or a small
-    relational exercise subsumed by the registered core. All still run
-    against their DuckDB oracles in tests/test_entry_oracle.py every round —
-    retirement from the driver window costs no verification, only a slot."""
+    an input stage of a registered query (minhash → lsh → near_dup), the
+    exact or quadratic reference a registered scale path is compared
+    against (ann_topk, host_cap_sample, token_shards, dup_clusters), or a
+    retired demo. Every entry has a DuckDB oracle and runs against it in
+    tests/test_entry_oracle.py (``test_every_extra_is_oracle_checked``
+    rejects one that only runs); none of them is benchmark surface."""
     return {
-        "extract_txn_crosscheck": q_extract_txn_crosscheck,
         # quadratic brute-force ANN baseline — retired round-6 for the
         # bpe_tokens slot; still the quality yardstick the LSH/IVF tests
         # measure recall against, still DuckDB-parity-checked here
@@ -2740,7 +2649,6 @@ def extra_queries() -> dict[str, _T]:
         "simhash": q_simhash,
         "quality_filter": q_quality_filter,
         "robots_filter": q_robots_filter,
-        "url_audit_approx": q_url_audit_approx,
         "media_frame_sample": q_media_frame_sample,
         "pdf_jpeg_decode": q_pdf_jpeg_decode,
         "pdf_jpx_decode": q_pdf_jpx_decode,
@@ -2769,7 +2677,6 @@ def extra_queries() -> dict[str, _T]:
         "length_histogram": q_length_histogram,
         "length_quantiles": q_length_quantiles,
         "embedding_neardup": q_embedding_neardup,
-        "compression_ratio": q_compression_ratio,
     }
 
 

@@ -272,15 +272,6 @@ def _decrypt_blocks_np(kw: List[List[int]], blocks: bytes) -> bytes:
     return out.tobytes()
 
 
-# byte-list compatibility wrappers (tests exercise both layers)
-def _encrypt_block(rk: List[List[int]], block: bytes) -> bytes:
-    return _encrypt_block_w(_enc_words(rk), block)
-
-
-def _decrypt_block(rk: List[List[int]], block: bytes) -> bytes:
-    return _decrypt_block_w(_dec_words(rk), block)
-
-
 def aes_encrypt_block(key: bytes, block: bytes) -> bytes:
     return _encrypt_block_w(_enc_words(_expand_key(key)), block)
 

@@ -35,21 +35,18 @@ from __future__ import annotations
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from . import spread
 
 __all__ = [
     "exact_dup_stats",
     "shingles",
-    "shingles_with_pos",
-    "minhash_signatures",
     "minhash_signature_string",
     "lsh_candidate_pairs",
     "ngram_jaccard_pairs",
     "incremental_dedup",
     "simhash",
-    "simhash_candidate_pairs",
     "simhash_neardup_pairs",
     "winnow_fingerprints",
     "duplicate_spans",
@@ -170,31 +167,6 @@ def exact_dup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingles_with_pos(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Positional word n-gram shingles (id, pos, shingle) — duplicates kept,
-    one row per gram start position (winnowing needs positions). Map-only
-    (round-7): the gram at array index p of the batch kernel's gram list
-    starts at token p — identical (pos, shingle) pairs to the old per-id
-    lead-window form, without its Exchange."""
-    src = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")))
-    id_ddl = src.schema.fields[0].dataType.simpleString()
-
-    def run(batches):
-        for b in batches:
-            ids, poss, shs = [], [], []
-            for i, s in zip(b["id"], b["text"]):
-                if s is None:
-                    continue
-                for p, g in enumerate(_py_grams(s, n)):
-                    ids.append(i)
-                    poss.append(p)
-                    shs.append(g)
-            if ids:
-                yield pd.DataFrame({"id": ids, "pos": poss, "shingle": shs})
-
-    return src.mapInPandas(run, schema=f"id {id_ddl}, pos int, shingle string")
-
-
 def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Word n-gram shingle *set* rows (id, shingle) — map-only explode of
     the batch kernel's per-doc distinct gram arrays (they cannot collide
@@ -202,24 +174,6 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     return _doc_signature_frame(df, id_col, text_col, n, with_grams=True).select(
         "id", F.explode("grams").alias("shingle")
     )
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = DEFAULT_K, n: int = 3,
-    sets_df: DataFrame | None = None,
-) -> DataFrame:
-    """(id, seed, minhash) — minhash = min md5('<seed>:'||shingle) prefix.
-
-    Map-only (round-7): one batch-kernel row per doc, posexploded — the
-    old path exploded every (shingle, seed) pair and paid an (id, seed)
-    Exchange. Same rows: every doc with ≥ 1 shingle gets exactly k
-    (seed, minhash) rows. ``sets_df`` shares a prebuilt kernel frame
-    (must carry ``mhs``)."""
-    sets = (
-        _doc_signature_frame(df, id_col, text_col, n, k=k)
-        if sets_df is None else sets_df
-    )
-    return sets.select("id", F.posexplode("mhs").alias("seed", "minhash"))
 
 
 def minhash_signature_string(
@@ -377,13 +331,6 @@ def _simhash_band_pairs(sig: DataFrame, bits: int, bands: int) -> DataFrame:
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-
-
-def simhash_candidate_pairs(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 16, bands: int = 2
-) -> DataFrame:
-    """Hamming-adjacent SimHash candidates (see ``_simhash_band_pairs``)."""
-    return _simhash_band_pairs(simhash(df, id_col, text_col, bits), bits, bands)
 
 
 def simhash_neardup_pairs(

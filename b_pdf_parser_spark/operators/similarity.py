@@ -1,12 +1,10 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Three paths:
+Four search paths, plus SemDeDup pruning:
 
-* **Brute-force cosine top-k** — correctness baseline. Queries are a small
-  subset → ``broadcast()`` them; the scan side never shuffles. Dot products
-  are a native ``zip_with``/``aggregate`` left fold **in float64** (cast
-  before multiply), which matches a sequential Python/DuckDB fold bit-for-bit
-  — that's what makes the DuckDB oracle hash-stable.
+* **Brute-force cosine top-k** — the exact baseline the approximate paths
+  measure their recall against. Queries are a small subset →
+  ``broadcast()`` them; the scan side never shuffles.
 * **LSH-bucketed ANN** — sign-bit signatures against deterministic
   pseudo-random hyperplanes (seeded, derived from md5 so executors need no
   shared state), bucket join, re-rank within bucket. At 10^12 vectors the
@@ -15,18 +13,20 @@ Three paths:
   jobs) → inverted lists keyed by centroid → nprobe-list probe + exact
   re-rank. Measured recall@3 ≈ 0.97 vs brute force on the test embeddings
   (16 lists, nprobe 4).
-* **PQ ANN (ADC)** — product quantization (Jégou et al. 2011, public):
-  split the vector into ``m`` subspaces, quantize each against a frozen
-  data-drawn sub-codebook, store 1 code/subspace; a query precomputes an
-  (m × ksub) distance LUT and every comparison is ``m`` table lookups
-  over the code columns instead of a ``dim``-float scan — the memory/
-  bandwidth form of ANN (compose with IVF lists for candidate pruning;
-  the scan here is the honest pure-ADC cost model).
+* **PQ / IVFPQ ANN (ADC)** — product quantization (Jégou et al. 2011,
+  public): split the vector into ``m`` subspaces, quantize each against a
+  frozen data-drawn sub-codebook, store 1 code/subspace; a query
+  precomputes an (m × ksub) distance LUT and every comparison is ``m``
+  table lookups over the code columns, then an exact re-rank.
+
+Every distance and score is computed by the numpy batch kernels
+(``_np_*``) inside ``mapInPandas``: squared L2 and dot products accumulate
+per dimension from 0.0 in ascending order, in float64 (cast before
+multiply). That is the exact IEEE fold order of the DuckDB oracles'
+``list_reduce``, which is what makes them hash-stable.
 """
 
 from __future__ import annotations
-
-from typing import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
@@ -34,8 +34,6 @@ from pyspark.sql import Column, DataFrame, Window
 from . import spread
 
 __all__ = [
-    "dot64",
-    "cosine",
     "cosine_topk",
     "lsh_ann_topk",
     "ivf_ann_topk",
@@ -49,25 +47,15 @@ def _as_double(c: Column) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def dot64(a: Column, b: Column) -> Column:
-    """Sequential float64 left-fold dot product (oracle-exact).
-
-    NOTE (round-7 measurement): an unrolled 64-term expression chain is NOT
-    faster — it generates ~200 KB of codegen source per stage, blowing the
-    JVM JIT's huge-method limit, and runs as interpreted bytecode (measured
-    1.7× slower than this higher-order fold). The fast path for bulk
-    distance work is the numpy batch kernels below (``_np_sq_l2_seq``),
-    which reproduce the identical IEEE fold order vectorized across rows.
-    """
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _top_k(scored: DataFrame, k: int, by: Column, *cols: str) -> DataFrame:
+    """Per query: the ``k`` best neighbors in ``by`` order, ties to the
+    smaller ``neighbor_id`` → (query_id, rank, neighbor_id, *cols)."""
+    w = Window.partitionBy("query_id").orderBy(by, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", *cols)
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot64(a, b) / (F.sqrt(dot64(a, a)) * F.sqrt(dot64(b, b)))
 
 
 def cosine_topk(
@@ -88,22 +76,13 @@ def cosine_topk(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
     c = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec"))
-    scored = (
+    scored = _np_cosine_score(
         F.broadcast(q)
         .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qvec"), F.col("nvec")).alias("score"),
-        )
+        .filter(F.col("query_id") != F.col("neighbor_id")),
+        "qvec", "nvec",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    return _top_k(scored, k, F.desc("score"))
 
 
 def _hyperplane(dim: int, plane: int, seed: int = 7) -> list:
@@ -118,14 +97,6 @@ def _hyperplane(dim: int, plane: int, seed: int = 7) -> list:
     return vals
 
 
-def _sq_l2_cols(vec: Column, cvec: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(_as_double(vec), cvec, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _np_rows(col) -> "object":
     """pandas column of array values → (n, dim) float64 matrix. float32 →
     float64 conversion is the same exact widening as Spark's cast."""
@@ -134,115 +105,76 @@ def _np_rows(col) -> "object":
     return np.array([np.asarray(v, dtype=np.float64) for v in col])
 
 
-def _np_sq_l2_seq(X, C):
-    """(n,dim) × (k,dim) → (n,k) squared-L2 matrix with the EXACT fold order
-    of ``_sq_l2_cols``: every D[r,c] starts at 0.0 and adds (x_i − c_i)² in
-    ascending dimension order — vectorized across (row, centroid) pairs,
-    sequential across dims, so each entry is bit-identical to the
-    relational fold (and to the DuckDB oracle's ``list_reduce``). This is
-    the guide-§4.2 shape: Spark does distribution, numpy does the batch
-    arithmetic — ~12× faster than the interpreted higher-order fold on the
-    64-dim test embeddings."""
+def _np_sq_l2(A, B):
+    """Squared L2 over the last axis, numpy-broadcast over the others:
+    row-aligned pairs, or ``X[:, None]`` × ``C[None]`` for an (n, k)
+    row-to-centroid matrix. Every entry starts at 0.0 and adds
+    (a_i − b_i)² in ascending dimension order — sequential across dims,
+    vectorized across everything else — so it is bit-identical to the
+    DuckDB oracles' ``list_reduce`` fold. Spark does distribution, numpy
+    does the batch arithmetic."""
     import numpy as np
 
-    D = np.zeros((X.shape[0], C.shape[0]))
-    for i in range(X.shape[1]):
-        d = X[:, i, None] - C[None, :, i]
+    D = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+    for i in range(A.shape[-1]):
+        d = A[..., i] - B[..., i]
         D += d * d
     return D
 
 
-def _np_dot_seq(X, p):
-    """(n,dim) · (dim,) with dot64's exact fold order (0.0 seed, ascending
-    dims), vectorized across rows."""
+def _np_dot(A, B):
+    """Dot product over the last axis, broadcast like :func:`_np_sq_l2`;
+    accumulates from 0.0 in ascending dimension order."""
     import numpy as np
 
-    acc = np.zeros(X.shape[0])
-    for i in range(X.shape[1]):
-        acc += X[:, i] * p[i]
+    acc = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+    for i in range(A.shape[-1]):
+        acc += A[..., i] * B[..., i]
     return acc
 
 
-def _np_cosine_score(pairs: DataFrame, qv: str, nv: str) -> DataFrame:
-    """Append ``score`` = cosine(qv, nv) to a candidate-pair frame via the
-    batch kernels — the same dot64 fold sequence per pair (dot and both
-    norms accumulate per-dimension from 0.0 in ascending order), then the
-    identical ``dot / (sqrt · sqrt)`` IEEE ops. Replaces three interpreted
-    HOF folds per pair; the vector columns are dropped from the output
-    (the re-rank reads only score + ids)."""
+def _np_cosine(Q, N):
+    """Row-aligned cosine: ``dot / (sqrt(|q|²) · sqrt(|n|²))``, each term
+    one :func:`_np_dot` fold."""
     import numpy as np
 
+    return _np_dot(Q, N) / (np.sqrt(_np_dot(Q, Q)) * np.sqrt(_np_dot(N, N)))
+
+
+def _np_pair_score(pairs: DataFrame, qv: str, nv: str, out: str, fn) -> DataFrame:
+    """Append ``out`` = ``fn(Q, N)`` to a candidate-pair frame, one numpy
+    call per Arrow batch. The vector columns are dropped from the output
+    (the re-rank reads only the score and the ids)."""
     keep = [c for c in pairs.columns if c not in (qv, nv)]
     ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in pairs.schema.fields if f.name in keep
-    ) + ", score double"
+    ) + f", {out} double"
 
     def run(batches):
         for b in batches:
             if not len(b):
                 continue
-            Q = _np_rows(b[qv])
-            N = _np_rows(b[nv])
-            dot = np.zeros(len(b))
-            nq = np.zeros(len(b))
-            nn = np.zeros(len(b))
-            for i in range(Q.shape[1]):
-                dot += Q[:, i] * N[:, i]
-                nq += Q[:, i] * Q[:, i]
-                nn += N[:, i] * N[:, i]
-            out = b[keep].copy()
-            out["score"] = dot / (np.sqrt(nq) * np.sqrt(nn))
-            yield out
+            res = b[keep].copy()
+            res[out] = fn(_np_rows(b[qv]), _np_rows(b[nv]))
+            yield res
 
     return pairs.mapInPandas(run, schema=ddl)
 
 
-def _assign(df: DataFrame, cdf: DataFrame, n: int) -> DataFrame:
-    """Rank centroids per row: broadcast-crossJoin the (tiny) centroid table
-    and keep the ``n`` nearest by squared L2. Centroids travel as DATA, not
-    as literal expression trees — the plan stays constant-size regardless of
-    k·dim, and the join is a broadcast nested loop over k rows.
-
-    The ``n == 1`` case (every clustering/assignment pass; semantic_dedup
-    runs it at corpus-scaled k) is an argmin, NOT a ranking — expressed as
-    a map-side-combinable ``MIN_BY(payload-struct, (d, cid))`` so the
-    shuffle carries one partial row per id per partition instead of the
-    full k-way expansion (vector payload included) a window sort would
-    ship; decisions are identical to the window form (the ORDERING struct
-    is only (d, cid) — ties break on cid, which is unique per centroid —
-    so payload columns never need to be orderable)."""
-    others = [c for c in df.columns if c != "id"]
-    scored = (
-        df.crossJoin(F.broadcast(cdf))
-        .withColumn("d", _sq_l2_cols(F.col("vec"), F.col("cvec")))
-        .drop("cvec")  # dead after d: never shuffle the centroid payload
-    )
-    if n == 1:
-        m = scored.groupBy("id").agg(
-            F.min_by(
-                F.struct("cid", *others), F.struct("d", "cid")
-            ).alias("_m")
-        )
-        return m.select(
-            "id", *[F.col(f"_m.{c}").alias(c) for c in others],
-            F.col("_m.cid").alias("cid"),
-        )
-    w = Window.partitionBy("id").orderBy("d", "cid")
-    return (
-        scored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= n)
-        .drop("d", "crank")
-    )
+def _np_cosine_score(pairs: DataFrame, qv: str, nv: str) -> DataFrame:
+    """Append ``score`` = cosine(qv, nv) to a candidate-pair frame."""
+    return _np_pair_score(pairs, qv, nv, "score", _np_cosine)
 
 
 def _assign_np(df: DataFrame, C, cid_vals, n: int, cid_ddl: str) -> DataFrame:
-    """mapInPandas twin of :func:`_assign` for a DRIVER-RESIDENT centroid
-    table (the k·dim Python list every k-means caller already holds):
-    identical decisions — argmin / stable top-``n`` over (d, cid) with the
-    cid-ascending tie-break (``cid_vals`` MUST be ascending, so numpy's
-    first-minimum / stable sort reproduces ``min_by(struct(d, cid))``
-    exactly) — and bit-identical distances via :func:`_np_sq_l2_seq`.
+    """Rank a DRIVER-RESIDENT centroid table (the k·dim Python list every
+    k-means caller already holds) per row and keep the ``n`` nearest by
+    squared L2 → ``df``'s columns + ``cid``, one row per kept centroid.
+    ``n == 1`` is an argmin; larger ``n`` a stable top-``n`` over
+    (d, cid). ``cid_vals`` MUST be ascending, so numpy's first-minimum /
+    stable sort breaks distance ties to the smaller cid, as the oracles'
+    ``ORDER BY d, cid`` does. Distances come from :func:`_np_sq_l2`.
     The matrix ships to executors once via ``SparkContext.broadcast``
     (the bloom-probe idiom), not per-task closure capture."""
     import numpy as np
@@ -264,7 +196,7 @@ def _assign_np(df: DataFrame, C, cid_vals, n: int, cid_ddl: str) -> DataFrame:
         for b in batches:
             if not len(b):
                 continue
-            D = _np_sq_l2_seq(_np_rows(b["vec"]), Cm)
+            D = _np_sq_l2(_np_rows(b["vec"])[:, None], Cm[None])
             if n == 1:
                 out = b[cols].copy()
                 out["cid"] = cv[D.argmin(axis=1)]
@@ -294,16 +226,16 @@ def ivf_ann_topk(
     """IVF ANN: k-means coarse quantizer → inverted lists keyed by centroid
     id → queries probe the ``nprobe`` nearest lists → exact cosine re-rank.
 
-    The Lloyd iterations are DataFrame jobs (assign = broadcast join against
-    the centroid table, map-side; update = explode-dims + groupBy avg); only
-    the k·dim centroid table (here 16×64 doubles) ever reaches the driver —
-    the canonical structure for k-means at scale. Deterministic: centroids
-    init from the seeded md5 generator, so reruns build the identical index.
+    The Lloyd iterations are DataFrame jobs (assign = the map-side numpy
+    kernel :func:`_assign_np` against the broadcast centroid matrix;
+    update = explode-dims + groupBy avg); only the k·dim centroid table
+    (here 16×64 doubles) ever reaches the driver — the canonical structure
+    for k-means at scale. Deterministic: centroids init from the seeded md5
+    generator, so reruns build the identical index.
 
     At 10^12 vectors the probe join replaces both the quadratic cross
     product and the full scan per query: shuffle keys are centroid ids.
     """
-    spark = emb.sparkSession
     centroids = [_hyperplane(dim, c, seed) for c in range(n_centroids)]
     vecs = spread(emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")))
     vecs = vecs.localCheckpoint(eager=False)  # reused every iteration
@@ -339,27 +271,7 @@ def ivf_ann_topk(
         .select("query_id", "qvec", "neighbor_id", "nvec"),
         "qvec", "nvec",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
-
-
-def _sq_l2_slice(a: Column, b: Column, start: Column, length: int) -> Column:
-    """Squared L2 over one subspace: identical sequential float64 fold as
-    ``_sq_l2_cols``, restricted to ``length`` dims starting at 1-based
-    ``start`` — mirrored by DuckDB ``list_slice`` + ``list_reduce``."""
-    return F.aggregate(
-        F.zip_with(
-            F.slice(_as_double(a), start, length),
-            F.slice(_as_double(b), start, length),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    return _top_k(scored, k, F.desc("score"))
 
 
 def _pq_checked_vec(c: Column, dim: int) -> Column:
@@ -374,52 +286,63 @@ def _pq_checked_vec(c: Column, dim: int) -> Column:
 
 
 def _pq_codebook(emb: DataFrame, id_col: str, vec_col: str,
-                 ksub: int, dim: int) -> DataFrame:
-    """Frozen data-drawn sub-codebook source: the first ``ksub`` vectors
-    in md5(id) order (the deterministic-quantizer idiom shared with IVF
-    and semdedup; production would Lloyd-refine each subspace, same
-    structure) → (cid, cvec)."""
+                 ksub: int, dim: int) -> list:
+    """Frozen data-drawn sub-codebook: the first ``ksub`` vectors in
+    md5(id) order (the deterministic-quantizer idiom shared with IVF and
+    semdedup; production would Lloyd-refine each subspace, same
+    structure). The ksub·dim table is driver-sized, like the IVF centroid
+    table; row ``cid`` of the returned list is centroid ``cid``."""
     h = F.md5(F.col(id_col).cast("string"))
-    return (
+    rows = (
         emb.select(F.col(id_col).alias("src"),
                    _pq_checked_vec(F.col(vec_col), dim).alias("cvec"),
                    h.alias("h"))
         .orderBy("h", "src")
         .limit(ksub)
-        .withColumn("cid", F.row_number().over(Window.orderBy("h", "src")) - 1)
-        .select("cid", "cvec")
+        .collect()
     )
+    return [[float(x) for x in r["cvec"]]
+            for r in sorted(rows, key=lambda r: (r["h"], r["src"]))]
 
 
-def _pq_sub_dists(df: DataFrame, cents: DataFrame, keep: list,
-                  m: int, sub_d: int) -> DataFrame:
-    """Per (row, subspace, centroid) squared L2 over the subspace slice:
-    broadcast the tiny codebook, explode the ``m`` subspaces, fold."""
-    start = (F.col("s") * sub_d + 1).cast("int")
-    return (
-        df.crossJoin(F.broadcast(cents))
-        .select(
-            *keep, "cid",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
-            "vec", "cvec",
-        )
-        .withColumn("d", _sq_l2_slice(F.col("vec"), F.col("cvec"),
-                                      start, sub_d))
-        .drop("vec", "cvec")
-    )
+def _pq_sub_dists(df: DataFrame, C: list, keep: list, m: int, sub_d: int,
+                  codes: bool = False) -> DataFrame:
+    """Squared L2 of every row's ``vec`` to every centroid of the broadcast
+    sub-codebook ``C``, per subspace slice → (*keep, s, cid, d). With
+    ``codes`` the kernel keeps only the argmin per (row, subspace), ties to
+    the lowest centroid id — the PQ encoding → (*keep, s, cid)."""
+    import numpy as np
 
+    bc = df.sparkSession.sparkContext.broadcast(np.asarray(C, dtype=np.float64))
+    ddl = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.schema.fields if f.name in keep
+    ) + ", s int, cid int" + ("" if codes else ", d double")
 
-def _pq_codes(df: DataFrame, cents: DataFrame, keep: list,
-              m: int, sub_d: int) -> DataFrame:
-    """PQ encoding: argmin centroid per (vector, subspace), ties to the
-    lowest centroid id → (*keep, s, cid)."""
-    wcode = Window.partitionBy(keep[0], "s").orderBy("d", "cid")
-    return (
-        _pq_sub_dists(df, cents, keep, m, sub_d)
-        .withColumn("rn", F.row_number().over(wcode))
-        .filter(F.col("rn") == 1)
-        .select(*keep, "s", "cid")
-    )
+    def run(batches):
+        Cm = bc.value
+        ksub = Cm.shape[0]
+        for b in batches:
+            if not len(b):
+                continue
+            # (n, m, ksub): the fold over each subspace's dims
+            D = _np_sq_l2(_np_rows(b["vec"]).reshape(len(b), m, 1, sub_d),
+                          Cm.reshape(ksub, m, sub_d).transpose(1, 0, 2))
+            if codes:
+                per_row = m
+                cid = D.argmin(axis=2).ravel()
+            else:
+                per_row = m * ksub
+                cid = np.tile(np.arange(ksub), len(b) * m)
+            out = b[keep].iloc[np.repeat(np.arange(len(b)), per_row)]
+            out = out.reset_index(drop=True)
+            out["s"] = np.repeat(np.tile(np.arange(m), len(b)), per_row // m)
+            out["cid"] = cid
+            if not codes:
+                out["d"] = D.ravel()
+            yield out
+
+    return df.mapInPandas(run, schema=ddl)
 
 
 def _adc_shortlist(adc: DataFrame, rerank: int) -> DataFrame:
@@ -436,20 +359,22 @@ def _pq_exact_rerank(shortlist: DataFrame, q: DataFrame, base: DataFrame,
                      k: int) -> DataFrame:
     """Exact squared-L2 re-rank of the ADC shortlist: only ``rerank``
     true vectors per query are ever read."""
-    exact = (
+    exact = _np_pair_score(
         shortlist
         .join(q.withColumnRenamed("vec", "qvec"), "query_id")
         .join(base.select(F.col("id").alias("neighbor_id"),
-                          F.col("vec").alias("nvec")), "neighbor_id")
-        .withColumn("dist", _sq_l2_cols(F.col("qvec"),
-                                        _as_double(F.col("nvec"))))
+                          F.col("vec").alias("nvec")), "neighbor_id"),
+        "qvec", "nvec", "dist", _np_sq_l2,
     )
-    wr = Window.partitionBy("query_id").orderBy(F.asc("dist"),
-                                                F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dist")
+    return _top_k(exact, k, F.asc("dist"), "dist")
+
+
+def _pq_lut(q: DataFrame, C: list, m: int, sub_d: int) -> DataFrame:
+    """(query_id, s, cid, dd): the per-query ADC table, each entry rounded
+    and DECIMAL-cast so the per-pair ADC sum is exact decimal arithmetic."""
+    return _pq_sub_dists(q, C, ["query_id"], m, sub_d).select(
+        "query_id", "s", "cid",
+        F.round("d", 9).cast("decimal(28,9)").alias("dd"),
     )
 
 
@@ -499,21 +424,17 @@ def pq_ann_topk(
     if dim % m:
         raise ValueError("pq_ann_topk: dim must be divisible by m")
     sub_d = dim // m
-    cents = _pq_codebook(emb, id_col, vec_col, ksub, dim)
+    C = _pq_codebook(emb, id_col, vec_col, ksub, dim)
     base = emb.select(F.col(id_col).alias("id"),
                       _pq_checked_vec(F.col(vec_col), dim).alias("vec"))
-    codes = _pq_codes(base, cents, ["id"], m, sub_d)
+    codes = _pq_sub_dists(base, C, ["id"], m, sub_d, codes=True)
 
     q = emb.filter(query_pred).select(
         F.col(id_col).alias("query_id"),
         _pq_checked_vec(F.col(vec_col), dim).alias("vec"),
     )
-    lut = _pq_sub_dists(q, cents, ["query_id"], m, sub_d).select(
-        "query_id", "s", "cid",
-        F.round("d", 9).cast("decimal(28,9)").alias("dd"),
-    )
     adc = (
-        codes.join(F.broadcast(lut), ["s", "cid"])
+        codes.join(F.broadcast(_pq_lut(q, C, m, sub_d)), ["s", "cid"])
         .filter(F.col("id") != F.col("query_id"))
         .groupBy("query_id", F.col("id").alias("neighbor_id"))
         .agg(F.sum("dd").alias("adist"))  # exact decimal sum over m terms
@@ -561,60 +482,28 @@ def ivfpq_ann_topk(
     LUT sums."""
     if dim % m:
         raise ValueError("ivfpq_ann_topk: dim must be divisible by m")
-    spark = emb.sparkSession
     sub_d = dim // m
-    coarse = spark.createDataFrame(
-        [(c, [float(x) for x in _hyperplane(dim, c, seed)])
-         for c in range(n_coarse)],
-        "ccid INT, ccvec ARRAY<DOUBLE>",
-    )
+    coarse = [_hyperplane(dim, c, seed) for c in range(n_coarse)]
+    ccids = list(range(n_coarse))
     base = emb.select(F.col(id_col).alias("id"),
                       _pq_checked_vec(F.col(vec_col), dim).alias("vec"))
-
-    def coarse_assign(df: DataFrame, idn: str, n: int) -> DataFrame:
-        # same argmin-vs-ranking split as _assign: n == 1 is a map-side-
-        # combinable MIN_BY ordered on (cd, ccid) only, n > 1 a window —
-        # and the centroid payload never reaches either shuffle
-        others = [c for c in df.columns if c != idn]
-        scored = (
-            df.crossJoin(F.broadcast(coarse))
-            .withColumn("cd", _sq_l2_cols(F.col("vec"), F.col("ccvec")))
-            .drop("ccvec")
-        )
-        if n == 1:
-            m = scored.groupBy(idn).agg(
-                F.min_by(
-                    F.struct("ccid", *others), F.struct("cd", "ccid")
-                ).alias("_m")
-            )
-            return m.select(
-                idn, *[F.col(f"_m.{c}").alias(c) for c in others],
-                F.col("_m.ccid").alias("ccid"),
-            )
-        w = Window.partitionBy(idn).orderBy("cd", "ccid")
-        return (
-            scored.withColumn("crank", F.row_number().over(w))
-            .filter(F.col("crank") <= n)
-            .drop("cd", "crank")
-        )
-
-    lists = coarse_assign(base, "id", 1)  # (id, vec, ccid)
-    cents = _pq_codebook(emb, id_col, vec_col, ksub, dim)
-    codes = _pq_codes(lists, cents, ["id", "ccid"], m, sub_d)
+    lists = _assign_np(base, coarse, ccids, 1, "int").withColumnRenamed(
+        "cid", "ccid"
+    )  # (id, vec, ccid)
+    C = _pq_codebook(emb, id_col, vec_col, ksub, dim)
+    codes = _pq_sub_dists(lists, C, ["id", "ccid"], m, sub_d, codes=True)
 
     q = emb.filter(query_pred).select(
         F.col(id_col).alias("query_id"),
         _pq_checked_vec(F.col(vec_col), dim).alias("vec"),
     )
-    qprobe = coarse_assign(q, "query_id", nprobe)  # (query_id, vec, ccid)
-    lut = _pq_sub_dists(q, cents, ["query_id"], m, sub_d).select(
-        "query_id", "s", "cid",
-        F.round("d", 9).cast("decimal(28,9)").alias("dd"),
-    )
+    qprobe = _assign_np(q, coarse, ccids, nprobe, "int").withColumnRenamed(
+        "cid", "ccid"
+    )  # (query_id, vec, ccid)
     adc = (
         qprobe.select("query_id", "ccid")
         .join(codes, "ccid")  # IVF pruning: only probed lists' codes
-        .join(F.broadcast(lut), ["query_id", "s", "cid"])
+        .join(F.broadcast(_pq_lut(q, C, m, sub_d)), ["query_id", "s", "cid"])
         .filter(F.col("id") != F.col("query_id"))
         .groupBy("query_id", F.col("id").alias("neighbor_id"))
         .agg(F.sum("dd").alias("adist"))
@@ -692,11 +581,10 @@ def semantic_dedup(
         (np.asarray(C, dtype=np.float64), np.asarray(cid_vals))
     )
 
-    # one fused pass — assignment (argmin over (d, cid), bit-identical to
-    # the relational min_by via _np_sq_l2_seq + first-minimum over the
-    # ascending cid order) PLUS per-row normalization, so a candidate pair
-    # later costs a single 64-wide fold (dot of unit vectors) instead of
-    # three — same decisions (the clone stratum sits at cosine ≈ 1 and
+    # one fused pass — assignment (argmin over (d, cid): _np_sq_l2 +
+    # first-minimum over the ascending cid order) PLUS per-row
+    # normalization, so a candidate pair later costs a single 64-wide fold
+    # (dot of unit vectors) instead of three — same decisions (the clone stratum sits at cosine ≈ 1 and
     # random in-cluster pairs far below threshold, so the ~1-ulp
     # reassociation difference cannot flip a comparison)
     def assign_norm(batches):
@@ -705,12 +593,8 @@ def semantic_dedup(
             if not len(b):
                 continue
             X = _np_rows(b["vec"])
-            D = _np_sq_l2_seq(X, Cm)
-            # nrm: dot64(vec, vec) fold — 0.0 seed, ascending dims
-            acc = np.zeros(len(X))
-            for i in range(X.shape[1]):
-                acc += X[:, i] * X[:, i]
-            nrm = np.sqrt(acc)
+            D = _np_sq_l2(X[:, None], Cm[None])
+            nrm = np.sqrt(_np_dot(X, X))
             out = b[["id"]].copy()
             out["cid"] = cv[D.argmin(axis=1)]
             out["nvec"] = list(X / nrm[:, None])
@@ -719,11 +603,6 @@ def semantic_dedup(
     assigned = vecs.mapInPandas(
         assign_norm, schema=f"id {id_ddl}, cid {id_ddl}, nvec array<double>"
     ).localCheckpoint(eager=False)
-    unit_dot = F.aggregate(
-        F.zip_with(F.col("anvec"), F.col("bnvec"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     # SALT the in-cluster self-join: the pairwise stage is COMPUTE-bound
     # on tiny bytes, so AQE's size-based coalesce would otherwise fold the
     # ≤ n_centroids cid-partitions into one serial task; and cluster sizes
@@ -745,9 +624,11 @@ def semantic_dedup(
         F.col("id").alias("b_id"), F.col("nvec").alias("bnvec"), "cid"
     ).withColumn("salt", F.explode(F.array(*[F.lit(s) for s in range(pair_salt)])))
     edges = (
-        a.join(b, ["cid", "salt"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .filter(unit_dot > threshold)
+        _np_pair_score(
+            a.join(b, ["cid", "salt"]).filter(F.col("a_id") < F.col("b_id")),
+            "anvec", "bnvec", "unit_dot", _np_dot,
+        )
+        .filter(F.col("unit_dot") > threshold)
         .groupBy("b_id")
         .agg(F.min("a_id").alias("dup_of"))
         .withColumnRenamed("b_id", "id")
@@ -785,9 +666,9 @@ def lsh_ann_topk(
         dim = len(first[0]) if first else 0
     planes = [_hyperplane(dim, p, seed) for p in range(n_planes)]
 
-    # signatures via the numpy batch kernel (bit-identical sign bits: each
-    # plane dot is the dot64 fold — 0.0 seed, ascending dims — and a NaN
-    # dot yields '0' on both paths since NaN >= 0 is false)
+    # signatures via the numpy batch kernel (each plane dot folds from 0.0
+    # in ascending dims, like the oracle; a NaN dot yields '0' since
+    # NaN >= 0 is false)
     import numpy as np
 
     spark = emb.sparkSession
@@ -807,7 +688,7 @@ def lsh_ann_topk(
                 X = _np_rows(b[vec_out])
                 bits = None
                 for p in range(P.shape[0]):
-                    s = np.where(_np_dot_seq(X, P[p]) >= 0, "1", "0")
+                    s = np.where(_np_dot(X, P[p]) >= 0, "1", "0")
                     bits = s if bits is None else np.char.add(bits, s)
                 out = b.copy()
                 out["bucket"] = bits
@@ -823,9 +704,4 @@ def lsh_ann_topk(
         .select("query_id", "qvec", "neighbor_id", "nvec"),
         "qvec", "nvec",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
+    return _top_k(scored, k, F.desc("score"))

@@ -1,16 +1,20 @@
 """Text-analysis operators for training-data pipelines (driver pack).
 
-All pure column expressions (JVM-side, whole-stage codegen — zero Python).
 Each formula is written to be *portably* re-expressible in ANSI/DuckDB SQL
 so every operator has a DuckDB oracle in ``__spark_entry__.py``:
 
 * token counting   — whitespace tokens + a BPE-ish word/punct regex count
 * quality scoring  — stopword ratio, mean word length, punctuation ratio
+  (column expressions); Gopher rules and repetition, the fused keep/drop
+  decision table (Arrow batch kernels)
 * language ID      — stopword-vote heuristic with a fixed tie-break order
+  (Arrow batch kernel)
 * fingerprinting   — md5 of whitespace-normalized text
 
-Scale: all of these are map-only (no shuffle); they pipeline into the same
-stage as the scan, and columnar parquet scans prune to ``text`` only.
+Scale: the per-document operators are map-only (no shuffle); they pipeline
+into the same stage as the scan, and columnar parquet scans prune to
+``text`` only. The LM, retrieval and boilerplate operators aggregate across
+the corpus and say so in their docstrings.
 """
 
 from __future__ import annotations
@@ -26,9 +30,9 @@ __all__ = [
     "punct_ratio",
     "stopword_ratio",
     "quality_score",
-    "gopher_rules",
+    "gopher_quality_frame",
     "fingerprint",
-    "langid",
+    "langid_frame",
     "unigram_logprob",
     "bm25_topk",
     "with_cc_scrub",
@@ -38,7 +42,6 @@ __all__ = [
     "quality_decisions",
     "strip_boilerplate_lines",
     "with_compression_ratio",
-    "with_text_stats",
 ]
 
 # small fixed stopword sets; the langid vote is a heuristic, not a model
@@ -115,85 +118,21 @@ def fingerprint(c: Column) -> Column:
     return F.md5(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "))
 
 
-def langid(c: Column) -> Column:
-    """Stopword-vote language guess; max votes, ties broken by the fixed
-    priority order en > de > fr > es > id; zero votes everywhere → 'und'."""
-    def hits(words):
-        ws = tuple(words)
-        return F.size(F.filter(_toks(c), lambda t: t.isin(*ws)))
-
-    votes = {lang: hits(words) for lang, words in STOPWORDS.items()}
-    expr = F.lit("und")
-    # build the nested CASE back-to-front: a lang wins if its vote is > 0 and
-    # >= every lower-priority lang's vote (earlier langs checked first)
-    for i in range(len(_LANG_ORDER) - 1, -1, -1):
-        lang = _LANG_ORDER[i]
-        cond = votes[lang] > 0
-        for later in _LANG_ORDER[i + 1:]:
-            cond = cond & (votes[lang] >= votes[later])
-        expr = F.when(cond, F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def with_langid(df: DataFrame, text_col: str = "text", out_col: str = "lang_guess") -> DataFrame:
-    """Two-phase langid: vote columns materialized once, then the CASE reads
-    them — avoids the single-Column form's O(langs²) re-evaluation of the
-    token filters inside the nested CASE."""
-    c = F.col(text_col)
-
-    def hits(words):  # single-arg lambda: PySpark binds extra params to the index
-        ws = tuple(words)
-        return F.size(F.filter(_toks(c), lambda t: t.isin(*ws)))
-
-    votes = [hits(words).alias(f"_v_{lang}") for lang, words in STOPWORDS.items()]
-    tmp = df.select("*", *votes)
-    expr = F.lit("und")
-    for i in range(len(_LANG_ORDER) - 1, -1, -1):
-        lang = _LANG_ORDER[i]
-        cond = F.col(f"_v_{lang}") > 0
-        for later in _LANG_ORDER[i + 1:]:
-            cond = cond & (F.col(f"_v_{lang}") >= F.col(f"_v_{later}"))
-        expr = F.when(cond, F.lit(lang)).otherwise(expr)
-    return tmp.select(*df.columns, expr.alias(out_col))
-
-
-def gopher_rules(c: Column) -> Column:
-    """Gopher-style document quality rules (Rae et al. 2021, §A1.1 — public
-    heuristics), as one struct of booleans. All pure column expressions:
-
-    * 50 ≤ word count ≤ 100k
-    * mean word length in [3, 10]
-    * symbol-to-word ratio ≤ 0.1 (# and … as the symbol set)
-    * ≥ 80% of words contain at least one alphabetic character
-    * stopword hits ≥ 2 (the 'the/and/of/to/a' presence rule)
-    """
-    toks = _toks(c)
-    nt = token_count(c)
-    mwl = F.when(nt == 0, F.lit(0.0)).otherwise(
-        F.length(F.replace(F.trim(c), F.lit(" "), F.lit(""))) / nt
-    )
-    n_sym = F.size(F.filter(toks, lambda t: t.rlike("[#…]")))
-    n_alpha = F.size(F.filter(toks, lambda t: t.rlike("[a-z]")))
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS["en"])))
-    return F.struct(
-        ((nt >= 50) & (nt <= 100_000)).alias("word_count_ok"),
-        ((mwl >= 3.0) & (mwl <= 10.0)).alias("mean_word_len_ok"),
-        F.when(nt == 0, F.lit(False)).otherwise(n_sym / nt <= 0.1).alias("symbol_ratio_ok"),
-        F.when(nt == 0, F.lit(False)).otherwise(n_alpha / nt >= 0.8).alias("alpha_ratio_ok"),
-        (n_stop >= 2).alias("stopwords_ok"),
-    )
-
-
 def gopher_quality_frame(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """DataFrame form of :func:`gopher_rules` + the conjunction, as one
-    Arrow batch kernel (round-7): every rule is per-document and the old
-    column expressions evaluated three interpreted per-token filter
-    lambdas per doc. Value-exact twin — same tokenization, unrounded
-    mean-word-length bounds, rlike('[#…]') ≡ contains-any, null text →
-    all-null rules and null conjunction, exactly like the old
-    null-propagating expressions."""
+    """Gopher-style document quality rules (Rae et al. 2021, §A1.1 —
+    public heuristics) and their conjunction ``passes``, one Arrow batch
+    kernel:
+
+    * 50 ≤ word count ≤ 100k
+    * mean word length in [3, 10] (unrounded)
+    * symbol-to-word ratio ≤ 0.1 (# and … as the symbol set)
+    * ≥ 80% of words contain at least one alphabetic character
+    * stopword hits ≥ 2 (the 'the/and/of/to/a' presence rule)
+
+    Tokens are ``split(lower(trim(text)), ' ')``, as in the oracle. Null
+    text → all-null rules and a null conjunction."""
     import pandas as pd
 
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
@@ -260,12 +199,10 @@ def langid_frame(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     out_col: str = "lang_guess",
 ) -> DataFrame:
-    """DataFrame form of :func:`langid` as one Arrow batch kernel
-    (round-7): the stopword votes ran five interpreted filter lambdas per
-    document. Decision-exact twin of ``with_langid``'s nested CASE: a
-    language wins if its vote is > 0 and ≥ every LOWER-priority
-    language's vote, checked in the fixed en > de > fr > es > id order;
-    zero votes everywhere (or null text) → 'und'."""
+    """Stopword-vote language guess, one Arrow batch kernel: a language
+    wins if its vote is > 0 and ≥ every LOWER-priority language's vote,
+    checked in the fixed en > de > fr > es > id order; zero votes
+    everywhere (or null text) → 'und'."""
     import pandas as pd
 
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
@@ -556,7 +493,7 @@ def intra_doc_repetition(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Gopher-style *repetition* signals (Rae et al. 2021 §A1.1 — the other
-    half of the quality rules, which ``gopher_rules`` doesn't cover): per
+    half of the quality rules, which ``gopher_quality_frame`` doesn't cover): per
     document,
 
     * ``top_2gram_frac`` — fraction of all word 2-gram instances taken by
@@ -758,18 +695,3 @@ def with_compression_ratio(
             yield pdf
 
     return df.mapInPandas(ratios, schema=out_schema)
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        bpe_ish_count(c).alias("n_bpe_tokens"),
-        F.length(c).alias("n_chars_calc"),
-        mean_word_len(c).alias("mean_word_len"),
-        punct_ratio(c).alias("punct_ratio"),
-        quality_score(c).alias("quality"),
-        fingerprint(c).alias("fingerprint"),
-        langid(c).alias("lang_guess"),
-    )

@@ -1112,10 +1112,6 @@ def _mat_mul(a: Matrix, b: Matrix) -> Matrix:
     )
 
 
-def _translate(tx: float, ty: float) -> Matrix:
-    return (1.0, 0.0, 0.0, 1.0, tx, ty)
-
-
 def _pre_translate(m: Matrix, tx: float, ty: float) -> Matrix:
     """translate(tx,ty) · m — the hot Td/TD/T* case, without a full matmul."""
     return (m[0], m[1], m[2], m[3],

@@ -23,7 +23,6 @@ from ..functions.numbers import normalize_number_col
 __all__ = [
     "metadata_kv_table",
     "transactions_csv_table",
-    "write_csv",
     "write_jsonl",
     "write_bucketed",
     "bucketed_join",
@@ -121,9 +120,3 @@ def bucketed_join(spark, left_table: str, right_table: str, key: str) -> DataFra
     """Inner-join two same-bucketed catalog tables on their bucket key."""
     return spark.table(left_table).join(spark.table(right_table), key)
 
-
-def write_csv(df: DataFrame, path: str, *, order_by: str = "url") -> None:
-    """';'-delimited CSV with headers, deterministically ordered (O1)."""
-    df.orderBy(order_by).write.option("sep", ";").option("header", True).mode(
-        "overwrite"
-    ).csv(path)
