@@ -724,15 +724,13 @@ def _formula_pages(spark, n_pdf: int = 160, n_html: int = 0, aes256: bool = Fals
     V5/R6 (see ``formula_statement_pdf``) — only ``extract_formula`` asks
     for it, since the R6 KDF costs ~2 s/doc across write+parse."""
     import b_pdf_parser_spark
+    from b_pdf_parser_spark.operators import arrow_kernel
     from b_pdf_parser_spark.sources.pages import PAGES_SCHEMA_DDL
 
     b_pdf_parser_spark.ship_package(spark)
-    base = spark.range(0, n_pdf + n_html, 1, 8)
 
     def gen(batches):
         from datetime import datetime
-
-        import pandas as pd
 
         import random as _random
 
@@ -744,8 +742,7 @@ def _formula_pages(spark, n_pdf: int = 160, n_html: int = 0, aes256: bool = Fals
 
         for b in batches:
             rows = []
-            for i in b["id"]:
-                i = int(i)
+            for i in b["id"].tolist():
                 if i < n_pdf:
                     payload = formula_statement_pdf(i, aes256=aes256)
                     url = f"https://formula.example/{i:06d}"
@@ -771,11 +768,9 @@ def _formula_pages(spark, n_pdf: int = 160, n_html: int = 0, aes256: bool = Fals
                     "warc_ts": datetime(2024, 1, 1),
                     "html": payload, "text": None, "lang": "id",
                 })
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
+            yield rows
 
-    return base.mapInPandas(gen, schema=PAGES_SCHEMA_DDL)
+    return arrow_kernel(spark.range(0, n_pdf + n_html, 1, 8), gen, PAGES_SCHEMA_DDL)
 
 
 def _formula_values(ext):
@@ -887,7 +882,7 @@ def q_extract_verify_relational(spark, sf):
     from b_pdf_parser_spark.plans.verify import verify_turnover_plan
 
     # the verify plan references the extraction twice (doc side + sums side);
-    # localCheckpoint materializes the mapInPandas subtree once
+    # localCheckpoint materializes the Arrow-kernel subtree once
     ext = extract_pages(
         _formula_pages(spark, n_pdf=160, n_html=120), num_partitions=8
     ).localCheckpoint()
@@ -1670,20 +1665,17 @@ def q_html_structured_data(spark, sf):
     must flag not throw, multi-block JSON-LD). The oracle recomputes
     every extracted value from the generating formulas."""
     import b_pdf_parser_spark
+    from b_pdf_parser_spark.operators import arrow_kernel
 
     b_pdf_parser_spark.ship_package(spark)
-    base = spark.range(0, 260, 1, 8)
 
     def gen(batches):
-        import pandas as pd
-
         from b_pdf_parser_spark.htmlmodel import extract_structured_data
         from b_pdf_parser_spark.sources.pages import structured_page
 
         for b in batches:
             rows = []
-            for raw in b["id"]:
-                i = int(raw)
+            for i in b["id"].tolist():
                 sd = extract_structured_data(structured_page(i))
                 first = next(
                     (d for d in sd["jsonld"] if isinstance(d, dict)), {}
@@ -1701,12 +1693,12 @@ def q_html_structured_data(spark, sf):
                     "n_jsonld": len(sd["jsonld"]),
                     "jsonld_ok": sd["jsonld_ok"],
                 })
-            yield pd.DataFrame(rows)
+            yield rows
 
     schema = ("doc_id LONG, title STRING, og_title STRING, og_type STRING, "
               "og_locale STRING, canonical STRING, jsonld_type STRING, "
               "word_count LONG, n_jsonld LONG, jsonld_ok BOOLEAN")
-    return base.mapInPandas(gen, schema).orderBy("doc_id")
+    return arrow_kernel(spark.range(0, 260, 1, 8), gen, schema).orderBy("doc_id")
 
 
 def q_web_pipeline(spark, sf):
@@ -1829,13 +1821,11 @@ def q_gif_anim_frames(spark, sf):
     expressions of the generator formulas — a wrong disposal, transparency
     or palette-scope decision shifts a sum and breaks the hash."""
     import b_pdf_parser_spark
+    from b_pdf_parser_spark.operators import arrow_kernel
 
     b_pdf_parser_spark.ship_package(spark)
-    base = spark.range(0, 120, 1, 8)
 
     def gen(batches):
-        import pandas as pd
-
         from b_pdf_parser_spark.mediacodec import (
             decode_gif_frames,
             encode_gif_frames,
@@ -1843,8 +1833,7 @@ def q_gif_anim_frames(spark, sf):
 
         for batch in batches:
             rows = []
-            for raw in batch["id"]:
-                i = int(raw)
+            for i in batch["id"].tolist():
                 W = 8 + (i % 5) * 2
                 H = 6 + (i % 4) * 2
                 nF = 2 + i % 3
@@ -1884,12 +1873,12 @@ def q_gif_anim_frames(spark, sf):
                         "r_sum": sum(rgb[0::3]), "g_sum": sum(rgb[1::3]),
                         "b_sum": sum(rgb[2::3]),
                     })
-            yield pd.DataFrame(rows)
+            yield rows
 
     schema = ("media_id LONG, frame_ix LONG, width LONG, height LONG, "
               "n_frames LONG, delay_cs LONG, r_sum LONG, g_sum LONG, "
               "b_sum LONG")
-    return base.mapInPandas(gen, schema).orderBy("media_id", "frame_ix")
+    return arrow_kernel(spark.range(0, 120, 1, 8), gen, schema).orderBy("media_id", "frame_ix")
 
 
 def q_cc_luhn_scrub(spark, sf):
@@ -1994,23 +1983,18 @@ def q_feed_items(spark, sf):
     dates and a truncated trailing item that must drop cleanly. The
     oracle replays the generator formulas for every surviving row."""
     import b_pdf_parser_spark
+    from b_pdf_parser_spark.operators import arrow_kernel
     from b_pdf_parser_spark.operators.links import parse_feeds
+    from b_pdf_parser_spark.sources.pages import feed_page
 
     b_pdf_parser_spark.ship_package(spark)
-    base = spark.range(0, 240, 1, 8)
-
-    def gen(batches):
-        import pandas as pd
-
-        from b_pdf_parser_spark.sources.pages import feed_page
-
-        for b in batches:
-            yield pd.DataFrame({
-                "feed_id": [int(i) for i in b["id"]],
-                "xml": [feed_page(int(i)).decode("utf-8") for i in b["id"]],
-            })
-
-    feeds = base.mapInPandas(gen, "feed_id LONG, xml STRING")
+    feeds = arrow_kernel(
+        spark.range(0, 240, 1, 8),
+        lambda bs: ({"feed_id": b["id"], "xml": [
+            feed_page(i).decode("utf-8") for i in b["id"].tolist()
+        ]} for b in bs),
+        "feed_id LONG, xml STRING",
+    )
     return parse_feeds(feeds).orderBy("feed_id", "item_ix")
 
 
@@ -4875,7 +4859,7 @@ def _all_oracles() -> dict[str, str]:
         """,
         # the fake-codec payload is a pure function of media_id, so the
         # oracle regenerates the expected features from range(200) — the
-        # mapInPandas decode must agree with straight SQL arithmetic
+        # Arrow-kernel decode must agree with straight SQL arithmetic
         "media_features": """
             WITH m AS (SELECT range AS media_id FROM range(0, 200)),
             dims AS (

@@ -4,9 +4,9 @@ From-scratch rebuild (Spark-first, not a port) of the capabilities of the
 reference single-machine pipeline ``rager306/b-pdf-parser``: PDF object-model
 text extraction, HTML boilerplate stripping, bank-statement field extraction,
 turnover verification, batch metrics — re-expressed as DataFrame plans +
-Arrow-vectorized ``mapInPandas`` batches, plus the web-scale operator pack
-(dedup, similarity search, text analysis) a 100 TB training-data pipeline
-needs.
+Arrow batch kernels (``operators.arrow_kernel`` over ``mapInArrow``), plus
+the web-scale operator pack (dedup, similarity search, text analysis) a
+100 TB training-data pipeline needs.
 """
 
 __version__ = "0.1.0"

@@ -413,7 +413,7 @@ def verify_turnover(
 
     In the Spark plan this becomes join J1 + aggregates A1–A3
     (``b_pdf_parser_spark/plans/verify.py``) — this per-doc form exists for
-    golden fixtures and the mapInPandas fast path. Pass ``summary`` when the
+    golden fixtures and the Arrow batch kernel. Pass ``summary`` when the
     caller already ran :func:`extract_summary_totals` (the batch path does)
     to avoid re-scanning every line of the document.
     """

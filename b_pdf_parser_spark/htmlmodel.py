@@ -14,8 +14,8 @@ semantic container) → densitometric classification (the published boilerpipe
 with a DOM-heuristic override for ``nav/header/footer/aside/form`` — →
 main-content text = classified blocks joined with ``"\\n"``.
 
-Pure ``bytes -> str``; safe for Arrow-batched ``mapInPandas`` (one Python
-dispatch per document).
+Pure ``bytes -> str``; safe for an Arrow batch kernel (one Python dispatch
+per document).
 """
 
 from __future__ import annotations

@@ -13,7 +13,7 @@ Spark shape (no per-row Python anywhere):
 
 * the two 32-bit hash halves come from ``F.md5`` JVM-side (whole-stage
   codegen) — Python only ever sees integer columns;
-* partials build per PARTITION inside ``mapInPandas`` and ship in the
+* partials build per PARTITION inside ``arrow_kernel`` and ship in the
   SMALLER of two encodings: the set-bit POSITIONS (8·k bytes per key —
   what a thin partition produces) or the dense bitmap (m/8 bytes — the
   cap for fat partitions). At the advertised 10^9-URL sizing (m≈10^10
@@ -25,7 +25,7 @@ Spark shape (no per-row Python anywhere):
   grows), and each task folds its group with an IN-PLACE ``bitwise_or``
   accumulator. Peak memory per merge task is bounded by
   ``(merge_groups + 1) · m/8`` bytes — the group's blobs (each ≤ m/8 by
-  the encoding rule, materialized by ``applyInPandas``) plus the
+  the encoding rule, materialized by ``applyInArrow``) plus the
   accumulator — e.g. ~11 GB at m=10^10 bits with ``merge_groups=8``,
   ~81 GB with the default 64. (The sparse-output merge path allocates a
   concat + sort copy, but it is gated on the group's TOTAL position
@@ -52,10 +52,13 @@ import math
 from typing import Iterator, List, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import BooleanType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import BinaryType, BooleanType, IntegerType, StructField, StructType
+
+from . import arrow_batch, arrow_kernel
 
 __all__ = [
     "bloom_bitmap",
@@ -89,8 +92,17 @@ def _fold_into(bitmap: np.ndarray, blob: bytes, dense: bool) -> None:
         np.bitwise_or.at(bitmap, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
 
 
+# output schemas of an intermediate and of the final merge level
+_LEVEL = StructType([
+    StructField("g", IntegerType()),
+    StructField("blob", BinaryType()),
+    StructField("dense", BooleanType()),
+])
+_FINAL = StructType([StructField("bloom", BinaryType())])
+
+
 def _merge_level_fn(n_bytes: int, next_buckets: Optional[int]):
-    """applyInPandas body for one tree level.
+    """``applyInArrow`` body for one tree level.
 
     ``next_buckets`` set → intermediate level: emit ``(g, blob, dense)``
     where ``g = key % next_buckets`` (group keys at a level are dense
@@ -102,38 +114,30 @@ def _merge_level_fn(n_bytes: int, next_buckets: Optional[int]):
     intermediate levels while it stays smaller than the dense bitmap.
     """
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        all_sparse = not pdf["dense"].any()
+    schema = to_arrow_schema(_FINAL if next_buckets is None else _LEVEL)
+
+    def merge(key, group):  # (key tuple, pa.Table) -> pa.Table
+        blobs = group["blob"].to_pylist()
+        denses = group["dense"].to_pylist()
+        g = key[0].as_py() % next_buckets if next_buckets is not None else None
         # stay sparse only when the group's TOTAL position bytes are below
         # the dense size — gating BEFORE concatenating bounds the sparse
         # path's transient (concat + unique's sort copy) to ~3 extra
         # bitmap-equivalents instead of 3x the whole group's bytes
-        sparse_total = int(sum(len(b) for b in pdf["blob"])) if all_sparse else 0
-        if all_sparse and next_buckets is not None and sparse_total < n_bytes:
+        all_sparse = not any(denses)
+        sparse_total = sum(len(b) for b in blobs) if all_sparse else 0
+        if all_sparse and g is not None and sparse_total < n_bytes:
             merged = np.unique(
-                np.concatenate(
-                    [np.frombuffer(b, dtype=np.int64) for b in pdf["blob"]]
-                )
+                np.concatenate([np.frombuffer(b, dtype=np.int64) for b in blobs])
             )
-            return pd.DataFrame(
-                {
-                    "g": [int(key[0]) % next_buckets],
-                    "blob": [merged.tobytes()],
-                    "dense": [False],
-                }
-            )
-        bitmap = np.zeros(n_bytes, dtype=np.uint8)
-        for blob, dense in zip(pdf["blob"], pdf["dense"]):
-            _fold_into(bitmap, blob, bool(dense))
-        if next_buckets is None:
-            return pd.DataFrame({"bloom": [bitmap.tobytes()]})
-        return pd.DataFrame(
-            {
-                "g": [int(key[0]) % next_buckets],
-                "blob": [bitmap.tobytes()],
-                "dense": [True],
-            }
-        )
+            out = {"g": [g], "blob": [merged.tobytes()], "dense": [False]}
+        else:
+            bitmap = np.zeros(n_bytes, dtype=np.uint8)
+            for blob, dense in zip(blobs, denses):
+                _fold_into(bitmap, blob, dense)
+            raw = bitmap.tobytes()
+            out = {"g": [g], "blob": [raw], "dense": [True], "bloom": [raw]}
+        return pa.Table.from_batches([arrow_batch(out, schema)])
 
     return merge
 
@@ -149,7 +153,7 @@ def bloom_bitmap(
     partial blobs, and each blob is at most m/8 bytes (thin partitions
     ship set-bit positions instead — always the smaller encoding). Peak
     memory per merge task is therefore ``(merge_groups + 1) · m/8``
-    bytes (the ``applyInPandas`` group plus one in-place accumulator);
+    bytes (the ``applyInArrow`` group plus one in-place accumulator);
     pick it so that fits the executor — the tree gets deeper, not wider,
     as partition counts grow.
     """
@@ -159,7 +163,7 @@ def bloom_bitmap(
     fanin = max(int(merge_groups), 2)
     hashed = df.select(_h1(key_col).alias("h1"), _h2(key_col).alias("h2"))
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
         # sparse until the position list would outweigh the dense bitmap
         chunks: List[np.ndarray] = []
         total = 0
@@ -169,8 +173,8 @@ def bloom_bitmap(
             if not len(b):
                 continue
             seen = True
-            h1 = b["h1"].to_numpy(np.int64)
-            h2 = b["h2"].to_numpy(np.int64)
+            h1 = b["h1"].to_numpy()
+            h2 = b["h2"].to_numpy()
             pos = (h1[None, :] + np.arange(k)[:, None] * h2[None, :]).ravel() % m_bits
             if bitmap is None:
                 chunks.append(pos)
@@ -187,13 +191,13 @@ def bloom_bitmap(
         if bitmap is None:
             merged = np.unique(np.concatenate(chunks))
             if merged.nbytes < n_bytes:
-                yield pd.DataFrame({"blob": [merged.tobytes()], "dense": [False]})
+                yield {"blob": [merged.tobytes()], "dense": [False]}
                 return
             bitmap = np.zeros(n_bytes, dtype=np.uint8)
             np.bitwise_or.at(bitmap, merged >> 3, (1 << (merged & 7)).astype(np.uint8))
-        yield pd.DataFrame({"blob": [bitmap.tobytes()], "dense": [True]})
+        yield {"blob": [bitmap.tobytes()], "dense": [True]}
 
-    parts = hashed.mapInPandas(partials, schema="blob binary, dense boolean")
+    parts = arrow_kernel(hashed, partials, "blob binary, dense boolean")
 
     # bucket-count chain: level j has b_j groups, b_{j+1} = ceil(b_j/fanin),
     # so every task's fan-in is <= fanin at every level; at least one
@@ -213,21 +217,15 @@ def bloom_bitmap(
     for level, b in enumerate(bucket_counts):
         nxt = bucket_counts[level + 1] if level + 1 < len(bucket_counts) else None
         if nxt is not None:
-            cur = cur.groupBy("g").applyInPandas(
-                _merge_level_fn(n_bytes, nxt),
-                schema="g int, blob binary, dense boolean",
-            )
+            cur = cur.groupBy("g").applyInArrow(_merge_level_fn(n_bytes, nxt), _LEVEL)
     # last two levels: merge the final bucketing (fan-in <= fanin by the
     # chain construction), then OR the <= fanin surviving blobs (all keyed
     # g=0 by the `% 1` of the previous level) into the dense bitmap
     return (
         cur.groupBy("g")
-        .applyInPandas(
-            _merge_level_fn(n_bytes, 1),
-            schema="g int, blob binary, dense boolean",
-        )
+        .applyInArrow(_merge_level_fn(n_bytes, 1), _LEVEL)
         .groupBy("g")
-        .applyInPandas(_merge_level_fn(n_bytes, None), schema="bloom binary")
+        .applyInArrow(_merge_level_fn(n_bytes, None), _FINAL)
     )
 
 
@@ -270,27 +268,24 @@ def probe_bloom(
     """
     if len(bloom) * 8 != m_bits:
         raise ValueError(f"bitmap is {len(bloom) * 8} bits, expected {m_bits}")
-    cols = [f.name for f in df.schema.fields]
     out_schema = StructType(
         list(df.schema.fields) + [StructField("maybe_seen", BooleanType(), False)]
     )
     hashed = df.select("*", _h1(key_col).alias("_h1"), _h2(key_col).alias("_h2"))
     bc = df.sparkSession.sparkContext.broadcast(bloom)
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         bm = np.frombuffer(bc.value, dtype=np.uint8)
         for b in batches:
-            h1 = b["_h1"].to_numpy(np.int64)
-            h2 = b["_h2"].to_numpy(np.int64)
+            h1 = b["_h1"].to_numpy()
+            h2 = b["_h2"].to_numpy()
             ok = np.ones(len(b), dtype=bool)
             for i in range(k):
                 pos = (h1 + i * h2) % m_bits
                 ok &= ((bm[pos >> 3] >> (pos & 7)) & 1).astype(bool)
-            out = b[cols].copy()
-            out["maybe_seen"] = ok
-            yield out
+            yield b.append_column("maybe_seen", pa.array(ok))
 
-    out_df = hashed.mapInPandas(probe, schema=out_schema)
+    out_df = arrow_kernel(hashed, probe, out_schema)
     if return_handle:
         return out_df, bc
     return out_df

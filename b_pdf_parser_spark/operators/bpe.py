@@ -15,7 +15,7 @@ broadcasts into an Arrow-batched encode.
   a few KB) ships in the UDF closure; each Arrow batch encodes each
   DISTINCT word once via a per-worker cache that is bounded by the
   corpus vocabulary. Zero joins, zero shuffles, no per-row Python
-  dispatch (one pandas map per batch).
+  dispatch (one ``arrow_udf`` call per batch).
 
 The reference repo has no tokenizer (SURVEY §2.11 addition, not a parity
 surface); the algorithm is Sennrich et al. 2016.
@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from typing import List, Tuple
 
-import pandas as pd  # module scope: pandas_udf resolves stringized hints here
+import pyarrow as pa  # module scope: arrow_udf resolves stringized hints here
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -72,10 +72,8 @@ def bpe_tokenize(
     out_col: str = "tokens",
 ) -> DataFrame:
     """Append ``out_col`` (array<string> of BPE tokens, document order)
-    and ``n_tokens`` (int). Arrow-batched pandas UDF; see module
+    and ``n_tokens`` (int). Arrow-batched scalar UDF; see module
     docstring for the scale shape."""
-    from pyspark.sql.functions import pandas_udf
-
     import re
 
     ranks = merge_ranks(merges)  # small dict, ships in the closure
@@ -86,9 +84,12 @@ def bpe_tokenize(
     pat = re.compile(WORD_PATTERN)
     cache: dict = {}
 
-    @pandas_udf("array<string>")
-    def _encode(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: encode_text(t, ranks, pattern=pat, cache=cache))
+    @F.arrow_udf("array<string>")
+    def _encode(texts: pa.Array) -> pa.Array:
+        return pa.array(
+            [encode_text(t, ranks, pattern=pat, cache=cache) for t in texts.tolist()],
+            pa.list_(pa.string()),
+        )
 
     return df.withColumn(out_col, _encode(F.col(text_col))).withColumn(
         "n_tokens", F.size(out_col)

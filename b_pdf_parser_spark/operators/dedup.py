@@ -33,11 +33,10 @@ kernels mirror ``split(lower(trim(text)), ' ')`` tokenization exactly.
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from . import spread
+from . import arrow_kernel, spread
 
 __all__ = [
     "exact_dup_stats",
@@ -58,7 +57,7 @@ DEFAULT_BANDS = 4  # → rows-per-band = K / BANDS = 2
 
 # ---------------------------------------------------------------------------
 # round-7: the per-document shingle/minhash/band work moved into ONE Arrow
-# batch kernel (mapInPandas + hashlib). The old plan exploded every
+# batch kernel (arrow_kernel + hashlib). The old plan exploded every
 # (shingle, seed) pair through a lead window + two keyed aggregations —
 # three Exchanges and millions of tiny rows before the LSH self-join even
 # started. Everything below the self-join is now map-only; md5 runs in C.
@@ -103,9 +102,6 @@ def _doc_signature_frame(
 
     per_band = (k // bands) if (k is not None and bands is not None) else None
     want_mh = k is not None
-    cols = ["id"] + (["grams"] if with_grams else []) \
-        + (["mhs"] if want_mh else []) \
-        + (["band_keys"] if per_band is not None else [])
     src = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")))
     id_ddl = src.schema.fields[0].dataType.simpleString()
     ddl = f"id {id_ddl}" + (", grams array<string>" if with_grams else "") \
@@ -116,7 +112,7 @@ def _doc_signature_frame(
         md5 = hashlib.md5
         for b in batches:
             ids, grams_col, mhs_col, bk_col = [], [], [], []
-            for i, s in zip(b["id"], b["text"]):
+            for i, s in zip(b["id"].tolist(), b["text"].tolist()):
                 if s is None:
                     continue
                 grams = _py_grams(s, n)
@@ -144,18 +140,9 @@ def _doc_signature_frame(
                             ))
                             for bnd in range(bands)
                         ])
-            if not ids:
-                continue
-            data = {"id": ids}
-            if with_grams:
-                data["grams"] = grams_col
-            if want_mh:
-                data["mhs"] = mhs_col
-                if per_band is not None:
-                    data["band_keys"] = bk_col
-            yield pd.DataFrame(data, columns=cols)
+            yield {"id": ids, "grams": grams_col, "mhs": mhs_col, "band_keys": bk_col}
 
-    return src.mapInPandas(run, schema=ddl)
+    return arrow_kernel(src, run, ddl)
 
 
 def exact_dup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -406,7 +393,7 @@ def winnow_fingerprints(
         md5 = hashlib.md5
         for b in batches:
             ids, fps = [], []
-            for i, s in zip(b["id"], b["text"]):
+            for i, s in zip(b["id"].tolist(), b["text"].tolist()):
                 if s is None:
                     continue
                 hs = [
@@ -421,10 +408,9 @@ def winnow_fingerprints(
                         seen.add(m)
                         ids.append(i)
                         fps.append(m)
-            if ids:
-                yield pd.DataFrame({"id": ids, "fp": fps})
+            yield {"id": ids, "fp": fps}
 
-    return src.mapInPandas(run, schema=f"id {id_ddl}, fp string")
+    return arrow_kernel(src, run, f"id {id_ddl}, fp string")
 
 
 def duplicate_spans(
@@ -467,7 +453,7 @@ def duplicate_spans(
         md5 = hashlib.md5
         for b in batches:
             ids, hs, cs = [], [], []
-            for i, s in zip(b["doc_id"], b["text"]):
+            for i, s in zip(b["doc_id"].tolist(), b["text"].tolist()):
                 if s is None:
                     continue
                 ws_ = s.strip(" ").lower().split(" ")
@@ -481,10 +467,9 @@ def duplicate_spans(
                     ids.append(i)
                     hs.append(h)
                     cs.append(c)
-            if ids:
-                yield pd.DataFrame({"doc_id": ids, "h": hs, "cnt": cs})
+            yield {"doc_id": ids, "h": hs, "cnt": cs}
 
-    wins = src.mapInPandas(run, schema=f"doc_id {id_ddl}, h string, cnt long")
+    wins = arrow_kernel(src, run, f"doc_id {id_ddl}, h string, cnt long")
     # referenced twice (dup-set build + probe); checkpoint so the kernel
     # pass runs once
     wins = wins.localCheckpoint(eager=False)
@@ -531,7 +516,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
         md5 = hashlib.md5
         for b in batches:
             ids, vals = [], []
-            for i, s in zip(b["id"], b["text"]):
+            for i, s in zip(b["id"].tolist(), b["text"].tolist()):
                 if s is None:
                     continue
                 ws_ = [w for w in s.strip(" ").lower().split(" ") if w != ""]
@@ -546,7 +531,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
                 vals.append(
                     sum((1 << j) for j in range(bits) if votes[j] > 0)
                 )
-            if ids:
-                yield pd.DataFrame({"id": ids, "simhash": vals})
+            yield {"id": ids, "simhash": vals}
 
-    return src.mapInPandas(run, schema=f"id {id_ddl}, simhash long")
+    return arrow_kernel(src, run, f"id {id_ddl}, simhash long")

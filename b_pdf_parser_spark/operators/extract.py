@@ -2,9 +2,10 @@
 
 Spark-first design (SURVEY §3.2, §4.3):
 
-* **Pure DataFrame + Arrow**: the document walk runs inside ``mapInPandas``
-  (iterator form, so per-worker init happens once — the idiomatic analog of
-  the reference's ``init_strategy='per-worker'``, batch.py:59,277). One
+* **Pure DataFrame + Arrow**: the document walk runs inside ``arrow_kernel``
+  (``mapInArrow``, iterator form, so per-worker init happens once — the
+  idiomatic analog of the reference's ``init_strategy='per-worker'``,
+  batch.py:59,277). One
   Python dispatch per *document*, zero per-row Python anywhere else.
 * **Partitioning**: a stable logical ``partition_id = pmod(xxhash64(url), P)``
   column is the checkpoint/lineage unit (resume-safe, independent of the
@@ -29,8 +30,10 @@ from __future__ import annotations
 from typing import Iterator, Optional
 
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -46,6 +49,7 @@ from pyspark.sql.types import (
 import re as _re
 
 from .. import fields
+from . import arrow_batch, arrow_kernel
 from ..htmlmodel import _decode_html_bytes, extract_html_blocks, extract_html_tables
 
 _TABLE_HINT_RE = _re.compile(r"<table", _re.I)
@@ -99,6 +103,12 @@ EXTRACTED_SCHEMA = StructType(
         StructField("partition_id", IntegerType()),
     ]
 )
+_EXTRACTED_ARROW = to_arrow_schema(EXTRACTED_SCHEMA)
+# the columns the kernel computes; the rest pass through from the input
+_BODY_COLUMNS = [
+    f.name for f in EXTRACTED_SCHEMA.fields
+    if f.name not in ("url", "warc_ts", "partition_id")
+]
 
 
 def _extract_one(url: str, payload: Optional[bytes]) -> dict:
@@ -161,18 +171,19 @@ def _url_stem(url: str) -> str:
 
 
 def make_extract_batch(verify: bool = True):
-    """Build the mapInPandas body. ``verify`` mirrors the reference's
-    ``verify_turnover`` toggle (S11: __init__.py:133-137, .env-driven) —
-    off → the ``verification`` struct is null, nothing else changes."""
+    """Build the extraction kernel: an iterator of input batches (Arrow
+    record batches, or pandas frames when driven outside Spark) → one
+    assembled ``pa.RecordBatch`` of :data:`EXTRACTED_SCHEMA` per batch.
+    ``verify`` mirrors the reference's ``verify_turnover`` toggle (S11:
+    __init__.py:133-137, .env-driven) — off → the ``verification`` struct
+    is null, nothing else changes. ``url``, ``warc_ts`` and
+    ``partition_id`` pass through as the input columns."""
 
-    def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract_batch(batches: Iterator) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            # columnar pulls once per batch (no per-row .iloc in the loop)
+            # columnar pulls once per batch (no per-row access in the loop)
             urls = b["url"].tolist()
-            warc = b["warc_ts"].tolist()
-            pids = b["partition_id"].tolist()
-            per_doc = [_extract_one(u, p) for u, p in zip(urls, b["html"])]
-            texts = [d["text"] or "" for d in per_doc]
+            per_doc = [_extract_one(u, p) for u, p in zip(urls, b["html"].tolist())]
             firsts = pd.Series([d["first_page"] or "" for d in per_doc])
 
             # vectorized header metadata over the whole Arrow batch (page-0
@@ -180,11 +191,9 @@ def make_extract_batch(verify: bool = True):
             # .iloc accesses per row
             meta_records = fields.extract_metadata_batch(firsts).to_dict("records")
 
-            out_rows = []
-            for idx, d in enumerate(per_doc):
-                meta = meta_records[idx]
-                full_text = texts[idx]
-                url = urls[idx]
+            rows = []
+            for d, meta, url in zip(per_doc, meta_records, urls):
+                full_text = d["text"] or ""
                 meta["account_no"] = fields.account_no_from_url(_url_stem(url), meta["account_no"])
                 # strategy fallback chain (S2 semantics): cell tables first
                 # (pdfplumber_parser.py:212-250 tries extract_tables() before
@@ -225,10 +234,8 @@ def make_extract_batch(verify: bool = True):
                     meta[k] = summary.get(k) or ""  # merge rule: only truthy values
                 # summary passed through: the line scan already ran above
                 ver = fields.verify_turnover(txns, 0.01, summary=summary) if verify else None
-                out_rows.append(
+                rows.append(
                     {
-                        "url": url,
-                        "warc_ts": warc[idx],
                         "kind": d["kind"],
                         "text": d["text"],
                         "metadata": meta,
@@ -239,12 +246,14 @@ def make_extract_batch(verify: bool = True):
                         "verification": ver,
                         "n_pages": d["n_pages"],
                         "payload_bytes": d["payload_bytes"],
-                        "n_tokens": len(full_text.split()) if full_text else 0,
+                        "n_tokens": len(full_text.split()),
                         "error": d["error"],
-                        "partition_id": int(pids[idx]),
                     }
                 )
-            yield pd.DataFrame(out_rows, columns=[f.name for f in EXTRACTED_SCHEMA.fields])
+            cols = {k: [r[k] for r in rows] for k in _BODY_COLUMNS}
+            for k in ("url", "warc_ts", "partition_id"):
+                cols[k] = b[k]
+            yield arrow_batch(cols, _EXTRACTED_ARROW)
 
     return extract_batch
 
@@ -269,8 +278,10 @@ def extract_pages(
     toggles turnover verification (S11 parity: the reference resolves it
     from param-or-.env, tests/test_parsers.py:245-276 exercise both).
     """
-    return _shuffled(pages, num_partitions, checkpoint_partitions, skew_threshold).mapInPandas(
-        make_extract_batch(verify), schema=EXTRACTED_SCHEMA
+    return arrow_kernel(
+        _shuffled(pages, num_partitions, checkpoint_partitions, skew_threshold),
+        make_extract_batch(verify),
+        EXTRACTED_SCHEMA,
     )
 
 
@@ -322,24 +333,20 @@ def extract_kind_audit(
     full operator shipped every parsed text, transaction array and
     metadata struct back through Arrow just to drop them — hand-done
     column pruning for an opaque UDF stage (the optimizer cannot see
-    inside ``mapInPandas``). A parity test pins per-kind/error counts
+    inside ``mapInArrow``). A parity test pins per-kind/error counts
     equal to :func:`extract_pages` on the same corpus."""
 
-    def audit_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def audit_batch(batches: Iterator) -> Iterator[list]:
         for b in batches:
-            per_doc = [
-                _extract_one(u, p) for u, p in zip(b["url"].tolist(), b["html"])
+            yield [
+                _extract_one(u, p) for u, p in zip(b["url"].tolist(), b["html"].tolist())
             ]
-            yield pd.DataFrame(
-                {
-                    "kind": [d["kind"] for d in per_doc],
-                    "error": [d["error"] for d in per_doc],
-                }
-            )
 
-    return _shuffled(
-        pages, num_partitions, checkpoint_partitions, skew_threshold
-    ).mapInPandas(audit_batch, schema="kind string, error string")
+    return arrow_kernel(
+        _shuffled(pages, num_partitions, checkpoint_partitions, skew_threshold),
+        audit_batch,
+        "kind string, error string",
+    )
 
 
 def extract_partition_walls(
@@ -360,13 +367,13 @@ def extract_partition_walls(
 
     inner = make_extract_batch(verify)
 
-    def timed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t0 = time.time()
-        n = 0
-        for out in inner(batches):
-            n += len(out)
-        yield pd.DataFrame({"wall_sec": [time.time() - t0], "n_docs": [n]})
+    def timed(batches: Iterator) -> Iterator[dict]:
+        t0 = time.perf_counter()
+        n = sum(out.num_rows for out in inner(batches))
+        yield {"wall_sec": [time.perf_counter() - t0], "n_docs": [n]}
 
-    return _shuffled(pages, num_partitions, checkpoint_partitions, skew_threshold).mapInPandas(
-        timed, schema="wall_sec double, n_docs long"
+    return arrow_kernel(
+        _shuffled(pages, num_partitions, checkpoint_partitions, skew_threshold),
+        timed,
+        "wall_sec double, n_docs long",
     )

@@ -13,11 +13,10 @@ what makes it tractable.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from . import arrow_kernel
 
 __all__ = [
     "extract_outlinks",
@@ -48,55 +47,48 @@ def synth_linkdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     pure function of (i, k), so a DuckDB oracle recomputes the expected
     edge table while the Spark path walks REAL markup (nav boilerplate,
     nested tags, entities, unquoted attributes)."""
-    base = spark.range(0, n, 1, num_partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for raw in b["id"]:
-                i = int(raw)
-                anchors = "".join(
-                    (
-                        f'<li><a href="https://host{(i * k) % 20}.example/p{k}">'
-                        f"go &amp; see {k}</a></li>"
-                        if k % 2
-                        else f"<li><a href=https://host{(i * k) % 20}.example/p{k}>"
-                             f"go &amp; see <b>{k}</b></a></li>"
-                    )
-                    for k in range(1, 1 + i % 5)
-                )
-                html = (
-                    f"<html><head><title>doc {i}</title></head><body>"
-                    f"<nav><a name='top'>menu</a></nav>"
-                    f"<article><p>Body text of document {i}.</p>"
-                    f"<ul>{anchors}</ul></article></body></html>"
-                )
-                rows.append({"doc_id": i, "html": html.encode("utf-8")})
-            yield pd.DataFrame(rows, columns=["doc_id", "html"])
+    def row(i: int) -> dict:
+        anchors = "".join(
+            (
+                f'<li><a href="https://host{(i * k) % 20}.example/p{k}">'
+                f"go &amp; see {k}</a></li>"
+                if k % 2
+                else f"<li><a href=https://host{(i * k) % 20}.example/p{k}>"
+                     f"go &amp; see <b>{k}</b></a></li>"
+            )
+            for k in range(1, 1 + i % 5)
+        )
+        html = (
+            f"<html><head><title>doc {i}</title></head><body>"
+            f"<nav><a name='top'>menu</a></nav>"
+            f"<article><p>Body text of document {i}.</p>"
+            f"<ul>{anchors}</ul></article></body></html>"
+        )
+        return {"doc_id": i, "html": html.encode("utf-8")}
 
-    return base.mapInPandas(gen, schema="doc_id BIGINT, html BINARY")
+    return arrow_kernel(
+        spark.range(0, n, 1, num_partitions),
+        lambda bs: ([row(i) for i in b["id"].tolist()] for b in bs),
+        "doc_id BIGINT, html BINARY",
+    )
 
 
 def extract_outlinks(docs: DataFrame, id_col: str = "doc_id", html_col: str = "html") -> DataFrame:
     """(doc, href, anchor) edges via the byte-level href walk."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         from b_pdf_parser_spark.htmlmodel import extract_links
 
         for b in batches:
-            rows = []
-            for did, payload in zip(b[id_col], b[html_col]):
-                if payload is None:
-                    continue
-                for link in extract_links(bytes(payload)):
-                    rows.append({
-                        "doc_id": int(did),
-                        "href": link["href"],
-                        "anchor": link["anchor"],
-                    })
-            yield pd.DataFrame(rows, columns=["doc_id", "href", "anchor"])
+            yield [
+                {"doc_id": did, **link}
+                for did, payload in zip(b[id_col].tolist(), b[html_col].tolist())
+                if payload is not None
+                for link in extract_links(payload)
+            ]
 
-    return docs.mapInPandas(run, schema=LINKS_SCHEMA_DDL)
+    return arrow_kernel(docs, run, LINKS_SCHEMA_DDL)
 
 
 def anchor_texts(
@@ -537,50 +529,43 @@ def synth_pdflink_doc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     annotations to ``https://host{(i*k) % 20}.example/d{k}`` — real PDFs
     through the writer (alternating emission modes), formulas the DuckDB
     oracle recomputes."""
-    base = spark.range(0, n, 1, num_partitions)
+    from ..pdfwriter import build_pdf
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from b_pdf_parser_spark.pdfwriter import build_pdf
+    def row(i: int) -> dict:
+        spans = [[(40.0, 700.0, f"pdf with links {i}")]]
+        links = [
+            (0, f"https://host{(i * k) % 20}.example/d{k}")
+            for k in range(1, 1 + i % 4)
+        ]
+        return {"doc_id": i, "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), links=links)}
 
-        for b in batches:
-            rows = []
-            for raw in b["id"]:
-                i = int(raw)
-                spans = [[(40.0, 700.0, f"pdf with links {i}")]]
-                links = [
-                    (0, f"https://host{(i * k) % 20}.example/d{k}")
-                    for k in range(1, 1 + i % 4)
-                ]
-                rows.append({
-                    "doc_id": i,
-                    "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), links=links),
-                })
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
-
-    return base.mapInPandas(gen, schema="doc_id BIGINT, pdf BINARY")
+    return arrow_kernel(
+        spark.range(0, n, 1, num_partitions),
+        lambda bs: ([row(i) for i in b["id"].tolist()] for b in bs),
+        "doc_id BIGINT, pdf BINARY",
+    )
 
 
 def extract_pdf_outlinks(docs: DataFrame, id_col: str = "doc_id", pdf_col: str = "pdf") -> DataFrame:
     """(doc, page, uri) edges from URI link annotations (one Arrow-batch
     Python dispatch per document; corrupt docs contribute no rows)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from b_pdf_parser_spark.pdfmodel import PdfError, link_annotations
+    def run(batches):
+        from b_pdf_parser_spark.pdfmodel import link_annotations
 
-        cols = ["doc_id", "page", "uri"]
         for b in batches:
             rows = []
-            for did, payload in zip(b[id_col], b[pdf_col]):
+            for did, payload in zip(b[id_col].tolist(), b[pdf_col].tolist()):
                 if payload is None:
                     continue
                 try:
-                    for rec in link_annotations(bytes(payload)):
-                        rows.append({"doc_id": int(did), **rec})
+                    for rec in link_annotations(payload):
+                        rows.append({"doc_id": did, **rec})
                 except Exception:  # same contract as the extraction
                     # operator (S10): a corrupt document (PdfError, or e.g.
                     # a ValueError from a mangled AES stream) must
                     # contribute no rows, never fail the task
                     continue
-            yield pd.DataFrame(rows, columns=cols)
+            yield rows
 
-    return docs.mapInPandas(run, schema=PDF_LINKS_SCHEMA_DDL)
+    return arrow_kernel(docs, run, PDF_LINKS_SCHEMA_DDL)

@@ -25,7 +25,7 @@ Decode status, honestly labeled per format:
   ``arithjpeg``, round 6).
 
 Everything Spark-side is real and tested for both classes: schema, Arrow
-batch shape, partitioning, the ``mapInPandas`` feature-extraction
+batch shape, partitioning, the ``arrow_kernel`` feature-extraction
 signature. The deterministic FAKE container
 (``b"FAKE" + kind(3s) + width(u16be) + height(u16be) + channels(u8) +
 pixels``) remains for pipeline plumbing tests where the codec itself is
@@ -36,11 +36,11 @@ from __future__ import annotations
 
 import math
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from . import arrow_kernel
 
 __all__ = [
     "MEDIA_SCHEMA_DDL",
@@ -96,22 +96,15 @@ def encode_fake_media(media_id: int, kind: str = "img") -> bytes:
 
 
 def synth_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    base = spark.range(0, n, 1, num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            kinds = ["img", "aud", "vid"]
-            rows = [
-                {
-                    "media_id": int(i),
-                    "kind": kinds[int(i) % 3],
-                    "payload": encode_fake_media(int(i), kinds[int(i) % 3]),
-                }
-                for i in b["id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
-
-    return base.mapInPandas(gen, schema=MEDIA_SCHEMA_DDL)
+    kinds = ["img", "aud", "vid"]
+    return arrow_kernel(
+        spark.range(0, n, 1, num_partitions),
+        lambda bs: ([
+            {"media_id": i, "kind": kinds[i % 3], "payload": encode_fake_media(i, kinds[i % 3])}
+            for i in b["id"].tolist()
+        ] for b in bs),
+        MEDIA_SCHEMA_DDL,
+    )
 
 
 def _decode_one(media_id: int, kind: str, payload: Optional[bytes]) -> dict:
@@ -170,29 +163,27 @@ def decode_features(media: DataFrame) -> DataFrame:
     """Header parse + byte-entropy features via Arrow batches (one Python
     dispatch per payload, never per byte-row)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         for b in batches:
-            rows = [
-                _decode_one(int(i), k, p)
-                for i, k, p in zip(b["media_id"], b["kind"], b["payload"])
+            yield [
+                _decode_one(i, k, p) for i, k, p in zip(
+                    b["media_id"].tolist(), b["kind"].tolist(), b["payload"].tolist()
+                )
             ]
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "width", "height", "channels",
-                         "n_bytes", "byte_entropy", "error"],
-            )
 
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA_DDL)
+    return arrow_kernel(media, run, FEATURES_SCHEMA_DDL)
 
 
 def frame_sample(media: DataFrame, every: int = 2) -> DataFrame:
     """Treat each pixel-row of a 'vid' payload as a frame; emit every k-th
     frame's byte offset + length (the video-sampling plumbing, sans codec)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         for b in batches:
             out = []
-            for i, k, p in zip(b["media_id"], b["kind"], b["payload"]):
+            for i, k, p in zip(
+                b["media_id"].tolist(), b["kind"].tolist(), b["payload"].tolist()
+            ):
                 if k != "vid" or not p or p[:4] != _MAGIC:
                     continue
                 w = int.from_bytes(p[7:9], "big")
@@ -204,9 +195,9 @@ def frame_sample(media: DataFrame, every: int = 2) -> DataFrame:
                         "media_id": int(i), "frame": f,
                         "offset": 12 + f * frame_len, "length": frame_len,
                     })
-            yield pd.DataFrame(out, columns=["media_id", "frame", "offset", "length"])
+            yield out
 
-    return media.mapInPandas(run, schema="media_id BIGINT, frame INT, offset BIGINT, length INT")
+    return arrow_kernel(media, run, "media_id BIGINT, frame INT, offset BIGINT, length INT")
 
 
 # ---------------------------------------------------------------------------
@@ -657,21 +648,14 @@ def encode_real_media(i: int) -> bytes:
 
 
 def synth_real_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    base = spark.range(0, n, 1, num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                {
-                    "media_id": int(i),
-                    "kind": real_media_dims(int(i))["fmt"],
-                    "payload": encode_real_media(int(i)),
-                }
-                for i in b["id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
-
-    return base.mapInPandas(gen, schema=MEDIA_SCHEMA_DDL)
+    return arrow_kernel(
+        spark.range(0, n, 1, num_partitions),
+        lambda bs: ([
+            {"media_id": i, "kind": real_media_dims(i)["fmt"], "payload": encode_real_media(i)}
+            for i in b["id"].tolist()
+        ] for b in bs),
+        MEDIA_SCHEMA_DDL,
+    )
 
 
 def avi_media_dims(i: int) -> dict:
@@ -702,18 +686,14 @@ def encode_avi_media(i: int) -> bytes:
 
 
 def synth_avi_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    base = spark.range(0, n, 1, num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                {"media_id": int(i), "kind": "mjpeg",
-                 "payload": encode_avi_media(int(i))}
-                for i in b["id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
-
-    return base.mapInPandas(gen, schema=MEDIA_SCHEMA_DDL)
+    return arrow_kernel(
+        spark.range(0, n, 1, num_partitions),
+        lambda bs: ([
+            {"media_id": i, "kind": "mjpeg", "payload": encode_avi_media(i)}
+            for i in b["id"].tolist()
+        ] for b in bs),
+        MEDIA_SCHEMA_DDL,
+    )
 
 
 AVI_FRAME_SCHEMA_DDL = (
@@ -733,10 +713,10 @@ def avi_frame_features(media: DataFrame, every: int = 2) -> DataFrame:
     hide generator bugs)."""
     from ..avicodec import sample_avi_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         for b in batches:
             rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
+            for mid, payload in zip(b["media_id"].tolist(), b["payload"].tolist()):
                 w, h, fps, sampled = sample_avi_frames(bytes(payload), every=every)
                 for fidx, (fw, fh, fch, px) in sampled:
                     vals = memoryview(px)
@@ -748,13 +728,9 @@ def avi_frame_features(media: DataFrame, every: int = 2) -> DataFrame:
                         "weighted_sum": int(sum((k + 1) * v
                                              for k, v in enumerate(vals))),
                     })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "width", "height", "fps",
-                         "n_values", "value_sum", "weighted_sum"],
-            )
+            yield rows
 
-    return media.mapInPandas(run, schema=AVI_FRAME_SCHEMA_DDL)
+    return arrow_kernel(media, run, AVI_FRAME_SCHEMA_DDL)
 
 
 def tiff_media_dims(i: int) -> dict:
@@ -837,21 +813,14 @@ def encode_tiff_media(i: int) -> bytes:
 
 
 def synth_tiff_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    base = spark.range(0, n, 1, num_partitions)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                {
-                    "media_id": int(i),
-                    "kind": tiff_media_dims(int(i))["kind"],
-                    "payload": encode_tiff_media(int(i)),
-                }
-                for i in b["id"]
-            ]
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload"])
-
-    return base.mapInPandas(gen, schema=MEDIA_SCHEMA_DDL)
+    return arrow_kernel(
+        spark.range(0, n, 1, num_partitions),
+        lambda bs: ([
+            {"media_id": i, "kind": tiff_media_dims(i)["kind"], "payload": encode_tiff_media(i)}
+            for i in b["id"].tolist()
+        ] for b in bs),
+        MEDIA_SCHEMA_DDL,
+    )
 
 
 def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
@@ -954,17 +923,14 @@ def real_media_features(media: DataFrame) -> DataFrame:
     values (top-down RGB pixels / int16 samples) reduce to order-sensitive
     integer sums a SQL oracle can recompute from the generating formulas."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "fmt", "width", "height", "channels",
-                "sample_rate", "n_values", "value_sum", "weighted_sum", "error"]
+    def run(batches):
         for b in batches:
-            rows = [
-                _real_decode_one(int(i), p)
-                for i, p in zip(b["media_id"], b["payload"])
+            yield [
+                _real_decode_one(i, p)
+                for i, p in zip(b["media_id"].tolist(), b["payload"].tolist())
             ]
-            yield pd.DataFrame(rows, columns=cols)
 
-    return media.mapInPandas(run, schema=REAL_FEATURES_SCHEMA_DDL)
+    return arrow_kernel(media, run, REAL_FEATURES_SCHEMA_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -986,15 +952,13 @@ def synth_imagedoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     emission) — every byte a pure function of doc_id, so a DuckDB oracle
     can recompute the expected inventory while the Spark path exercises
     the REAL writer → parser roundtrip."""
-    base = spark.range(0, n, 1, num_partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches):
         from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
 
         for b in batches:
             rows = []
-            for raw in b["id"]:
-                i = int(raw)
+            for i in b["id"].tolist():
                 spans = [[(40.0, 700.0, f"image doc {i}"),
                           (40.0, 680.0, "with pictures")]]
                 imgs = [
@@ -1011,9 +975,9 @@ def synth_imagedoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
                     "doc_id": i,
                     "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
                 })
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
+            yield rows
 
-    return base.mapInPandas(gen, schema=IMAGEDOC_SCHEMA_DDL)
+    return arrow_kernel(spark.range(0, n, 1, num_partitions), gen, IMAGEDOC_SCHEMA_DDL)
 
 
 def pdf_image_features(docs: DataFrame) -> DataFrame:
@@ -1021,13 +985,12 @@ def pdf_image_features(docs: DataFrame) -> DataFrame:
     Python dispatch per document; pixels are never decoded — see
     ``pdfmodel.image_inventory``)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         from b_pdf_parser_spark.pdfmodel import image_inventory
 
-        cols = ["doc_id", "page", "name", "width", "height", "filter", "n_bytes"]
         for b in batches:
             rows = []
-            for did, pdf in zip(b["doc_id"], b["pdf"]):
+            for did, pdf in zip(b["doc_id"].tolist(), b["pdf"].tolist()):
                 try:
                     for rec in image_inventory(bytes(pdf)):
                         rows.append({"doc_id": int(did), **rec})
@@ -1037,9 +1000,9 @@ def pdf_image_features(docs: DataFrame) -> DataFrame:
                         "width": 0, "height": 0,
                         "filter": f"error:{type(e).__name__}", "n_bytes": 0,
                     })
-            yield pd.DataFrame(rows, columns=cols)
+            yield rows
 
-    return docs.mapInPandas(run, schema=IMAGE_INV_SCHEMA_DDL)
+    return arrow_kernel(docs, run, IMAGE_INV_SCHEMA_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -1077,9 +1040,8 @@ def synth_jpegdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     decoy per doc
     so a filter-routing bug (decoding the wrong stream) breaks the
     oracle with an error row instead of passing silently."""
-    base = spark.range(0, n, 1, num_partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches):
         from b_pdf_parser_spark.jpegcodec import (
             QUANT_CHROMA, QUANT_LUM, encode_jpeg, encode_jpeg_progressive,
         )
@@ -1088,8 +1050,7 @@ def synth_jpegdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
         q8 = ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
         for b in batches:
             rows = []
-            for raw in b["id"]:
-                i = int(raw)
+            for i in b["id"].tolist():
                 spans = [[(40.0, 700.0, f"jpeg doc {i}")]]
                 imgs = []
                 for j in range(i % 3):
@@ -1113,9 +1074,9 @@ def synth_jpegdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
                     "doc_id": i,
                     "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
                 })
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
+            yield rows
 
-    return base.mapInPandas(gen, schema=IMAGEDOC_SCHEMA_DDL)
+    return arrow_kernel(spark.range(0, n, 1, num_partitions), gen, IMAGEDOC_SCHEMA_DDL)
 
 
 def pdf_jpeg_pixel_features(docs: DataFrame) -> DataFrame:
@@ -1126,15 +1087,13 @@ def pdf_jpeg_pixel_features(docs: DataFrame) -> DataFrame:
     routed past the codec (inventory only, no row here). One Arrow-batch
     Python dispatch per document."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         from b_pdf_parser_spark.jpegcodec import decode_jpeg
         from b_pdf_parser_spark.pdfmodel import image_inventory
 
-        cols = ["doc_id", "page", "name", "width", "height", "channels",
-                "n_values", "value_sum", "weighted_sum", "error"]
         for b in batches:
             rows = []
-            for did, pdf in zip(b["doc_id"], b["pdf"]):
+            for did, pdf in zip(b["doc_id"].tolist(), b["pdf"].tolist()):
                 try:
                     for rec in image_inventory(bytes(pdf), with_data=True):
                         if rec["filter"] != "DCTDecode":
@@ -1164,9 +1123,9 @@ def pdf_jpeg_pixel_features(docs: DataFrame) -> DataFrame:
                         "weighted_sum": None,
                         "error": f"{type(e).__name__}: {e}",
                     })
-            yield pd.DataFrame(rows, columns=cols)
+            yield rows
 
-    return docs.mapInPandas(run, schema=JPEG_PIX_SCHEMA_DDL)
+    return arrow_kernel(docs, run, JPEG_PIX_SCHEMA_DDL)
 
 
 def _jpx_xobject_dims(i: int, j: int) -> dict:
@@ -1203,16 +1162,14 @@ def synth_jpxdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     decoy per doc so a filter-routing bug (running the wrong codec over
     the wrong stream) breaks the oracle with an error row instead of
     passing silently."""
-    base = spark.range(0, n, 1, num_partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches):
         from b_pdf_parser_spark.jpxcodec import encode_jpx
         from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
 
         for b in batches:
             rows = []
-            for raw in b["id"]:
-                i = int(raw)
+            for i in b["id"].tolist():
                 spans = [[(40.0, 700.0, f"jpx doc {i}")]]
                 imgs = []
                 for j in range(i % 3):
@@ -1229,9 +1186,9 @@ def synth_jpxdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
                     "doc_id": i,
                     "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
                 })
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
+            yield rows
 
-    return base.mapInPandas(gen, schema=IMAGEDOC_SCHEMA_DDL)
+    return arrow_kernel(spark.range(0, n, 1, num_partitions), gen, IMAGEDOC_SCHEMA_DDL)
 
 
 def pdf_jpx_pixel_features(docs: DataFrame) -> DataFrame:
@@ -1240,15 +1197,13 @@ def pdf_jpx_pixel_features(docs: DataFrame) -> DataFrame:
     the features are exact by construction). Non-JPX images are routed
     past the codec. One Arrow-batch Python dispatch per document."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         from b_pdf_parser_spark.jpxcodec import decode_jpx
         from b_pdf_parser_spark.pdfmodel import image_inventory
 
-        cols = ["doc_id", "page", "name", "width", "height", "channels",
-                "n_values", "value_sum", "weighted_sum", "error"]
         for b in batches:
             rows = []
-            for did, pdf in zip(b["doc_id"], b["pdf"]):
+            for did, pdf in zip(b["doc_id"].tolist(), b["pdf"].tolist()):
                 try:
                     for rec in image_inventory(bytes(pdf), with_data=True):
                         if rec["filter"] != "JPXDecode":
@@ -1278,9 +1233,9 @@ def pdf_jpx_pixel_features(docs: DataFrame) -> DataFrame:
                         "weighted_sum": None,
                         "error": f"{type(e).__name__}: {e}",
                     })
-            yield pd.DataFrame(rows, columns=cols)
+            yield rows
 
-    return docs.mapInPandas(run, schema=JPEG_PIX_SCHEMA_DDL)
+    return arrow_kernel(docs, run, JPEG_PIX_SCHEMA_DDL)
 
 
 def _ccitt_xobject_dims(i: int, j: int) -> dict:
@@ -1326,16 +1281,14 @@ def synth_ccittdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     The decoded pixels are identical across regimes (bi-level fax coding
     is lossless), so the oracle formulas don't depend on K — only the
     decode PATH does, which is exactly what the rotation pins."""
-    base = spark.range(0, n, 1, num_partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches):
         from b_pdf_parser_spark.ccittcodec import encode_g3, encode_g4
         from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
 
         for b in batches:
             rows = []
-            for raw in b["id"]:
-                i = int(raw)
+            for i in b["id"].tolist():
                 spans = [[(40.0, 700.0, f"ccitt doc {i}")]]
                 imgs = []
                 for j in range(1 + i % 2):
@@ -1370,9 +1323,9 @@ def synth_ccittdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
                     "doc_id": i,
                     "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
                 })
-            yield pd.DataFrame(rows, columns=["doc_id", "pdf"])
+            yield rows
 
-    return base.mapInPandas(gen, schema=IMAGEDOC_SCHEMA_DDL)
+    return arrow_kernel(spark.range(0, n, 1, num_partitions), gen, IMAGEDOC_SCHEMA_DDL)
 
 
 def pdf_ccitt_pixel_features(docs: DataFrame) -> DataFrame:
@@ -1385,15 +1338,13 @@ def pdf_ccitt_pixel_features(docs: DataFrame) -> DataFrame:
     routed past the codec. One Arrow-batch Python dispatch per
     document."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         from b_pdf_parser_spark.ccittcodec import decode_g3, decode_g4
         from b_pdf_parser_spark.pdfmodel import image_inventory
 
-        cols = ["doc_id", "page", "name", "width", "height", "channels",
-                "n_values", "value_sum", "weighted_sum", "error"]
         for b in batches:
             rows = []
-            for did, pdf in zip(b["doc_id"], b["pdf"]):
+            for did, pdf in zip(b["doc_id"].tolist(), b["pdf"].tolist()):
                 try:
                     for rec in image_inventory(bytes(pdf), with_data=True):
                         if rec["filter"] != "CCITTFaxDecode":
@@ -1433,6 +1384,6 @@ def pdf_ccitt_pixel_features(docs: DataFrame) -> DataFrame:
                         "weighted_sum": None,
                         "error": f"{type(e).__name__}: {e}",
                     })
-            yield pd.DataFrame(rows, columns=cols)
+            yield rows
 
-    return docs.mapInPandas(run, schema=JPEG_PIX_SCHEMA_DDL)
+    return arrow_kernel(docs, run, JPEG_PIX_SCHEMA_DDL)

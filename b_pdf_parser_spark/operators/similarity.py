@@ -20,7 +20,7 @@ Four search paths, plus SemDeDup pruning:
   table lookups over the code columns, then an exact re-rank.
 
 Every distance and score is computed by the numpy batch kernels
-(``_np_*``) inside ``mapInPandas``: squared L2 and dot products accumulate
+(``_np_*``) inside ``arrow_kernel``: squared L2 and dot products accumulate
 per dimension from 0.0 in ascending order, in float64 (cast before
 multiply). That is the exact IEEE fold order of the DuckDB oracles'
 ``list_reduce``, which is what makes them hash-stable.
@@ -31,7 +31,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from . import spread
+from . import arrow_kernel, spread
 
 __all__ = [
     "cosine_topk",
@@ -98,11 +98,11 @@ def _hyperplane(dim: int, plane: int, seed: int = 7) -> list:
 
 
 def _np_rows(col) -> "object":
-    """pandas column of array values → (n, dim) float64 matrix. float32 →
+    """Column of array values → (n, dim) float64 matrix. float32 →
     float64 conversion is the same exact widening as Spark's cast."""
     import numpy as np
 
-    return np.array([np.asarray(v, dtype=np.float64) for v in col])
+    return np.array([np.asarray(v, dtype=np.float64) for v in col.tolist()])
 
 
 def _np_sq_l2(A, B):
@@ -153,13 +153,10 @@ def _np_pair_score(pairs: DataFrame, qv: str, nv: str, out: str, fn) -> DataFram
 
     def run(batches):
         for b in batches:
-            if not len(b):
-                continue
-            res = b[keep].copy()
-            res[out] = fn(_np_rows(b[qv]), _np_rows(b[nv]))
-            yield res
+            if len(b):
+                yield {**{c: b[c] for c in keep}, out: fn(_np_rows(b[qv]), _np_rows(b[nv]))}
 
-    return pairs.mapInPandas(run, schema=ddl)
+    return arrow_kernel(pairs, run, ddl)
 
 
 def _np_cosine_score(pairs: DataFrame, qv: str, nv: str) -> DataFrame:
@@ -184,13 +181,13 @@ def _assign_np(df: DataFrame, C, cid_vals, n: int, cid_ddl: str) -> DataFrame:
     cv = np.asarray(cid_vals)
     assert (np.diff(cv) > 0).all(), "cid_vals must be strictly ascending"
     bc = spark.sparkContext.broadcast((Cm, cv))
-    cols = df.columns
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + f", cid {cid_ddl}"
 
     def run(batches):
         import numpy as np
+        import pyarrow as pa
 
         Cm, cv = bc.value
         for b in batches:
@@ -198,16 +195,13 @@ def _assign_np(df: DataFrame, C, cid_vals, n: int, cid_ddl: str) -> DataFrame:
                 continue
             D = _np_sq_l2(_np_rows(b["vec"])[:, None], Cm[None])
             if n == 1:
-                out = b[cols].copy()
-                out["cid"] = cv[D.argmin(axis=1)]
+                yield b.append_column("cid", pa.array(cv[D.argmin(axis=1)]))
             else:
                 order = np.argsort(D, axis=1, kind="stable")[:, :n]
                 reps = np.repeat(np.arange(len(b)), order.shape[1])
-                out = b[cols].iloc[reps].reset_index(drop=True)
-                out["cid"] = cv[order].ravel()
-            yield out
+                yield b.take(reps).append_column("cid", pa.array(cv[order].ravel()))
 
-    return df.mapInPandas(run, schema=schema)
+    return arrow_kernel(df, run, schema)
 
 
 def ivf_ann_topk(
@@ -334,15 +328,15 @@ def _pq_sub_dists(df: DataFrame, C: list, keep: list, m: int, sub_d: int,
             else:
                 per_row = m * ksub
                 cid = np.tile(np.arange(ksub), len(b) * m)
-            out = b[keep].iloc[np.repeat(np.arange(len(b)), per_row)]
-            out = out.reset_index(drop=True)
-            out["s"] = np.repeat(np.tile(np.arange(m), len(b)), per_row // m)
-            out["cid"] = cid
-            if not codes:
-                out["d"] = D.ravel()
-            yield out
+            out = b.take(np.repeat(np.arange(len(b)), per_row))
+            yield {
+                **{c: out[c] for c in keep},
+                "s": np.repeat(np.tile(np.arange(m), len(b)), per_row // m),
+                "cid": cid,
+                "d": D.ravel(),  # dropped by the schema when ``codes``
+            }
 
-    return df.mapInPandas(run, schema=ddl)
+    return arrow_kernel(df, run, ddl)
 
 
 def _adc_shortlist(adc: DataFrame, rerank: int) -> DataFrame:
@@ -595,13 +589,10 @@ def semantic_dedup(
             X = _np_rows(b["vec"])
             D = _np_sq_l2(X[:, None], Cm[None])
             nrm = np.sqrt(_np_dot(X, X))
-            out = b[["id"]].copy()
-            out["cid"] = cv[D.argmin(axis=1)]
-            out["nvec"] = list(X / nrm[:, None])
-            yield out
+            yield {"id": b["id"], "cid": cv[D.argmin(axis=1)], "nvec": list(X / nrm[:, None])}
 
-    assigned = vecs.mapInPandas(
-        assign_norm, schema=f"id {id_ddl}, cid {id_ddl}, nvec array<double>"
+    assigned = arrow_kernel(
+        vecs, assign_norm, f"id {id_ddl}, cid {id_ddl}, nvec array<double>"
     ).localCheckpoint(eager=False)
     # SALT the in-cluster self-join: the pairwise stage is COMPUTE-bound
     # on tiny bytes, so AQE's size-based coalesce would otherwise fold the
@@ -690,11 +681,9 @@ def lsh_ann_topk(
                 for p in range(P.shape[0]):
                     s = np.where(_np_dot(X, P[p]) >= 0, "1", "0")
                     bits = s if bits is None else np.char.add(bits, s)
-                out = b.copy()
-                out["bucket"] = bits
-                yield out
+                yield {id_out: b[id_out], vec_out: b[vec_out], "bucket": bits.tolist()}
 
-        return picked.mapInPandas(run, schema=ddl)
+        return arrow_kernel(picked, run, ddl)
 
     with_sig = with_sig_np(emb, "neighbor_id", "nvec")
     q = with_sig_np(emb.filter(query_pred), "query_id", "qvec")

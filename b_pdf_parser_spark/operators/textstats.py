@@ -22,6 +22,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from . import arrow_kernel
+
 __all__ = [
     "STOPWORDS",
     "token_count",
@@ -133,8 +135,6 @@ def gopher_quality_frame(
 
     Tokens are ``split(lower(trim(text)), ' ')``, as in the oracle. Null
     text → all-null rules and a null conjunction."""
-    import pandas as pd
-
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     id_ddl = src.schema.fields[0].dataType.simpleString()
     stop = set(STOPWORDS["en"])
@@ -143,11 +143,11 @@ def gopher_quality_frame(
         sym = set("#…")
 
         for b in batches:
-            rows = {k: [] for k in ("doc_id", "word_count_ok", "mean_word_len_ok",
+            rows = {k: [] for k in ("word_count_ok", "mean_word_len_ok",
                                     "symbol_ratio_ok", "alpha_ratio_ok",
                                     "stopwords_ok", "passes")}
-            for i, s in zip(b["doc_id"], b["text"]):
-                rows["doc_id"].append(i)
+            rows["doc_id"] = b["doc_id"]
+            for s in b["text"].tolist():
                 if s is None:
                     for k in ("word_count_ok", "mean_word_len_ok", "symbol_ratio_ok",
                               "alpha_ratio_ok", "stopwords_ok", "passes"):
@@ -183,15 +183,14 @@ def gopher_quality_frame(
                 rows["passes"].append(
                     wc_ok and mwl_ok and sym_ok and alpha_ok and stop_ok
                 )
-            yield pd.DataFrame(rows)
+            yield rows
 
-    return src.mapInPandas(
+    return arrow_kernel(
+        src,
         run,
-        schema=(
-            f"doc_id {id_ddl}, word_count_ok boolean, mean_word_len_ok boolean,"
-            " symbol_ratio_ok boolean, alpha_ratio_ok boolean,"
-            " stopwords_ok boolean, passes boolean"
-        ),
+        f"doc_id {id_ddl}, word_count_ok boolean, mean_word_len_ok boolean,"
+        " symbol_ratio_ok boolean, alpha_ratio_ok boolean,"
+        " stopwords_ok boolean, passes boolean",
     )
 
 
@@ -203,17 +202,14 @@ def langid_frame(
     wins if its vote is > 0 and ≥ every LOWER-priority language's vote,
     checked in the fixed en > de > fr > es > id order; zero votes
     everywhere (or null text) → 'und'."""
-    import pandas as pd
-
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     id_ddl = src.schema.fields[0].dataType.simpleString()
     stop_sets = {lang: set(words) for lang, words in STOPWORDS.items()}
 
     def run(batches):
         for b in batches:
-            ids, langs = [], []
-            for i, s in zip(b["doc_id"], b["text"]):
-                ids.append(i)
+            langs = []
+            for s in b["text"].tolist():
                 if s is None:
                     langs.append("und")
                     continue
@@ -231,9 +227,9 @@ def langid_frame(
                         guess = lang
                         break
                 langs.append(guess)
-            yield pd.DataFrame({"doc_id": ids, out_col: langs})
+            yield {"doc_id": b["doc_id"], out_col: langs}
 
-    return src.mapInPandas(run, schema=f"doc_id {id_ddl}, {out_col} string")
+    return arrow_kernel(src, run, f"doc_id {id_ddl}, {out_col} string")
 
 
 def unigram_logprob(
@@ -510,8 +506,6 @@ def intra_doc_repetition(
     unrounded int/int IEEE doubles (Python and JVM divide identical exact
     integers), so the DuckDB oracle remains bit-identical.
     """
-    import pandas as pd
-
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     id_ddl = src.schema.fields[0].dataType.simpleString()
 
@@ -520,7 +514,7 @@ def intra_doc_repetition(
 
         for b in batches:
             ids, t2s, d3s = [], [], []
-            for i, s in zip(b["doc_id"], b["text"]):
+            for i, s in zip(b["doc_id"].tolist(), b["text"].tolist()):
                 if s is None:
                     continue
                 ws = s.strip(" ").lower().split(" ")
@@ -533,14 +527,10 @@ def intra_doc_repetition(
                 ids.append(i)
                 t2s.append(max(c2.values()) / n2)
                 d3s.append(sum(c for c in c3.values() if c >= 2) / n3)
-            if ids:
-                yield pd.DataFrame(
-                    {"doc_id": ids, "top_2gram_frac": t2s, "dup_3gram_frac": d3s}
-                )
+            yield {"doc_id": ids, "top_2gram_frac": t2s, "dup_3gram_frac": d3s}
 
-    return src.mapInPandas(
-        run,
-        schema=f"doc_id {id_ddl}, top_2gram_frac double, dup_3gram_frac double",
+    return arrow_kernel(
+        src, run, f"doc_id {id_ddl}, top_2gram_frac double, dup_3gram_frac double"
     )
 
 
@@ -569,8 +559,6 @@ def quality_decisions(
     (a null text satisfies no rule and lands on 'ok'). The CASE is
     mirrored verbatim in the DuckDB oracle, which stays the referee.
     """
-    import pandas as pd
-
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     id_ddl = src.schema.fields[0].dataType.simpleString()
     stop = set(STOPWORDS["en"])
@@ -606,16 +594,14 @@ def quality_decisions(
             return "ok"
 
         for b in batches:
-            reasons = [reason_for(s) for s in b["text"]]
-            yield pd.DataFrame({
-                "doc_id": list(b["doc_id"]),
+            reasons = [reason_for(s) for s in b["text"].tolist()]
+            yield {
+                "doc_id": b["doc_id"],
                 "keep": [r == "ok" for r in reasons],
                 "reason": reasons,
-            })
+            }
 
-    out = src.mapInPandas(
-        run, schema=f"doc_id {id_ddl}, keep boolean, reason string"
-    )
+    out = arrow_kernel(src, run, f"doc_id {id_ddl}, keep boolean, reason string")
     return out.withColumnRenamed("doc_id", id_col) if id_col != "doc_id" else out
 
 
@@ -675,23 +661,24 @@ def with_compression_ratio(
 
     No SQL engine exposes zlib, so this is the one textstats op without a
     DuckDB oracle; it is instead pinned by a unit test against direct
-    ``zlib.compress`` on the same strings. Runs as an Arrow-batched
-    ``mapInPandas`` (one Python dispatch per batch; zlib itself is C), and
+    ``zlib.compress`` on the same strings. Runs as an Arrow batch kernel
+    (one Python dispatch per batch; zlib itself is C), and
     the compression level is pinned so results are reproducible across
     runs and cluster sizes. Empty/null text → ratio 0.0.
     """
     import zlib
 
+    import pyarrow as pa
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     out_schema = StructType(list(df.schema.fields) + [StructField(out_col, DoubleType())])
 
     def ratios(batches):
-        for pdf in batches:
-            raw = pdf[text_col].fillna("").str.encode("utf-8")
-            comp = raw.map(lambda b: float(len(zlib.compress(b, level))))
-            n = raw.str.len().astype("float64")
-            pdf[out_col] = (comp / n.where(n > 0, 1.0)).where(n > 0, 0.0)
-            yield pdf
+        for b in batches:
+            raws = [(t or "").encode("utf-8") for t in b[text_col].tolist()]
+            yield b.append_column(out_col, pa.array(
+                [len(zlib.compress(r, level)) / len(r) if r else 0.0 for r in raws],
+                pa.float64(),
+            ))
 
-    return df.mapInPandas(ratios, schema=out_schema)
+    return arrow_kernel(df, ratios, out_schema)

@@ -21,8 +21,8 @@ so the full object model is implemented here from the public PDF 1.7 spec:
   baseline Y, sorted left-to-right, and lines are emitted top-to-bottom.
 
 Design rule for Spark: these are pure ``bytes -> str`` functions with **no**
-I/O and no global state, so they can run inside Arrow-batched
-``mapInPandas`` workers with one Python dispatch per document (never per
+I/O and no global state, so they can run inside Arrow batch kernels
+(``mapInArrow`` workers) with one Python dispatch per document (never per
 row of output). Errors raise ``PdfError``; the Spark operator catches it and
 fills the ``error`` column (reference semantics:
 ``/root/reference/pdfparser/batch.py:183-189`` — a bad document never fails

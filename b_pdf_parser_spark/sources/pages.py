@@ -13,7 +13,7 @@ oversized (10× pages — exercises the salt-split skew path).
 
 Everything is keyed on ``(seed, doc index)`` only, so generation is
 embarrassingly parallel: the Spark builder generates partitions independently
-with ``mapInPandas`` over ``spark.range`` — no driver-side loop, scales to
+with ``arrow_kernel`` over ``spark.range`` — no driver-side loop, scales to
 10^9 rows.
 
 Statement content mirrors the shapes in the reference's corpus/generator
@@ -27,7 +27,7 @@ import random
 import zlib
 from datetime import datetime, timedelta
 from functools import lru_cache
-from typing import Any, Dict, Iterator, List, Optional, Tuple
+from typing import Any, Dict, List, Optional, Tuple
 
 from ..pdfwriter import build_pdf, make_image, pdf_from_lines
 
@@ -916,18 +916,17 @@ def make_page_row(i: int, seed: int = 42) -> Dict[str, Any]:
 def synth_pages_df(spark, n: int, seed: int = 42, num_partitions: Optional[int] = None):
     """Distributed deterministic corpus: one row per index in [0, n).
 
-    Generation happens executor-side via ``mapInPandas`` over ``spark.range``
+    Generation happens executor-side via ``arrow_kernel`` over ``spark.range``
     (keyed only on (seed, i)); no driver loop, no broadcast of payloads —
     the same code path scales from 10^3 test rows to 10^9 bench rows.
+    ``make_page_row``'s naive ``warc_ts`` is read as UTC, so the instant
+    does not depend on the session time zone either.
     """
-    import pandas as pd
+    from ..operators import arrow_kernel
 
     parts = num_partitions or max(spark.sparkContext.defaultParallelism, 8)
-    base = spark.range(0, n, 1, parts)
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = [make_page_row(int(i), seed) for i in b["id"]]
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    return base.mapInPandas(gen, schema=PAGES_SCHEMA_DDL)
+    return arrow_kernel(
+        spark.range(0, n, 1, parts),
+        lambda bs: ([make_page_row(i, seed) for i in b["id"].tolist()] for b in bs),
+        PAGES_SCHEMA_DDL,
+    )

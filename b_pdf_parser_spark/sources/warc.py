@@ -14,13 +14,17 @@ works on real segments):
   (one gzip member per record) so readers can split/seek without
   decompressing the whole segment.
 
-Spark shape: writing runs inside ``mapInPandas`` — each Arrow batch
+Spark shape: writing runs inside ``arrow_kernel`` — each Arrow batch
 serializes to one ``.warc.gz`` segment written executor-side, and the
 operator *returns a manifest row* (path, records, bytes) instead of
-collecting anything; reading is ``binaryFile`` scan → ``mapInPandas``
+collecting anything; reading is ``binaryFile`` scan → ``arrow_kernel``
 record split (one Python dispatch per segment, Content-Length arithmetic —
 no regex over payload bytes). Both directions are linear and
 partition-parallel: 10^12 docs is just more segments.
+
+``WARC-Date`` is the record's instant in UTC (the ``Z`` suffix), whatever
+the Spark session time zone: writers format the UTC wall clock, readers
+parse the label as UTC.
 """
 
 from __future__ import annotations
@@ -31,9 +35,10 @@ import zlib
 from datetime import datetime, timezone
 from typing import Iterator, List, Optional, Tuple
 
-import pandas as pd
-import pyspark.sql.functions as F
+import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from ..operators import arrow_kernel
 
 __all__ = [
     "warc_record",
@@ -50,6 +55,20 @@ __all__ = [
 
 WARC_MANIFEST_DDL = "path STRING, n_records BIGINT, n_bytes BIGINT"
 WARC_ROWS_DDL = "url STRING, warc_ts TIMESTAMP, html BINARY"
+_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
+
+
+def _utc_stamps(col: pa.Array) -> list:
+    """A timestamp column as UTC-aware datetimes: the instant, never the
+    session-local wall clock."""
+    return col.cast(pa.timestamp("us", tz="UTC")).tolist()
+
+
+def _parse_date(date: str) -> Optional[datetime]:
+    try:
+        return datetime.strptime(date, _DATE_FMT).replace(tzinfo=timezone.utc)
+    except ValueError:
+        return None
 
 
 def _http_envelope(payload: bytes, content_type: str) -> bytes:
@@ -65,7 +84,7 @@ def warc_record(url: str, ts: datetime, payload: bytes,
                 content_type: str = "text/html") -> bytes:
     """One uncompressed WARC ``response`` record (header + HTTP envelope)."""
     body = _http_envelope(payload, content_type)
-    stamp = ts.strftime("%Y-%m-%dT%H:%M:%SZ")
+    stamp = ts.strftime(_DATE_FMT)
     head = (
         b"WARC/1.0\r\n"
         b"WARC-Type: response\r\n"
@@ -82,7 +101,7 @@ def wet_record(url: str, ts: datetime, text: str) -> bytes:
     Crawl ships extracted text in (same container, no HTTP envelope,
     Content-Type text/plain)."""
     body = text.encode("utf-8")
-    stamp = ts.strftime("%Y-%m-%dT%H:%M:%SZ")
+    stamp = ts.strftime(_DATE_FMT)
     head = (
         b"WARC/1.0\r\n"
         b"WARC-Type: conversion\r\n"
@@ -204,33 +223,31 @@ def _write_segments(
     per-record gzip members → one segment file per (Arrow batch, optional
     partition value), yielding one manifest row per segment. Rows with a
     null value or timestamp are skipped (nothing to serialize) — but a
-    NULL partition value is an error, not a skip: pandas groupby would
-    silently drop those rows (dropna defaults to True), losing records
-    with no manifest trace, so the writer fails loud instead and the
-    caller must coalesce or filter the partition column first. Keeping one
+    NULL partition value is an error, not a skip: it names no segment
+    directory, and dropping those rows would lose records with no
+    manifest trace, so the writer fails loud instead and the caller must
+    coalesce or filter the partition column first. Keeping one
     implementation means a hardening fix (timestamp coercion, atomic
     write) can never silently miss the other sink."""
     import os
     import uuid
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
         for b in batches:
-            if partition_col is not None and b[partition_col].isna().any():
+            if partition_col is not None and b[partition_col].null_count:
                 raise ValueError(
                     f"null {partition_col!r} in {suffix} sink input: "
                     "records would be dropped with no manifest trace — "
                     "coalesce or filter the partition column before writing"
                 )
-            groups = b.groupby(partition_col) if partition_col else [(None, b)]
-            for key, g in groups:
-                chunks = []
-                for url, ts, val in zip(g["url"], g["warc_ts"], g[value_col]):
-                    if val is None or pd.isna(ts):
-                        continue
-                    t = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-                    chunks.append(_gzip_member(record_fn(str(url), t, val)))
-                if not chunks:
-                    continue
+            keys = b[partition_col].tolist() if partition_col else [None] * len(b)
+            groups: dict = {}
+            for key, url, ts, val in zip(
+                keys, b["url"].tolist(), _utc_stamps(b["warc_ts"]), b[value_col].tolist()
+            ):
+                if val is not None and ts is not None:
+                    groups.setdefault(key, []).append(_gzip_member(record_fn(url, ts, val)))
+            for key, chunks in sorted(groups.items()):
                 target = (
                     os.path.join(out_dir, f"{partition_col}={int(key)}")
                     if key is not None else out_dir
@@ -240,12 +257,10 @@ def _write_segments(
                 path = os.path.join(target, f"segment-{uuid.uuid4().hex[:12]}{suffix}")
                 with open(path, "wb") as f:
                     f.write(seg)
-                yield pd.DataFrame(
-                    {"path": [path], "n_records": [len(chunks)], "n_bytes": [len(seg)]}
-                )
+                yield {"path": [path], "n_records": [len(chunks)], "n_bytes": [len(seg)]}
 
     cols = ["url", "warc_ts", value_col] + ([partition_col] if partition_col else [])
-    return docs.select(*cols).mapInPandas(emit, schema=WARC_MANIFEST_DDL)
+    return arrow_kernel(docs.select(*cols), emit, WARC_MANIFEST_DDL)
 
 
 def write_warc(pages: DataFrame, out_dir: str) -> DataFrame:
@@ -273,17 +288,16 @@ def write_warc_indexed(pages: DataFrame, out_dir: str) -> DataFrame:
     import os
     import uuid
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:
         os.makedirs(out_dir, exist_ok=True)
         for b in batches:
-            members: List[Tuple[str, bytes]] = []
-            for url, ts, payload in zip(b["url"], b["warc_ts"], b["html"]):
-                if payload is None or pd.isna(ts):
-                    continue
-                t = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-                members.append(
-                    (str(url), _gzip_member(warc_record(str(url), t, bytes(payload))))
+            members: List[Tuple[str, bytes]] = [
+                (url, _gzip_member(warc_record(url, ts, payload)))
+                for url, ts, payload in zip(
+                    b["url"].tolist(), _utc_stamps(b["warc_ts"]), b["html"].tolist()
                 )
+                if payload is not None and ts is not None
+            ]
             if not members:
                 continue
             name = f"segment-{uuid.uuid4().hex[:12]}.warc.gz"
@@ -297,14 +311,9 @@ def write_warc_indexed(pages: DataFrame, out_dir: str) -> DataFrame:
                     offs.append(off)
                     lens.append(len(member))
                     off += len(member)
-            yield pd.DataFrame(
-                {"url": urls, "path": [path] * len(urls), "offset": offs,
-                 "length": lens}
-            )
+            yield {"url": urls, "path": [path] * len(urls), "offset": offs, "length": lens}
 
-    return pages.select("url", "warc_ts", "html").mapInPandas(
-        emit, schema=WARC_INDEX_DDL
-    )
+    return arrow_kernel(pages.select("url", "warc_ts", "html"), emit, WARC_INDEX_DDL)
 
 
 def fetch_warc_record(path: str, offset: int, length: int) -> Tuple[str, str, bytes]:
@@ -354,20 +363,16 @@ def read_wet(spark, path_glob: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[list]:
         for b in batches:
-            urls, stamps, texts = [], [], []
-            for blob in b["content"]:
-                for url, date, payload in split_wet(bytes(blob)):
-                    urls.append(url)
-                    try:
-                        stamps.append(datetime.strptime(date, "%Y-%m-%dT%H:%M:%SZ"))
-                    except ValueError:
-                        stamps.append(None)
-                    texts.append(payload.decode("utf-8", "replace"))
-            yield pd.DataFrame({"url": urls, "warc_ts": stamps, "text": texts})
+            yield [
+                {"url": url, "warc_ts": _parse_date(date),
+                 "text": payload.decode("utf-8", "replace")}
+                for blob in b["content"].tolist()
+                for url, date, payload in split_wet(blob)
+            ]
 
-    return files.mapInPandas(parse, schema=WET_ROWS_DDL)
+    return arrow_kernel(files, parse, WET_ROWS_DDL)
 
 
 def read_warc(spark, path_glob: str) -> DataFrame:
@@ -381,20 +386,12 @@ def read_warc(spark, path_glob: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[list]:
         for b in batches:
-            urls, stamps, payloads = [], [], []
-            for blob in b["content"]:
-                for url, date, payload in split_warc(bytes(blob)):
-                    urls.append(url)
-                    try:
-                        # kept naive: the writer strftime's the (naive)
-                        # column value, so the roundtrip is the identity
-                        # regardless of the Spark session timezone
-                        stamps.append(datetime.strptime(date, "%Y-%m-%dT%H:%M:%SZ"))
-                    except ValueError:
-                        stamps.append(None)
-                    payloads.append(payload)
-            yield pd.DataFrame({"url": urls, "warc_ts": stamps, "html": payloads})
+            yield [
+                {"url": url, "warc_ts": _parse_date(date), "html": payload}
+                for blob in b["content"].tolist()
+                for url, date, payload in split_warc(blob)
+            ]
 
-    return files.mapInPandas(parse, schema=WARC_ROWS_DDL)
+    return arrow_kernel(files, parse, WARC_ROWS_DDL)

@@ -1,7 +1,7 @@
 """Structured-Streaming lift of the extraction stage (SURVEY §2.8).
 
 The reference is batch-only; the extraction operator is stateless, so
-lifting it to a stream is exactly the ``readStream → mapInPandas →
+lifting it to a stream is exactly the ``readStream → mapInArrow →
 writeStream`` shape the SURVEY predicts. No watermarks or stateful
 operators are required — per-document extraction has no cross-row state.
 
@@ -16,6 +16,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..operators import arrow_kernel
 from ..operators.extract import EXTRACTED_SCHEMA, extract_batch
 
 __all__ = ["extract_stream", "run_file_stream"]
@@ -30,7 +31,7 @@ def extract_stream(pages_stream: DataFrame, checkpoint_partitions: int = 64) -> 
         "html",
         F.pmod(F.xxhash64("url"), F.lit(checkpoint_partitions)).cast("int").alias("partition_id"),
     )
-    return tagged.mapInPandas(extract_batch, schema=EXTRACTED_SCHEMA)
+    return arrow_kernel(tagged, extract_batch, EXTRACTED_SCHEMA)
 
 
 def run_file_stream(

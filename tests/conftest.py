@@ -1,4 +1,5 @@
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -29,3 +30,16 @@ def spark():
 @pytest.fixture(scope="session")
 def fixtures_dir():
     return FIXTURES
+
+
+@contextmanager
+def session_time_zone(spark, tz: str):
+    """Run the block under ``spark.sql.session.timeZone=tz`` on the shared
+    session, restoring the previous value after."""
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, tz)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)

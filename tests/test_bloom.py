@@ -87,7 +87,7 @@ def test_build_plan_shuffles_blobs_not_rows(spark):
     # fans in every partition's bitmap; the probe plan must be join-free
     base = _urls(spark, 0, 200, parts=8)
     plan = bloom_bitmap(base, "url", M, K)._jdf.queryExecution().executedPlan().toString()
-    merge_levels = plan.count("FlatMapGroupsInPandas")
+    merge_levels = plan.count("FlatMapGroupsInArrow")
     assert merge_levels == 2, plan
     bloom = bloom_bitmap_bytes(base, "url", M, K)
     probe_plan = (
@@ -112,12 +112,12 @@ def test_tree_merge_matches_single_group_merge(spark):
 def test_deep_tree_bounds_fanin_and_matches(spark):
     # when partitions >> merge_groups the tree must add LEVELS (not widen
     # task fan-in): 16 partials at fan-in 2 need buckets 8 -> 4 -> 2, i.e.
-    # 4 FlatMapGroupsInPandas stages, and the result must stay
+    # 4 FlatMapGroupsInArrow stages, and the result must stay
     # byte-identical to the shallow default tree
     base = _urls(spark, 0, 400, parts=16)
     deep = bloom_bitmap(base, "url", M, K, merge_groups=2)
     plan = deep._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 4, plan
+    assert plan.count("FlatMapGroupsInArrow") == 4, plan
     assert bytes(deep.collect()[0]["bloom"]) == bloom_bitmap_bytes(base, "url", M, K)
 
 

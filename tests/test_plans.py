@@ -126,3 +126,54 @@ def test_host_cap_threshold_is_windowless(spark):
     t = _plan(per_host_cap_threshold(df, "doc_id", "host", 3))
     assert "Window" in w
     assert "Window" not in t  # two linear passes, no per-host task
+
+
+def _named_calls(tree):
+    """(callee name, enclosing function name, line) for every call whose
+    callee is a plain or attribute name."""
+    import ast
+
+    out = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name:
+                    out.append((name, fn, child.lineno))
+            inner = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            visit(child, inner)
+
+    visit(tree, None)
+    return out
+
+
+def test_one_kernel_idiom():
+    """Every Python batch kernel goes through ``operators.arrow_kernel``:
+    no pandas interchange (``mapInPandas``, ``applyInPandas``,
+    ``pandas_udf``) and no ``mapInArrow`` outside the helper. The one
+    exception is ``applyInPandasWithState`` in the sessions stream —
+    PySpark has no Arrow state API."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    files = [
+        *sorted((root / "b_pdf_parser_spark").rglob("*.py")),
+        root / "__spark_entry__.py",
+        *sorted((root / "jobs").rglob("*.py")),
+    ]
+    helper = root / "b_pdf_parser_spark" / "operators" / "__init__.py"
+    stateful = root / "b_pdf_parser_spark" / "streaming" / "sessions_stream.py"
+    bad = []
+    for path in files:
+        for name, fn, line in _named_calls(ast.parse(path.read_text())):
+            where = f"{path.relative_to(root)}:{line} {name}"
+            if name in ("mapInPandas", "applyInPandas", "pandas_udf"):
+                bad.append(where)
+            elif name == "applyInPandasWithState" and path != stateful:
+                bad.append(where)
+            elif name == "mapInArrow" and (path != helper or fn != "arrow_kernel"):
+                bad.append(where)
+    assert not bad, bad

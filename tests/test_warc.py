@@ -169,3 +169,33 @@ def test_wet_generation_job_end_to_end(spark, tmp_path):
     n_src = src.count()
     assert back.count() == n_src
     assert joined.filter(F.col("s.text") != F.col("b.text")).count() == 0
+
+
+def test_warc_date_is_utc_under_a_non_utc_session(spark, tmp_path):
+    # 2024-01-02 11:04:05 UTC is 03:04:05 in Los Angeles: the header must
+    # carry the UTC label, and reading it back must give the same instant
+    import gzip
+
+    from conftest import session_time_zone
+
+    from b_pdf_parser_spark.sources.warc import read_wet, write_warc_indexed, write_wet
+
+    ts = 1704193445
+    with session_time_zone(spark, "America/Los_Angeles"):
+        docs = spark.sql(
+            f"SELECT 'https://a.example/x' AS url, timestamp_seconds({ts}) AS warc_ts,"
+            " CAST('<p>hi</p>' AS BINARY) AS html, 'hi' AS text"
+        )
+        for name, write, read in (
+            ("warc", write_warc, read_warc),
+            ("wet", lambda d, o: write_wet(d, o), read_wet),
+        ):
+            out = str(tmp_path / name)
+            (path,) = [r["path"] for r in write(docs, out).collect()]
+            with open(path, "rb") as f:
+                assert b"WARC-Date: 2024-01-02T11:04:05Z\r\n" in gzip.decompress(f.read())
+            back = read(spark, out).selectExpr("CAST(warc_ts AS LONG) AS t").collect()
+            assert [r["t"] for r in back] == [ts], name
+        (idx,) = write_warc_indexed(docs, str(tmp_path / "idx")).collect()
+        with open(idx["path"], "rb") as f:
+            assert b"WARC-Date: 2024-01-02T11:04:05Z\r\n" in gzip.decompress(f.read())

@@ -20,7 +20,7 @@ SF = "/root/testdata/sf0.001"
 SHOW = {
     "extract_kinds": (
         "extraction flagship (formula corpus): generate → salted repartition → "
-        "Arrow MapInPandas walk → value projection; no shuffle after the single "
+        "Arrow MapInArrow walk → value projection; no shuffle after the single "
         "placement exchange"
     ),
     "near_dup_pairs": (
