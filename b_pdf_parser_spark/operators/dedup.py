@@ -243,8 +243,12 @@ def ngram_jaccard_pairs(
     )
 
 
+# round cap of connected_components' label propagation
+_CC_MAX_ITER = 25
+
+
 def connected_components(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 25
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Duplicate clusters from candidate pairs: (id, cluster_id = min id of
     the connected component). Iterative min-label propagation — the standard
@@ -252,6 +256,8 @@ def connected_components(
     doc per cluster). Each iteration is one join + one aggregate, label
     state is localCheckpoint'ed to cut lineage; converges in O(diameter)
     iterations (components from near-dup edges are shallow in practice).
+    Raises ``RuntimeError`` if labels still change after ``_CC_MAX_ITER``
+    rounds, rather than return components split at the cap.
 
     Deterministic: the fixpoint (min id reachable) is order-independent, so
     a DuckDB recursive CTE computes the identical result (the oracle).
@@ -265,7 +271,7 @@ def connected_components(
         .select("id", F.col("id").alias("label"))
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ITER):
         neighbor_min = (
             edges.join(labels, edges.src == labels.id)
             .select(F.col("dst").alias("id"), "label")
@@ -286,6 +292,10 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after {_CC_MAX_ITER} rounds"
+        )
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 

@@ -35,6 +35,9 @@ import re
 import zlib
 from typing import Any, Dict, Iterator, List, Optional, Tuple
 
+from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
 __all__ = [
     "PdfError",
     "Name",
@@ -296,18 +299,26 @@ def _parse_number_or_ref(buf: bytes, i: int) -> Tuple[Any, int]:
 # ---------------------------------------------------------------------------
 
 
+# output cap of one Flate stream: zlib reaches ~1030:1, so a small stream in
+# outside input could otherwise inflate to gigabytes inside a worker
+_FLATE_MAX = 256 << 20
+
+
 def _flate(data: bytes) -> bytes:
-    try:
-        return zlib.decompress(data)
-    except zlib.error:
-        # salvage: raw deflate or truncated stream
+    """zlib stream, else raw deflate; a truncated stream yields the output
+    decoded so far and trailing bytes after the stream end are ignored."""
+    err: Optional[zlib.error] = None
+    for wbits in (15, -15):
+        d = zlib.decompressobj(wbits)
         try:
-            return zlib.decompressobj().decompress(data)
-        except zlib.error:
-            try:
-                return zlib.decompressobj(-15).decompress(data)
-            except zlib.error as e:
-                raise PdfError(f"flate decode failed: {e}") from e
+            out = d.decompress(data, _FLATE_MAX)
+        except zlib.error as e:
+            err = e
+            continue
+        if d.unconsumed_tail:
+            raise PdfError(f"flate stream inflates past {_FLATE_MAX} bytes")
+        return out
+    raise PdfError(f"flate decode failed: {err}") from err
 
 
 def _lzw(data: bytes, early_change: int = 1) -> bytes:
@@ -459,9 +470,10 @@ def _ascii85(data: bytes) -> bytes:
 #
 # Web PDFs are very commonly "encrypted" with an EMPTY user password (the
 # owner set print/copy restrictions, but any reader can open the file).
-# RC4 (V 1/2, R 2/3) covers that dominant population; AES (V 4/5) raises a
-# clear PdfError instead of emitting garbage. RC4 and the MD5 key schedule
-# are implemented from the public spec — no crypto library in the runtime.
+# Supported: RC4 (V 1/2, R 2/3), AES-128 /AESV2 (V 4/R 4) and AES-256 /AESV3
+# (V 5/R 6). The key derivations (MD5/SHA-2 from ``hashlib``) and the PDF
+# framing of AES payloads are implemented here from the spec; the RC4 and AES
+# primitives come from ``cryptography`` (OpenSSL).
 # ---------------------------------------------------------------------------
 
 # the 32-byte padding string of Algorithm 2 (PDF 1.7 §7.6.3.3, Table 21 area)
@@ -473,30 +485,43 @@ _PW_PAD = bytes(
 
 
 def _rc4(key: bytes, data: bytes) -> bytes:
-    """RC4 stream cipher (public algorithm; length-preserving). The PRGA
-    loop fills a keystream buffer with minimal name lookups and the final
-    XOR runs as one big-int op — ~25% faster than the naive per-byte XOR
-    (this sits on the hot path of every encrypted document)."""
-    S = list(range(256))
-    j = 0
-    klen = len(key)
-    for i in range(256):
-        j = (j + S[i] + key[i % klen]) & 0xFF
-        S[i], S[j] = S[j], S[i]
-    n = len(data)
-    ks = bytearray(n)
-    i = j = 0
-    for k in range(n):
-        i = (i + 1) & 0xFF
-        si = S[i]
-        j = (j + si) & 0xFF
-        sj = S[j]
-        S[i] = sj
-        S[j] = si
-        ks[k] = S[(si + sj) & 0xFF]
-    return (
-        int.from_bytes(data, "little") ^ int.from_bytes(ks, "little")
-    ).to_bytes(n, "little")
+    """RC4 (length-preserving). PDF keys run 5..16 bytes in single steps
+    (file key ``/Length``/8, object key +5), but ``ARC4()`` accepts only
+    5/7/8/10/16/20/24/32-byte keys, so the key is set without its size check;
+    OpenSSL's RC4 takes any length from 1 to 256 bytes (an empty key would
+    crash the process, hence the guard)."""
+    if not 1 <= len(key) <= 256:
+        raise PdfError(f"RC4 key of {len(key)} bytes")
+    algo = ARC4.__new__(ARC4)
+    algo.key = key
+    return Cipher(algo, mode=None).encryptor().update(data)
+
+
+def _aes_cbc_nopad_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+    """AES-CBC over a 16-byte multiple, no padding (``ValueError`` otherwise).
+    One block under a zero IV is a single ECB block."""
+    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+    return enc.update(data) + enc.finalize()
+
+
+def _aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
+    """PDF string/stream decryption (§7.6.3): leading 16-byte IV, PKCS#7 unpad.
+    An empty payload (exactly the IV, or nothing) yields ``b""`` — writers
+    emit zero-length encrypted strings. A mid-IV truncation, an unaligned
+    tail or bad PKCS#7 bytes raise ``ValueError``, so a corrupted AES stream
+    becomes an error row instead of truncated or empty text."""
+    if len(data) in (0, 16):
+        return b""
+    if len(data) < 16:
+        raise ValueError("AES-CBC payload truncated inside the IV")
+    if len(data) % 16:
+        raise ValueError("AES-CBC payload is not a 16-byte multiple")
+    dec = Cipher(algorithms.AES(key), modes.CBC(data[:16])).decryptor()
+    out = dec.update(data[16:]) + dec.finalize()
+    pad = out[-1]
+    if not 1 <= pad <= 16 or out[-pad:] != bytes([pad]) * pad:
+        raise ValueError("bad PKCS#7 padding in AES stream")
+    return out[:-pad]
 
 
 def _std_file_key(enc: Dict[str, Any], file_id: bytes, user_pw: bytes = b"") -> bytes:
@@ -557,13 +582,11 @@ def _hash_2b(pw: bytes, salt: bytes, udata: bytes) -> bytes:
     feedback block."""
     import hashlib
 
-    from .aescipher import aes_cbc_nopad_encrypt
-
     k = hashlib.sha256(pw + salt + udata).digest()
     i = 0
     while True:
         k1 = (pw + k + udata) * 64
-        e = aes_cbc_nopad_encrypt(k[:16], k[16:32], k1)
+        e = _aes_cbc_nopad_encrypt(k[:16], k[16:32], k1)
         mod = sum(e[:16]) % 3
         k = (hashlib.sha256, hashlib.sha384, hashlib.sha512)[mod](e).digest()
         i += 1
@@ -661,33 +684,19 @@ class PdfDocument:
         if v == 5 and r == 6:
             u = enc.get("U")
             ue = enc.get("UE")
-            if not (isinstance(u, bytes) and len(u) >= 48 and isinstance(ue, bytes)):
+            if not (isinstance(u, bytes) and len(u) >= 48
+                    and isinstance(ue, bytes) and len(ue) >= 32):
                 raise PdfError("malformed R6 /U //UE entries")
             vsalt, ksalt = u[32:40], u[40:48]
             if _hash_2b(b"", vsalt, b"") != u[:32]:
                 raise PdfError("password-protected PDF (user password required)")
-            from .aescipher import aes_cbc_nopad_encrypt  # noqa: F401 (doc aid)
-            ikey = _hash_2b(b"", ksalt, b"")
-            self._file_key = self._aes_nopad_decrypt(ikey, ue[:32])
+            # UE → file key: AES-256-CBC, zero IV, no padding
+            unwrap = Cipher(algorithms.AES(_hash_2b(b"", ksalt, b"")),
+                            modes.CBC(bytes(16))).decryptor()
+            self._file_key = unwrap.update(ue[:32]) + unwrap.finalize()
             self._cipher = "aesv3"
             return
         raise PdfError(f"unsupported encryption V={v} R={r}")
-
-    @staticmethod
-    def _aes_nopad_decrypt(key: bytes, data: bytes) -> bytes:
-        """AES-256-CBC, zero IV, no padding — the UE→file-key unwrap."""
-        from .aescipher import _dec_words, _decrypt_block_w, _expand_key
-
-        kw = _dec_words(_expand_key(key))
-        out = bytearray()
-        prev = 0
-        for i in range(0, len(data), 16):
-            blk = data[i : i + 16]
-            out += (
-                int.from_bytes(_decrypt_block_w(kw, blk), "big") ^ prev
-            ).to_bytes(16, "big")
-            prev = int.from_bytes(blk, "big")
-        return bytes(out)
 
     def _decrypt_object(self, obj: Any, num: int, gen: int) -> Any:
         """Apply the per-object cipher to every string and stream payload
@@ -698,8 +707,6 @@ class PdfDocument:
             key = _object_key(self._file_key, num, gen)
             dec = lambda b: _rc4(key, b)  # noqa: E731
         else:
-            from .aescipher import aes_cbc_decrypt
-
             if cipher == "aesv2":
                 key = _object_key(self._file_key, num, gen, aes=True)
             else:  # aesv3: the file key is used directly (ISO 32000-2)
@@ -712,7 +719,7 @@ class PdfDocument:
                 # a spliced document lands in the error column instead of
                 # crashing the batch (PdfError-only contract, splice fuzz)
                 try:
-                    return aes_cbc_decrypt(key, b)
+                    return _aes_cbc_decrypt(key, b)
                 except ValueError as e:
                     raise PdfError(f"corrupt AES payload in object {num}: {e}")
 

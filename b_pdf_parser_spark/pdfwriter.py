@@ -146,9 +146,18 @@ def _tounicode_cmap(cm: Dict[str, int]) -> bytes:
     )
 
 
-# -- encryption emission (PDF 1.7 §7.6.3: RC4 V2/R3, empty user password) --
-# Key schedule / RC4 primitives are shared with the parser (public-spec
-# algorithms); the goldens pin the resulting bytes so both sides are checked.
+# -- encryption emission (PDF 1.7 §7.6.3 / ISO 32000-2 §7.6.4: RC4 V1/V2,
+# AES-128 V4, AES-256 V5/R6; empty user password) --
+# Key derivations and cipher primitives are shared with the parser; the
+# goldens pin the resulting bytes so both sides are checked.
+
+
+def _aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+    """PDF string/stream encryption: PKCS#7 pad, CBC, IV prepended."""
+    from .pdfmodel import _aes_cbc_nopad_encrypt
+
+    pad = 16 - len(data) % 16
+    return iv + _aes_cbc_nopad_encrypt(key, iv, data + bytes([pad]) * pad)
 
 
 def _prep_encryption(bodies: Sequence[bytes], mode: str = "rc4-128") -> Dict[str, object]:
@@ -160,22 +169,22 @@ def _prep_encryption(bodies: Sequence[bytes], mode: str = "rc4-128") -> Dict[str
     import hashlib
     import struct
 
-    from .pdfmodel import _PW_PAD, _hash_2b, _rc4, _std_file_key
+    from .pdfmodel import (_PW_PAD, _aes_cbc_nopad_encrypt, _hash_2b, _rc4,
+                           _std_file_key)
 
     id0 = hashlib.md5(b"".join(bodies)).digest()
     if mode == "aes-256":
-        from .aescipher import aes_cbc_nopad_encrypt, aes_encrypt_block
-
         file_key = hashlib.sha256(id0 + b"file-key").digest()
         vsalt, ksalt = id0[:8], id0[8:16]
         u = _hash_2b(b"", vsalt, b"") + vsalt + ksalt
-        ue = aes_cbc_nopad_encrypt(_hash_2b(b"", ksalt, b""), bytes(16), file_key)
+        ue = _aes_cbc_nopad_encrypt(_hash_2b(b"", ksalt, b""), bytes(16), file_key)
         rev = id0[::-1]
         ovs, oks = rev[:8], rev[8:16]
         o = _hash_2b(b"owner", ovs, u) + ovs + oks
-        oe = aes_cbc_nopad_encrypt(_hash_2b(b"owner", oks, u), bytes(16), file_key)
-        perms = aes_encrypt_block(
+        oe = _aes_cbc_nopad_encrypt(_hash_2b(b"owner", oks, u), bytes(16), file_key)
+        perms = _aes_cbc_nopad_encrypt(  # one ECB block: CBC under a zero IV
             file_key,
+            bytes(16),
             struct.pack("<i", -1) + b"\xff\xff\xff\xff" + b"Tadb" + id0[:4],
         )
         return {"key": file_key, "O": o, "U": u, "OE": oe, "UE": ue,
@@ -268,14 +277,12 @@ def _encrypt_body(body: bytes, enc: Dict[str, object], num: int) -> bytes:
         okey = _object_key(file_key, num, 0)
         E = lambda b: _rc4(okey, b)  # noqa: E731
     else:
-        from .aescipher import aes_cbc_encrypt
-
         iv = hashlib.md5(bytes(enc["id0"]) + b"iv%d" % num).digest()  # type: ignore[arg-type]
         if mode == "aes128":
             okey = _object_key(file_key, num, 0, aes=True)
         else:  # aes256: the file key directly
             okey = file_key
-        E = lambda b: aes_cbc_encrypt(okey, iv, b)  # noqa: E731
+        E = lambda b: _aes_cbc_encrypt(okey, iv, b)  # noqa: E731
     si = body.find(b"\nstream\n")
     enc_str = lambda inner: _esc_bytes(E(_unesc(inner)))  # noqa: E731
     if si >= 0:

@@ -335,11 +335,10 @@ def formula_statement_pdf(i: int, aes256: bool = False) -> bytes:
     ``aes256=True`` additionally upgrades the ``i % 80 == 3`` docs (2 of
     160, both in the otherwise-unencrypted ``i % 5 == 3`` stratum, one of
     them intersecting the /Differences rotation) to /AESV3 V5/R6 AES-256.
-    Flag-gated because the Algorithm-2.B KDF is scalar-hash-bound:
-    re-measured 2026-08 with the numpy AES-CBC path at ~0.45 s/doc to
-    parse and ~1.7 s/doc to serialize (the writer runs the KDF four
-    times), so only ``extract_formula`` pays it — two docs keep the V5/R6
-    walk value-checked without quadrupling the other formula queries."""
+    Flag-gated: only ``extract_formula`` turns it on, so the other formula
+    queries keep their documents. An R6 doc takes ~2.3 ms to parse and
+    ~5.5 ms to serialize (the writer runs the Algorithm-2.B KDF four
+    times; AMD EPYC, 4 cores)."""
     type0 = i % 5 == 0
     inline = (
         [(0, bytes((7 * k + 13 + i) % 251 for k in range(200))
@@ -745,12 +744,8 @@ def make_page_row(i: int, seed: int = 42) -> Dict[str, Any]:
                 encrypt = True          # RC4-128 V2/R3
             # AES-256/R6 is supported, golden-pinned (d14) and value-checked
             # in the formula corpus (extract_formula's aes256 stratum), but
-            # kept out of THIS 100k corpus: the Algorithm-2.B KDF is
-            # scalar-hash-bound (~0.45 s/doc parse, ~1.7 s/doc write even
-            # after the numpy AES-CBC vectorization — re-measured 2026-08;
-            # only the CBC body vectorized, the 64+ round SHA-2/AES feedback
-            # chain cannot), which would swamp the throughput signal the
-            # bench exists to measure
+            # kept out of THIS 100k corpus, whose documents stay fixed (the
+            # benchmark pins its digest); an R6 doc parses in ~2 ms
         # main-stream feature draws, in the exact order earlier corpus
         # versions evaluated them (the draws must stay on the MAIN rng so
         # every other doc remains byte-identical across corpus versions)

@@ -1,6 +1,8 @@
 """Dedup-operator unit tests: connected components on synthetic graphs,
 ngram-Jaccard confirmation of LSH candidates."""
 
+import pytest
+
 from b_pdf_parser_spark.operators.dedup import (
     connected_components,
     ngram_jaccard_pairs,
@@ -120,3 +122,14 @@ def test_intra_doc_repetition_hand_counts(spark):
     assert rows[1]["dup_3gram_frac"] == 2 / 3
     assert rows[2]["top_2gram_frac"] == 1 / 3
     assert rows[2]["dup_3gram_frac"] == 0.0
+
+
+def test_connected_components_raises_at_round_cap(spark, monkeypatch):
+    # a 10-node path needs 9 label rounds; a cap of 3 must fail loudly
+    # instead of returning the path split into several clusters
+    from b_pdf_parser_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_CC_MAX_ITER", 3)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="still changing"):
+        connected_components(pairs)

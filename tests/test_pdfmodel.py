@@ -73,6 +73,48 @@ def test_flate_robustness():
     assert pm._flate(zlib.compress(b"hello")) == b"hello"
     with pytest.raises(pm.PdfError):
         pm._flate(b"not zlib data")
+    # salvage paths: trailing bytes, a truncated stream, raw deflate
+    z = zlib.compress(b"hello world" * 50)
+    assert pm._flate(z + b"\r\ngarbage") == b"hello world" * 50
+    part = pm._flate(z[:-8])
+    assert part and (b"hello world" * 50).startswith(part)
+    raw = zlib.compressobj(wbits=-15)
+    assert pm._flate(raw.compress(b"raw") + raw.flush()) == b"raw"
+
+
+def _bomb_pdf(n: int) -> bytes:
+    bomb = zlib.compress(bytes(n), 9)
+    assert n >= 1000 * len(bomb)
+    return (
+        b"%%PDF-1.4\n"
+        b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        b"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
+        b"3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>\nendobj\n"
+        b"4 0 obj\n<< /Filter /FlateDecode /Length %d >>\nstream\n%s\nendstream\nendobj\n"
+        b"trailer\n<< /Root 1 0 R >>\n%%%%EOF\n" % (len(bomb), bomb)
+    )
+
+
+def test_flate_output_capped(monkeypatch):
+    monkeypatch.setattr(pm, "_FLATE_MAX", 1 << 16)
+    bomb = zlib.compress(bytes(1 << 21), 9)  # 2 MiB of zeros, >1000:1
+    with pytest.raises(pm.PdfError, match="inflates past"):
+        pm._flate(bomb)
+    # exactly at the cap still decodes
+    assert pm._flate(zlib.compress(bytes(1 << 16))) == bytes(1 << 16)
+
+
+def test_flate_bomb_is_an_error_row(monkeypatch):
+    import pandas as pd
+
+    from b_pdf_parser_spark.operators.extract import make_extract_batch
+
+    monkeypatch.setattr(pm, "_FLATE_MAX", 1 << 16)
+    frame = pd.DataFrame({"url": ["http://x/bomb.pdf"], "html": [_bomb_pdf(1 << 21)],
+                          "warc_ts": [None], "partition_id": [0]})
+    (batch,) = list(make_extract_batch()(iter([frame])))
+    row = batch.to_pylist()[0]
+    assert row["kind"] == "error" and "inflates past" in row["error"]
 
 
 # ---- document structure -----------------------------------------------------
@@ -387,10 +429,9 @@ def test_formula_aes256_stratum_text_identical():
 
 
 def test_aes_known_answer_vectors():
-    # FIPS-197 Appendix C — validates the generated S-box, T-tables and key
-    # schedule for all three key sizes
-    from b_pdf_parser_spark.aescipher import (aes_cbc_decrypt, aes_cbc_encrypt,
-                                              aes_encrypt_block)
+    # FIPS-197 Appendix C for all three key sizes: one block under a zero IV,
+    # the shape of the writer's /Perms entry
+    from b_pdf_parser_spark.pdfwriter import _aes_cbc_encrypt
 
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     vec = {
@@ -401,12 +442,57 @@ def test_aes_known_answer_vectors():
             "8ea2b7ca516745bfeafc49904b496089",
     }
     for k, c in vec.items():
-        assert aes_encrypt_block(bytes.fromhex(k), pt).hex() == c
+        assert pm._aes_cbc_nopad_encrypt(bytes.fromhex(k), bytes(16), pt).hex() == c
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     iv = bytes(range(16))
     for n in (0, 1, 15, 16, 17, 100):
         data = bytes((i * 7) % 256 for i in range(n))
-        assert aes_cbc_decrypt(key, aes_cbc_encrypt(key, iv, data)) == data
+        assert pm._aes_cbc_decrypt(key, _aes_cbc_encrypt(key, iv, data)) == data
+    with pytest.raises(ValueError):
+        pm._aes_cbc_nopad_encrypt(key, iv, b"x" * 17)  # not block-aligned
+
+
+def test_rc4_known_answer_vectors():
+    # RFC 6229 §2, keystream at offset 0 (RC4 of zero bytes is the keystream)
+    vec = {
+        "0102030405": "b2396305f03dc027ccc3524a0a1118a8",
+        "0102030405060708090a0b0c0d0e0f10": "9ac7cc9a609d1ef7b2932899cde41b97",
+    }
+    for k, ks in vec.items():
+        assert pm._rc4(bytes.fromhex(k), bytes(16)).hex() == ks
+
+
+def test_rc4_every_pdf_key_length():
+    # PDF RC4 keys run 5..16 bytes in single steps (file key /Length/8,
+    # object key +5); compare every length against the textbook algorithm
+    import random
+
+    def ref_rc4(key, data):
+        S = list(range(256))
+        j = 0
+        for i in range(256):
+            j = (j + S[i] + key[i % len(key)]) & 0xFF
+            S[i], S[j] = S[j], S[i]
+        out = bytearray()
+        i = j = 0
+        for c in data:
+            i = (i + 1) & 0xFF
+            j = (j + S[i]) & 0xFF
+            S[i], S[j] = S[j], S[i]
+            out.append(c ^ S[(S[i] + S[j]) & 0xFF])
+        return bytes(out)
+
+    rng = random.Random(11)
+    for n in range(1, 33):
+        key = bytes(rng.randrange(256) for _ in range(n))
+        data = bytes(rng.randrange(256) for _ in range(300))
+        assert pm._rc4(key, data) == ref_rc4(key, data), n
+    # /Length 0 derives an empty key: a PdfError, never a call into OpenSSL
+    data = _enc_sample(encrypt=True)
+    zero = data.replace(b"/V 2 /R 3 /Length 128", b"/V 2 /R 3 /Length   0", 1)
+    assert zero != data
+    with pytest.raises(pm.PdfError, match="RC4 key of 0 bytes"):
+        pm.extract_pdf_text(zero)
 
 
 @pytest.mark.parametrize("mode", ["aes-128", "aes-256"])
@@ -520,11 +606,12 @@ def test_aes_bad_padding_raises():
     # a corrupted AES stream must land in the error column, not silently
     # decode to truncated/empty text (RC4/flate failures raise — AES should
     # match that contract)
-    from b_pdf_parser_spark.aescipher import aes_cbc_decrypt, aes_cbc_encrypt
+    from b_pdf_parser_spark.pdfwriter import _aes_cbc_encrypt
 
+    aes_cbc_decrypt = pm._aes_cbc_decrypt
     key = bytes(range(16))
     iv = bytes(16)
-    ct = aes_cbc_encrypt(key, iv, b"some text payload")
+    ct = _aes_cbc_encrypt(key, iv, b"some text payload")
     assert aes_cbc_decrypt(key, ct) == b"some text payload"
     with pytest.raises(ValueError):
         aes_cbc_decrypt(key, ct[:-1] + bytes([ct[-1] ^ 0x5A]))  # broken pad
@@ -538,28 +625,6 @@ def test_aes_bad_padding_raises():
     for n in (1, 8, 15):
         with pytest.raises(ValueError):
             aes_cbc_decrypt(key, ct[:n])
-
-
-def test_aes_numpy_batch_decrypt_bit_equals_scalar():
-    # the vectorized per-stream decrypt (hot extraction path) must be
-    # bit-identical to the scalar reference rounds, for every key length
-    # and for block counts straddling the dispatch threshold
-    import random
-
-    from b_pdf_parser_spark.aescipher import (_dec_words, _decrypt_block_w,
-                                              _decrypt_blocks_np, _expand_key)
-
-    rng = random.Random(7)
-    for key_len in (16, 24, 32):
-        key = bytes(rng.randrange(256) for _ in range(key_len))
-        kw = _dec_words(_expand_key(key))
-        for n_blocks in (1, 4, 5, 33):
-            blocks = bytes(rng.randrange(256) for _ in range(16 * n_blocks))
-            scalar = b"".join(
-                _decrypt_block_w(kw, blocks[i : i + 16])
-                for i in range(0, len(blocks), 16)
-            )
-            assert _decrypt_blocks_np(kw, blocks) == scalar, (key_len, n_blocks)
 
 
 def test_aes_v4_key_length_from_stdcf_only():
