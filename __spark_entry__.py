@@ -1567,12 +1567,12 @@ def q_pdf_jpeg_decode(spark, sf):
     parity hash."""
     import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import (
-        pdf_jpeg_pixel_features,
+        pdf_pixel_features,
         synth_jpegdoc_df,
     )
 
     b_pdf_parser_spark.ship_package(spark)
-    return pdf_jpeg_pixel_features(synth_jpegdoc_df(spark, 120))
+    return pdf_pixel_features(synth_jpegdoc_df(spark, 120), "DCTDecode")
 
 
 def q_pdf_jpx_decode(spark, sf):
@@ -1587,12 +1587,12 @@ def q_pdf_jpx_decode(spark, sf):
     the T1 passes OR the inverse wavelet breaks the parity hash."""
     import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import (
-        pdf_jpx_pixel_features,
+        pdf_pixel_features,
         synth_jpxdoc_df,
     )
 
     b_pdf_parser_spark.ship_package(spark)
-    return pdf_jpx_pixel_features(synth_jpxdoc_df(spark, 120))
+    return pdf_pixel_features(synth_jpxdoc_df(spark, 120), "JPXDecode")
 
 
 def q_pq_ann_topk(spark, sf):
@@ -2106,12 +2106,12 @@ def q_pdf_ccitt_decode(spark, sf):
     tables breaks the parity hash."""
     import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import (
-        pdf_ccitt_pixel_features,
+        pdf_pixel_features,
         synth_ccittdoc_df,
     )
 
     b_pdf_parser_spark.ship_package(spark)
-    return pdf_ccitt_pixel_features(synth_ccittdoc_df(spark, 120))
+    return pdf_pixel_features(synth_ccittdoc_df(spark, 120), "CCITTFaxDecode")
 
 
 def q_tiff_media_decode(spark, sf):

@@ -10,9 +10,9 @@ their decode paths are implemented for real here, from the public specs:
   factor), truecolor, RGBA and palette (color type 3, PLTE) images, both
   sequential and **Adam7-interlaced**; chunk walk with CRC-32
   verification, multi-IDAT concatenation, zlib inflate, and per-row
-  unfiltering for ALL five filter types (None/Sub/Up/Average/Paeth — the
-  same predictor family the PDF xref-stream decoder already implements,
-  reimplemented here over the packed scanline bytes).
+  unfiltering for ALL five filter types (None/Sub/Up/Average/Paeth —
+  ``pdfmodel._png_unfilter_row``, the one unfilter the PDF Flate/LZW
+  predictors also run).
 * **BMP** (BITMAPINFOHEADER, BI_RGB): 24-bit uncompressed, bottom-up rows,
   BGR order, 4-byte row padding — decoded back to canonical top-down RGB.
 * **WAV** (RIFF/WAVE): 16-bit little-endian PCM, 8-bit G.711 μ-law
@@ -31,9 +31,9 @@ their decode paths are implemented for real here, from the public specs:
   inline-vs-offset value slots, strip organization (RowsPerStrip), 8-bit
   gray/RGB uncompressed, Compression=5 **LZW** (§13 — wire-identical to
   the PDF ``LZWDecode`` filter with EarlyChange 1, so decode reuses
-  ``pdfmodel._lzw``; Predictor 2 horizontal differencing honored via tag
-  317), and Compression=4 (Group 4) / Compression=3 (Group 3, 1-D or
-  2-D per T4Options) fax strips routed through the from-scratch CCITT
+  ``pdfmodel._lzw``; Predictor 2 horizontal differencing — the PNG Sub
+  filter — honored via tag 317), and Compression=4 (Group 4) /
+  Compression=3 (Group 3, 1-D or 2-D per T4Options) fax strips routed through the from-scratch CCITT
   codecs (``ccittcodec.py``) with PhotometricInterpretation honored —
   the containers scanned documents actually travel the web in.
 
@@ -61,12 +61,15 @@ import struct
 import zlib
 from typing import Dict, List, Optional, Tuple
 
+from .pdfmodel import PdfError, _lzw, _paeth, _png_unfilter_row
+
 
 def _fail_loud(fn):
     """Every decoder here promises ValueError (or NotImplementedError)
     on malformed input. The bodies index, struct-unpack and inflate
     freely, so truncated or bit-flipped bytes can surface as
-    IndexError/KeyError/struct.error/zlib.error — normalize those at the
+    IndexError/KeyError/struct.error/zlib.error — and the shared
+    ``pdfmodel`` helpers raise ``PdfError`` — normalize those at the
     public boundary instead of sprinkling guards through every parser
     (fuzz-pinned in tests/test_codec_fuzz.py)."""
 
@@ -76,7 +79,8 @@ def _fail_loud(fn):
             return fn(*a, **kw)
         except (ValueError, NotImplementedError):
             raise
-        except (struct.error, zlib.error, IndexError, KeyError, OverflowError) as e:
+        except (struct.error, zlib.error, IndexError, KeyError, OverflowError,
+                PdfError) as e:
             raise ValueError(
                 f"{fn.__name__}: malformed input ({type(e).__name__}: {e})"
             ) from e
@@ -184,14 +188,6 @@ def _chunk(typ: bytes, body: bytes) -> bytes:
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
 def _filter_row(f: int, row: bytes, prev: bytes, bpp: int) -> bytes:
     """Apply PNG filter ``f`` to a raw row (encoder side)."""
     n = len(row)
@@ -212,29 +208,6 @@ def _filter_row(f: int, row: bytes, prev: bytes, bpp: int) -> bytes:
             v = row[x] - _paeth(a, b, c)
         out[x] = v & 0xFF
     return bytes(out)
-
-
-def _unfilter_row(f: int, row: bytearray, prev: bytes, bpp: int) -> bytearray:
-    """Invert PNG filter ``f`` in place (decoder side)."""
-    n = len(row)
-    for x in range(n):
-        a = row[x - bpp] if x >= bpp else 0
-        b = prev[x]
-        c = prev[x - bpp] if x >= bpp else 0
-        if f == 0:
-            v = row[x]
-        elif f == 1:
-            v = row[x] + a
-        elif f == 2:
-            v = row[x] + b
-        elif f == 3:
-            v = row[x] + (a + b) // 2
-        elif f == 4:
-            v = row[x] + _paeth(a, b, c)
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-        row[x] = v & 0xFF
-    return row
 
 
 def _png_pass_geometry(width: int, height: int, interlace: bool):
@@ -419,7 +392,7 @@ def decode_png(data: bytes) -> Tuple[int, int, int, bytes]:
             if p >= len(raw):
                 raise ValueError("decompressed stream shorter than image")
             f = raw[p]
-            row = _unfilter_row(
+            row = _png_unfilter_row(
                 f, bytearray(raw[p + 1 : p + 1 + row_bytes]), prev, bpp
             )
             if len(row) != row_bytes:
@@ -1372,8 +1345,6 @@ def _tiff_lzw_decompress(data: bytes, expect: int) -> bytes:
     """Inverse of :func:`_tiff_lzw_compress` via the shared PDF-filter
     decoder (same wire format); length-checked against the strip's
     expected byte count."""
-    from .pdfmodel import PdfError, _lzw
-
     try:
         raw = _lzw(data, early_change=1)
     except PdfError as e:
@@ -1390,11 +1361,6 @@ def _predict2(row: bytearray, spp: int) -> None:
     is exactly the PNG Sub filter with bpp = samples/pixel (Sub ignores
     the previous row), so delegate to the shared predictor code."""
     row[:] = _filter_row(1, bytes(row), bytes(len(row)), spp)
-
-
-def _unpredict2(row: bytearray, spp: int) -> None:
-    """Invert TIFF Predictor 2 in place (PNG Sub unfilter, shared)."""
-    _unfilter_row(1, row, bytes(len(row)), spp)
 
 
 def encode_tiff(
@@ -1659,11 +1625,12 @@ def decode_tiff(data: bytes) -> Tuple[int, int, int, bytes]:
             row_bytes = width * channels
             if comp == _TIFF_COMP_LZW:
                 raw = bytearray(_tiff_lzw_decompress(strip, rows * row_bytes))
-                if predictor == 2:
+                if predictor == 2:  # horizontal differencing = PNG Sub
                     for r in range(rows):
-                        row = raw[r * row_bytes : (r + 1) * row_bytes]
-                        _unpredict2(row, channels)
-                        raw[r * row_bytes : (r + 1) * row_bytes] = row
+                        o = r * row_bytes
+                        raw[o : o + row_bytes] = _png_unfilter_row(
+                            1, raw[o : o + row_bytes], b"", channels
+                        )
                 strip = bytes(raw)
             elif cnt != rows * row_bytes:
                 raise ValueError("TIFF: strip byte count mismatch")

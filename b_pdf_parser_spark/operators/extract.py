@@ -9,11 +9,11 @@ Spark-first design (SURVEY §3.2, §4.3):
   Python dispatch per *document*, zero per-row Python anywhere else.
 * **Partitioning**: a stable logical ``partition_id = pmod(xxhash64(url), P)``
   column is the checkpoint/lineage unit (resume-safe, independent of the
-  physical layout). Physically, oversized payloads (> ``skew_threshold``
-  bytes) take an independently salted hash key in the same single shuffle,
-  so multi-MB documents never pile into one straggler task (north_rule
-  salt-split; the indivisible-row analog of key salting) and the source is
-  scanned exactly once.
+  physical layout; :func:`partition_id_col`). Physically, oversized
+  payloads (> ``DEFAULT_SKEW_THRESHOLD`` bytes) take an independently
+  salted hash key in the same single shuffle, so multi-MB documents never
+  pile into one straggler task (north_rule salt-split; the indivisible-row
+  analog of key salting) and the source is scanned exactly once.
 * **Error capture**: a corrupt document sets the ``error`` column; the job
   never throws (reference semantics batch.py:134-190, S10).
 * **Column pruning**: only ``url, html`` (+passthrough ``warc_ts``) are
@@ -32,7 +32,7 @@ from typing import Iterator, Optional
 import pandas as pd
 import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
@@ -61,6 +61,7 @@ __all__ = [
     "extract_kind_audit",
     "extract_partition_walls",
     "make_extract_batch",
+    "partition_id_col",
     "DEFAULT_SKEW_THRESHOLD",
 ]
 
@@ -267,7 +268,6 @@ def extract_pages(
     *,
     num_partitions: Optional[int] = None,
     checkpoint_partitions: int = 64,
-    skew_threshold: int = DEFAULT_SKEW_THRESHOLD,
     verify: bool = True,
 ) -> DataFrame:
     """Build the extraction plan over a ``pages`` DataFrame.
@@ -279,17 +279,24 @@ def extract_pages(
     from param-or-.env, tests/test_parsers.py:245-276 exercise both).
     """
     return arrow_kernel(
-        _shuffled(pages, num_partitions, checkpoint_partitions, skew_threshold),
+        _shuffled(pages, num_partitions, checkpoint_partitions),
         make_extract_batch(verify),
         EXTRACTED_SCHEMA,
     )
+
+
+def partition_id_col(checkpoint_partitions: int) -> Column:
+    """The checkpoint/lineage unit ``pmod(xxhash64(url), P)`` as an int
+    column — the one definition the operator's tag, the resumable job's
+    wave filter and the streaming lift share, so a resumed run sees the
+    same ids the first run wrote."""
+    return F.pmod(F.xxhash64("url"), F.lit(checkpoint_partitions)).cast("int")
 
 
 def _shuffled(
     pages: DataFrame,
     num_partitions: Optional[int],
     checkpoint_partitions: int,
-    skew_threshold: int,
 ) -> DataFrame:
     """The shared pre-UDF plan: tag + single salted shuffle.
 
@@ -301,7 +308,7 @@ def _shuffled(
     """
     spark = pages.sparkSession
     p_phys = num_partitions or spark.sparkContext.defaultParallelism * 2
-    oversized = F.coalesce(F.length("html") > skew_threshold, F.lit(False))
+    oversized = F.coalesce(F.length("html") > DEFAULT_SKEW_THRESHOLD, F.lit(False))
     part_key = F.when(
         oversized, F.xxhash64("url", F.lit("skew-salt"))
     ).otherwise(F.xxhash64("url"))
@@ -309,9 +316,7 @@ def _shuffled(
         "url",
         "warc_ts",
         "html",
-        F.pmod(F.xxhash64("url"), F.lit(checkpoint_partitions))
-        .cast("int")
-        .alias("partition_id"),
+        partition_id_col(checkpoint_partitions).alias("partition_id"),
         part_key.alias("_pkey"),
     )
     return tagged.repartition(p_phys, F.col("_pkey")).drop("_pkey")
@@ -322,7 +327,6 @@ def extract_kind_audit(
     *,
     num_partitions: Optional[int] = None,
     checkpoint_partitions: int = 64,
-    skew_threshold: int = DEFAULT_SKEW_THRESHOLD,
 ) -> DataFrame:
     """Corpus-audit projection of the extraction: one ``(kind, error)`` row
     per document, from the IDENTICAL per-document walk (``_extract_one`` —
@@ -343,7 +347,7 @@ def extract_kind_audit(
             ]
 
     return arrow_kernel(
-        _shuffled(pages, num_partitions, checkpoint_partitions, skew_threshold),
+        _shuffled(pages, num_partitions, checkpoint_partitions),
         audit_batch,
         "kind string, error string",
     )
@@ -354,7 +358,6 @@ def extract_partition_walls(
     *,
     num_partitions: Optional[int] = None,
     checkpoint_partitions: int = 64,
-    skew_threshold: int = DEFAULT_SKEW_THRESHOLD,
     verify: bool = True,
 ) -> DataFrame:
     """Straggler diagnostics: run the IDENTICAL extraction plan (same tag,
@@ -373,7 +376,7 @@ def extract_partition_walls(
         yield {"wall_sec": [time.perf_counter() - t0], "n_docs": [n]}
 
     return arrow_kernel(
-        _shuffled(pages, num_partitions, checkpoint_partitions, skew_threshold),
+        _shuffled(pages, num_partitions, checkpoint_partitions),
         timed,
         "wall_sec double, n_docs long",
     )

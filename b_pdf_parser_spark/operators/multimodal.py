@@ -13,16 +13,17 @@ Decode status, honestly labeled per format:
   sums from the generating formulas), and CCITT Group 4 fax (ITU-T T.6)
   via ``b_pdf_parser_spark.ccittcodec`` (2D mode coding over the T.4 run
   alphabets — lossless, so its features are exact by construction).
-  ``pdf_jpeg_pixel_features`` / ``pdf_ccitt_pixel_features`` close the
-  loop with the PDF walk: DCTDecode / CCITTFaxDecode image XObjects
-  decode to pixels.
-* **STUBBED**: compressed VIDEO needs decoders we haven't built or the
-  absent native libs (PIL/ffmpeg/opencv are not in this runtime) —
-  those payloads land in the ``error`` column, never crash the batch.
+  ``pdf_pixel_features`` closes the loop with the PDF walk: DCTDecode,
+  JPXDecode and CCITTFaxDecode image XObjects (after any earlier filters
+  in their chain) decode to pixels through one filter → codec table.
+* **STUBBED**: inter-frame VIDEO codecs need decoders we haven't built
+  or the absent native libs (PIL/ffmpeg/opencv are not in this runtime)
+  — those payloads land in the ``error`` column, never crash the batch.
   No longer stubbed: compressed AUDIO (mono/stereo IMA ADPCM,
-  ``mediacodec.decode_wav`` format 0x11), JPEG 2000 codestreams
-  (``jpxcodec``, round 6) and arithmetic-coded JPEG (SOF9 + DAC,
-  ``arithjpeg``, round 6).
+  ``mediacodec.decode_wav`` format 0x11; FLAC, ``flaccodec``), TIFF
+  (``mediacodec.decode_tiff``), JPEG 2000 codestreams (``jpxcodec``),
+  arithmetic-coded JPEG (SOF9 + DAC, ``arithjpeg``) and MJPEG video in
+  AVI (``avicodec``, decoded or frame-sampled by ``avi_frame_features``).
 
 Everything Spark-side is real and tested for both classes: schema, Arrow
 batch shape, partitioning, the ``arrow_kernel`` feature-extraction
@@ -46,16 +47,31 @@ __all__ = [
     "MEDIA_SCHEMA_DDL",
     "FEATURES_SCHEMA_DDL",
     "REAL_FEATURES_SCHEMA_DDL",
+    "AVI_FRAME_SCHEMA_DDL",
+    "IMAGEDOC_SCHEMA_DDL",
+    "IMAGE_INV_SCHEMA_DDL",
+    "PIXEL_SCHEMA_DDL",
     "encode_fake_media",
     "synth_media_df",
     "decode_features",
     "frame_sample",
+    "real_media_dims",
+    "encode_real_media",
     "synth_real_media_df",
     "real_media_features",
+    "avi_media_dims",
+    "encode_avi_media",
+    "synth_avi_df",
+    "avi_frame_features",
+    "tiff_media_dims",
+    "encode_tiff_media",
+    "synth_tiff_media_df",
     "synth_imagedoc_df",
     "pdf_image_features",
     "synth_jpegdoc_df",
-    "pdf_jpeg_pixel_features",
+    "synth_jpxdoc_df",
+    "synth_ccittdoc_df",
+    "pdf_pixel_features",
 ]
 
 MEDIA_SCHEMA_DDL = "media_id BIGINT, kind STRING, payload BINARY"
@@ -79,6 +95,18 @@ def _byte_entropy(buf: bytes) -> float:
     return round(-sum((c / n) * math.log2(c / n) for c in counts.values()), 6)
 
 
+def _value_features(vals) -> dict:
+    """The exact integer reduction every decode oracle recomputes: count,
+    sum and the (k+1)-weighted sum — position-sensitive, so a row-order,
+    channel-order or padding bug changes it even when the plain sum
+    survives."""
+    return {
+        "n_values": len(vals),
+        "value_sum": int(sum(vals)),
+        "weighted_sum": int(sum((k + 1) * v for k, v in enumerate(vals))),
+    }
+
+
 def encode_fake_media(media_id: int, kind: str = "img") -> bytes:
     """Deterministic fake payload for ``media_id`` (no RNG, pure function)."""
     w = 4 + (media_id % 13)
@@ -95,16 +123,23 @@ def encode_fake_media(media_id: int, kind: str = "img") -> bytes:
     )
 
 
-def synth_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    kinds = ["img", "aud", "vid"]
+def _synth_media_df(spark, n, num_partitions, kind, encode) -> DataFrame:
+    """The one media-corpus shell: row ``i`` is ``(i, kind(i), encode(i))``,
+    a pure function of ``i``."""
     return arrow_kernel(
         spark.range(0, n, 1, num_partitions),
         lambda bs: ([
-            {"media_id": i, "kind": kinds[i % 3], "payload": encode_fake_media(i, kinds[i % 3])}
+            {"media_id": i, "kind": kind(i), "payload": encode(i)}
             for i in b["id"].tolist()
         ] for b in bs),
         MEDIA_SCHEMA_DDL,
     )
+
+
+def synth_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
+    kinds = ["img", "aud", "vid"]
+    return _synth_media_df(spark, n, num_partitions, lambda i: kinds[i % 3],
+                           lambda i: encode_fake_media(i, kinds[i % 3]))
 
 
 def _decode_one(media_id: int, kind: str, payload: Optional[bytes]) -> dict:
@@ -486,6 +521,16 @@ def _jpeg_flat_pixels(i: int, w: int, h: int, ch: int, f: int = 0) -> bytes:
     return bytes(out)
 
 
+def _q8_tables():
+    """Annex-K tables with the DC step forced to 8, for every flat-block
+    stratum: 8 divides 8*(v-128) for every integer v, so flat blocks
+    decode bit-exactly (the AC steps are irrelevant — a flat block's 63
+    AC coefficients are 0)."""
+    from ..jpegcodec import QUANT_CHROMA, QUANT_LUM
+
+    return ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
+
+
 def _shared_palette(i: int, psize: int):
     """The one palette formula all three indexed containers (GIF,
     palette-PNG, 8-bit BMP) and the DuckDB oracle share — change it in
@@ -525,24 +570,20 @@ def encode_real_media(i: int) -> bytes:
         )
     if ext == "mjpeg":
         from ..avicodec import encode_avi_mjpeg
-        from ..jpegcodec import QUANT_CHROMA, QUANT_LUM
 
-        q8 = ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
         frames = [
             _jpeg_flat_pixels(i, d["w"], d["h"], d["ch"], f=f)
             for f in range(d["nf"])
         ]
         return encode_avi_mjpeg(d["w"], d["h"], d["ch"], frames,
-                                fps=d["rate"], qtables=q8)
+                                fps=d["rate"], qtables=_q8_tables())
     if ext == "jarith":
         from ..arithjpeg import encode_jpeg_arith
-        from ..jpegcodec import QUANT_CHROMA, QUANT_LUM
 
-        q8 = ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
         px = _jpeg_flat_pixels(i, d["w"], d["h"], d["ch"])
         return encode_jpeg_arith(
             d["w"], d["h"], d["ch"], px,
-            qtables=q8, restart_interval=d["restart"],
+            qtables=_q8_tables(), restart_interval=d["restart"],
         )
     if ext == "jp2k":
         from ..jpxcodec import encode_jpx
@@ -606,17 +647,9 @@ def encode_real_media(i: int) -> bytes:
         px = bytes((i * 31 + k * 7) % 251 for k in range(d["w"] * d["h"] * 4))
         return encode_png(d["w"], d["h"], 4, px, filter_seed=i, interlace=True)
     if d["fmt"] == "jpeg":
-        from ..jpegcodec import (
-            QUANT_CHROMA,
-            QUANT_LUM,
-            encode_jpeg,
-            encode_jpeg_progressive,
-        )
+        from ..jpegcodec import encode_jpeg, encode_jpeg_progressive
 
-        # Annex-K tables with the DC step forced to 8: divides 8*(v-128)
-        # for every integer v, so flat blocks decode bit-exactly (the AC
-        # steps are irrelevant — a flat block's 63 AC coefficients are 0)
-        q8 = ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
+        q8 = _q8_tables()
         px = _jpeg_flat_pixels(i, d["w"], d["h"], d["ch"])
         if d["prog"]:
             return encode_jpeg_progressive(d["w"], d["h"], d["ch"], px, qtables=q8)
@@ -648,14 +681,8 @@ def encode_real_media(i: int) -> bytes:
 
 
 def synth_real_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    return arrow_kernel(
-        spark.range(0, n, 1, num_partitions),
-        lambda bs: ([
-            {"media_id": i, "kind": real_media_dims(i)["fmt"], "payload": encode_real_media(i)}
-            for i in b["id"].tolist()
-        ] for b in bs),
-        MEDIA_SCHEMA_DDL,
-    )
+    return _synth_media_df(spark, n, num_partitions,
+                           lambda i: real_media_dims(i)["fmt"], encode_real_media)
 
 
 def avi_media_dims(i: int) -> dict:
@@ -675,25 +702,16 @@ def avi_media_dims(i: int) -> dict:
 
 def encode_avi_media(i: int) -> bytes:
     from ..avicodec import encode_avi_mjpeg
-    from ..jpegcodec import QUANT_CHROMA, QUANT_LUM
 
     d = avi_media_dims(i)
-    q8 = ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
     frames = [_jpeg_flat_pixels(i, d["w"], d["h"], 1, f=f)
               for f in range(d["nf"])]
     return encode_avi_mjpeg(d["w"], d["h"], 1, frames,
-                            fps=d["fps"], qtables=q8)
+                            fps=d["fps"], qtables=_q8_tables())
 
 
 def synth_avi_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    return arrow_kernel(
-        spark.range(0, n, 1, num_partitions),
-        lambda bs: ([
-            {"media_id": i, "kind": "mjpeg", "payload": encode_avi_media(i)}
-            for i in b["id"].tolist()
-        ] for b in bs),
-        MEDIA_SCHEMA_DDL,
-    )
+    return _synth_media_df(spark, n, num_partitions, lambda i: "mjpeg", encode_avi_media)
 
 
 AVI_FRAME_SCHEMA_DDL = (
@@ -719,14 +737,10 @@ def avi_frame_features(media: DataFrame, every: int = 2) -> DataFrame:
             for mid, payload in zip(b["media_id"].tolist(), b["payload"].tolist()):
                 w, h, fps, sampled = sample_avi_frames(bytes(payload), every=every)
                 for fidx, (fw, fh, fch, px) in sampled:
-                    vals = memoryview(px)
                     rows.append({
                         "media_id": int(mid), "frame_idx": int(fidx),
                         "width": fw, "height": fh, "fps": fps,
-                        "n_values": len(vals),
-                        "value_sum": int(sum(vals)),
-                        "weighted_sum": int(sum((k + 1) * v
-                                             for k, v in enumerate(vals))),
+                        **_value_features(px),
                     })
             yield rows
 
@@ -813,14 +827,8 @@ def encode_tiff_media(i: int) -> bytes:
 
 
 def synth_tiff_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    return arrow_kernel(
-        spark.range(0, n, 1, num_partitions),
-        lambda bs: ([
-            {"media_id": i, "kind": tiff_media_dims(i)["kind"], "payload": encode_tiff_media(i)}
-            for i in b["id"].tolist()
-        ] for b in bs),
-        MEDIA_SCHEMA_DDL,
-    )
+    return _synth_media_df(spark, n, num_partitions,
+                           lambda i: tiff_media_dims(i)["kind"], encode_tiff_media)
 
 
 def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
@@ -842,17 +850,14 @@ def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
         if not payload:
             raise ValueError("empty payload")
         if payload[:8] == b"\x89PNG\r\n\x1a\n":
-            w, h, ch, px = decode_png(bytes(payload))
+            w, h, ch, vals = decode_png(bytes(payload))
             row.update(fmt="png", width=w, height=h, channels=ch)
-            vals = list(px)
         elif payload[:2] == b"BM":
-            w, h, ch, px = decode_bmp(bytes(payload))
+            w, h, ch, vals = decode_bmp(bytes(payload))
             row.update(fmt="bmp", width=w, height=h, channels=ch)
-            vals = list(px)
         elif payload[:4] == b"GIF8":
-            w, h, ch, px = decode_gif(bytes(payload))
+            w, h, ch, vals = decode_gif(bytes(payload))
             row.update(fmt="gif", width=w, height=h, channels=ch)
-            vals = list(px)
         elif payload[:4] == b"fLaC":
             from ..flaccodec import decode_flac
 
@@ -882,19 +887,16 @@ def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
             )
             vals = samples
         elif payload[:3] == b"\xff\xd8\xff":
-            w, h, ch, px = decode_jpeg(bytes(payload))
+            w, h, ch, vals = decode_jpeg(bytes(payload))
             row.update(fmt="jpeg", width=w, height=h, channels=ch)
-            vals = list(px)
         elif payload[:4] in (b"II*\x00", b"MM\x00*"):
-            w, h, ch, px = decode_tiff(bytes(payload))
+            w, h, ch, vals = decode_tiff(bytes(payload))
             row.update(fmt="tiff", width=w, height=h, channels=ch)
-            vals = list(px)
         elif payload[:4] == b"\xff\x4f\xff\x51":
             from b_pdf_parser_spark.jpxcodec import decode_jpx
 
-            w, h, ch, px = decode_jpx(bytes(payload))
+            w, h, ch, vals = decode_jpx(bytes(payload))
             row.update(fmt="jp2k", width=w, height=h, channels=ch)
-            vals = list(px)
         else:
             raise NotImplementedError(
                 "no from-scratch decoder for this container (compressed "
@@ -902,14 +904,7 @@ def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
                 "jpxcodec and arithmetic-coded JPEG via arithjpeg since "
                 "round 6)"
             )
-        row.update(
-            n_values=len(vals),
-            value_sum=int(sum(vals)),
-            # (k+1)-weighted: position-sensitive, so a row-order, channel
-            # -order or padding bug changes the value even when the plain
-            # sum survives it
-            weighted_sum=int(sum((k + 1) * v for k, v in enumerate(vals))),
-        )
+        row.update(_value_features(vals))
     except Exception as e:  # malformed/unsupported → error row, batch survives
         row["error"] = f"{type(e).__name__}: {e}"
     return row
@@ -946,38 +941,44 @@ IMAGE_INV_SCHEMA_DDL = (
 _IMG_FILTERS = ("DCTDecode", "CCITTFaxDecode", "JPXDecode")
 
 
-def synth_imagedoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    """``n`` deterministic PDFs carrying ``doc_id % 4`` embedded image
-    XObjects each (mixed DCT/CCITT/JPX filters, classic and xref-stream
-    emission) — every byte a pure function of doc_id, so a DuckDB oracle
-    can recompute the expected inventory while the Spark path exercises
-    the REAL writer → parser roundtrip."""
+def _synth_pdfdoc_df(spark, n, num_partitions, caption, images, tail=()) -> DataFrame:
+    """The one image-PDF generator shell: doc ``i`` is one page with the
+    line ``f"{caption} doc {i}"`` (plus ``tail`` spans) and the XObjects
+    ``images(i)``, classic xref on odd ``i`` and an xref stream on even —
+    every byte a pure function of ``i``, so the DuckDB oracles recompute
+    the expected rows from the same formulas."""
 
     def gen(batches):
-        from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
+        from b_pdf_parser_spark.pdfwriter import build_pdf
 
         for b in batches:
-            rows = []
-            for i in b["id"].tolist():
-                spans = [[(40.0, 700.0, f"image doc {i}"),
-                          (40.0, 680.0, "with pictures")]]
-                imgs = [
-                    make_image(
-                        0,
-                        8 + (i + j) % 32,
-                        8 + (i * j) % 24,
-                        _IMG_FILTERS[(i + j) % 3],
-                        seed=i * 17 + j,
-                    )
-                    for j in range(i % 4)
-                ]
-                rows.append({
-                    "doc_id": i,
-                    "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
-                })
-            yield rows
+            yield [
+                {"doc_id": i, "pdf": build_pdf(
+                    [[(40.0, 700.0, f"{caption} doc {i}"), *tail]],
+                    xref_stream=(i % 2 == 0), images=images(i),
+                )}
+                for i in b["id"].tolist()
+            ]
 
     return arrow_kernel(spark.range(0, n, 1, num_partitions), gen, IMAGEDOC_SCHEMA_DDL)
+
+
+def synth_imagedoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
+    """``n`` PDFs carrying ``doc_id % 4`` pseudo-byte image XObjects each
+    (filters rotating DCT/CCITT/JPX) — the inventory corpus: the Spark
+    path runs the REAL writer → parser roundtrip."""
+
+    def images(i):
+        from b_pdf_parser_spark.pdfwriter import make_image
+
+        return [
+            make_image(0, 8 + (i + j) % 32, 8 + (i * j) % 24,
+                       _IMG_FILTERS[(i + j) % 3], seed=i * 17 + j)
+            for j in range(i % 4)
+        ]
+
+    return _synth_pdfdoc_df(spark, n, num_partitions, "image", images,
+                            tail=((40.0, 680.0, "with pictures"),))
 
 
 def pdf_image_features(docs: DataFrame) -> DataFrame:
@@ -1006,14 +1007,97 @@ def pdf_image_features(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PDF × JPEG: decode DCTDecode image XObjects with the from-scratch codec
+# PDF image XObjects → pixels: one filter-routed kernel over the codecs
 # ---------------------------------------------------------------------------
 
-JPEG_PIX_SCHEMA_DDL = (
+PIXEL_SCHEMA_DDL = (
     "doc_id BIGINT, page INT, name STRING, width INT, height INT, "
     "channels INT, n_values BIGINT, value_sum BIGINT, weighted_sum BIGINT, "
     "error STRING"
 )
+
+
+def _decode_dct(rec: dict):
+    from b_pdf_parser_spark.jpegcodec import decode_jpeg
+
+    return decode_jpeg(rec["data"])
+
+
+def _decode_jpx(rec: dict):
+    from b_pdf_parser_spark.jpxcodec import decode_jpx
+
+    return decode_jpx(rec["data"])
+
+
+def _decode_ccitt(rec: dict):
+    """Routed by /K as a conforming reader must: Group 4 for K < 0,
+    Group 3 otherwise; /EncodedByteAlign passes through, and /BlackIs1
+    (black decodes to 1-bits) inverts the conforming sample values."""
+    from b_pdf_parser_spark.ccittcodec import decode_g3, decode_g4
+
+    w, h, k = rec["width"], rec["height"], rec.get("ccitt_k", 0)
+    eba = rec.get("ccitt_byte_align", False)
+    if k < 0:
+        px = decode_g4(rec["data"], w, h, byte_align=eba)
+    else:
+        px = decode_g3(rec["data"], w, h, k=k, byte_align=eba)
+    if rec.get("ccitt_black1", False):
+        px = bytes(255 - v for v in px)
+    return w, h, 1, px
+
+
+# /Filter of the image XObject → codec returning (w, h, channels, pixels)
+_PIXEL_CODECS = {
+    "DCTDecode": _decode_dct,
+    "JPXDecode": _decode_jpx,
+    "CCITTFaxDecode": _decode_ccitt,
+}
+
+
+def pdf_pixel_features(docs: DataFrame, filter_name: str) -> DataFrame:
+    """PDF walk → the ``filter_name`` image XObjects' codec input (every
+    earlier filter in the chain applied, ``image_inventory(with_data=True)``)
+    → REAL from-scratch decode → exact integer pixel features, one row per
+    image. Images under other filters are routed past the codec (the
+    corpora plant a pseudo-byte decoy per doc, so a routing bug becomes
+    an error row); a decode whose dimensions disagree with the XObject's
+    /Width /Height fails. A corrupt document or stream yields one error
+    row for the document. One Arrow-batch Python dispatch per document."""
+    decode = _PIXEL_CODECS[filter_name]
+
+    def run(batches):
+        from b_pdf_parser_spark.pdfmodel import image_inventory
+
+        for b in batches:
+            rows = []
+            for did, pdf in zip(b["doc_id"].tolist(), b["pdf"].tolist()):
+                try:
+                    for rec in image_inventory(bytes(pdf), with_data=True):
+                        if rec["filter"] != filter_name:
+                            continue
+                        w, h, ch, px = decode(rec)
+                        if (w, h) != (rec["width"], rec["height"]):
+                            raise ValueError(
+                                f"XObject dims {rec['width']}x{rec['height']}"
+                                f" != {filter_name} dims {w}x{h}"
+                            )
+                        rows.append({
+                            "doc_id": int(did), "page": rec["page"],
+                            "name": rec["name"], "width": w, "height": h,
+                            "channels": ch, **_value_features(px),
+                            "error": None,
+                        })
+                except Exception as e:  # corrupt doc/stream → error row
+                    rows.append({
+                        "doc_id": int(did), "page": -1, "name": "",
+                        "width": None, "height": None, "channels": None,
+                        "n_values": None, "value_sum": None,
+                        "weighted_sum": None,
+                        "error": f"{type(e).__name__}: {e}",
+                    })
+            yield rows
+
+    return arrow_kernel(docs, run, PIXEL_SCHEMA_DDL)
 
 
 def _jpeg_xobject_dims(i: int, j: int) -> dict:
@@ -1037,95 +1121,33 @@ def synth_jpegdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     (flat 8×8 blocks, DC quant 8 — the bit-exact stratum; baseline SOF0
     with restart rotation + progressive SOF2 on half the restart-free
     slots) as /DCTDecode image XObjects, plus one pseudo-byte CCITT
-    decoy per doc
-    so a filter-routing bug (decoding the wrong stream) breaks the
-    oracle with an error row instead of passing silently."""
+    decoy per doc."""
 
-    def gen(batches):
-        from b_pdf_parser_spark.jpegcodec import (
-            QUANT_CHROMA, QUANT_LUM, encode_jpeg, encode_jpeg_progressive,
-        )
-        from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
+    def images(i):
+        from b_pdf_parser_spark.jpegcodec import encode_jpeg, encode_jpeg_progressive
+        from b_pdf_parser_spark.pdfwriter import make_image
 
-        q8 = ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
-        for b in batches:
-            rows = []
-            for i in b["id"].tolist():
-                spans = [[(40.0, 700.0, f"jpeg doc {i}")]]
-                imgs = []
-                for j in range(i % 3):
-                    d = _jpeg_xobject_dims(i, j)
-                    px = _jpeg_flat_pixels(d["seed"], d["w"], d["h"], d["ch"])
-                    if d["prog"]:
-                        payload = encode_jpeg_progressive(
-                            d["w"], d["h"], d["ch"], px, qtables=q8,
-                        )
-                    else:
-                        payload = encode_jpeg(
-                            d["w"], d["h"], d["ch"], px,
-                            qtables=q8, restart_interval=d["restart"],
-                        )
-                    imgs.append({
-                        "page": 0, "width": d["w"], "height": d["h"],
-                        "filter": "DCTDecode", "data": payload,
-                    })
-                imgs.append(make_image(0, 16, 8, "CCITTFaxDecode", seed=i))
-                rows.append({
-                    "doc_id": i,
-                    "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
-                })
-            yield rows
+        q8 = _q8_tables()
+        imgs = []
+        for j in range(i % 3):
+            d = _jpeg_xobject_dims(i, j)
+            px = _jpeg_flat_pixels(d["seed"], d["w"], d["h"], d["ch"])
+            if d["prog"]:
+                payload = encode_jpeg_progressive(
+                    d["w"], d["h"], d["ch"], px, qtables=q8,
+                )
+            else:
+                payload = encode_jpeg(
+                    d["w"], d["h"], d["ch"], px,
+                    qtables=q8, restart_interval=d["restart"],
+                )
+            imgs.append({
+                "page": 0, "width": d["w"], "height": d["h"],
+                "filter": "DCTDecode", "data": payload,
+            })
+        return imgs + [make_image(0, 16, 8, "CCITTFaxDecode", seed=i)]
 
-    return arrow_kernel(spark.range(0, n, 1, num_partitions), gen, IMAGEDOC_SCHEMA_DDL)
-
-
-def pdf_jpeg_pixel_features(docs: DataFrame) -> DataFrame:
-    """PDF walk → DCTDecode image XObject streams → REAL JPEG decode →
-    exact integer pixel features per embedded image. Two from-scratch
-    subsystems meet: ``pdfmodel`` surfaces the encoded stream bytes,
-    ``jpegcodec`` turns them into canonical pixels; non-DCT images are
-    routed past the codec (inventory only, no row here). One Arrow-batch
-    Python dispatch per document."""
-
-    def run(batches):
-        from b_pdf_parser_spark.jpegcodec import decode_jpeg
-        from b_pdf_parser_spark.pdfmodel import image_inventory
-
-        for b in batches:
-            rows = []
-            for did, pdf in zip(b["doc_id"].tolist(), b["pdf"].tolist()):
-                try:
-                    for rec in image_inventory(bytes(pdf), with_data=True):
-                        if rec["filter"] != "DCTDecode":
-                            continue
-                        w, h, ch, px = decode_jpeg(rec["data"])
-                        vals = list(px)
-                        if (w, h) != (rec["width"], rec["height"]):
-                            raise ValueError(
-                                f"XObject dims {rec['width']}x{rec['height']}"
-                                f" != JPEG dims {w}x{h}"
-                            )
-                        rows.append({
-                            "doc_id": int(did), "page": rec["page"],
-                            "name": rec["name"], "width": w, "height": h,
-                            "channels": ch, "n_values": len(vals),
-                            "value_sum": int(sum(vals)),
-                            "weighted_sum": int(
-                                sum((k + 1) * v for k, v in enumerate(vals))
-                            ),
-                            "error": None,
-                        })
-                except Exception as e:  # corrupt doc/stream → error row
-                    rows.append({
-                        "doc_id": int(did), "page": -1, "name": "",
-                        "width": None, "height": None, "channels": None,
-                        "n_values": None, "value_sum": None,
-                        "weighted_sum": None,
-                        "error": f"{type(e).__name__}: {e}",
-                    })
-            yield rows
-
-    return arrow_kernel(docs, run, JPEG_PIX_SCHEMA_DDL)
+    return _synth_pdfdoc_df(spark, n, num_partitions, "jpeg", images)
 
 
 def _jpx_xobject_dims(i: int, j: int) -> dict:
@@ -1159,83 +1181,25 @@ def synth_jpxdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     codestreams (from-scratch ``jpxcodec``: MQ coder, EBCOT Tier-1,
     reversible 5/3 — lossless) as /JPXDecode image XObjects with the
     wavelet level count rotating 0/1/2, plus one pseudo-byte DCTDecode
-    decoy per doc so a filter-routing bug (running the wrong codec over
-    the wrong stream) breaks the oracle with an error row instead of
-    passing silently."""
+    decoy per doc."""
 
-    def gen(batches):
+    def images(i):
         from b_pdf_parser_spark.jpxcodec import encode_jpx
-        from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
+        from b_pdf_parser_spark.pdfwriter import make_image
 
-        for b in batches:
-            rows = []
-            for i in b["id"].tolist():
-                spans = [[(40.0, 700.0, f"jpx doc {i}")]]
-                imgs = []
-                for j in range(i % 3):
-                    d = _jpx_xobject_dims(i, j)
-                    px = _jpx_pixels(d["seed"], d["w"], d["h"], d["ch"])
-                    imgs.append({
-                        "page": 0, "width": d["w"], "height": d["h"],
-                        "filter": "JPXDecode",
-                        "data": encode_jpx(d["w"], d["h"], d["ch"], px,
-                                           levels=d["levels"]),
-                    })
-                imgs.append(make_image(0, 16, 8, "DCTDecode", seed=i))
-                rows.append({
-                    "doc_id": i,
-                    "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
-                })
-            yield rows
+        imgs = []
+        for j in range(i % 3):
+            d = _jpx_xobject_dims(i, j)
+            px = _jpx_pixels(d["seed"], d["w"], d["h"], d["ch"])
+            imgs.append({
+                "page": 0, "width": d["w"], "height": d["h"],
+                "filter": "JPXDecode",
+                "data": encode_jpx(d["w"], d["h"], d["ch"], px,
+                                   levels=d["levels"]),
+            })
+        return imgs + [make_image(0, 16, 8, "DCTDecode", seed=i)]
 
-    return arrow_kernel(spark.range(0, n, 1, num_partitions), gen, IMAGEDOC_SCHEMA_DDL)
-
-
-def pdf_jpx_pixel_features(docs: DataFrame) -> DataFrame:
-    """PDF walk → /JPXDecode XObject streams → REAL JPEG 2000 decode →
-    exact integer pixel features per embedded image (lossless path, so
-    the features are exact by construction). Non-JPX images are routed
-    past the codec. One Arrow-batch Python dispatch per document."""
-
-    def run(batches):
-        from b_pdf_parser_spark.jpxcodec import decode_jpx
-        from b_pdf_parser_spark.pdfmodel import image_inventory
-
-        for b in batches:
-            rows = []
-            for did, pdf in zip(b["doc_id"].tolist(), b["pdf"].tolist()):
-                try:
-                    for rec in image_inventory(bytes(pdf), with_data=True):
-                        if rec["filter"] != "JPXDecode":
-                            continue
-                        w, h, ch, px = decode_jpx(rec["data"])
-                        if (w, h) != (rec["width"], rec["height"]):
-                            raise ValueError(
-                                f"XObject dims {rec['width']}x{rec['height']}"
-                                f" != JPX dims {w}x{h}"
-                            )
-                        vals = list(px)
-                        rows.append({
-                            "doc_id": int(did), "page": rec["page"],
-                            "name": rec["name"], "width": w, "height": h,
-                            "channels": ch, "n_values": len(vals),
-                            "value_sum": int(sum(vals)),
-                            "weighted_sum": int(
-                                sum((k + 1) * v for k, v in enumerate(vals))
-                            ),
-                            "error": None,
-                        })
-                except Exception as e:  # corrupt doc/stream → error row
-                    rows.append({
-                        "doc_id": int(did), "page": -1, "name": "",
-                        "width": None, "height": None, "channels": None,
-                        "n_values": None, "value_sum": None,
-                        "weighted_sum": None,
-                        "error": f"{type(e).__name__}: {e}",
-                    })
-            yield rows
-
-    return arrow_kernel(docs, run, JPEG_PIX_SCHEMA_DDL)
+    return _synth_pdfdoc_df(spark, n, num_partitions, "jpx", images)
 
 
 def _ccitt_xobject_dims(i: int, j: int) -> dict:
@@ -1272,118 +1236,39 @@ def synth_ccittdoc_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
     decoder must auto-detect), a quarter of all images byte-aligned per
     row (/EncodedByteAlign), a fifth carrying /BlackIs1 (the coded runs
     are unchanged; the conforming sample values invert, and the oracle
-    inverts in lockstep) — plus one pseudo-byte DCTDecode decoy per doc
-    so a filter-routing bug (running the fax coder over the wrong
-    stream) breaks the oracle with an error row instead of passing
-    silently. Together the corpus now rotates the ENTIRE practical
-    /CCITTFaxDecode parameter surface: K, EndOfLine, EncodedByteAlign,
-    BlackIs1, Columns, Rows.
-    The decoded pixels are identical across regimes (bi-level fax coding
-    is lossless), so the oracle formulas don't depend on K — only the
-    decode PATH does, which is exactly what the rotation pins."""
+    inverts in lockstep) — plus one pseudo-byte DCTDecode decoy per doc.
+    Together the corpus rotates the ENTIRE practical /CCITTFaxDecode
+    parameter surface: K, EndOfLine, EncodedByteAlign, BlackIs1,
+    Columns, Rows. The decoded pixels are identical across regimes
+    (bi-level fax coding is lossless), so the oracle formulas don't
+    depend on K — only the decode PATH does, which is exactly what the
+    rotation pins."""
 
-    def gen(batches):
+    def images(i):
         from b_pdf_parser_spark.ccittcodec import encode_g3, encode_g4
-        from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
+        from b_pdf_parser_spark.pdfwriter import make_image
 
-        for b in batches:
-            rows = []
-            for i in b["id"].tolist():
-                spans = [[(40.0, 700.0, f"ccitt doc {i}")]]
-                imgs = []
-                for j in range(1 + i % 2):
-                    d = _ccitt_xobject_dims(i, j)
-                    px = _ccitt_pattern_pixels(i, j, d["w"], d["h"])
-                    k = (-1, 0, 4)[(i + j) % 3]
-                    # half the K=0 images ship the PDF-DEFAULT shape:
-                    # /EndOfLine false, rows packed with no framing
-                    eol = not (k == 0 and (i // 3) % 2 == 0)
-                    # rotate the remaining DecodeParms surface too:
-                    # /EncodedByteAlign pads every row/EOL to a byte
-                    # boundary; /BlackIs1 flips what the decoded samples
-                    # MEAN (consumer inverts) without touching the coded
-                    # runs — the oracle inverts in lockstep
-                    byte_align = (i * 3 + j) % 4 == 1
-                    black1 = (i + j) % 5 == 2
-                    if k < 0:
-                        enc = encode_g4(d["w"], d["h"], px, byte_align=byte_align)
-                    else:
-                        enc = encode_g3(
-                            d["w"], d["h"], px, k=k, eol=eol,
-                            byte_align=byte_align,
-                        )
-                    imgs.append({
-                        "page": 0, "width": d["w"], "height": d["h"],
-                        "filter": "CCITTFaxDecode", "k": k, "eol": eol,
-                        "byte_align": byte_align, "black_is_1": black1,
-                        "data": enc,
-                    })
-                imgs.append(make_image(0, 16, 8, "DCTDecode", seed=i))
-                rows.append({
-                    "doc_id": i,
-                    "pdf": build_pdf(spans, xref_stream=(i % 2 == 0), images=imgs),
-                })
-            yield rows
+        imgs = []
+        for j in range(1 + i % 2):
+            d = _ccitt_xobject_dims(i, j)
+            px = _ccitt_pattern_pixels(i, j, d["w"], d["h"])
+            k = (-1, 0, 4)[(i + j) % 3]
+            # half the K=0 images ship the PDF-DEFAULT shape:
+            # /EndOfLine false, rows packed with no framing
+            eol = not (k == 0 and (i // 3) % 2 == 0)
+            byte_align = (i * 3 + j) % 4 == 1
+            black1 = (i + j) % 5 == 2
+            if k < 0:
+                enc = encode_g4(d["w"], d["h"], px, byte_align=byte_align)
+            else:
+                enc = encode_g3(d["w"], d["h"], px, k=k, eol=eol,
+                                byte_align=byte_align)
+            imgs.append({
+                "page": 0, "width": d["w"], "height": d["h"],
+                "filter": "CCITTFaxDecode", "k": k, "eol": eol,
+                "byte_align": byte_align, "black_is_1": black1,
+                "data": enc,
+            })
+        return imgs + [make_image(0, 16, 8, "DCTDecode", seed=i)]
 
-    return arrow_kernel(spark.range(0, n, 1, num_partitions), gen, IMAGEDOC_SCHEMA_DDL)
-
-
-def pdf_ccitt_pixel_features(docs: DataFrame) -> DataFrame:
-    """PDF walk → /CCITTFaxDecode XObject streams → REAL fax decode →
-    exact integer pixel features per embedded fax image (bi-level coding
-    is lossless, so the features are exact by construction, not by a
-    quantization argument like JPEG's flat-block stratum). The decoder
-    is routed by the stream's /DecodeParms /K — Group 4 (K<0) vs Group 3
-    (K>=0) — exactly as a conforming reader must. Non-CCITT images are
-    routed past the codec. One Arrow-batch Python dispatch per
-    document."""
-
-    def run(batches):
-        from b_pdf_parser_spark.ccittcodec import decode_g3, decode_g4
-        from b_pdf_parser_spark.pdfmodel import image_inventory
-
-        for b in batches:
-            rows = []
-            for did, pdf in zip(b["doc_id"].tolist(), b["pdf"].tolist()):
-                try:
-                    for rec in image_inventory(bytes(pdf), with_data=True):
-                        if rec["filter"] != "CCITTFaxDecode":
-                            continue
-                        ccitt_k = rec.get("ccitt_k", 0)
-                        eba = rec.get("ccitt_byte_align", False)
-                        if ccitt_k < 0:
-                            px = decode_g4(
-                                rec["data"], rec["width"], rec["height"],
-                                byte_align=eba,
-                            )
-                        else:
-                            px = decode_g3(
-                                rec["data"], rec["width"], rec["height"],
-                                k=ccitt_k, byte_align=eba,
-                            )
-                        if rec.get("ccitt_black1", False):
-                            # BlackIs1: black decodes to 1-bits, so the
-                            # conforming sample values are inverted
-                            px = bytes(255 - v for v in px)
-                        rows.append({
-                            "doc_id": int(did), "page": rec["page"],
-                            "name": rec["name"], "width": rec["width"],
-                            "height": rec["height"], "channels": 1,
-                            "n_values": len(px),
-                            "value_sum": int(sum(px)),
-                            "weighted_sum": int(
-                                sum((k + 1) * v for k, v in enumerate(px))
-                            ),
-                            "error": None,
-                        })
-                except Exception as e:  # corrupt doc/stream → error row
-                    rows.append({
-                        "doc_id": int(did), "page": -1, "name": "",
-                        "width": None, "height": None, "channels": None,
-                        "n_values": None, "value_sum": None,
-                        "weighted_sum": None,
-                        "error": f"{type(e).__name__}: {e}",
-                    })
-            yield rows
-
-    return arrow_kernel(docs, run, JPEG_PIX_SCHEMA_DDL)
+    return _synth_pdfdoc_df(spark, n, num_partitions, "ccitt", images)

@@ -392,34 +392,42 @@ def _paeth(a: int, b: int, c: int) -> int:
     return b if pb <= pc else c
 
 
+def _png_unfilter_row(ft: int, row: bytearray, prev: bytes, bpp: int) -> bytearray:
+    """Invert PNG row filter ``ft`` (RFC 2083 §6) on ``row`` in place;
+    ``prev`` is the previous unfiltered row (zeros before the first) and
+    ``bpp`` the bytes per complete pixel. The one PNG unfilter: the
+    Flate/LZW predictors here, ``mediacodec``'s PNG decoder and TIFF
+    Predictor 2 (the Sub filter with bpp = samples per pixel) all call it."""
+    n = len(row)
+    if ft == 1:  # Sub
+        for k in range(bpp, n):
+            row[k] = (row[k] + row[k - bpp]) & 0xFF
+    elif ft == 2:  # Up
+        for k in range(n):
+            row[k] = (row[k] + prev[k]) & 0xFF
+    elif ft == 3:  # Average
+        for k in range(n):
+            left = row[k - bpp] if k >= bpp else 0
+            row[k] = (row[k] + ((left + prev[k]) >> 1)) & 0xFF
+    elif ft == 4:  # Paeth
+        for k in range(n):
+            left = row[k - bpp] if k >= bpp else 0
+            ul = prev[k - bpp] if k >= bpp else 0
+            row[k] = (row[k] + _paeth(left, prev[k], ul)) & 0xFF
+    elif ft != 0:
+        raise PdfError(f"unknown PNG filter type {ft}")
+    return row
+
+
 def _apply_png_predictor(data: bytes, columns: int, colors: int, bpc: int) -> bytes:
     bpp = max(1, (colors * bpc + 7) // 8)
     rowlen = (columns * colors * bpc + 7) // 8
     stride = rowlen + 1
     out = bytearray()
-    prev = bytearray(rowlen)
+    prev = bytes(rowlen)
     for r in range(0, len(data) - stride + 1, stride):
-        ft = data[r]
-        row = bytearray(data[r + 1 : r + 1 + rowlen])
-        if ft == 1:  # Sub
-            for k in range(bpp, rowlen):
-                row[k] = (row[k] + row[k - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for k in range(rowlen):
-                row[k] = (row[k] + prev[k]) & 0xFF
-        elif ft == 3:  # Average
-            for k in range(rowlen):
-                left = row[k - bpp] if k >= bpp else 0
-                row[k] = (row[k] + ((left + prev[k]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for k in range(rowlen):
-                left = row[k - bpp] if k >= bpp else 0
-                ul = prev[k - bpp] if k >= bpp else 0
-                row[k] = (row[k] + _paeth(left, prev[k], ul)) & 0xFF
-        elif ft != 0:
-            raise PdfError(f"unknown PNG filter type {ft}")
-        out += row
-        prev = row
+        prev = _png_unfilter_row(data[r], bytearray(data[r + 1 : r + stride]), prev, bpp)
+        out += prev
     return bytes(out)
 
 
@@ -430,14 +438,15 @@ def _apply_predictor(data: bytes, parms: Dict[str, Any]) -> bytes:
     columns = int(parms.get("Columns", 1) or 1)
     colors = int(parms.get("Colors", 1) or 1)
     bpc = int(parms.get("BitsPerComponent", 8) or 8)
-    if pred == 2:  # TIFF horizontal differencing (8-bit only)
+    if min(columns, colors, bpc) < 1:
+        raise PdfError(f"bad predictor parameters {columns}/{colors}/{bpc}")
+    if pred == 2:  # TIFF horizontal differencing (8-bit only) = PNG Sub
         if bpc != 8:
             raise PdfError("TIFF predictor requires 8 bits per component")
         rowlen = columns * colors
         out = bytearray(data)
         for r in range(0, len(out) - rowlen + 1, rowlen):
-            for k in range(colors, rowlen):
-                out[r + k] = (out[r + k] + out[r + k - colors]) & 0xFF
+            out[r : r + rowlen] = _png_unfilter_row(1, out[r : r + rowlen], b"", colors)
         return bytes(out)
     if pred >= 10:
         return _apply_png_predictor(data, columns, colors, bpc)
@@ -1820,7 +1829,8 @@ def image_inventory(data: bytes, with_data: bool = False) -> List[Dict[str, Any]
     ``decode_stream``); this surfaces them as typed rows
     ``{page, name, width, height, filter, n_bytes}`` without decoding
     pixels (no codec libs in the runtime, and none are needed for
-    inventory/routing decisions).
+    inventory/routing decisions). ``with_data`` adds ``data``, the bytes
+    the image codec reads (``n_bytes`` stays the stored stream length).
 
     Reference analog: PyMuPDF's ``page.get_images()``
     (the reference never calls it — images are silently skipped at
@@ -1873,10 +1883,11 @@ def image_inventory(data: bytes, with_data: bool = False) -> List[Dict[str, Any]
                     doc.resolve(dp.get("BlackIs1")) is True
                 )
             if with_data:
-                # the encoded stream bytes verbatim (for DCTDecode that IS
-                # the JFIF payload) — consumers with a real codec (e.g.
-                # jpegcodec) can decode pixels; inventory callers skip this
-                rec["data"] = xo.raw
+                # the bytes the image codec reads: every filter before it
+                # applied (``decode_stream`` stops at DCT/JPX/CCITT/JBIG2),
+                # so a single-filter stream comes back verbatim and a
+                # ``[/FlateDecode /DCTDecode]`` one as its JFIF payload
+                rec["data"] = doc.decode_stream(xo)
             out.append(rec)
     return out
 

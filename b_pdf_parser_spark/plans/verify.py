@@ -19,19 +19,11 @@ needed because both sides are O(corpus).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
-__all__ = ["parse_id_number_col", "transactions_table", "verify_turnover_plan"]
+from ..functions.numbers import parse_id_number_col
 
-
-def parse_id_number_col(c: Column) -> Column:
-    """Indonesian-format numeric parse as a native column expression.
-
-    Semantics of utils.py:527-548 including malformed → 0.0: strip, drop
-    '.' thousands separators, ',' → '.', try_cast, coalesce to 0.0.
-    """
-    cleaned = F.replace(F.replace(F.trim(c), F.lit("."), F.lit("")), F.lit(","), F.lit("."))
-    return F.coalesce(cleaned.try_cast("double"), F.lit(0.0))
+__all__ = ["transactions_table", "verify_turnover_plan"]
 
 
 def transactions_table(extracted: DataFrame) -> DataFrame:

@@ -13,11 +13,10 @@ engine (complementing the batch job's manifest for the batch path).
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..operators import arrow_kernel
-from ..operators.extract import EXTRACTED_SCHEMA, extract_batch
+from ..operators.extract import EXTRACTED_SCHEMA, extract_batch, partition_id_col
 
 __all__ = ["extract_stream", "run_file_stream"]
 
@@ -29,7 +28,7 @@ def extract_stream(pages_stream: DataFrame, checkpoint_partitions: int = 64) -> 
         "url",
         "warc_ts",
         "html",
-        F.pmod(F.xxhash64("url"), F.lit(checkpoint_partitions)).cast("int").alias("partition_id"),
+        partition_id_col(checkpoint_partitions).alias("partition_id"),
     )
     return arrow_kernel(tagged, extract_batch, EXTRACTED_SCHEMA)
 

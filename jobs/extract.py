@@ -2,7 +2,8 @@
 
 North-rule requirements implemented here (BASELINE.json):
 
-* **Stable checkpoint unit**: ``partition_id = pmod(xxhash64(url), P)`` — a
+* **Stable checkpoint unit**: ``partition_id = pmod(xxhash64(url), P)``
+  (``operators.extract.partition_id_col``, shared with the operator) — a
   *logical* id independent of cluster size or physical layout, so a resume
   after rescale still skips completed work.
 * **Wave execution**: pending partition ids are processed in waves; each
@@ -36,7 +37,11 @@ import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 import b_pdf_parser_spark  # noqa: E402
-from b_pdf_parser_spark.operators.extract import extract_pages  # noqa: E402
+from b_pdf_parser_spark.operators.extract import (  # noqa: E402
+    EXTRACTED_SCHEMA,
+    extract_pages,
+    partition_id_col,
+)
 
 __all__ = ["run_extract_job", "load_manifest", "load_metrics"]
 
@@ -134,9 +139,7 @@ def run_extract_job(
         cursor += len(ids)
         wave_sizes.append(len(ids))
         t0 = time.time()
-        subset = pages.filter(
-            F.pmod(F.xxhash64("url"), F.lit(checkpoint_partitions)).cast("int").isin(list(ids))
-        )
+        subset = pages.filter(partition_id_col(checkpoint_partitions).isin(list(ids)))
         ext = extract_pages(
             subset,
             num_partitions=num_partitions,
@@ -147,8 +150,6 @@ def run_extract_job(
         # metrics for the wave, keyed by the stable partition id. Explicit
         # schema: a wave whose pids matched no urls writes zero files, and
         # schema inference on an empty directory would throw.
-        from b_pdf_parser_spark.operators.extract import EXTRACTED_SCHEMA
-
         stats = (
             spark.read.schema(EXTRACTED_SCHEMA).parquet(out_data)
             .filter(F.col("partition_id").isin(list(ids)))

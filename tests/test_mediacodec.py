@@ -59,6 +59,26 @@ def test_png_rejects_unsupported_shapes():
         decode_png(b"\x89PNG\r\n\x1a\n" + chunk)
 
 
+def test_png_bad_filter_type_raises_valueerror():
+    # every chunk CRC-valid; the second scanline's filter byte is 5, which
+    # no PNG defines: the decoder's contract is ValueError, whichever
+    # module the row unfilter lives in
+    def chunk(typ, body):
+        return (len(body).to_bytes(4, "big") + typ + body
+                + (zlib.crc32(typ + body) & 0xFFFFFFFF).to_bytes(4, "big"))
+
+    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0)
+    idat = zlib.compress(b"\x00\x10\x20" + b"\x05\x30\x40")
+    png = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat)
+           + chunk(b"IEND", b""))
+    with pytest.raises(ValueError, match="filter type 5"):
+        decode_png(png)
+    good = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(b"\x00\x10\x20\x01\x30\x40"))
+            + chunk(b"IEND", b""))
+    assert decode_png(good) == (2, 2, 1, bytes([0x10, 0x20, 0x30, 0x70]))
+
+
 @pytest.mark.parametrize("w", [9, 10, 11, 12])  # all paddings 0..3 bytes
 def test_bmp_roundtrip_every_padding(w):
     h = 5

@@ -138,3 +138,59 @@ def test_pdf_jpeg_decode_flat_blocks_roundtrip_and_decoy_routing():
     assert out == bytes(exp)
     with pytest.raises(ValueError):
         decode_jpeg(recs[1]["data"])  # pseudo bytes are not a JPEG
+
+
+def _chained_jpeg_pdf(chain, encode):
+    # one page, one 8x8 gray JPEG XObject stored under a filter chain that
+    # ends in /DCTDecode (the writer emits single filters only)
+    from b_pdf_parser_spark.jpegcodec import QUANT_CHROMA, QUANT_LUM, encode_jpeg
+    from b_pdf_parser_spark.operators.multimodal import _jpeg_flat_pixels
+    from b_pdf_parser_spark.pdfwriter import _emit_classic
+
+    q8 = ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
+    px = _jpeg_flat_pixels(5, 8, 8, 1)
+    stored = encode(encode_jpeg(8, 8, 1, px, qtables=q8))
+    image = (
+        b"<< /Type /XObject /Subtype /Image /Width 8 /Height 8 "
+        b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Filter [%s] "
+        b"/Length %d >>\nstream\n" % (chain, len(stored))
+        + stored + b"\nendstream"
+    )
+    return px, stored, _emit_classic({
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        3: b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+           b"/Resources << /XObject << /Im0 4 0 R >> >> >>",
+        4: image,
+    }, {})
+
+
+def test_filter_chain_before_dct_decodes_through_pixel_kernel(spark):
+    # image_inventory(with_data=True) hands the codec the bytes after every
+    # filter before /DCTDecode; n_bytes stays the stored length
+    import base64
+    import zlib
+
+    from b_pdf_parser_spark.operators.multimodal import pdf_pixel_features
+
+    docs = {
+        0: _chained_jpeg_pdf(b"/DCTDecode", lambda b: b),
+        1: _chained_jpeg_pdf(b"/FlateDecode /DCTDecode", zlib.compress),
+        2: _chained_jpeg_pdf(b"/ASCII85Decode /DCTDecode",
+                             lambda b: base64.a85encode(b) + b"~>"),
+    }
+    for px, stored, pdf in docs.values():
+        (rec,) = image_inventory(pdf, with_data=True)
+        assert rec["filter"] == "DCTDecode"
+        assert rec["n_bytes"] == len(stored)
+        assert rec["data"][:3] == b"\xff\xd8\xff"
+    df = spark.createDataFrame(
+        [(i, pdf) for i, (_, _, pdf) in docs.items()], "doc_id BIGINT, pdf BINARY"
+    )
+    rows = {r.doc_id: r for r in pdf_pixel_features(df, "DCTDecode").collect()}
+    assert sorted(rows) == [0, 1, 2]
+    for i, (px, _, _) in docs.items():
+        r = rows[i]
+        assert r.error is None, r.error
+        assert (r.width, r.height, r.channels) == (8, 8, 1)
+        assert (r.n_values, r.value_sum) == (64, sum(px))

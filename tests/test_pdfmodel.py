@@ -69,6 +69,21 @@ def test_all_png_filter_types():
     assert out == bytes([10, 20, 30, 5, 10, 15])  # Sub adds the left byte
 
 
+def test_predictor_parameters_below_one_raise_pdferror():
+    # /DecodeParms come from the file: a negative /Columns, /Colors or
+    # /BitsPerComponent must stay inside the walk's PdfError contract
+    # (it used to surface as ValueError or IndexError)
+    data = bytes(range(48))
+    for parms in ({"Predictor": 12, "Columns": -3},
+                  {"Predictor": 2, "Columns": -3, "Colors": -2},
+                  {"Predictor": 15, "BitsPerComponent": -8}):
+        with pytest.raises(pm.PdfError):
+            pm._apply_predictor(data, parms)
+    # TIFF Predictor 2 is the PNG Sub filter per row; a short tail stays as is
+    out = pm._apply_predictor(bytes([1, 2, 3, 4, 9]), {"Predictor": 2, "Columns": 2})
+    assert out == bytes([1, 3, 3, 7, 9])
+
+
 def test_flate_robustness():
     assert pm._flate(zlib.compress(b"hello")) == b"hello"
     with pytest.raises(pm.PdfError):

@@ -4,12 +4,9 @@ layer 4): synthetic pages corpus → extract → relational cross-checks."""
 import pyspark.sql.functions as F
 import pytest
 
+from b_pdf_parser_spark.functions.numbers import parse_id_number_col
 from b_pdf_parser_spark.operators.extract import extract_pages
-from b_pdf_parser_spark.plans.verify import (
-    parse_id_number_col,
-    transactions_table,
-    verify_turnover_plan,
-)
+from b_pdf_parser_spark.plans.verify import transactions_table, verify_turnover_plan
 from b_pdf_parser_spark.sources.pages import synth_pages_df
 
 N = 200
