@@ -644,7 +644,6 @@ _AUDIT_SEED = 42
 def _audit_corpus_path(spark) -> str:
     """Generate-once cache of the full bench corpus (same key as bench.py's
     ``_ensure_corpus`` — whichever runs first pays the generation)."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.sources.pages import CORPUS_VERSION, synth_pages_df
 
     cache = (
@@ -653,7 +652,6 @@ def _audit_corpus_path(spark) -> str:
         / f"pages_v{CORPUS_VERSION}_{_AUDIT_DOCS}_{_AUDIT_SEED}.parquet"
     )
     if not (cache / "_SUCCESS").exists():  # missing OR interrupted generation
-        b_pdf_parser_spark.ship_package(spark)
         synth_pages_df(
             spark, _AUDIT_DOCS, seed=_AUDIT_SEED, num_partitions=32
         ).write.mode("overwrite").parquet(str(cache))
@@ -674,9 +672,6 @@ def q_extract_corpus_audit(spark, sf):
     full scale breaks this hash."""
     from b_pdf_parser_spark.operators.extract import extract_kind_audit
 
-    import b_pdf_parser_spark
-
-    b_pdf_parser_spark.ship_package(spark)
     pages = spark.read.parquet(_audit_corpus_path(spark))
     # round-7: the audit projection — the IDENTICAL per-doc walk (kind and
     # error are decided inside _extract_one, untouched by the field layer)
@@ -723,11 +718,8 @@ def _formula_pages(spark, n_pdf: int = 160, n_html: int = 0, aes256: bool = Fals
     formula of the doc index. ``aes256`` upgrades 2 of the 160 PDFs to
     V5/R6 (see ``formula_statement_pdf``) — only ``extract_formula`` asks
     for it, since the R6 KDF costs ~2 s/doc across write+parse."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators import arrow_kernel
     from b_pdf_parser_spark.sources.pages import PAGES_SCHEMA_DDL
-
-    b_pdf_parser_spark.ship_package(spark)
 
     def gen(batches):
         from datetime import datetime
@@ -1137,10 +1129,8 @@ def q_outlinks(spark, sf):
     400 deterministic HTML docs (entities, unquoted attrs, nested tags,
     href-less anchors). The oracle recomputes the expected edges from the
     generator formulas — drift in the markup walk breaks the value hash."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.links import extract_outlinks, synth_linkdoc_df
 
-    b_pdf_parser_spark.ship_package(spark)
     return extract_outlinks(synth_linkdoc_df(spark, 400))
 
 
@@ -1149,28 +1139,24 @@ def q_anchor_texts(spark, sf):
     totals, anchor-variant counts and the dominant anchor per target URL.
     The oracle recomputes all of it from the generator formulas — the
     entity-decoded, tag-stripped anchor strings included."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.links import (
         anchor_texts,
         extract_outlinks,
         synth_linkdoc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     return anchor_texts(extract_outlinks(synth_linkdoc_df(spark, 400)))
 
 
 def q_link_hosts(spark, sf):
     """Host-level in-degree over the outlink edge table (the crawl-frontier /
     host-ranking aggregate): one shuffle on the host key."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.links import (
         extract_outlinks,
         host_degrees,
         synth_linkdoc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     return host_degrees(extract_outlinks(synth_linkdoc_df(spark, 400)))
 
 
@@ -1188,9 +1174,6 @@ def q_crawl_frontier(spark, sf):
         synth_pdflink_doc_df,
     )
 
-    import b_pdf_parser_spark
-
-    b_pdf_parser_spark.ship_package(spark)
     html_edges = extract_outlinks(synth_linkdoc_df(spark, 400)).select(
         F.col("href").alias("raw_url")
     )
@@ -1319,9 +1302,6 @@ def q_real_media_decode(spark, sf):
         synth_real_media_df,
     )
 
-    import b_pdf_parser_spark
-
-    b_pdf_parser_spark.ship_package(spark)
     return real_media_features(synth_real_media_df(spark, 216))
 
 
@@ -1492,13 +1472,11 @@ def q_pdf_outlinks(spark, sf):
     """The PDF half of outlink harvesting: URI link annotations (PDF 1.7
     §12.5.6.5) from 300 real writer-emitted PDFs, against an oracle
     recomputed from the generator formulas."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.links import (
         extract_pdf_outlinks,
         synth_pdflink_doc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     return extract_pdf_outlinks(synth_pdflink_doc_df(spark, 300))
 
 
@@ -1532,10 +1510,8 @@ def q_canonical_urls(spark, sf):
 
 
 def q_media_features(spark, sf):
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import decode_features, synth_media_df
 
-    b_pdf_parser_spark.ship_package(spark)
     return decode_features(synth_media_df(spark, 200))
 
 
@@ -1545,13 +1521,11 @@ def q_pdf_images(spark, sf):
     batches; the oracle recomputes the expected rows from the deterministic
     generator formulas, so any drift in either the emission or the walk
     breaks the value hash."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import (
         pdf_image_features,
         synth_imagedoc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     return pdf_image_features(synth_imagedoc_df(spark, 300))
 
 
@@ -1565,13 +1539,11 @@ def q_pdf_jpeg_decode(spark, sf):
     integer pixel sums from the generating formulas — so a bug in the
     XObject walk, the filter routing, OR the entropy decode breaks the
     parity hash."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import (
         pdf_pixel_features,
         synth_jpegdoc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     return pdf_pixel_features(synth_jpegdoc_df(spark, 120), "DCTDecode")
 
 
@@ -1585,13 +1557,11 @@ def q_pdf_jpx_decode(spark, sf):
     the DuckDB oracle recomputes the exact pixel formula: a bug in the
     XObject walk, the filter routing, the packet parse, the MQ decode,
     the T1 passes OR the inverse wavelet breaks the parity hash."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import (
         pdf_pixel_features,
         synth_jpxdoc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     return pdf_pixel_features(synth_jpxdoc_df(spark, 120), "JPXDecode")
 
 
@@ -1664,10 +1634,7 @@ def q_html_structured_data(spark, sf):
     missing og/canonical/JSON-LD strata, a truncated JSON-LD body that
     must flag not throw, multi-block JSON-LD). The oracle recomputes
     every extracted value from the generating formulas."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators import arrow_kernel
-
-    b_pdf_parser_spark.ship_package(spark)
 
     def gen(batches):
         from b_pdf_parser_spark.htmlmodel import extract_structured_data
@@ -1820,10 +1787,7 @@ def q_gif_anim_frames(spark, sf):
     per-channel pixel sums + GCE delays are checked against closed-form
     expressions of the generator formulas — a wrong disposal, transparency
     or palette-scope decision shifts a sum and breaks the hash."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators import arrow_kernel
-
-    b_pdf_parser_spark.ship_package(spark)
 
     def gen(batches):
         from b_pdf_parser_spark.mediacodec import (
@@ -1930,7 +1894,6 @@ def q_host_hits(spark, sf):
     mutual-reinforcement fixed point in BIGINT micro-units with L1
     renormalization each half-step, so the oracle's unrolled recomputation
     matches bit-for-bit."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.links import (
         _HOST_PATTERN,
         extract_outlinks,
@@ -1938,7 +1901,6 @@ def q_host_hits(spark, sf):
         synth_linkdoc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     links = extract_outlinks(synth_linkdoc_df(spark, 400))
     edges = links.select(
         F.concat(
@@ -1982,12 +1944,10 @@ def q_feed_items(spark, sf):
     RFC-822 → ISO date normalization, attribute-carrying tags, missing
     dates and a truncated trailing item that must drop cleanly. The
     oracle replays the generator formulas for every surviving row."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators import arrow_kernel
     from b_pdf_parser_spark.operators.links import parse_feeds
     from b_pdf_parser_spark.sources.pages import feed_page
 
-    b_pdf_parser_spark.ship_package(spark)
     feeds = arrow_kernel(
         spark.range(0, 240, 1, 8),
         lambda bs: ({"feed_id": b["id"], "xml": [
@@ -2083,13 +2043,11 @@ def q_avi_frame_sample(spark, sf):
     sampling stride, the frame indexing or the per-frame JPEG decode
     breaks the hash. Grayscale by design: the color fixed-point chain is
     pinned by real_media_decode's v0 stratum; THIS query pins sampling."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import (
         avi_frame_features,
         synth_avi_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     return avi_frame_features(synth_avi_df(spark, 40), every=2)
 
 
@@ -2104,13 +2062,11 @@ def q_pdf_ccitt_decode(spark, sf):
     the integer pixel sums from the generating pattern formula — a bug in
     the XObject walk, the filter routing, the mode coder or the run
     tables breaks the parity hash."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import (
         pdf_pixel_features,
         synth_ccittdoc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     return pdf_pixel_features(synth_ccittdoc_df(spark, 120), "CCITTFaxDecode")
 
 
@@ -2133,21 +2089,17 @@ def q_tiff_media_decode(spark, sf):
     oracle recomputes from the generating formulas; an endian, IFD
     value-slot, strip-boundary, fax-coding, LZW-width or predictor bug
     breaks the hash."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import (
         real_media_features,
         synth_tiff_media_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     return real_media_features(synth_tiff_media_df(spark, 120))
 
 
 def q_media_frame_sample(spark, sf):
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import frame_sample, synth_media_df
 
-    b_pdf_parser_spark.ship_package(spark)
     return frame_sample(synth_media_df(spark, 200), every=2)
 
 
@@ -2155,7 +2107,6 @@ def q_host_pagerank(spark, sf):
     """3-iteration host PageRank over REAL extracted edges (markup walk →
     href host parse), in fixed-point BIGINT micro-units so the oracle's
     recomputation from the generator formulas matches bit-for-bit."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.links import (
         _HOST_PATTERN,
         extract_outlinks,
@@ -2163,7 +2114,6 @@ def q_host_pagerank(spark, sf):
         synth_linkdoc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     links = extract_outlinks(synth_linkdoc_df(spark, 400))
     edges = links.select(
         F.concat(
@@ -2178,7 +2128,6 @@ def q_robots_filter(spark, sf):
     """RFC 9309 robots decisions for REAL extracted outlink URLs against a
     deterministic per-host ruleset: longest-prefix rule wins, ties allow,
     no match allows. Join + window, no UDF."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.links import (
         _HOST_PATTERN,
         extract_outlinks,
@@ -2186,7 +2135,6 @@ def q_robots_filter(spark, sf):
         synth_linkdoc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     links = extract_outlinks(synth_linkdoc_df(spark, 400))
     urls = (
         links.select(
@@ -2379,7 +2327,6 @@ def q_crawl_schedule(spark, sf):
     fixed-point host-PageRank priority → per-host politeness slots (≤3).
     Every stage is an already-oracled operator; this query pins their
     composition — the actual fetch list a crawler would issue."""
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.links import (
         _HOST_PATTERN,
         extract_outlinks,
@@ -2388,7 +2335,6 @@ def q_crawl_schedule(spark, sf):
         synth_linkdoc_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     links = extract_outlinks(synth_linkdoc_df(spark, 400))
     links = links.localCheckpoint(eager=False)  # feeds urls AND the edge table
     urls = (

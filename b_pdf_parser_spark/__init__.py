@@ -67,7 +67,13 @@ def ship_package(spark) -> None:
     The production deployment is ``spark-submit --py-files
     b_pdf_parser_spark.zip`` (north_rule); for interactive/driver-managed
     sessions this helper builds the same zip on the fly and registers it
-    with ``addPyFile`` — idempotent per SparkContext. The zip is named by a
+    with ``addPyFile`` — idempotent per SparkContext, so a repeat call costs
+    one ``getattr``. The kernel boundary calls it, not its callers: every
+    plan node that hands package code to executors ships on its input frame
+    (``operators.arrow_kernel``; bloom's ``applyInArrow`` merges, the BPE
+    ``arrow_udf``, the sessions stream's ``applyInPandasWithState``), so the
+    first kernel of a session ships whatever query or job builds it. The
+    zip is named by a
     digest of the package sources and written under a temporary name, then
     renamed into place, so a zip left by another process or another version
     of the sources is never shipped.

@@ -10,12 +10,12 @@ extraction semantics of the reference:
 * validity predicate              — parity: utils.py:484-509
 * turnover verification           — parity: utils.py:686-775
 
-Design for Spark: ``extract_metadata`` is **vectorized** over a pandas
-Series of page texts (``Series.str.extract`` → C-level regex, zero per-row
-Python). The transaction/summary walks are per-document (the reference's
-own cost profile — one line-walk per doc) but dispatched once per document
-inside an Arrow batch, never per output row. All functions are pure and
-import-safe on executors.
+Design for Spark: every rule is stated once, per document (the
+reference's own cost profile — one regex pass or line-walk per doc), and
+dispatched once per document inside an Arrow batch, never per output row;
+``extract_metadata_batch`` maps :func:`extract_metadata` over a pandas
+Series for callers that hold one. All functions are pure and import-safe
+on executors.
 
 Deliberate divergences (SURVEY §7.5): none in semantics; only code shape.
 Quirks preserved on purpose: malformed number → 0.0 (utils.py:547-548),
@@ -128,24 +128,10 @@ def extract_metadata(text: str) -> Dict[str, str]:
 
 
 def extract_metadata_batch(texts: pd.Series) -> pd.DataFrame:
-    """Vectorized metadata extraction over a Series of first-page texts.
-
-    Same semantics as :func:`extract_metadata` but via ``Series.str.extract``
-    (C regex over the whole Arrow batch; zero per-row Python dispatch).
-    """
-    texts = texts.fillna("")
-    cols: Dict[str, pd.Series] = {}
-    for key, pat in _META_RE.items():
-        v = texts.str.extract(_META_RE[key], expand=False).fillna("").str.strip()
-        if key in ("account_no", "product_name"):
-            v = v.mask(v.str.strip().str.lower().isin(_LABEL_WORDS), "")
-        if key == "product_name":
-            v = v.mask(v.str.endswith("-IDR"), v.str.slice(0, -4))
-        if key == "unit_address":
-            v = v.str.replace(_WS_RE, " ", regex=True)
-            v = v.mask(v.str.strip().str.lower().isin(_LABEL_WORDS), "")
-        cols[key] = v
-    return pd.DataFrame(cols)
+    """:func:`extract_metadata` over a Series of first-page texts (a
+    missing text reads as empty), one row per text, same index."""
+    return pd.DataFrame([extract_metadata(t) for t in texts.fillna("")],
+                        columns=list(_META_RE), index=texts.index)
 
 
 def account_no_from_url(url_stem: str, current: str) -> str:

@@ -9,6 +9,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType
 
+from .. import ship_package
+
 __all__ = ["spread", "arrow_kernel", "arrow_batch"]
 
 
@@ -78,7 +80,13 @@ def arrow_kernel(
     and empty ones are dropped. Kernels read a column as
     ``b[name].tolist()``, or ``.to_numpy()`` for null-free numeric work —
     a pandas frame accepts the same calls, which is what lets a kernel be
-    driven outside Spark."""
+    driven outside Spark.
+
+    This is where the package ships itself: the first kernel built on a
+    SparkContext registers the package zip (:func:`ship_package`), so
+    executors can import the kernel's code whatever ran before it and
+    whatever directory the workers start in. Callers never ship."""
+    ship_package(df.sparkSession)
     st = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
     arrow_schema = to_arrow_schema(st)
 

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import BinaryType, BooleanType, IntegerType, StructField, StructType
 
+from .. import ship_package
 from . import arrow_batch, arrow_kernel
 
 __all__ = [
@@ -161,6 +162,7 @@ def bloom_bitmap(
         raise ValueError("m_bits must be a multiple of 8")
     n_bytes = m_bits // 8
     fanin = max(int(merge_groups), 2)
+    ship_package(df.sparkSession)  # the applyInArrow merges run package code
     hashed = df.select(_h1(key_col).alias("h1"), _h2(key_col).alias("h2"))
 
     def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[dict]:

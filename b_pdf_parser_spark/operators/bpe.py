@@ -29,6 +29,7 @@ import pyarrow as pa  # module scope: arrow_udf resolves stringized hints here
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .. import ship_package
 from ..functions.bpe import WORD_PATTERN, encode_text, merge_ranks, train_bpe
 
 __all__ = ["train_bpe_on", "bpe_tokenize"]
@@ -76,6 +77,7 @@ def bpe_tokenize(
     docstring for the scale shape."""
     import re
 
+    ship_package(df.sparkSession)  # the arrow_udf runs package code
     ranks = merge_ranks(merges)  # small dict, ships in the closure
     # cache + pattern live OUTSIDE the UDF body: the closure is
     # deserialized once per python worker and reused across Arrow

@@ -29,7 +29,6 @@ from __future__ import annotations
 
 from typing import Iterator, Optional
 
-import pandas as pd
 import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -185,16 +184,11 @@ def make_extract_batch(verify: bool = True):
             # columnar pulls once per batch (no per-row access in the loop)
             urls = b["url"].tolist()
             per_doc = [_extract_one(u, p) for u, p in zip(urls, b["html"].tolist())]
-            firsts = pd.Series([d["first_page"] or "" for d in per_doc])
-
-            # vectorized header metadata over the whole Arrow batch (page-0
-            # text); one C-backed records conversion instead of 11 scalar
-            # .iloc accesses per row
-            meta_records = fields.extract_metadata_batch(firsts).to_dict("records")
 
             rows = []
-            for d, meta, url in zip(per_doc, meta_records, urls):
+            for d, url in zip(per_doc, urls):
                 full_text = d["text"] or ""
+                meta = fields.extract_metadata(d["first_page"] or "")
                 meta["account_no"] = fields.account_no_from_url(_url_stem(url), meta["account_no"])
                 # strategy fallback chain (S2 semantics): cell tables first
                 # (pdfplumber_parser.py:212-250 tries extract_tables() before

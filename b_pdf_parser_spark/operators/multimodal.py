@@ -152,34 +152,14 @@ def _decode_one(media_id: int, kind: str, payload: Optional[bytes]) -> dict:
         row["error"] = "empty payload"
         return row
     if payload[:4] != _MAGIC:
-        # REAL-format dispatch: PNG/BMP/WAV/GIF/baseline-JPEG decode from
-        # scratch (b_pdf_parser_spark.mediacodec / .jpegcodec); what's
-        # left (arithmetic JPEG, JPEG2000, compressed video) stays
-        # honestly stubbed in the error column.
         try:
-            from ..jpegcodec import decode_jpeg
-            from ..mediacodec import (
-                decode_bmp, decode_gif, decode_png, decode_wav,
-            )
-
-            if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                w, h, ch, px = decode_png(bytes(payload))
-            elif payload[:2] == b"BM":
-                w, h, ch, px = decode_bmp(bytes(payload))
-            elif payload[:4] == b"GIF8":
-                w, h, ch, px = decode_gif(bytes(payload))
-            elif payload[:3] == b"\xff\xd8\xff":
-                w, h, ch, px = decode_jpeg(bytes(payload))
-            elif payload[:4] == b"RIFF":
-                rate, ch, samples = decode_wav(bytes(payload))
-                w, h = len(samples) // max(ch, 1), None
-                px = struct.pack(f"<{len(samples)}h", *samples)
-            else:
-                raise NotImplementedError(
-                    "real codec decode is stubbed for this container"
-                )
-            row.update(width=w, height=h, channels=ch)
-            row["byte_entropy"] = _byte_entropy(px)
+            d = _decode_media(bytes(payload))
+            vals, ch = d["vals"], d["channels"]
+            if "width" not in d:  # sound: width = samples per channel
+                d["width"] = len(vals) // max(ch, 1)
+                vals = struct.pack(f"<{len(vals)}h", *vals)
+            row.update(width=d["width"], height=d.get("height"), channels=ch,
+                       byte_entropy=_byte_entropy(vals))
         except Exception as e:
             row["error"] = f"{type(e).__name__}: {e}"
         return row
@@ -195,8 +175,10 @@ def _decode_one(media_id: int, kind: str, payload: Optional[bytes]) -> dict:
 
 
 def decode_features(media: DataFrame) -> DataFrame:
-    """Header parse + byte-entropy features via Arrow batches (one Python
-    dispatch per payload, never per byte-row)."""
+    """Dims + byte-entropy features via Arrow batches (one Python dispatch
+    per payload, never per byte-row): the FAKE container by its header,
+    every real container through ``_decode_media``, the one container
+    table :func:`real_media_features` decodes with too."""
 
     def run(batches):
         for b in batches:
@@ -831,16 +813,65 @@ def synth_tiff_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
                            lambda i: tiff_media_dims(i)["kind"], encode_tiff_media)
 
 
-def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
-    from ..jpegcodec import decode_jpeg
-    from ..mediacodec import (
-        decode_bmp,
-        decode_gif,
-        decode_png,
-        decode_tiff,
-        decode_wav,
-    )
+def _decode_media(payload: bytes) -> dict:
+    """The one container dispatch: magic bytes → from-scratch decoder →
+    ``fmt``, ``channels``, ``width``/``height`` for pictures,
+    ``sample_rate`` for sound (an AVI has all four), and ``vals``, the
+    canonical value stream: top-down interleaved pixels (an AVI's frames in
+    presentation order, so order-sensitive sums see frame ORDER) or
+    interleaved signed samples. A container with no decoder raises
+    ``NotImplementedError``."""
+    if payload[:4] == b"fLaC":
+        from ..flaccodec import decode_flac
 
+        rate, ch, vals = decode_flac(payload)
+        return {"fmt": "flac", "sample_rate": rate, "channels": ch, "vals": vals}
+    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
+        from ..avicodec import decode_avi
+
+        w, h, fps, _nf, frames = decode_avi(payload)
+        vals = []
+        ch = frames[0][2]
+        for fw, fh, fch, px in frames:
+            if fch != ch:
+                raise ValueError("AVI: mixed frame channel counts")
+            vals.extend(px)
+        return {"fmt": "mjpeg", "width": w, "height": h, "channels": ch,
+                "sample_rate": fps, "vals": vals}
+    if payload[:4] == b"RIFF":
+        from ..mediacodec import decode_wav
+
+        rate, ch, vals, codec = decode_wav(payload, return_codec=True)
+        return {"fmt": "wav" if codec == "pcm16" else codec,
+                "sample_rate": rate, "channels": ch, "vals": vals}
+    if payload[:8] == b"\x89PNG\r\n\x1a\n":
+        from ..mediacodec import decode_png as decode
+        fmt = "png"
+    elif payload[:2] == b"BM":
+        from ..mediacodec import decode_bmp as decode
+        fmt = "bmp"
+    elif payload[:4] == b"GIF8":
+        from ..mediacodec import decode_gif as decode
+        fmt = "gif"
+    elif payload[:3] == b"\xff\xd8\xff":
+        from ..jpegcodec import decode_jpeg as decode
+        fmt = "jpeg"
+    elif payload[:4] in (b"II*\x00", b"MM\x00*"):
+        from ..mediacodec import decode_tiff as decode
+        fmt = "tiff"
+    elif payload[:4] == b"\xff\x4f\xff\x51":
+        from ..jpxcodec import decode_jpx as decode
+        fmt = "jp2k"
+    else:
+        raise NotImplementedError(
+            "no from-scratch decoder for this container (compressed VIDEO "
+            "stays stubbed)"
+        )
+    w, h, ch, vals = decode(payload)
+    return {"fmt": fmt, "width": w, "height": h, "channels": ch, "vals": vals}
+
+
+def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
     row = {
         "media_id": media_id, "fmt": None, "width": None, "height": None,
         "channels": None, "sample_rate": None, "n_values": None,
@@ -849,70 +880,17 @@ def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
     try:
         if not payload:
             raise ValueError("empty payload")
-        if payload[:8] == b"\x89PNG\r\n\x1a\n":
-            w, h, ch, vals = decode_png(bytes(payload))
-            row.update(fmt="png", width=w, height=h, channels=ch)
-        elif payload[:2] == b"BM":
-            w, h, ch, vals = decode_bmp(bytes(payload))
-            row.update(fmt="bmp", width=w, height=h, channels=ch)
-        elif payload[:4] == b"GIF8":
-            w, h, ch, vals = decode_gif(bytes(payload))
-            row.update(fmt="gif", width=w, height=h, channels=ch)
-        elif payload[:4] == b"fLaC":
-            from ..flaccodec import decode_flac
-
-            rate, ch, samples = decode_flac(bytes(payload))
-            row.update(fmt="flac", sample_rate=rate, channels=ch)
-            vals = samples
-        elif payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            from ..avicodec import decode_avi
-
-            w, h, fps, _nf, frames = decode_avi(bytes(payload))
-            # canonical value stream: frames in presentation order, each
-            # frame's interleaved pixels — so the (k+1)-weighted sum is
-            # sensitive to frame ORDER, not just frame content
-            vals = []
-            ch = frames[0][2]
-            for fw, fh, fch, px in frames:
-                if fch != ch:
-                    raise ValueError("AVI: mixed frame channel counts")
-                vals.extend(px)
-            row.update(fmt="mjpeg", width=w, height=h, channels=ch,
-                       sample_rate=fps)
-        elif payload[:4] == b"RIFF":
-            rate, ch, samples, codec = decode_wav(bytes(payload), return_codec=True)
-            row.update(
-                fmt="wav" if codec == "pcm16" else codec,
-                sample_rate=rate, channels=ch,
-            )
-            vals = samples
-        elif payload[:3] == b"\xff\xd8\xff":
-            w, h, ch, vals = decode_jpeg(bytes(payload))
-            row.update(fmt="jpeg", width=w, height=h, channels=ch)
-        elif payload[:4] in (b"II*\x00", b"MM\x00*"):
-            w, h, ch, vals = decode_tiff(bytes(payload))
-            row.update(fmt="tiff", width=w, height=h, channels=ch)
-        elif payload[:4] == b"\xff\x4f\xff\x51":
-            from b_pdf_parser_spark.jpxcodec import decode_jpx
-
-            w, h, ch, vals = decode_jpx(bytes(payload))
-            row.update(fmt="jp2k", width=w, height=h, channels=ch)
-        else:
-            raise NotImplementedError(
-                "no from-scratch decoder for this container (compressed "
-                "VIDEO stays stubbed; JPEG 2000 codestreams decode via "
-                "jpxcodec and arithmetic-coded JPEG via arithjpeg since "
-                "round 6)"
-            )
-        row.update(_value_features(vals))
+        d = _decode_media(bytes(payload))
+        row.update(_value_features(d.pop("vals")), **d)
     except Exception as e:  # malformed/unsupported → error row, batch survives
         row["error"] = f"{type(e).__name__}: {e}"
     return row
 
 
 def real_media_features(media: DataFrame) -> DataFrame:
-    """REAL decode (PNG/BMP/WAV/GIF/μ-law/JPEG) → exact integer features
-    per payload.
+    """REAL decode (``_decode_media``: PNG/BMP/GIF/JPEG/TIFF/JPEG 2000,
+    WAV/μ-law/A-law/ADPCM/FLAC, MJPEG AVI) → exact integer features per
+    payload.
 
     One Arrow-batch Python dispatch per payload; the decoded canonical
     values (top-down RGB pixels / int16 samples) reduce to order-sensitive
@@ -1056,13 +1034,14 @@ _PIXEL_CODECS = {
 
 def pdf_pixel_features(docs: DataFrame, filter_name: str) -> DataFrame:
     """PDF walk → the ``filter_name`` image XObjects' codec input (every
-    earlier filter in the chain applied, ``image_inventory(with_data=True)``)
-    → REAL from-scratch decode → exact integer pixel features, one row per
-    image. Images under other filters are routed past the codec (the
+    earlier filter in the chain applied,
+    ``image_inventory(with_data=filter_name)``) → REAL from-scratch decode
+    → exact integer pixel features, one row per image. Images under other
+    filters are routed past the codec with their streams undecoded (the
     corpora plant a pseudo-byte decoy per doc, so a routing bug becomes
     an error row); a decode whose dimensions disagree with the XObject's
-    /Width /Height fails. A corrupt document or stream yields one error
-    row for the document. One Arrow-batch Python dispatch per document."""
+    /Width /Height fails. A corrupt document, or a corrupt stream under
+    ``filter_name``, yields one error row for the document. One Arrow-batch Python dispatch per document."""
     decode = _PIXEL_CODECS[filter_name]
 
     def run(batches):
@@ -1072,7 +1051,7 @@ def pdf_pixel_features(docs: DataFrame, filter_name: str) -> DataFrame:
             rows = []
             for did, pdf in zip(b["doc_id"].tolist(), b["pdf"].tolist()):
                 try:
-                    for rec in image_inventory(bytes(pdf), with_data=True):
+                    for rec in image_inventory(bytes(pdf), with_data=filter_name):
                         if rec["filter"] != filter_name:
                             continue
                         w, h, ch, px = decode(rec)

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Any, Dict, Iterator, List, Optional, Tuple
+from typing import Any, Dict, Iterator, List, Optional, Tuple, Union
 
 from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
 from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
@@ -621,15 +621,18 @@ class PdfDocument:
         self.trailer: Dict[str, Any] = {}
         self._cache: Dict[int, Any] = {}
         self._objstm_cache: Dict[int, Dict[int, Any]] = {}
+        self._objstm_loading: set = set()  # object streams being opened
         self._font_cache: Dict[Ref, Optional["_Type0Decoder"]] = {}
         self._file_key: Optional[bytes] = None
         self._cipher = "rc4"
         try:
             self._load_xref_chain()
-        except (PdfError, ValueError, IndexError):
-            # ValueError/IndexError: malformed numeric fields or truncated
-            # tables must fall into the same _rebuild_xref salvage path so the
-            # errors-raise-PdfError contract holds for any corrupt input
+        except (PdfError, ValueError, IndexError, TypeError):
+            # ValueError/IndexError/TypeError: malformed numeric fields (a
+            # reference or name where /W or /Index wants a number) or
+            # truncated tables must fall into the same _rebuild_xref salvage
+            # path so the errors-raise-PdfError contract holds for any
+            # corrupt input
             self.xref.clear()
             self.trailer.clear()
         if not self.xref or "Root" not in self.trailer:
@@ -933,7 +936,15 @@ class PdfDocument:
     def _load_from_objstm(self, stm_num: int, want: int) -> Any:
         objs = self._objstm_cache.get(stm_num)
         if objs is None:
-            stm = self.get_object(stm_num)
+            # an xref that files an object stream inside itself (directly or
+            # through other streams) would otherwise recurse without end
+            if stm_num in self._objstm_loading:
+                raise PdfError(f"object stream {stm_num} is stored inside itself")
+            self._objstm_loading.add(stm_num)
+            try:
+                stm = self.get_object(stm_num)
+            finally:
+                self._objstm_loading.discard(stm_num)
             if not isinstance(stm, StreamObject) or str(stm.dict.get("Type")) != "ObjStm":
                 raise PdfError(f"object {stm_num} is not an object stream")
             payload = self.decode_stream(stm)
@@ -1071,7 +1082,7 @@ class PdfDocument:
                     if isinstance(tu, StreamObject):
                         try:
                             cmap, nbytes = _parse_tounicode(self.decode_stream(tu))
-                        except PdfError:
+                        except (PdfError, ValueError):  # ValueError: malformed hex
                             pass
                     dec = _Type0Decoder(cmap, nbytes)
                 elif isinstance(font, dict):
@@ -1822,7 +1833,9 @@ def _detect_tables(line_spans: List[List[_Span]]) -> List[List[List[str]]]:
 # ---------------------------------------------------------------------------
 
 
-def image_inventory(data: bytes, with_data: bool = False) -> List[Dict[str, Any]]:
+def image_inventory(
+    data: bytes, with_data: Union[bool, str] = False
+) -> List[Dict[str, Any]]:
     """Metadata for every image XObject reachable from the page tree —
     the multimodal-pipeline side of the walk. Web PDFs are byte-dominated
     by DCT/JPX/CCITT image streams the text path must *skip* (see
@@ -1830,7 +1843,10 @@ def image_inventory(data: bytes, with_data: bool = False) -> List[Dict[str, Any]
     ``{page, name, width, height, filter, n_bytes}`` without decoding
     pixels (no codec libs in the runtime, and none are needed for
     inventory/routing decisions). ``with_data`` adds ``data``, the bytes
-    the image codec reads (``n_bytes`` stays the stored stream length).
+    the image codec reads (``n_bytes`` stays the stored stream length):
+    ``True`` to every image, a filter name (``"DCTDecode"``) only to the
+    images under that filter — the others' streams are never decoded, so
+    a corrupt or oversized one costs nothing.
 
     Reference analog: PyMuPDF's ``page.get_images()``
     (the reference never calls it — images are silently skipped at
@@ -1882,7 +1898,8 @@ def image_inventory(data: bytes, with_data: bool = False) -> List[Dict[str, Any]
                 rec["ccitt_black1"] = bool(
                     doc.resolve(dp.get("BlackIs1")) is True
                 )
-            if with_data:
+            keep = with_data == rec["filter"] if isinstance(with_data, str) else with_data
+            if keep:
                 # the bytes the image codec reads: every filter before it
                 # applied (``decode_stream`` stops at DCT/JPX/CCITT/JBIG2),
                 # so a single-filter stream comes back verbatim and a

@@ -44,9 +44,6 @@ def run_file_stream(
     """Tail ``input_dir`` (pages parquet), append extracted rows to
     ``output_dir``. ``available_now=True`` drains what exists and stops —
     the testable batch-equivalent trigger."""
-    import b_pdf_parser_spark
-
-    b_pdf_parser_spark.ship_package(spark)
     pages = (
         spark.readStream.schema(
             "url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING"

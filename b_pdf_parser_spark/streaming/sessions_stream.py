@@ -28,6 +28,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .. import ship_package
+
 __all__ = ["windowed_event_counts", "count_bounded_sessions", "SESSION_SCHEMA"]
 
 SESSION_SCHEMA = (
@@ -102,6 +104,7 @@ def count_bounded_sessions(
     output semantics. Expects columns (user_id BIGINT, ts TIMESTAMP)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    ship_package(events.sparkSession)  # the state function is package code
     return (
         events.select("user_id", "ts")
         .groupBy("user_id")

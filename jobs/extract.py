@@ -120,7 +120,6 @@ def run_extract_job(
     one wave of work — argues for SHORT waves). A time target keeps both
     bounded regardless of how document cost varies across the keyspace.
     """
-    b_pdf_parser_spark.ship_package(spark)
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
@@ -253,7 +252,6 @@ def main() -> None:
     else:
         from b_pdf_parser_spark.sources.pages import synth_pages_df
 
-        b_pdf_parser_spark.ship_package(spark)
         pages = synth_pages_df(spark, args.n_docs, seed=args.seed)
     summary = run_extract_job(
         spark, pages, args.out,

@@ -44,10 +44,8 @@ def read_binary_dir(spark: SparkSession, input_dir: str, glob: str = "*.pdf") ->
 
 
 def parse_directory(spark: SparkSession, input_dir: str, glob: str = "*.pdf") -> DataFrame:
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.extract import extract_pages
 
-    b_pdf_parser_spark.ship_package(spark)
     return extract_pages(read_binary_dir(spark, input_dir, glob))
 
 
@@ -56,39 +54,39 @@ def write_per_document_csvs(extracted: DataFrame, out_dir: str) -> int:
 
     One ``metadata/<stem>_metadata.csv`` and one
     ``transactions/<stem>_transactions.csv`` per successfully parsed doc
-    (contracts of utils.py:428-481). Uses ``foreachPartition`` so no payload
-    ever travels to the driver; ``out_dir`` must therefore be a filesystem
-    shared by all executors (local mode, NFS, fuse-mounted object store).
+    (contracts of utils.py:428-481), as a batch kernel that writes the
+    files and yields how many documents it wrote, so no payload ever travels
+    to the driver; ``out_dir`` must therefore be a filesystem shared by all
+    executors (local mode, NFS, fuse-mounted object store).
 
     Filenames keep the reference's basename-stem contract, so colliding
     stems in different subdirectories would silently overwrite each other —
     rejected up front with a clear error instead.
     """
-    from pyspark import TaskContext
+    from b_pdf_parser_spark.operators import arrow_kernel
 
     out = str(out_dir)
 
-    def write_partition(rows) -> None:
-        # executors import the shipped package
+    def write_batches(batches):
         import csv as _csv
         import os
         from pathlib import Path as _P
 
         from b_pdf_parser_spark.fields import METADATA_KEYS, normalize_number
 
-        _ = TaskContext.get()
         mdir = _P(out) / "metadata"
         tdir = _P(out) / "transactions"
         mdir.mkdir(parents=True, exist_ok=True)
         tdir.mkdir(parents=True, exist_ok=True)
-        for row in rows:
+        written = 0
+        for row in (row for b in batches for row in b.to_pylist()):
             if row["error"] is not None:
                 continue
             stem = os.path.splitext(os.path.basename(row["url"]))[0]
             with open(mdir / f"{stem}_metadata.csv", "w", newline="", encoding="utf-8") as fh:
                 w = _csv.writer(fh, delimiter=";")
                 w.writerow(["Field", "Value"])
-                meta = row["metadata"].asDict()
+                meta = row["metadata"]
                 for k in METADATA_KEYS:
                     v = meta.get(k) or ""
                     w.writerow([k, normalize_number(v) if v else ""])
@@ -101,6 +99,8 @@ def write_per_document_csvs(extracted: DataFrame, out_dir: str) -> int:
                         normalize_number(t["debit"]), normalize_number(t["credit"]),
                         normalize_number(t["balance"]),
                     ])
+            written += 1
+        yield {"n": [written]}
 
     sel = extracted.select("url", "error", "metadata", "transactions").persist()
     try:
@@ -113,8 +113,7 @@ def write_per_document_csvs(extracted: DataFrame, out_dir: str) -> int:
             raise ValueError(
                 "duplicate file stems in input; per-document CSV names would collide"
             )
-        sel.foreachPartition(write_partition)
-        return sel.filter(F.col("error").isNull()).count()
+        return arrow_kernel(sel, write_batches, "n long").agg(F.sum("n")).first()[0] or 0
     finally:
         sel.unpersist()
 

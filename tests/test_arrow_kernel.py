@@ -27,15 +27,19 @@ CASES = {
 
 class _Capture:
     """Stands in for a DataFrame: keeps the ``mapInArrow`` body so the
-    batches the helper emits can be inspected without a Spark job."""
+    batches the helper emits can be inspected without a Spark job. It
+    carries the session the helper ships the package on."""
+
+    def __init__(self, spark):
+        self.sparkSession = spark
 
     def mapInArrow(self, fn, schema):
         self.fn = fn
         return self
 
 
-def _emitted(ddl: str, outputs: list) -> list:
-    return list(arrow_kernel(_Capture(), lambda _: iter(outputs), ddl).fn(iter([])))
+def _emitted(spark, ddl: str, outputs: list) -> list:
+    return list(arrow_kernel(_Capture(spark), lambda _: iter(outputs), ddl).fn(iter([])))
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
@@ -46,8 +50,8 @@ def test_arrow_kernel_contract(spark, name):
     rows = [{"k": 1, "v": values[0]}, {"k": 2}]  # a missing key is null
     empties = [[], {"k": [], "v": []}]
 
-    by_columns = _emitted(schema, empties + [columns])
-    by_rows = _emitted(schema, [rows] + empties)
+    by_columns = _emitted(spark, schema, empties + [columns])
+    by_rows = _emitted(spark, schema, [rows] + empties)
     assert len(by_columns) == len(by_rows) == 1  # empty outputs dropped
     assert by_columns[0].equals(by_rows[0])
     assert by_columns[0].schema.field("v").type == arrow_type
@@ -55,7 +59,7 @@ def test_arrow_kernel_contract(spark, name):
 
     if name == "int":  # the declared width is enforced, never widened
         with pytest.raises(pa.ArrowInvalid):
-            _emitted(schema, [{"k": [1], "v": [2**40]}])
+            _emitted(spark, schema, [{"k": [1], "v": [2**40]}])
 
     got = arrow_kernel(
         spark.range(0, 1, 1, 1), lambda bs: (columns for _ in bs), schema

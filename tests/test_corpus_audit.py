@@ -10,13 +10,11 @@ from collections import Counter
 
 import pyspark.sql.functions as F
 
-import b_pdf_parser_spark
 from b_pdf_parser_spark.operators.extract import extract_pages
 from b_pdf_parser_spark.sources.pages import page_kind_expected, synth_pages_df
 
 
 def _real_counts(spark, n, seed):
-    b_pdf_parser_spark.ship_package(spark)
     ext = extract_pages(
         synth_pages_df(spark, n, seed=seed, num_partitions=8), num_partitions=8
     )
@@ -55,7 +53,6 @@ def test_audit_projection_matches_full_extraction(spark):
     # operator's on the same corpus
     from b_pdf_parser_spark.operators.extract import extract_kind_audit
 
-    b_pdf_parser_spark.ship_package(spark)
     pages = synth_pages_df(spark, 1500, seed=42, num_partitions=8)
     audit = {
         r["kind"]: (r["n"], r["e"])

@@ -117,17 +117,15 @@ def test_wav_rejects_non_pcm():
 
 def test_decode_features_real_formats_through_spark(spark):
     # the generic decode_features path must REALLY decode PNG/BMP/WAV
-    # payloads inside mapInPandas (dims filled, no error), and keep the
+    # payloads inside arrow_kernel (dims filled, no error), and keep the
     # honest stub error for entropy-coded containers
     import pyspark.sql.functions as F
 
-    import b_pdf_parser_spark
     from b_pdf_parser_spark.operators.multimodal import (
         decode_features,
         synth_real_media_df,
     )
 
-    b_pdf_parser_spark.ship_package(spark)
     out = decode_features(synth_real_media_df(spark, 24)).collect()
     assert len(out) == 24 and all(r["error"] is None for r in out)
     # byte_entropy == 0 is legitimate for single-block flat JPEGs (all
@@ -148,6 +146,30 @@ def test_decode_features_real_formats_through_spark(spark):
     )
     err = decode_features(jp2).collect()[0]["error"]
     assert err and "NotImplementedError" in err
+
+
+def test_decode_features_decodes_every_container_real_media_features_does(spark):
+    # one container table behind both kernels: a TIFF, FLAC, JPEG 2000 or
+    # AVI payload decodes in decode_features too, with the same dimensions
+    from b_pdf_parser_spark.operators.multimodal import (
+        decode_features,
+        real_media_features,
+        synth_real_media_df,
+        synth_tiff_media_df,
+    )
+
+    tiff = decode_features(synth_tiff_media_df(spark, 12)).collect()
+    assert len(tiff) == 12 and all(r["error"] is None for r in tiff)
+    media = synth_real_media_df(spark, 216)
+    real = {r["media_id"]: r for r in real_media_features(media).collect()}
+    fmts = {r["fmt"] for r in real.values() if r["error"] is None}
+    assert {"flac", "jp2k", "mjpeg"} <= fmts
+    for r in decode_features(media).collect():
+        want = real[r["media_id"]]
+        assert (r["error"] is None) == (want["error"] is None), (r, want)
+        if want["width"] is not None:  # pictures; sound rows count samples
+            assert (r["width"], r["height"], r["channels"]) == (
+                want["width"], want["height"], want["channels"])
 
 
 def test_bmp_top_down_negative_height():

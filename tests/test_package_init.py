@@ -2,10 +2,12 @@
 
 ``_stat_check_zip_caches`` keeps ``zipimporter.invalidate_caches`` from
 re-parsing unchanged archives (PySpark workers call it before every task);
-``ship_package`` registers a zip that always holds the current sources."""
+``ship_package`` registers a zip that always holds the current sources,
+and ``arrow_kernel`` calls it, so the first kernel of a session ships."""
 
 import importlib
 import os
+import subprocess
 import sys
 import tempfile
 import types
@@ -167,3 +169,46 @@ def test_ship_package_ships_the_current_sources(monkeypatch, tmp_path):
     with zipfile.ZipFile(shipped[0]) as z:
         assert {n: z.read(n) for n in z.namelist()} == want
     assert not list(tmp_path.glob("*.part"))
+
+
+_FIRST_QUERY = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.ui.enabled", "false").getOrCreate())
+import __spark_entry__ as entry
+entry.queries()[sys.argv[2]](spark, sys.argv[3]).toPandas().to_parquet(sys.argv[4])
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize("name", ["near_dup_pairs", "langid"])
+def test_first_kernel_ships_in_a_fresh_session(name, tmp_path):
+    """A registered query run first in a fresh session, with the workers
+    started outside the repo and the repo on the driver's ``sys.path``
+    only, still imports the package on executors and matches its oracle:
+    no caller has to ship before the first kernel."""
+    import duckdb
+    import pandas as pd
+    from test_entry_oracle import ORACLES, SF_DIR, TABLES, _rows
+
+    repo = PKGDIR.parent
+    got_path = tmp_path / "got.parquet"
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET")}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FIRST_QUERY, str(repo), name, SF_DIR, str(got_path)],
+        cwd=tmp_path, env=env, timeout=300, capture_output=True, text=True,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    exp = con.execute(ORACLES[name]).df()
+    con.close()
+    exp.columns = [c.lower() for c in exp.columns]
+    got = pd.read_parquet(got_path)
+    assert len(got) > 0
+    assert _rows(got) == _rows(exp)

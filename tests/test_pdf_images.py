@@ -140,9 +140,10 @@ def test_pdf_jpeg_decode_flat_blocks_roundtrip_and_decoy_routing():
         decode_jpeg(recs[1]["data"])  # pseudo bytes are not a JPEG
 
 
-def _chained_jpeg_pdf(chain, encode):
+def _chained_jpeg_pdf(chain, encode, other=None):
     # one page, one 8x8 gray JPEG XObject stored under a filter chain that
-    # ends in /DCTDecode (the writer emits single filters only)
+    # ends in /DCTDecode (the writer emits single filters only); ``other``
+    # is a second image XObject on the same page
     from b_pdf_parser_spark.jpegcodec import QUANT_CHROMA, QUANT_LUM, encode_jpeg
     from b_pdf_parser_spark.operators.multimodal import _jpeg_flat_pixels
     from b_pdf_parser_spark.pdfwriter import _emit_classic
@@ -156,13 +157,17 @@ def _chained_jpeg_pdf(chain, encode):
         b"/Length %d >>\nstream\n" % (chain, len(stored))
         + stored + b"\nendstream"
     )
-    return px, stored, _emit_classic({
+    objs = {
         1: b"<< /Type /Catalog /Pages 2 0 R >>",
         2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
         3: b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-           b"/Resources << /XObject << /Im0 4 0 R >> >> >>",
+           b"/Resources << /XObject << /Im0 4 0 R%s >> >> >>"
+           % (b" /Im1 5 0 R" if other else b""),
         4: image,
-    }, {})
+    }
+    if other:
+        objs[5] = other
+    return px, stored, _emit_classic(objs, {})
 
 
 def test_filter_chain_before_dct_decodes_through_pixel_kernel(spark):
@@ -194,3 +199,28 @@ def test_filter_chain_before_dct_decodes_through_pixel_kernel(spark):
         assert r.error is None, r.error
         assert (r.width, r.height, r.channels) == (8, 8, 1)
         assert (r.n_values, r.value_sum) == (64, sum(px))
+
+
+def test_pixel_kernel_never_decodes_the_images_it_skips(spark):
+    # a corrupt /FlateDecode image next to a good /DCTDecode one: the DCT
+    # pixel kernel decodes only DCT streams, so the document yields its
+    # pixel row, not a document error row
+    from b_pdf_parser_spark.operators.multimodal import pdf_pixel_features
+
+    junk = b"not a zlib stream" * 4
+    corrupt = (
+        b"<< /Type /XObject /Subtype /Image /Width 8 /Height 8 "
+        b"/ColorSpace /DeviceGray /BitsPerComponent 8 /Filter /FlateDecode "
+        b"/Length %d >>\nstream\n" % len(junk) + junk + b"\nendstream"
+    )
+    px, _, pdf = _chained_jpeg_pdf(b"/DCTDecode", lambda b: b, other=corrupt)
+    recs = image_inventory(pdf, with_data="DCTDecode")
+    assert [(r["filter"], "data" in r) for r in recs] == [
+        ("DCTDecode", True), ("FlateDecode", False)]
+    with pytest.raises(pm.PdfError):
+        image_inventory(pdf, with_data=True)
+    df = spark.createDataFrame([(0, pdf)], "doc_id BIGINT, pdf BINARY")
+    (row,) = pdf_pixel_features(df, "DCTDecode").collect()
+    assert row.error is None, row.error
+    assert (row.name, row.width, row.height, row.n_values, row.value_sum) == (
+        "Im0", 8, 8, 64, sum(px))

@@ -406,6 +406,33 @@ def test_encrypted_byte_splice_keeps_pdferror_contract(pos, junk):
         pass
 
 
+@pytest.mark.parametrize("old,new", [
+    (b"/W [1 2 2]", b"/W [1 2R 2]"),  # a reference where /W wants a number
+    (b"/Index [0 9]", b"/Index [03 9]"),  # shifted rows file stream 3 inside itself
+], ids=["w_ref", "objstm_cycle"])
+def test_corrupt_xref_stream_fields_raise_pdferror(old, new):
+    # two splices the fuzz test above reached: a TypeError and a
+    # RecursionError used to escape the walk
+    data = _enc_sample(encrypt=True, xref_stream=True)
+    assert data.count(old) == 1
+    try:
+        pm.extract_pdf_text(data.replace(old, new))
+    except pm.PdfError:
+        pass
+
+
+def test_odd_length_tounicode_hex_raises_nothing_but_pdferror():
+    # a NUL spliced into a /ToUnicode bfrange destination (odd-length hex)
+    # used to escape the walk as ValueError from bytes.fromhex
+    from b_pdf_parser_spark.sources.pages import formula_statement_pdf
+
+    data = formula_statement_pdf(10)
+    try:
+        pm.extract_pdf_text(data[:964] + b"\x00" + data[964:])
+    except pm.PdfError:
+        pass
+
+
 @settings(max_examples=60, deadline=None)
 @given(
     st.integers(min_value=0, max_value=159),

@@ -129,24 +129,39 @@ def test_host_cap_threshold_is_windowless(spark):
 
 
 def _named_calls(tree):
-    """(callee name, enclosing function name, line) for every call whose
-    callee is a plain or attribute name."""
+    """(callee name, enclosing function's dotted name, line) for every call
+    whose callee is a plain or attribute name. A decorator's call belongs
+    to the function the decorated one is defined in."""
     import ast
 
     out = []
 
     def visit(node, fn):
-        for child in ast.iter_child_nodes(node):
-            if isinstance(child, ast.Call):
-                f = child.func
-                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-                if name:
-                    out.append((name, fn, child.lineno))
-            inner = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
-            visit(child, inner)
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name:
+                out.append((name, fn, node.lineno))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            for d in node.decorator_list:
+                visit(d, fn)
+            fn = f"{fn}.{node.name}" if fn else node.name
+            children = [c for c in ast.iter_child_nodes(node) if c not in node.decorator_list]
+        else:
+            children = ast.iter_child_nodes(node)
+        for child in children:
+            visit(child, fn)
 
     visit(tree, None)
     return out
+
+
+def _program_files(root):
+    return [
+        *sorted((root / "b_pdf_parser_spark").rglob("*.py")),
+        root / "__spark_entry__.py",
+        *sorted((root / "jobs").rglob("*.py")),
+    ]
 
 
 def test_one_kernel_idiom():
@@ -159,15 +174,10 @@ def test_one_kernel_idiom():
     from pathlib import Path
 
     root = Path(__file__).resolve().parent.parent
-    files = [
-        *sorted((root / "b_pdf_parser_spark").rglob("*.py")),
-        root / "__spark_entry__.py",
-        *sorted((root / "jobs").rglob("*.py")),
-    ]
     helper = root / "b_pdf_parser_spark" / "operators" / "__init__.py"
     stateful = root / "b_pdf_parser_spark" / "streaming" / "sessions_stream.py"
     bad = []
-    for path in files:
+    for path in _program_files(root):
         for name, fn, line in _named_calls(ast.parse(path.read_text())):
             where = f"{path.relative_to(root)}:{line} {name}"
             if name in ("mapInPandas", "applyInPandas", "pandas_udf"):
@@ -176,4 +186,37 @@ def test_one_kernel_idiom():
                 bad.append(where)
             elif name == "mapInArrow" and (path != helper or fn != "arrow_kernel"):
                 bad.append(where)
+    assert not bad, bad
+
+
+# the plan-building calls that hand Python code to executors
+_RUNS_PYTHON = {
+    "mapInArrow", "applyInArrow", "arrow_udf", "applyInPandasWithState",
+    "mapInPandas", "applyInPandas", "pandas_udf", "udf",
+    "foreach", "foreachPartition", "mapPartitions",
+}
+
+
+def test_package_ships_at_the_kernel_boundary():
+    """``ship_package`` is called exactly where a plan hands Python code to
+    executors: every function that builds such a node ships on its input
+    frame, and no other function ships. ``__spark_entry__.py`` and
+    ``jobs/`` never ship — their kernels go through ``arrow_kernel``, so a
+    query or job cannot depend on an earlier one having shipped."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    bad = []
+    for path in _program_files(root):
+        rel = path.relative_to(root)
+        calls = _named_calls(ast.parse(path.read_text()))
+        ships = {fn: line for name, fn, line in calls if name == "ship_package"}
+        runs = {fn: line for name, fn, line in calls if name in _RUNS_PYTHON}
+        if rel.parts[0] == "jobs" or rel.name == "__spark_entry__.py":
+            bad += [f"{rel}:{line} ship_package in {fn}" for fn, line in ships.items()]
+        bad += [f"{rel}:{ships[fn]} ship_package off the boundary in {fn}"
+                for fn in ships.keys() - runs.keys()]
+        bad += [f"{rel}:{runs[fn]} {fn} runs Python without shipping"
+                for fn in runs.keys() - ships.keys()]
     assert not bad, bad
