@@ -6,7 +6,10 @@ backends (parity target: ``/root/reference/pdfparser/pymupdf_parser.py:50-77``
 with a trailing ``"\\n"`` each). No PDF library is available in the runtime,
 so the full object model is implemented here from the public PDF 1.7 spec:
 
-* lexer for the 8 object types (null/bool/number/string/name/array/dict/stream)
+* lexer for the 8 object types (null/bool/number/string/name/array/dict/stream):
+  one master token regex (``_OTOK_RE``) and an explicit stack of open arrays
+  and dictionaries, so nesting never recurses; past ``_MAX_NESTING`` levels a
+  value is a ``PdfError``
 * classic ``xref`` tables AND cross-reference streams (``/Type /XRef`` with
   ``/W`` column widths and PNG predictors), ``/Prev`` chains, hybrid
   ``/XRefStm``
@@ -32,6 +35,7 @@ the batch).
 from __future__ import annotations
 
 import re
+import struct
 import zlib
 from typing import Any, Dict, Iterator, List, Optional, Tuple, Union
 
@@ -92,42 +96,42 @@ class StreamObject:
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
-_NUMBER_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
-_INT_AT_RE = re.compile(rb"\d+")
 _OBJ_HEAD_RE = re.compile(rb"(\d{1,10})\s+(\d{1,5})\s+obj\b")
 
+# lexical fragments of the object lexer and the content tokenizer: whitespace
+# byte, regular byte (§7.2.2), number, whitespace/comment run. Number and run
+# are possessive, so a failing match never retries every split of a long digit
+# run or '%' comment (thousands of digits used to cost seconds per token)
+_WSB = rb"[\x00\t\n\x0c\r ]"
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+_NUMBER = rb"[+-]?(?:\d++(?:\.\d*+)?|\.\d++)"
+_SKIP = rb"(?:" + _WSB + rb"++|%[^\r\n]*+)*+"
+_SKIP_RE = re.compile(_SKIP)
+# two unsigned integers: an xref subsection header or an object-stream pair
+_INT_PAIR_RE = re.compile(_SKIP + rb"(\d++)" + _SKIP + rb"(\d++)" + _SKIP)
 
-def _skip_ws(buf: bytes, i: int) -> int:
-    n = len(buf)
-    while i < n:
-        c = buf[i]
-        if c in _WS:
-            i += 1
-        elif c == 0x25:  # '%' comment to end of line
-            while i < n and buf[i] not in (0x0A, 0x0D):
-                i += 1
-        else:
-            break
-    return i
+# one match per object-syntax token, leading whitespace and comments folded in;
+# an integer's optional "G R" suffix makes a reference ("-3 0 R"; not "1.5 0 R")
+_OTOK_RE = re.compile(
+    _SKIP + rb"(?:"
+    rb"(?P<int>[+-]?\d++)(?!\.)"
+    rb"(?:" + _SKIP + rb"(?P<ref>\d++)" + _SKIP + rb"R(?!" + _REGULAR + rb"))?"
+    rb"|(?P<real>" + _NUMBER + rb")"
+    rb"|/(?P<name>" + _REGULAR + rb"*)"
+    rb"|(?P<arr>\[)|(?P<dict><<)|(?P<earr>\])|(?P<edict>>>)"
+    rb"|(?P<lit>\()|(?P<hex><)"
+    rb"|(?P<kw>" + _REGULAR + rb"*))"
+)
+_KEYWORDS = {b"true": True, b"false": False, b"null": None}
 
-
-def _read_token(buf: bytes, i: int) -> Tuple[bytes, int]:
-    """Read a bare keyword/operator token starting at i (non-delimiter run)."""
-    n = len(buf)
-    j = i
-    while j < n and buf[j] not in _WS and buf[j] not in _DELIM:
-        j += 1
-    return buf[i:j], j
-
-
-_NAME_RUN_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
+# open arrays and dictionaries one value may nest: far past any real document;
+# it also bounds the recursion of walks over a parsed value (_decrypt_object)
+_MAX_NESTING = 64
 
 
 def _parse_name(buf: bytes, i: int) -> Tuple[Name, int]:
-    # caller consumed '/'
-    m = _NAME_RUN_RE.match(buf, i)
-    if m and b"#" not in m.group():  # fast path: no hex escapes
-        return Name(m.group().decode("latin-1")), m.end()
+    # a name with '#' escapes, after its '/': both token regexes take names
+    # without '#' whole and call this only for the escaped ones
     n = len(buf)
     out = bytearray()
     while i < n:
@@ -219,79 +223,67 @@ def _parse_hex_string(buf: bytes, i: int) -> Tuple[bytes, int]:
 
 
 def parse_value(buf: bytes, i: int) -> Tuple[Any, int]:
-    """Parse one PDF object value at position ``i``; returns (value, next_pos)."""
-    i = _skip_ws(buf, i)
-    n = len(buf)
-    if i >= n:
-        raise PdfError("unexpected end of data")
-    c = buf[i]
+    """Parse one PDF object value at position ``i``; returns (value, next_pos).
 
-    if c == 0x2F:  # '/'
-        return _parse_name(buf, i + 1)
-    if c == 0x28:  # '('
-        return _parse_literal_string(buf, i + 1)
-    if c == 0x3C:  # '<'
-        if i + 1 < n and buf[i + 1] == 0x3C:  # '<<' dict
-            return _parse_dict(buf, i + 2)
-        return _parse_hex_string(buf, i + 1)
-    if c == 0x5B:  # '['
-        arr: List[Any] = []
-        i += 1
+    One ``_OTOK_RE`` match per token; open arrays and dictionaries wait on an
+    explicit stack (no recursion), at most ``_MAX_NESTING`` deep."""
+    scan = _OTOK_RE.match
+    outer: List[Tuple[Any, Any]] = []  # (container, pending key) of enclosing levels
+    cur: Any = None  # innermost open list or dict; None at the top level
+    key: Any = None  # cur's pending dictionary key; None while it awaits one
+    try:
         while True:
-            i = _skip_ws(buf, i)
-            if i >= n:
-                raise PdfError("unterminated array")
-            if buf[i] == 0x5D:
-                return arr, i + 1
-            v, i = parse_value(buf, i)
-            arr.append(v)
-    if c in b"+-.0123456789":
-        return _parse_number_or_ref(buf, i)
-
-    tok, j = _read_token(buf, i)
-    if tok == b"true":
-        return True, j
-    if tok == b"false":
-        return False, j
-    if tok == b"null":
-        return None, j
-    raise PdfError(f"unexpected token {tok[:20]!r} at {i}")
-
-
-def _parse_dict(buf: bytes, i: int) -> Tuple[Dict[str, Any], int]:
-    d: Dict[str, Any] = {}
-    n = len(buf)
-    while True:
-        i = _skip_ws(buf, i)
-        if i + 1 < n and buf[i] == 0x3E and buf[i + 1] == 0x3E:  # '>>'
-            return d, i + 2
-        if i >= n:
-            raise PdfError("unterminated dictionary")
-        if buf[i] != 0x2F:
-            raise PdfError(f"dictionary key must be a name at {i}")
-        key, i = _parse_name(buf, i + 1)
-        val, i = parse_value(buf, i)
-        d[str(key)] = val
-
-
-def _parse_number_or_ref(buf: bytes, i: int) -> Tuple[Any, int]:
-    m = _NUMBER_RE.match(buf, i)
-    if not m:
-        raise PdfError(f"bad number at {i}")
-    tok = m.group()
-    j = m.end()
-    if b"." not in tok:
-        # lookahead for "G R" making this an indirect reference
-        k = _skip_ws(buf, j)
-        m2 = _INT_AT_RE.match(buf, k)
-        if m2:
-            k2 = _skip_ws(buf, m2.end())
-            if k2 < len(buf) and buf[k2] == 0x52:  # 'R'
-                nxt = k2 + 1
-                if nxt >= len(buf) or buf[nxt] in _WS or buf[nxt] in _DELIM:
-                    return Ref(int(tok), int(m2.group())), nxt
-        return int(tok), j
-    return float(tok), j
+            m = scan(buf, i)
+            kind = m.lastgroup
+            i = m.end()
+            if kind == "name":
+                raw = m.group("name")
+                if b"#" in raw:
+                    v, i = _parse_name(buf, m.start("name"))
+                else:
+                    v = Name(raw.decode("latin-1"))
+                if key is None and type(cur) is dict:
+                    key = str(v)
+                    continue
+            elif key is None and type(cur) is dict:
+                if kind != "edict":
+                    raise PdfError(f"dictionary key must be a name at {m.start(kind)}")
+                v = cur
+                cur, key = outer.pop()
+            elif kind == "ref":
+                v = Ref(int(m.group("int")), int(m.group("ref")))
+            elif kind == "int":
+                v = int(m.group("int"))
+            elif kind == "real":
+                v = float(m.group("real"))
+            elif kind == "arr" or kind == "dict":
+                if len(outer) == _MAX_NESTING:
+                    raise PdfError(f"arrays and dictionaries nested deeper than {_MAX_NESTING}")
+                outer.append((cur, key))
+                cur, key = ([] if kind == "arr" else {}), None
+                continue
+            elif kind == "earr" and type(cur) is list:
+                v = cur
+                cur, key = outer.pop()
+            elif kind == "lit":
+                v, i = _parse_literal_string(buf, i)
+            elif kind == "hex":
+                v, i = _parse_hex_string(buf, i)
+            else:  # a keyword, or a closer that closes nothing open
+                tok = m.group(kind)
+                if tok not in _KEYWORDS:
+                    tok = tok or buf[i:i + 1] or b"end of data"
+                    raise PdfError(f"unexpected {tok[:20]!r} at {i}")
+                v = _KEYWORDS[tok]
+            if cur is None:
+                return v, i
+            if key is None:
+                cur.append(v)
+            else:
+                cur[key] = v
+                key = None
+    except ValueError as e:  # an integer past int()'s digit limit
+        raise PdfError(f"bad number: {e}") from None
 
 
 # ---------------------------------------------------------------------------
@@ -423,6 +415,8 @@ def _apply_png_predictor(data: bytes, columns: int, colors: int, bpc: int) -> by
     bpp = max(1, (colors * bpc + 7) // 8)
     rowlen = (columns * colors * bpc + 7) // 8
     stride = rowlen + 1
+    if stride > len(data):  # not one whole row: nothing to allocate or decode
+        return b""
     out = bytearray()
     prev = bytes(rowlen)
     for r in range(0, len(data) - stride + 1, stride):
@@ -536,7 +530,6 @@ def _aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
 def _std_file_key(enc: Dict[str, Any], file_id: bytes, user_pw: bytes = b"") -> bytes:
     """Algorithm 2: file encryption key from the (padded) user password."""
     import hashlib
-    import struct
 
     r = int(enc.get("R", 2))
     n = int(enc.get("Length", 40)) // 8 if r >= 3 else 5
@@ -640,7 +633,10 @@ class PdfDocument:
         if "Root" not in self.trailer:
             raise PdfError("no document catalog (/Root)")
         if "Encrypt" in self.trailer:
-            self._setup_encryption()
+            try:
+                self._setup_encryption()
+            except (ValueError, TypeError, struct.error) as e:  # /V /R /Length /P not an int
+                raise PdfError(f"malformed encryption dictionary: {e}") from None
 
     def _setup_encryption(self) -> None:
         """Standard security handler, empty user password (§7.6.3 and, for
@@ -763,7 +759,9 @@ class PdfDocument:
 
     def _load_xref_section(self, offset: int) -> int:
         """Load one xref section (classic or stream). Returns /Prev or 0."""
-        i = _skip_ws(self.data, offset)
+        if not 0 <= offset < len(self.data):
+            raise PdfError(f"xref offset {offset} outside the file")
+        i = _SKIP_RE.match(self.data, offset).end()
         if self.data[i : i + 4] == b"xref":
             return self._load_classic_xref(i + 4)
         # cross-reference stream: "N G obj << ... >> stream"
@@ -775,7 +773,7 @@ class PdfDocument:
     def _load_classic_xref(self, i: int) -> int:
         data = self.data
         while True:
-            i = _skip_ws(data, i)
+            i = _SKIP_RE.match(data, i).end()
             if data[i : i + 7] == b"trailer":
                 tdict, i = parse_value(data, i + 7)
                 if not isinstance(tdict, dict):
@@ -789,11 +787,11 @@ class PdfDocument:
                     except PdfError:
                         pass
                 return int(tdict.get("Prev", 0) or 0)
-            m = re.compile(rb"(\d+)\s+(\d+)").match(data, i)
+            m = _INT_PAIR_RE.match(data, i)
             if not m:
                 raise PdfError(f"malformed xref subsection header at {i}")
             start, count = int(m.group(1)), int(m.group(2))
-            i = _skip_ws(data, m.end())
+            i = m.end()
             for k in range(count):
                 entry = data[i : i + 20]
                 if len(entry) < 18:
@@ -884,11 +882,13 @@ class PdfDocument:
 
     def _parse_object_at(self, offset: int) -> Any:
         data = self.data
-        m = _OBJ_HEAD_RE.match(data, _skip_ws(data, offset))
+        if not 0 <= offset < len(data):
+            raise PdfError(f"object offset {offset} outside the file")
+        m = _OBJ_HEAD_RE.match(data, _SKIP_RE.match(data, offset).end())
         if not m:
             raise PdfError(f"no object header at offset {offset}")
         val, i = parse_value(data, m.end())
-        i = _skip_ws(data, i)
+        i = _SKIP_RE.match(data, i).end()
         if data[i : i + 6] == b"stream":
             if not isinstance(val, dict):
                 raise PdfError("stream keyword after non-dictionary")
@@ -954,16 +954,11 @@ class PdfDocument:
             pos = 0
             header: List[Tuple[int, int]] = []
             for _ in range(n):
-                pos = _skip_ws(payload, pos)
-                m1 = _INT_AT_RE.match(payload, pos)
-                if m1 is None:
+                m = _INT_PAIR_RE.match(payload, pos)
+                if m is None:
                     raise PdfError("malformed object-stream header")
-                pos = _skip_ws(payload, m1.end())
-                m2 = _INT_AT_RE.match(payload, pos)
-                if m2 is None:
-                    raise PdfError("malformed object-stream header")
-                pos = m2.end()
-                header.append((int(m1.group()), int(m2.group())))
+                pos = m.end()
+                header.append((int(m.group(1)), int(m.group(2))))
             for onum, ooff in header:
                 val, _ = parse_value(payload, first + ooff)
                 objs[onum] = val
@@ -995,7 +990,9 @@ class PdfDocument:
         data = stm.raw
         for f, p in zip(filters, list(parms) + [None] * len(filters)):
             fname = str(self.resolve(f))
-            p = self.resolve(p) or {}
+            p = self.resolve(p)
+            if not isinstance(p, dict):
+                p = {}
             if fname in ("FlateDecode", "Fl"):
                 data = _flate(data)
                 data = _apply_predictor(data, {k: self.resolve(v) for k, v in p.items()})
@@ -1028,8 +1025,18 @@ class PdfDocument:
             raise PdfError("catalog has no /Pages")
         out: List[Dict[str, Any]] = []
         seen: set = set()
-
-        def walk(node: Dict[str, Any], inherited: Dict[str, Any]) -> None:
+        # depth-first in document order: kids go on in reverse, and a kid is
+        # marked seen when taken off, where a recursive walk would reach it
+        stack: List[Tuple[Any, Dict[str, Any]]] = [(top, {})]
+        while stack:
+            kid, inherited = stack.pop()
+            key = kid if isinstance(kid, Ref) else id(kid)
+            if key in seen:
+                continue
+            seen.add(key)
+            node = self.resolve(kid)
+            if not isinstance(node, dict):
+                continue
             if len(out) > 100_000:
                 raise PdfError("page tree too large")
             inh = dict(inherited)
@@ -1042,17 +1049,8 @@ class PdfDocument:
                 page = dict(inh)
                 page.update(node)
                 out.append(page)
-                return
-            for kid in self.resolve(kids) or []:
-                key = kid if isinstance(kid, Ref) else id(kid)
-                if key in seen:
-                    continue
-                seen.add(key)
-                k = self.resolve(kid)
-                if isinstance(k, dict):
-                    walk(k, inh)
-
-        walk(top, {})
+                continue
+            stack.extend((k, inh) for k in reversed(self.resolve(kids) or []))
         return out
 
     def page_fonts(self, page: Dict[str, Any]) -> Dict[str, "_Type0Decoder"]:
@@ -1152,54 +1150,44 @@ class _Op(bytes):
     __slots__ = ()
 
 
-# master tokenizer for content streams. Unlike the object lexer, content
-# streams cannot contain indirect references, so numbers need no "N G R"
-# lookahead — this regex loop is ~3× faster than the general parse_value
-# path on operator-dense streams (the extraction hot loop).
+# master tokenizer for content streams: the object lexer's fragments and
+# one-match-per-token loop, with no "G R" suffix (content holds no references)
+# but with the dominant text-stream idioms fused into single alternatives.
 # fused-path separators exclude \x00 on purpose: bytes.split() (used to cut
 # the matched run into numbers) only splits ASCII whitespace, so the regex
 # must not accept more than split() handles; \x00-separated streams take the
 # generic token path instead
-_NUM_WS = rb"[+-]?(?:\d+\.?\d*|\.\d+)[\t\n\x0c\r ]+"
+_NUM_WS = _NUMBER + rb"[\t\n\x0c\r ]+"
+_OP_END = rb"(?![A-Za-z0-9'\"*])"  # an operator ends at a non-operator byte
 _CTOK_RE = re.compile(
-    rb"[\x00\t\n\x0c\r ]*"  # leading whitespace folded into every token
-    # fused fast paths for the two dominant idioms of text streams: a full
-    # "a b c d e f Tm" matrix set and an escape-free "(text) Tj" show —
-    # each replaces 7 (resp. 2) generic-token iterations with one match
-    # fully fused "a b c d e f Tm (text) Tj" — the single dominant idiom of
-    # Tm-positioned text (one match replaces the tm6+tjs pair); falls back
-    # to tm6 via ordinary alternation when no escape-free show follows
-    # one alternative covers ALL "a b c d e f Tm" forms, with the show
-    # fused in as an OPTIONAL suffix — the 6 numbers are parsed exactly
-    # once whether the Tm stands alone, precedes an escape-free "(text)
-    # Tj", or precedes a "<hex> Tj" (Type0/CID). The previous shape
-    # (separate tmtj | tm6 alternatives) re-parsed the 6 numbers on every
-    # Type0 show and on every failed first alternative
-    rb"(?:(?P<tm6>(?:" + _NUM_WS + rb"){6})Tm(?![A-Za-z0-9'\"*])"
-    rb"(?:[\x00\t\n\x0c\r ]*"
-    rb"(?:\((?P<tmtjs>[^()\\]*)\)[\x00\t\n\x0c\r ]*Tj(?![A-Za-z0-9'\"*])"
-    rb"|<(?P<tmhs>[0-9A-Fa-f\x00\t\n\x0c\r ]*)>[\x00\t\n\x0c\r ]*"
-    rb"Tj(?![A-Za-z0-9'\"*])))?"
-    rb"|\((?P<tjs>[^()\\]*)\)[\x00\t\n\x0c\r ]*Tj(?![A-Za-z0-9'\"*])"
+    _WSB + rb"*"  # leading whitespace folded into every token
+    # one alternative covers ALL "a b c d e f Tm" forms, with the show fused
+    # in as an OPTIONAL suffix: the 6 numbers are parsed exactly once whether
+    # the Tm stands alone, precedes an escape-free "(text) Tj", or precedes a
+    # "<hex> Tj" (Type0/CID)
+    rb"(?:(?P<tm6>(?:" + _NUM_WS + rb"){6})Tm" + _OP_END
+    + rb"(?:" + _WSB + rb"*"
+    rb"(?:\((?P<tmtjs>[^()\\]*)\)" + _WSB + rb"*Tj" + _OP_END
+    + rb"|<(?P<tmhs>[0-9A-Fa-f\x00\t\n\x0c\r ]*)>" + _WSB + rb"*"
+    rb"Tj" + _OP_END + rb"))?"
+    rb"|\((?P<tjs>[^()\\]*)\)" + _WSB + rb"*Tj" + _OP_END
     # fused "<hex> Tj" show (the dominant idiom of Type0/CID text streams)
-    rb"|<(?P<tjh>[0-9A-Fa-f\x00\t\n\x0c\r ]*)>[\x00\t\n\x0c\r ]*Tj(?![A-Za-z0-9'\"*])"
-    # fused "(text) '" next-line-show and "x y Td" text-move (the remaining
-    # high-frequency idioms after Tm/Tj: 3 and 2 generic iterations → 1);
-    # Td takes the same optional fused-show suffix as Tm
-    # tqs accepts ESCAPED strings too (unrolled-loop pattern, no nested
-    # bare parens): the corpus's next-line shows are exactly where escape
-    # sequences occur, and the two-match lit+op path cost ~2× per show
-    rb"|\((?P<tqs>[^()\\]*(?:\\.[^()\\]*)*)\)[\x00\t\n\x0c\r ]*'(?![A-Za-z0-9'\"*])"
-    rb"|(?P<td2>(?:" + _NUM_WS + rb"){2})Td(?![A-Za-z0-9'\"*])"
-    rb"(?:[\x00\t\n\x0c\r ]*"
-    rb"\((?P<tdjs>[^()\\]*)\)[\x00\t\n\x0c\r ]*Tj(?![A-Za-z0-9'\"*]))?"
+    + rb"|<(?P<tjh>[0-9A-Fa-f\x00\t\n\x0c\r ]*)>" + _WSB + rb"*Tj" + _OP_END
+    # fused "(text) '" next-line-show and "x y Td" text-move; Td takes the
+    # same optional fused-show suffix as Tm. tqs accepts ESCAPED strings too
+    # (unrolled-loop pattern, no nested bare parens): the corpus's next-line
+    # shows are exactly where escape sequences occur
+    + rb"|\((?P<tqs>[^()\\]*(?:\\.[^()\\]*)*)\)" + _WSB + rb"*'" + _OP_END
+    + rb"|(?P<td2>(?:" + _NUM_WS + rb"){2})Td" + _OP_END
+    + rb"(?:" + _WSB + rb"*"
+    rb"\((?P<tdjs>[^()\\]*)\)" + _WSB + rb"*Tj" + _OP_END + rb")?"
     # fused "a b c d e f cm" and "/F n Tf" (each otherwise 7 / 3 matches)
-    rb"|(?P<cm6>(?:" + _NUM_WS + rb"){6})cm(?![A-Za-z0-9'\"*])"
-    rb"|/(?P<tfn>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)[\x00\t\n\x0c\r ]+"
-    + _NUM_WS + rb"Tf(?![A-Za-z0-9'\"*])"
-    rb"|%[^\r\n]*"
-    rb"|(?P<num>[+-]?(?:\d+\.?\d*|\.\d+))"
-    rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
+    rb"|(?P<cm6>(?:" + _NUM_WS + rb"){6})cm" + _OP_END
+    + rb"|/(?P<tfn>" + _REGULAR + rb"*)" + _WSB + rb"+"
+    + _NUM_WS + rb"Tf" + _OP_END
+    + rb"|%[^\r\n]*"
+    rb"|(?P<num>" + _NUMBER + rb")"
+    rb"|(?P<name>/" + _REGULAR + rb"*)"
     rb"|(?P<op>[A-Za-z'\"*][A-Za-z0-9'\"*]*)"
     rb"|(?P<arr>[\[\]])"
     rb"|(?P<dct><<)"
@@ -1214,7 +1202,7 @@ _CTOK_RE = re.compile(
 _SIMPLE_STR_RE = re.compile(rb"([^()\\]*)\)")
 
 # end of an inline image's binary payload: whitespace-delimited EI operator
-_INLINE_EI_RE = re.compile(rb"[\x00\t\n\x0c\r ]EI(?![A-Za-z0-9'\"*])")
+_INLINE_EI_RE = re.compile(_WSB + rb"EI" + _OP_END)
 
 
 def _content_tokens(buf: bytes) -> Iterator[Any]:
@@ -1312,7 +1300,10 @@ def _content_tokens(buf: bytes) -> Iterator[Any]:
             continue
         if kind == "num":
             tok = m.group("num")
-            v: Any = float(tok) if b"." in tok else int(tok)
+            try:
+                v: Any = float(tok) if b"." in tok else int(tok)
+            except ValueError:  # past int()'s digit limit: skipped like a stray byte
+                continue
         elif kind == "op":
             opb = m.group("op")
             if opb == b"ID":
@@ -1357,7 +1348,7 @@ def _content_tokens(buf: bytes) -> Iterator[Any]:
                 continue
         else:  # '<<' dictionary
             try:
-                v, pos = _parse_dict(buf, pos)
+                v, pos = parse_value(buf, m.start("dct"))
             except PdfError:
                 continue
         if arr is not None:

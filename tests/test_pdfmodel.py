@@ -48,6 +48,156 @@ def test_number_vs_ref_disambiguation():
     assert v == [pm.Ref(1, 0), 2]
 
 
+def test_parser_quirks_kept():
+    assert pm.parse_value(b"-3 0 R", 0) == (pm.Ref(-3, 0), 6)
+    assert pm.parse_value(b"1.5 0 R", 0) == (1.5, 3)
+    assert pm.parse_value(b"12 R", 0) == (12, 2)
+    assert pm.parse_value(b"3 %c\n0 %d\rR]", 0) == (pm.Ref(3, 0), 11)
+    assert pm.parse_value(b"/A#4", 0) == ("A#4", 4)  # a cut-off escape keeps '#'
+    for bad in (b"", b"]", b">>", b"<< 1 >>", b"<< /A >>", b"[1 >>", b"truex", b"+", b"{"):
+        with pytest.raises(pm.PdfError):
+            pm.parse_value(bad, 0)
+
+
+# test-side serializer for the round trip: every token gets a random run of
+# whitespace and comments around it
+_SEPS = [b" ", b"\n", b"\r\n", b"\t", b"\x00", b"\x0c", b"% note\n", b"%\r", b" %%[<<(\n "]
+_NAME_PLAIN = set(range(0x21, 0x7F)) - set(b"()<>[]{}/%#")
+
+
+def _pdf_name(raw: bytes) -> bytes:
+    return b"/" + b"".join(bytes([c]) if c in _NAME_PLAIN else b"#%02X" % c for c in raw)
+
+
+def _pdf_literal(raw: bytes, octal: bool) -> bytes:
+    if octal:
+        return b"(" + b"".join(b"\\%03o" % c for c in raw) + b")"
+    return b"(" + b"".join(b"\\" + bytes([c]) if c in b"()\\" else bytes([c]) for c in raw) + b")"
+
+
+_leaf = st.one_of(
+    st.none().map(lambda _: (None, b"null")),
+    st.booleans().map(lambda b: (b, b"true" if b else b"false")),
+    st.integers(-10**12, 10**12).map(lambda n: (n, b"%d" % n)),
+    st.from_regex(rb"\A[+-]?(?:\d{1,6}\.\d{0,4}|\.\d{1,4})\Z").map(lambda t: (float(t), t)),
+    st.binary(max_size=6).map(lambda r: (pm.Name(r.decode("latin-1")), _pdf_name(r))),
+    st.tuples(st.binary(max_size=8), st.booleans()).map(lambda t: (t[0], _pdf_literal(*t))),
+    st.binary(max_size=8).map(lambda r: (r, b"<" + r.hex().encode() + b">")),
+    st.tuples(st.integers(0, 10**6), st.integers(0, 65535)).map(
+        lambda t: (pm.Ref(*t), b"%d %d R" % t)),
+)
+
+
+def _containers(children):
+    return st.one_of(
+        st.lists(children, max_size=5).map(lambda xs: ("arr", xs)),
+        st.lists(st.tuples(st.binary(max_size=4), children), max_size=5).map(lambda xs: ("dict", xs)),
+    )
+
+
+def _render(node, sep):
+    """(expected value, serialized bytes) of a drawn tree; sep() draws one separator."""
+    if isinstance(node[1], bytes):  # a leaf: (value, its bytes)
+        return node
+    kind, items = node
+    if kind == "arr":
+        vals, out = [], [b"["]
+        for child in items:
+            v, b = _render(child, sep)
+            vals.append(v)
+            out += [sep(), b]
+        return vals, b"".join(out + [sep(), b"]"])
+    d, out = {}, [b"<<"]
+    for key, child in items:
+        v, b = _render(child, sep)
+        d[key.decode("latin-1")] = v
+        out += [sep(), _pdf_name(key), sep(), b]
+    return d, b"".join(out + [sep(), b">>"])
+
+
+def _typed(v):
+    # structural equality that also tells True from 1, Ref from tuple, Name from str
+    if isinstance(v, dict):
+        return ("dict", sorted((k, _typed(x)) for k, x in v.items()))
+    if isinstance(v, list):
+        return ("list", [_typed(x) for x in v])
+    return (type(v).__name__, v)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.recursive(_leaf, _containers, max_leaves=25), st.data())
+def test_parse_value_round_trip(tree, data):
+    sep = lambda: data.draw(st.sampled_from(_SEPS))  # noqa: E731
+    value, text = _render(tree, sep)
+    lead = sep()
+    buf = lead + text + data.draw(st.sampled_from([b"", b" ", b"\nendobj", b" >>"]))
+    got, end = pm.parse_value(buf, 0)
+    assert end == len(lead) + len(text)
+    assert _typed(got) == _typed(value)
+
+
+def test_deep_nesting_raises_pdferror():
+    depth = pm._MAX_NESTING
+    assert pm.parse_value(b"[" * depth + b"]" * depth, 0)[1] == 2 * depth
+    for buf in (b"[" * 5000 + b"]" * 5000,
+                b"<< /A " * 3000 + b"1" + b" >>" * 3000,
+                b"[" * (depth + 1) + b"]" * (depth + 1)):
+        with pytest.raises(pm.PdfError, match="nested deeper"):
+            pm.parse_value(buf, 0)
+
+
+def _classic_pdf(dicts, content=b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (deep page) Tj ET"):
+    # objects 1..k from ``dicts`` (object 1 the catalog), then the one
+    # page's content stream and font
+    from b_pdf_parser_spark.pdfwriter import _emit_classic, _stream_obj
+
+    n = len(dicts)
+    objs = {k + 1: body.replace(b"CONTENT", b"%d 0 R" % (n + 1)).replace(b"FONT", b"%d 0 R" % (n + 2))
+            for k, body in enumerate(dicts)}
+    objs[n + 2] = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+    return _emit_classic(objs, {n + 1: _stream_obj(b"<< >>", content, False)})
+
+
+_LEAF_PAGE = b"<< /Type /Page /Contents CONTENT /Resources << /Font << /F1 FONT >> >> >>"
+
+
+def test_deep_array_in_catalog_is_an_error_row():
+    from b_pdf_parser_spark.operators.extract import _extract_one
+
+    deep = b"[" * 5000 + b"]" * 5000
+    data = _classic_pdf([b"<< /Type /Catalog /Pages 2 0 R /Deep " + deep + b" >>",
+                         b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>", _LEAF_PAGE])
+    row = _extract_one("u", data)
+    assert row["kind"] == "error" and row["error"].startswith("pdf:"), row["error"]
+
+
+def test_deep_page_tree_walks_without_recursion():
+    from b_pdf_parser_spark.operators.extract import _extract_one
+
+    depth = 3000  # /Pages nodes 2..3001, each the only kid of the one before
+    nodes = [b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % (k + 1) for k in range(2, depth + 2)]
+    data = _classic_pdf([b"<< /Type /Catalog /Pages 2 0 R >>"] + nodes + [_LEAF_PAGE])
+    row = _extract_one("u", data)
+    assert row["kind"] == "pdf", row["error"]
+    assert row["text"] == "deep page\n\n"
+
+
+def test_page_tree_order_inheritance_and_cycles():
+    # document order depth-first; /MediaBox inherited; a kid listed twice and
+    # a /Kids entry pointing back at the root are walked once
+    data = _classic_pdf([
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /MediaBox [0 0 9 9] /Kids [3 0 R 5 0 R 3 0 R 2 0 R] /Count 3 >>",
+        b"<< /Type /Pages /Kids [4 0 R 6 0 R] /Count 2 >>",
+        b"<< /Type /Page /Contents CONTENT /N 1 >>",
+        b"<< /Type /Page /Contents CONTENT /N 3 /MediaBox [0 0 1 1] >>",
+        b"<< /Type /Page /Contents CONTENT /N 2 >>",
+    ])
+    pages = pm.PdfDocument(data).pages()
+    assert [p["N"] for p in pages] == [1, 2, 3]
+    assert [p["MediaBox"] for p in pages] == [[0, 0, 9, 9], [0, 0, 9, 9], [0, 0, 1, 1]]
+
+
 # ---- filters ----------------------------------------------------------------
 
 def test_png_up_predictor_roundtrip():
@@ -409,16 +559,44 @@ def test_encrypted_byte_splice_keeps_pdferror_contract(pos, junk):
 @pytest.mark.parametrize("old,new", [
     (b"/W [1 2 2]", b"/W [1 2R 2]"),  # a reference where /W wants a number
     (b"/Index [0 9]", b"/Index [03 9]"),  # shifted rows file stream 3 inside itself
-], ids=["w_ref", "objstm_cycle"])
+    (b"/Index [0 9]", b"/Index [0 9] /Prev 99999999999999999999"),  # offset past C ssize_t
+    (b"/Columns 5 >>", b"/Columns 99999999999999999999 >>"),  # a predictor row past memory
+    (b"/DecodeParms << /Predictor 12 /Columns 5 >>", b"/DecodeParms 1.5"),
+], ids=["w_ref", "objstm_cycle", "huge_prev", "huge_columns", "number_parms"])
 def test_corrupt_xref_stream_fields_raise_pdferror(old, new):
-    # two splices the fuzz test above reached: a TypeError and a
-    # RecursionError used to escape the walk
+    # splices the fuzz tests reached: each used to escape the walk as
+    # TypeError, RecursionError, OverflowError or AttributeError
     data = _enc_sample(encrypt=True, xref_stream=True)
     assert data.count(old) == 1
     try:
         pm.extract_pdf_text(data.replace(old, new))
     except pm.PdfError:
         pass
+
+
+@pytest.mark.parametrize("old,new", [
+    (b"/P -1 >>", b"/P 99999999999 >>"),  # permissions past 32 bits
+    (b"/Length 128", b"/Length /L"),  # a name where the key length wants a number
+    (b"/Length 128", b"/Length [1]"),
+], ids=["huge_permissions", "name_key_length", "array_key_length"])
+def test_malformed_encryption_fields_raise_pdferror(old, new):
+    # the classic-xref trailer still names /Encrypt after the offsets shift,
+    # so the handler reads the bad field (it used to escape as struct.error,
+    # ValueError or TypeError)
+    data = _enc_sample(encrypt=True)
+    assert data.count(old) == 1
+    with pytest.raises(pm.PdfError, match="malformed encryption dictionary"):
+        pm.extract_pdf_text(data.replace(old, new))
+
+
+def test_long_digit_run_in_content_stream():
+    # a Flate splice can leave thousands of hex digits bare: past int()'s
+    # digit limit the number is skipped, and the fused matrix alternatives
+    # must not retry every split of the run
+    content = b"BT /F1 10 Tf 1 0 0 1 72 700 Tm " + b"7" * 6000 + b"> (ok) Tj ET"
+    assert pm.extract_pdf_text(_classic_pdf(
+        [b"<< /Type /Catalog /Pages 2 0 R >>", b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+         _LEAF_PAGE], content)) == "ok\n\n"
 
 
 def test_odd_length_tounicode_hex_raises_nothing_but_pdferror():
@@ -453,6 +631,42 @@ def test_formula_hazard_splice_keeps_pdferror_contract(i, pos, junk):
         pm.extract_pdf_text(spliced)
     except pm.PdfError:
         pass
+
+
+# syntax bytes weigh most in the seeded splice scan: they are what reaches
+# the lexer, the xref and object-stream readers and the page-tree walk
+_SPLICE_JUNK = [b"[", b"]", b"<<", b">>", b"R", b" R", b"0", b"1", b"9", b" ", b"(", b")",
+                b"%", b"\x00", b"/", b"<", b">", b"-", b"."]
+
+
+def test_seeded_syntax_splice_scan_raises_only_pdferror():
+    # a fixed-seed splice scan over the hazard-rotated formula docs and an
+    # RC4 xref-stream doc: mostly short runs of syntax bytes, now and then a
+    # long run of one (deep nesting, long digit runs). Seeded, so a failure
+    # here reproduces; the Hypothesis splice tests above only sample
+    import random
+
+    from b_pdf_parser_spark.sources.pages import formula_statement_pdf
+
+    docs = [formula_statement_pdf(i) for i in range(160)]
+    docs.append(_enc_sample(encrypt=True, xref_stream=True))
+    rng = random.Random(20261018)
+    escapes = []
+    for _ in range(12_000):
+        data = docs[rng.randrange(len(docs))]
+        if rng.random() < 0.05:
+            junk = rng.choice(_SPLICE_JUNK) * rng.randint(50, 3000)
+        else:
+            junk = b"".join(rng.choice(_SPLICE_JUNK) if rng.random() < 0.8
+                            else bytes([rng.randrange(256)]) for _ in range(rng.randint(1, 16)))
+        pos = rng.randrange(len(data))
+        try:
+            pm.extract_pdf_text(data[:pos] + junk + data[pos:])
+        except pm.PdfError:
+            pass
+        except Exception as e:  # noqa: BLE001 - the contract under test
+            escapes.append((docs.index(data), pos, junk[:20], repr(e)[:80]))
+    assert not escapes, escapes[:5]
 
 
 def test_formula_aes256_stratum_text_identical():

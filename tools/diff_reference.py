@@ -10,6 +10,10 @@ This is how the frozen expected values in tests/ were originally validated:
 0 diffs over 11k randomized documents across extract_metadata,
 extract_transactions (column/inline/table), extract_summary_totals,
 parse/normalize numbers, validity and turnover verification.
+
+It cannot run without the reference checkout named above, and where that
+checkout is absent it has nothing to load. It is kept because it is the
+only differential check against the reference.
 """
 
 from __future__ import annotations
