@@ -19,7 +19,11 @@ so the full object model is implemented here from the public PDF 1.7 spec:
 * page-tree walk with attribute inheritance
 * content-stream interpreter for the text operators
   ``BT ET Tf Td TD Tm T* TL Tj TJ ' "`` and the graphics operators
-  ``q Q cm`` (everything else is consumed and ignored)
+  ``q Q cm`` (everything else is consumed and ignored): the tokenizer
+  (``_content_ops``) yields one event per operator, operands already
+  counted and coerced, whether a fused regex alternative or the generic
+  token path read it; an unterminated literal string runs to the end of the
+  stream, so each stream is scanned once
 * XY-cut-style line assembly: positioned spans are clustered into lines by
   baseline Y, sorted left-to-right, and lines are emitted top-to-bottom.
 
@@ -150,62 +154,35 @@ def _parse_name(buf: bytes, i: int) -> Tuple[Name, int]:
     return Name(out.decode("latin-1")), i
 
 
-_STR_ESCAPES = {
-    0x6E: b"\n",  # n
-    0x72: b"\r",  # r
-    0x74: b"\t",  # t
-    0x62: b"\b",  # b
-    0x66: b"\x0c",  # f
-    0x28: b"(",
-    0x29: b")",
-    0x5C: b"\\",
-}
+# a literal string's bytes up to and including its next unescaped parenthesis;
+# an escape is skipped whole, so an escaped parenthesis neither opens nor closes
+_LIT_SCAN_RE = re.compile(rb"(?:[^()\\]++|\\.)*+[()]", re.S)
+# one escape (§7.3.4.2): 1-3 octal digits, a line continuation, or one byte
+_LIT_ESC_RE = re.compile(rb"\\([0-7]{1,3}|\r\n?|.)", re.S)
+_STR_ESCAPES = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\x0c",
+                b"\n": b"", b"\r": b"", b"\r\n": b""}
+
+
+def _unescape(m: "re.Match[bytes]") -> bytes:
+    e = m.group(1)
+    if 0x30 <= e[0] <= 0x37:
+        return bytes((int(e, 8) & 0xFF,))
+    return _STR_ESCAPES.get(e, e)  # an unknown escape is the byte itself
 
 
 def _parse_literal_string(buf: bytes, i: int) -> Tuple[bytes, int]:
-    # caller consumed '('
-    n = len(buf)
-    out = bytearray()
+    # caller consumed '('; one scan match per parenthesis, unescaped ones nest
+    scan = _LIT_SCAN_RE.match
     depth = 1
-    while i < n:
-        c = buf[i]
-        if c == 0x5C:  # backslash
-            i += 1
-            if i >= n:
-                break
-            e = buf[i]
-            if e in _STR_ESCAPES:
-                out += _STR_ESCAPES[e]
-                i += 1
-            elif 0x30 <= e <= 0x37:  # octal, up to 3 digits
-                j = i
-                while j < n and j < i + 3 and 0x30 <= buf[j] <= 0x37:
-                    j += 1
-                out.append(int(buf[i:j], 8) & 0xFF)
-                i = j
-            elif e == 0x0D:  # line continuation \r[\n]
-                i += 1
-                if i < n and buf[i] == 0x0A:
-                    i += 1
-            elif e == 0x0A:
-                i += 1
-            else:  # unknown escape: emit char as-is
-                out.append(e)
-                i += 1
-        elif c == 0x28:
-            depth += 1
-            out.append(c)
-            i += 1
-        elif c == 0x29:
-            depth -= 1
-            if depth == 0:
-                return bytes(out), i + 1
-            out.append(c)
-            i += 1
-        else:
-            out.append(c)
-            i += 1
-    raise PdfError("unterminated literal string")
+    j = i
+    while depth:
+        m = scan(buf, j)
+        if m is None:
+            raise PdfError("unterminated literal string")
+        j = m.end()
+        depth += 1 if buf[j - 1] == 0x28 else -1
+    s = buf[i : j - 1]
+    return (_LIT_ESC_RE.sub(_unescape, s) if b"\\" in s else s), j
 
 
 def _parse_hex_string(buf: bytes, i: int) -> Tuple[bytes, int]:
@@ -1144,12 +1121,6 @@ def _pre_translate(m: Matrix, tx: float, ty: float) -> Matrix:
             tx * m[1] + ty * m[3] + m[5])
 
 
-class _Op(bytes):
-    """Marker type distinguishing operator tokens from bytes string values."""
-
-    __slots__ = ()
-
-
 # master tokenizer for content streams: the object lexer's fragments and
 # one-match-per-token loop, with no "G R" suffix (content holds no references)
 # but with the dominant text-stream idioms fused into single alternatives.
@@ -1197,22 +1168,45 @@ _CTOK_RE = re.compile(
     re.S,
 )
 
-# fast path for literal strings with no escapes and no nested parens —
-# the overwhelmingly common case in text-operator streams
-_SIMPLE_STR_RE = re.compile(rb"([^()\\]*)\)")
-
 # end of an inline image's binary payload: whitespace-delimited EI operator
 _INLINE_EI_RE = re.compile(_WSB + rb"EI" + _OP_END)
 
+# the operators that take no operands, as their events
+_BARE_OPS = {op: (op.decode(),) for op in (b"T*", b"BT", b"ET", b"q", b"Q")}
 
-def _content_tokens(buf: bytes) -> Iterator[Any]:
-    """Yield values and operator tokens (as ``_Op``) from a content stream.
 
-    Arrays (TJ operands) are assembled inline; dictionaries (BDC/gs property
-    lists) fall back to the general parser. Unknown bytes are skipped.
+def _num(v: Any) -> float:
+    # a numeric operand: the tokenizer reads every number as a float
+    return v if type(v) is float else 0.0
+
+
+def _matrix(nums: bytes) -> Matrix:
+    p = nums.split()
+    return (float(p[0]), float(p[1]), float(p[2]), float(p[3]), float(p[4]), float(p[5]))
+
+
+def _hex_show(h: bytes) -> bytes:
+    # a fused "<hex> Tj" string: the regex admits only hex digits and whitespace
+    h = h.translate(None, _WS)
+    return bytes.fromhex((h + b"0" if len(h) % 2 else h).decode("ascii"))
+
+
+def _content_ops(buf: bytes) -> Iterator[Tuple[Any, ...]]:
+    """Yield one event per operator of a content stream that the interpreter reads.
+
+    ``("Tm"|"cm", matrix)``, ``("Td"|"TD", dx, dy)``, ``("TL", leading)``,
+    ``("Tj"|"'"|"TJ", shown bytes or None)`` (``"`` is ``'``; TJ's strings
+    come joined), ``("Tf", font name or None)``, ``("T*"|"BT"|"ET"|"q"|"Q",)``.
+    A fused ``_CTOK_RE`` alternative yields the events of its generic spelling.
+    Operands wait on a stack that every operator clears: numbers are floats, a
+    non-number where a number belongs reads as 0, and an operator short of
+    operands yields nothing. Arrays (TJ operands) are assembled inline;
+    dictionaries (BDC/gs property lists) go to ``parse_value``. Stray bytes
+    are skipped; an unterminated literal string runs to the end of the stream.
     """
     pos = 0
     n = len(buf)
+    stack: List[Any] = []  # operands since the last operator
     arr: Optional[List[Any]] = None
     scan = _CTOK_RE.match
     while pos < n:
@@ -1224,89 +1218,36 @@ def _content_tokens(buf: bytes) -> Iterator[Any]:
         kind = m.lastgroup
         if kind is None:  # whitespace / comment / stray byte
             continue
-        if kind == "tmtjs":
-            parts = m.group("tm6").split()
-            yield ("tmtj",
-                   (float(parts[0]), float(parts[1]), float(parts[2]),
-                    float(parts[3]), float(parts[4]), float(parts[5])),
-                   m.group("tmtjs"))
-            continue
-        if kind == "tmhs":  # fused "Tm <hex> Tj" (Type0 shows)
-            parts = m.group("tm6").split()
-            mat = (float(parts[0]), float(parts[1]), float(parts[2]),
-                   float(parts[3]), float(parts[4]), float(parts[5]))
-            h = m.group("tmhs").translate(None, _WS)
-            if len(h) % 2:
-                h += b"0"
-            try:
-                shown = bytes.fromhex(h.decode("ascii"))
-            except ValueError:
-                # bad hex: matrix still applies, the show is dropped —
-                # exactly the old tm6-then-failed-tjh sequence
-                yield ("tm6", mat)
-            else:
-                yield ("tmtj", mat, shown)
-            continue
-        if kind == "tm6":
-            parts = m.group("tm6").split()
-            yield ("tm6", (float(parts[0]), float(parts[1]), float(parts[2]),
-                           float(parts[3]), float(parts[4]), float(parts[5])))
-            continue
-        if kind == "tjs":
-            yield ("tj", m.group("tjs"))
-            continue
-        if kind == "tqs":
-            s = m.group("tqs")
-            if b"\\" in s:
-                # escaped show: decode with the one true string parser
-                # (same value the old lit+op path pushed; a regex-matched
-                # span cannot be unterminated, so this cannot raise)
-                try:
-                    s, _ = _parse_literal_string(buf, m.start("tqs"))
-                except PdfError:
-                    continue
-            yield ("tq", s)
-            continue
-        if kind == "tdjs":  # fused "x y Td (text) Tj"
-            parts = m.group("td2").split()
-            yield ("tdtj", (float(parts[0]), float(parts[1])),
-                   m.group("tdjs"))
-            continue
-        if kind == "td2":
-            parts = m.group("td2").split()
-            yield ("td2", (float(parts[0]), float(parts[1])))
-            continue
-        if kind == "cm6":  # fused "a b c d e f cm"
-            parts = m.group("cm6").split()
-            yield ("cm6", (float(parts[0]), float(parts[1]), float(parts[2]),
-                           float(parts[3]), float(parts[4]), float(parts[5])))
-            continue
-        if kind == "tfn":  # fused "/Name size Tf"
-            raw = m.group("tfn")
-            if b"#" in raw:
-                v, _ = _parse_name(buf, m.start("tfn"))
-            else:
-                v = Name(raw.decode("latin-1"))
-            yield ("tf", v)
-            continue
-        if kind == "tjh":
-            h = m.group("tjh").translate(None, _WS)
-            if len(h) % 2:
-                h += b"0"
-            try:
-                yield ("tj", bytes.fromhex(h.decode("ascii")))
-            except ValueError:
-                pass
-            continue
         if kind == "num":
-            tok = m.group("num")
-            try:
-                v: Any = float(tok) if b"." in tok else int(tok)
-            except ValueError:  # past int()'s digit limit: skipped like a stray byte
-                continue
+            v: Any = float(m.group("num"))
         elif kind == "op":
-            opb = m.group("op")
-            if opb == b"ID":
+            op = m.group("op")
+            k = len(stack)
+            if op == b"Tj" or op == b"'" or op == b'"':
+                if k >= (3 if op == b'"' else 1):
+                    v = stack[-1]
+                    yield ("Tj" if op == b"Tj" else "'", v if type(v) is bytes else None)
+            elif op == b"Tm" or op == b"cm":
+                if k >= 6:
+                    yield (op.decode(), tuple(map(_num, stack[-6:])))
+            elif op == b"Td" or op == b"TD":
+                if k >= 2:
+                    yield (op.decode(), _num(stack[-2]), _num(stack[-1]))
+            elif op == b"TJ":
+                if k:
+                    v = stack[-1]
+                    yield ("TJ", b"".join(e for e in v if type(e) is bytes)
+                           if type(v) is list else None)
+            elif op == b"TL":
+                if k:
+                    yield ("TL", _num(stack[-1]))
+            elif op == b"Tf":
+                if k >= 2:
+                    v = stack[-2]
+                    yield ("Tf", v if type(v) is Name else None)
+            elif op in _BARE_OPS:
+                yield _BARE_OPS[op]
+            elif op == b"ID":
                 # inline image payload (BI <params> ID <binary> EI,
                 # §8.9.7): raw sample bytes that must be skipped wholesale
                 # — tokenizing them would let a stray '(' swallow the rest
@@ -1317,9 +1258,9 @@ def _content_tokens(buf: bytes) -> Iterator[Any]:
                 # readers use when /L is absent).
                 em = _INLINE_EI_RE.search(buf, pos)
                 pos = em.end() if em else n
-                yield _Op(b"EI")
-                continue
-            yield _Op(opb)
+            # all other operators (Tc Tw Tz Ts Tr re W n Do gs colors...)
+            # only drop their operands
+            stack.clear()
             continue
         elif kind == "name":
             raw = m.group("name")[1:]
@@ -1328,14 +1269,12 @@ def _content_tokens(buf: bytes) -> Iterator[Any]:
             else:
                 v = Name(raw.decode("latin-1"))
         elif kind == "lit":
-            sm = _SIMPLE_STR_RE.match(buf, pos)
-            if sm:
-                v, pos = sm.group(1), sm.end()
-            else:
-                try:
-                    v, pos = _parse_literal_string(buf, pos)
-                except PdfError:
-                    continue
+            try:
+                v, pos = _parse_literal_string(buf, pos)
+            except PdfError:
+                # an unterminated string runs to the end of the stream (as
+                # in pdf.js's lexer), so the stream is scanned once
+                break
         elif kind == "arr":
             if m.group("arr") == b"[":
                 arr = []
@@ -1346,15 +1285,44 @@ def _content_tokens(buf: bytes) -> Iterator[Any]:
                 v, pos = _parse_hex_string(buf, pos)
             except PdfError:
                 continue
-        else:  # '<<' dictionary
+        elif kind == "dct":  # '<<' dictionary
             try:
                 v, pos = parse_value(buf, m.start("dct"))
             except PdfError:
                 continue
+        else:  # a fused alternative: its events, and the operands are dropped
+            stack.clear()
+            if kind == "tmtjs" or kind == "tm6" or kind == "tmhs":
+                yield ("Tm", _matrix(m.group("tm6")))
+                if kind == "tmtjs":
+                    yield ("Tj", m.group("tmtjs"))
+                elif kind == "tmhs":
+                    yield ("Tj", _hex_show(m.group("tmhs")))
+            elif kind == "tjs":
+                yield ("Tj", m.group("tjs"))
+            elif kind == "td2" or kind == "tdjs":
+                dx, dy = m.group("td2").split()
+                yield ("Td", float(dx), float(dy))
+                if kind == "tdjs":
+                    yield ("Tj", m.group("tdjs"))
+            elif kind == "tjh":
+                yield ("Tj", _hex_show(m.group("tjh")))
+            elif kind == "tqs":
+                s = m.group("tqs")
+                if b"\\" in s:  # a regex-matched string is terminated: no raise
+                    s = _parse_literal_string(buf, m.start("tqs"))[0]
+                yield ("'", s)
+            elif kind == "cm6":
+                yield ("cm", _matrix(m.group("cm6")))
+            else:  # "tfn": "/Name size Tf"
+                raw = m.group("tfn")
+                yield ("Tf", _parse_name(buf, m.start("tfn"))[0] if b"#" in raw
+                       else Name(raw.decode("latin-1")))
+            continue
         if arr is not None:
             arr.append(v)
         else:
-            yield v
+            stack.append(v)
 
 
 class _Span:
@@ -1590,17 +1558,15 @@ def _extract_spans(
     tlm: Matrix = _IDENTITY
     leading = 0.0
     in_text = False
-    stack: List[Any] = []
     # current composite-font decoder, switched by Tf (None → single-byte
     # default). Tracked per content stream — font selection is graphics
     # state, but the corpus (and our writer) always sets Tf inside each BT.
     cur_dec: Optional[_Type0Decoder] = None
 
-    def emit(raw: Any) -> None:
+    def emit(raw: Optional[bytes]) -> None:
         nonlocal seq
-        if not isinstance(raw, (bytes, bytearray)):
+        if raw is None:
             return
-        raw = bytes(raw)
         if cur_dec is not None:  # Type0/CID: 2-byte codes via ToUnicode
             text = cur_dec(raw)
         elif raw[:2] == b"\xfe\xff":  # UTF-16BE text string (PDF 1.7 §7.9.2.2)
@@ -1616,99 +1582,44 @@ def _extract_spans(
         spans.append(_Span(m[4], m[5], text, seq))
         seq += 1
 
-    def num(v: Any) -> float:
-        return float(v) if isinstance(v, (int, float)) else 0.0
-
-    for tok in _content_tokens(content):
-        if type(tok) is tuple:  # fused fast-path tokens
-            k0 = tok[0]
-            if k0 == "tmtj":  # set matrix + show in one event
-                tm = tlm = tok[1]
-                if in_text:
-                    emit(tok[2])
-            elif k0 == "tm6":
-                tm = tlm = tok[1]
-            elif k0 == "tj":
-                if in_text:
-                    emit(tok[1])
-            elif k0 == "tq":  # "(s) '": next line, then show
-                tlm = _pre_translate(tlm, 0.0, -leading)
-                tm = tlm
-                if in_text:
-                    emit(tok[1])
-            elif k0 == "td2":
-                tlm = _pre_translate(tlm, tok[1][0], tok[1][1])
-                tm = tlm
-            elif k0 == "tdtj":  # move + show in one event
-                tlm = _pre_translate(tlm, tok[1][0], tok[1][1])
-                tm = tlm
-                if in_text:
-                    emit(tok[2])
-            elif k0 == "cm6":
-                ctm = _mat_mul(tok[1], ctm)
-            else:  # ("tf", name)
-                if fonts:
-                    fname = tok[1]
-                    cur_dec = fonts.get(fname) if isinstance(fname, Name) else None
-            stack.clear()
-            continue
-        if not isinstance(tok, _Op):
-            stack.append(tok)
-            continue
-        op = tok
-        try:
-            if op == b"Tj":
-                if in_text and stack:
-                    emit(stack[-1])
-            elif op == b"Tm" and len(stack) >= 6:
-                a, b, c, d, e, f = (num(v) for v in stack[-6:])
-                tm = tlm = (a, b, c, d, e, f)
-            elif op == b"Td" and len(stack) >= 2:
-                tlm = _pre_translate(tlm, num(stack[-2]), num(stack[-1]))
-                tm = tlm
-            elif op == b"TD" and len(stack) >= 2:
-                leading = -num(stack[-1])
-                tlm = _pre_translate(tlm, num(stack[-2]), num(stack[-1]))
-                tm = tlm
-            elif op == b"TL" and len(stack) >= 1:
-                leading = num(stack[-1])
-            elif op == b"T*":
-                tlm = _pre_translate(tlm, 0.0, -leading)
-                tm = tlm
-            elif op == b"'" and len(stack) >= 1:
-                tlm = _pre_translate(tlm, 0.0, -leading)
-                tm = tlm
-                if in_text:
-                    emit(stack[-1])
-            elif op == b'"' and len(stack) >= 3:
-                tlm = _pre_translate(tlm, 0.0, -leading)
-                tm = tlm
-                if in_text:
-                    emit(stack[-1])
-            elif op == b"TJ" and len(stack) >= 1:
-                if in_text and isinstance(stack[-1], list):
-                    parts = [bytes(e) for e in stack[-1] if isinstance(e, (bytes, bytearray))]
-                    emit(b"".join(parts))
-            elif op == b"BT":
-                in_text = True
-                tm = tlm = _IDENTITY
-            elif op == b"ET":
-                in_text = False
-            elif op == b"q":
-                gstack.append(ctm)
-            elif op == b"Q":
-                if gstack:
-                    ctm = gstack.pop()
-            elif op == b"cm" and len(stack) >= 6:
-                a, b, c, d, e, f = (num(v) for v in stack[-6:])
-                ctm = _mat_mul((a, b, c, d, e, f), ctm)
-            elif op == b"Tf" and fonts and len(stack) >= 2:
-                fname = stack[-2]
-                cur_dec = fonts.get(fname) if isinstance(fname, Name) else None
-            # all other operators (Tc Tw Tz Ts Tr re W n Do gs colors...)
-            # consume their operands and are otherwise ignored
-        finally:
-            stack.clear()
+    for ev in _content_ops(content):
+        op = ev[0]
+        if op == "Tj" or op == "TJ":
+            if in_text:
+                emit(ev[1])
+        elif op == "Tm":
+            tm = tlm = ev[1]
+        elif op == "Td":
+            tlm = _pre_translate(tlm, ev[1], ev[2])
+            tm = tlm
+        elif op == "'":  # next line, then show
+            tlm = _pre_translate(tlm, 0.0, -leading)
+            tm = tlm
+            if in_text:
+                emit(ev[1])
+        elif op == "TD":
+            leading = -ev[2]
+            tlm = _pre_translate(tlm, ev[1], ev[2])
+            tm = tlm
+        elif op == "TL":
+            leading = ev[1]
+        elif op == "T*":
+            tlm = _pre_translate(tlm, 0.0, -leading)
+            tm = tlm
+        elif op == "BT":
+            in_text = True
+            tm = tlm = _IDENTITY
+        elif op == "ET":
+            in_text = False
+        elif op == "q":
+            gstack.append(ctm)
+        elif op == "Q":
+            if gstack:
+                ctm = gstack.pop()
+        elif op == "cm":
+            ctm = _mat_mul(ev[1], ctm)
+        elif fonts:  # "Tf"
+            cur_dec = fonts.get(ev[1])
     return spans
 
 
@@ -1732,10 +1643,6 @@ def _cluster_lines(spans: List[_Span]) -> List[List[_Span]]:
             cur.append(s)
     lines.append(cur)
     return lines
-
-
-def _assemble_lines(spans: List[_Span]) -> List[str]:
-    return [_join_line(ls) for ls in _xy_cut_lines(spans)]
 
 
 # -- recursive XY-cut (north_star: reading-order segmentation) ---------------
@@ -1933,16 +1840,7 @@ def extract_pdf_pages(data: bytes) -> List[str]:
     (the page-text contract of the reference backends, e.g.
     ``/root/reference/pdfparser/pymupdf_parser.py:57,76``).
     """
-    doc = PdfDocument(data)
-    pages = doc.pages()
-    if not pages:
-        raise PdfError("PDF has no pages")
-    out = []
-    for page in pages:
-        content = doc.page_content(page)
-        lines = _assemble_lines(_extract_spans(content, doc.page_fonts(page)))
-        out.append("".join(ln + "\n" for ln in lines))
-    return out
+    return extract_pdf_pages_and_tables(data)[0]
 
 
 def extract_pdf_pages_and_tables(
@@ -1950,8 +1848,7 @@ def extract_pdf_pages_and_tables(
 ) -> Tuple[List[str], List[List[List[str]]]]:
     """Like :func:`extract_pdf_pages`, plus detected cell tables (document
     order across pages). One parse, one span extraction — the table scan is
-    a length check per assembled baseline, so the text-only hot path cost
-    is unchanged."""
+    a length check per assembled baseline."""
     doc = PdfDocument(data)
     pages = doc.pages()
     if not pages:

@@ -211,52 +211,6 @@ def _prep_encryption(bodies: Sequence[bytes], mode: str = "rc4-128") -> Dict[str
             "mode": "aes128" if mode == "aes-128" else "rc4-128"}
 
 
-def _unesc(raw: bytes) -> bytes:
-    """Inverse of :func:`_esc_bytes` for our own emitted subset."""
-    out = bytearray()
-    i = 0
-    while i < len(raw):
-        c = raw[i]
-        if c == 0x5C:
-            nxt = raw[i + 1]
-            if 0x30 <= nxt <= 0x37:
-                out.append(int(raw[i + 1 : i + 4], 8))
-                i += 4
-            else:
-                out.append(nxt)
-                i += 2
-        else:
-            out.append(c)
-            i += 1
-    return bytes(out)
-
-
-def _map_literal_strings(body: bytes, fn) -> bytes:
-    out = bytearray()
-    i = 0
-    while i < len(body):
-        c = body[i]
-        if c == 0x28:  # '(' — balanced scan honoring backslash escapes
-            j = i + 1
-            depth = 1
-            while depth:
-                ch = body[j]
-                if ch == 0x5C:
-                    j += 2
-                    continue
-                if ch == 0x28:
-                    depth += 1
-                elif ch == 0x29:
-                    depth -= 1
-                j += 1
-            out += b"(" + fn(body[i + 1 : j - 1]) + b")"
-            i = j
-        else:
-            out.append(c)
-            i += 1
-    return bytes(out)
-
-
 import re as _re
 
 _LENGTH_RE = _re.compile(rb"/Length \d+")
@@ -269,7 +223,7 @@ def _encrypt_body(body: bytes, enc: Dict[str, object], num: int) -> bytes:
     head's /Length is rewritten to the ciphertext size."""
     import hashlib
 
-    from .pdfmodel import _object_key, _rc4
+    from .pdfmodel import _object_key, _parse_literal_string, _rc4
 
     file_key: bytes = enc["key"]  # type: ignore[assignment]
     mode = enc.get("mode", "rc4-128")
@@ -283,15 +237,23 @@ def _encrypt_body(body: bytes, enc: Dict[str, object], num: int) -> bytes:
         else:  # aes256: the file key directly
             okey = file_key
         E = lambda b: _aes_cbc_encrypt(okey, iv, b)  # noqa: E731
+
+    def enc_strings(b: bytes) -> bytes:
+        # each literal string, read by the parser's scanner, written encrypted
+        out, i = [], 0
+        while (k := b.find(b"(", i)) >= 0:
+            s, j = _parse_literal_string(b, k + 1)
+            out += [b[i:k], b"(", _esc_bytes(E(s)), b")"]
+            i = j
+        return b"".join(out) + b[i:]
+
     si = body.find(b"\nstream\n")
-    enc_str = lambda inner: _esc_bytes(E(_unesc(inner)))  # noqa: E731
     if si >= 0:
         head, payload = body[:si], body[si + 8 : -len(b"\nendstream")]
         data = E(payload)
-        head = _map_literal_strings(head, enc_str)
-        head = _LENGTH_RE.sub(b"/Length %d" % len(data), head, count=1)
+        head = _LENGTH_RE.sub(b"/Length %d" % len(data), enc_strings(head), count=1)
         return head + b"\nstream\n" + data + b"\nendstream"
-    return _map_literal_strings(body, enc_str)
+    return enc_strings(body)
 
 
 def _encrypt_dict_body(enc: Dict[str, object]) -> bytes:

@@ -69,10 +69,33 @@ def _pdf_name(raw: bytes) -> bytes:
     return b"/" + b"".join(bytes([c]) if c in _NAME_PLAIN else b"#%02X" % c for c in raw)
 
 
-def _pdf_literal(raw: bytes, octal: bool) -> bytes:
-    if octal:
-        return b"(" + b"".join(b"\\%03o" % c for c in raw) + b")"
-    return b"(" + b"".join(b"\\" + bytes([c]) if c in b"()\\" else bytes([c]) for c in raw) + b")"
+def _escaped(raw: bytes) -> bytes:
+    return b"".join(b"\\" + bytes([c]) if c in b"()\\" else bytes([c]) for c in raw)
+
+
+@st.composite
+def _pdf_literal(draw):
+    """(value, serialized) of a literal string, in one of its escape forms."""
+    raw = draw(st.binary(max_size=8))
+    form = draw(st.sampled_from(
+        ["escaped", "octal", "nested", "continued", "unknown", "octal+digit"]))
+    if form == "octal":
+        return raw, b"(" + b"".join(b"\\%03o" % c for c in raw) + b")"
+    if form == "nested":  # unescaped balanced parentheses belong to the value
+        return b"(" + raw + b")", b"((" + _escaped(raw) + b"))"
+    if form == "continued":  # a backslash before a line end drops both
+        k = draw(st.integers(0, len(raw)))
+        eol = draw(st.sampled_from([b"\n", b"\r\n"]))
+        return raw, b"(" + _escaped(raw[:k]) + b"\\" + eol + _escaped(raw[k:]) + b")"
+    if form == "unknown":  # an unknown escape is its byte
+        return raw + b"q", b"(" + _escaped(raw) + b"\\q)"
+    if form == "octal+digit":  # 1-3 octal digits, then a digit that is not one of them
+        c = draw(st.integers(0, 255))
+        width = draw(st.integers(len(b"%o" % c), 3))
+        d = draw(st.sampled_from(b"0123456789" if width == 3 else b"89"))
+        octal = b"\\%0*o" % (width, c)
+        return raw + bytes([c, d]), b"(" + _escaped(raw) + octal + bytes([d]) + b")"
+    return raw, b"(" + _escaped(raw) + b")"
 
 
 _leaf = st.one_of(
@@ -81,7 +104,7 @@ _leaf = st.one_of(
     st.integers(-10**12, 10**12).map(lambda n: (n, b"%d" % n)),
     st.from_regex(rb"\A[+-]?(?:\d{1,6}\.\d{0,4}|\.\d{1,4})\Z").map(lambda t: (float(t), t)),
     st.binary(max_size=6).map(lambda r: (pm.Name(r.decode("latin-1")), _pdf_name(r))),
-    st.tuples(st.binary(max_size=8), st.booleans()).map(lambda t: (t[0], _pdf_literal(*t))),
+    _pdf_literal(),
     st.binary(max_size=8).map(lambda r: (r, b"<" + r.hex().encode() + b">")),
     st.tuples(st.integers(0, 10**6), st.integers(0, 65535)).map(
         lambda t: (pm.Ref(*t), b"%d %d R" % t)),
@@ -445,6 +468,55 @@ def test_utf16be_text_string():
     assert spans[0].text == "Hi! \U0001f600"  # surrogate pair decoded
 
 
+# each fused _CTOK_RE idiom (with the alternative it must match) and its
+# generic spelling: no fused alternative reads a comment line between
+# operands and operator, so the "%c" lines force the token-by-token path
+_FUSED_VS_GENERIC = [
+    (b"1 0 0 1 72 700 Tm (Hi) Tj", "tmtjs", b"1 0 0 1 72 700 %c\nTm (Hi) %c\nTj"),
+    (b"1 0 0 1 72 700 Tm <4869> Tj", "tmhs", b"1 0 0 1 72 700 %c\nTm <4869> %c\nTj"),
+    (b"1 0 0 1 72 700 Tm", "tm6", b"1 0 0 1 72 700 %c\nTm"),
+    (b"10 -14 Td (Hi) Tj", "tdjs", b"10 -14 %c\nTd (Hi) %c\nTj"),
+    (b"10 -14 Td", "td2", b"10 -14 %c\nTd"),
+    (b"<4869> Tj", "tjh", b"<4869> %c\nTj"),
+    (b"(Hi) Tj", "tjs", b"(Hi) %c\nTj"),
+    (b"(a\\(b\\) \\101\\\nc) '", "tqs", b"(a\\(b\\) \\101\\\nc) %c\n'"),
+    (b"2 0 0 2 10 10 cm", "cm6", b"2 0 0 2 10 10 %c\ncm"),
+    (b"/F2 10 Tf", "tfn", b"/F2 10 %c\nTf"),
+]
+
+
+@pytest.mark.parametrize("fused,alt,generic", _FUSED_VS_GENERIC,
+                         ids=[a for _, a, _ in _FUSED_VS_GENERIC])
+def test_fused_and_generic_spellings_agree(fused, alt, generic):
+    assert pm._CTOK_RE.match(fused).lastgroup == alt
+    fonts = {"F2": pm._Type0Decoder({0x4869: "Z"}, 2)}  # a Type0 font: "Hi" shows as "Z"
+
+    def page(snippet):
+        # around the snippet: leading for "'", a show after bare moves and
+        # font switches, and a cm inside q/Q that must not outlive the Q
+        return (b"BT /F1 10 Tf 14 TL 1 0 0 1 72 720 Tm ET q BT " + snippet
+                + b" [(Hi)] TJ ET Q BT 1 0 0 1 72 600 Tm (after) Tj ET")
+
+    spans = [[(s.x, s.y, s.text, s.seq) for s in pm._extract_spans(page(c), fonts)]
+             for c in (fused, generic)]
+    assert spans[0] == spans[1]
+    assert list(pm._content_ops(fused)) == list(pm._content_ops(generic))
+
+
+def test_unterminated_string_ends_the_content_stream():
+    # an unterminated '(' runs to the end of the stream, so the stream is
+    # scanned once: each stray '(' used to rescan the rest of it (~5 s here)
+    import time
+
+    content = b"BT 1 0 0 1 5 5 Tm (kept) Tj " + b"( " * 2000 + b"(x) Tj " * 2000 + b"ET"
+    t0 = time.perf_counter()
+    spans = pm._extract_spans(content)
+    assert time.perf_counter() - t0 < 1.0
+    assert [(s.x, s.y, s.text) for s in spans] == [(5.0, 5.0, "kept")]
+    with pytest.raises(pm.PdfError, match="unterminated literal string"):
+        pm.parse_value(b"( " * 2000 + b"(x) Tj " * 2000, 0)
+
+
 def test_bogus_encrypt_dict_rejected():
     # /Encrypt pointing at a nonexistent object: still PdfError, not garbage
     pdf = pdf_from_lines([["secret"]])
@@ -590,8 +662,8 @@ def test_malformed_encryption_fields_raise_pdferror(old, new):
 
 
 def test_long_digit_run_in_content_stream():
-    # a Flate splice can leave thousands of hex digits bare: past int()'s
-    # digit limit the number is skipped, and the fused matrix alternatives
+    # a Flate splice can leave thousands of hex digits bare: the run reads
+    # as one number (an infinite float), and the fused matrix alternatives
     # must not retry every split of the run
     content = b"BT /F1 10 Tf 1 0 0 1 72 700 Tm " + b"7" * 6000 + b"> (ok) Tj ET"
     assert pm.extract_pdf_text(_classic_pdf(
