@@ -14,8 +14,12 @@ Design for Spark: every rule is stated once, per document (the
 reference's own cost profile — one regex pass or line-walk per doc), and
 dispatched once per document inside an Arrow batch, never per output row;
 ``extract_metadata_batch`` maps :func:`extract_metadata` over a pandas
-Series for callers that hold one. All functions are pure and import-safe
-on executors.
+Series for callers that hold one. :func:`document_fields` composes the
+rules into the six field columns of one extracted document — the
+table → column → inline strategy chain, the summary scan surface and the
+summary merge are stated there once, for the extraction kernel and the
+golden-fixture generator alike. All functions are pure and import-safe on
+executors.
 
 Deliberate divergences (SURVEY §7.5): none in semantics; only code shape.
 Quirks preserved on purpose: malformed number → 0.0 (utils.py:547-548),
@@ -44,6 +48,7 @@ __all__ = [
     "is_valid_parse",
     "verify_turnover",
     "account_no_from_url",
+    "document_fields",
 ]
 
 METADATA_KEYS = (
@@ -60,6 +65,7 @@ METADATA_KEYS = (
     "closing_balance",
 )
 TXN_KEYS = ("date", "description", "user", "debit", "credit", "balance")
+_SUMMARY_KEYS = ("total_debit", "total_credit", "opening_balance", "closing_balance")
 
 # --- header label patterns (semantics of utils.py:23-44; layout: the value
 # may follow the label on the same line after ':' or sit on the next lines,
@@ -292,12 +298,7 @@ def transactions_from_table_rows(tables: List[List[List[Optional[str]]]]) -> Lis
 
 def extract_summary_totals(text: str) -> Dict[str, Optional[str]]:
     """Summary-section label→value mapping; contract of utils.py:551-649."""
-    result: Dict[str, Optional[str]] = {
-        "total_debit": None,
-        "total_credit": None,
-        "opening_balance": None,
-        "closing_balance": None,
-    }
+    result: Dict[str, Optional[str]] = dict.fromkeys(_SUMMARY_KEYS)
     lines = [ln.strip() for ln in text.split("\n")]
 
     labels: List[Tuple[str, int]] = []
@@ -447,4 +448,66 @@ def verify_turnover(
         "credit_discrepancy": credit_disc,
         "status": status,
         "message": message,
+    }
+
+
+def document_fields(
+    kind: str,
+    text: str,
+    label_text: str,
+    tables: List[List[List[Optional[str]]]],
+    url_stem: str,
+    verify: bool = True,
+) -> Dict[str, object]:
+    """The field layer of one extracted document → its six field columns:
+    ``metadata``, ``transactions``, ``n_transactions``, ``txn_strategy``,
+    ``valid`` and ``verification`` (None when ``verify`` is off).
+
+    ``text`` is the document text (all PDF pages; the HTML main content),
+    ``label_text`` the header label-scan surface (the PDF's first page; ALL
+    HTML blocks — header label/value lines are short and link-poor, so the
+    boilerplate classifier rightly drops them from the content text, but
+    they are exactly what the field extractor needs), ``tables`` the
+    document's table cell rows and ``url_stem`` the filename the account
+    number falls back to (pymupdf_parser.py:62-71).
+    """
+    meta = extract_metadata(label_text)
+    meta["account_no"] = account_no_from_url(url_stem, meta["account_no"])
+    # strategy fallback chain (S2 semantics): cell tables first
+    # (pdfplumber_parser.py:212-250 tries extract_tables() before any text
+    # strategy), then the column-layout cursor walk, then inline one-line
+    # rows (PDF only). NOTE on text strategies: the reference's pdfplumber
+    # path tries inline before the column walk; we deliberately invert —
+    # the column walk takes precedence for pymupdf parity (the primary
+    # backend). Orders coincide whenever exactly one strategy matches (true
+    # for the whole corpus).
+    txns: List[Dict[str, str]] = []
+    strategy = "none"
+    if tables:
+        txns = transactions_from_table_rows(tables)
+        if txns:
+            strategy = "table"
+    if not txns and text:
+        txns = extract_transactions(text)
+        if txns:
+            strategy = "column"
+    if not txns and kind == "pdf" and text:
+        txns = extract_transactions_inline(text)
+        if txns:
+            strategy = "inline"
+    # summary labels live in ALL blocks for html (the content classifier
+    # rightly drops short label lines); for pdf the full multi-page text is
+    # the scan surface
+    summary = extract_summary_totals(label_text if kind == "html" else text)
+    for k in _SUMMARY_KEYS:
+        meta[k] = summary.get(k) or ""  # merge rule: only truthy values
+    return {
+        "metadata": meta,
+        "transactions": txns,
+        "n_transactions": len(txns),
+        "txn_strategy": strategy,
+        "valid": is_valid_parse(meta, txns),
+        # summary passed through: the line scan already ran above
+        "verification": (verify_turnover(txns, 0.01, summary=summary)
+                         if verify else None),
     }

@@ -6,13 +6,18 @@ classification (boilerpipe-style block features)"). There is no reference
 analog — the reference is PDF-only — so the semantics here are pinned by our
 own golden fixtures (FIXTURES.md §3).
 
-Pipeline: bytes → tag/text token stream → text blocks (split at block-level
-tags, script/style/head content dropped, entities decoded, whitespace
-collapsed) → per-block features (word count, link density, enclosing
-semantic container) → densitometric classification (the published boilerpipe
+Pipeline: bytes → one tag walk over the decoded string, which yields both
+text blocks (split at block-level tags, script/style/head content dropped,
+entities decoded, whitespace collapsed) and ``<table>`` cell rows → per-block
+features (word count, link density, enclosing semantic container) →
+densitometric classification (the published boilerpipe
 ``NumWordsRulesClassifier`` decision tree, Kohlschütter et al., WSDM 2010)
 with a DOM-heuristic override for ``nav/header/footer/aside/form`` — →
-main-content text = classified blocks joined with ``"\\n"``.
+main-content text = classified blocks joined with ``"\\n"``. An HTML page
+with a table is tokenized once: ``extract_html_blocks``,
+``extract_html_tables`` and ``extract_html_text`` are views of
+``extract_html_blocks_and_tables``. ``extract_links`` and
+``extract_structured_data`` are separate scans with their own rules.
 
 Pure ``bytes -> str``; safe for an Arrow batch kernel (one Python dispatch
 per document).
@@ -21,10 +26,11 @@ per document).
 from __future__ import annotations
 
 import re
-from typing import List, NamedTuple
+from typing import List, NamedTuple, Tuple
 
-__all__ = ["Block", "extract_html_blocks", "extract_html_text",
-           "extract_html_tables", "extract_links", "extract_structured_data"]
+__all__ = ["Block", "extract_html_blocks", "extract_html_blocks_and_tables",
+           "extract_html_text", "extract_html_tables", "extract_links",
+           "extract_structured_data"]
 
 
 class Block(NamedTuple):
@@ -48,6 +54,7 @@ _RAW_TEXT_TAGS = frozenset({"script", "style", "noscript", "template", "svg", "t
 # containers that bias classification
 _BOILER_CONTAINERS = frozenset({"nav", "header", "footer", "aside", "form", "head", "title"})
 _CONTENT_CONTAINERS = frozenset({"article", "main"})
+_SEMANTIC_CONTAINERS = _BOILER_CONTAINERS | _CONTENT_CONTAINERS
 _VOID_TAGS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
@@ -87,7 +94,9 @@ def _decode_entity(m: re.Match) -> str:
     if body.startswith("#"):
         try:
             cp = int(body[2:], 16) if body[1] in "xX" else int(body[1:])
-            if 0 < cp <= 0x10FFFF:
+            # a surrogate code point is no character (Arrow cannot encode a
+            # lone one): kept as the reference text, like out-of-range ones
+            if 0 < cp <= 0x10FFFF and not 0xD800 <= cp <= 0xDFFF:
                 return chr(cp)
         except ValueError:
             pass
@@ -193,17 +202,34 @@ def _decode_html_bytes(data: bytes) -> str:
     return data.decode("latin-1")
 
 
-def extract_html_blocks(data) -> List[Block]:
-    """Tokenize HTML (bytes, or an already-decoded ``str``) into classified
-    text blocks. Accepting ``str`` lets a caller that also needs the table
-    walk decode the payload ONCE (see operators/extract.py) instead of
-    per-extractor."""
+def extract_html_blocks_and_tables(data) -> Tuple[List[Block], List[List[List[str]]]]:
+    """One tag walk over HTML (bytes, or an already-decoded ``str``) →
+    ``(blocks, tables)``.
+
+    ``blocks`` are the classified text blocks. ``tables`` are the
+    ``<table>`` structures as rows of entity-decoded, tag-stripped cell
+    strings — the HTML twin of the PDF span-cluster table detection, so an
+    HTML bank statement feeds the SAME table→transactions strategy chain
+    (``fields.document_fields``) as a PDF one. Each text run feeds both the
+    current block and the open cell; each tag event drives both the
+    link/container state and the table/row/cell stack.
+
+    Table tolerances matching real markup: unclosed ``<td>``/``<tr>``
+    (implicitly closed by the next cell/row/table boundary, as browsers
+    do), ``<th>`` treated as a cell, nested tables (inner table is its own
+    entry, listed before the outer one; its cells don't leak into the outer
+    row), raw-text elements dropped, comments skipped. Tables with no rows
+    are omitted.
+    """
     html = data if isinstance(data, str) else _decode_html_bytes(data)
 
     blocks: List[Block] = []
     cur = _BlockBuilder("body")
     container_stack: List[str] = []
     link_depth = 0
+    tables: List[List[List[str]]] = []
+    # open tables, innermost last: [rows, cur_row_or_None, cell_pieces_or_None]
+    tstack: List[list] = []
     lower = html.translate(_ASCII_LOWER)
 
     def flush() -> None:
@@ -217,15 +243,40 @@ def extract_html_blocks(data) -> List[Block]:
             )
         cur = _BlockBuilder(container_stack[-1] if container_stack else "body")
 
+    def add_text(text: str) -> None:
+        cur.add(text, link_depth > 0)
+        if tstack and tstack[-1][2] is not None:
+            tstack[-1][2].append(text)
+
+    def close_cell() -> None:
+        t = tstack[-1]
+        if t[2] is not None:
+            t[1].append(_clean_text("".join(t[2])).strip())
+            t[2] = None
+
+    def close_row() -> None:
+        t = tstack[-1]
+        close_cell()
+        if t[1] is not None:
+            if any(c for c in t[1]):
+                t[0].append(t[1])
+            t[1] = None
+
+    def close_table() -> None:
+        close_row()
+        rows = tstack.pop()[0]
+        if rows:
+            tables.append(rows)
+
     i = 0
     n = len(html)
     while i < n:
         lt = html.find("<", i)
         if lt < 0:
-            cur.add(html[i:], link_depth > 0)
+            add_text(html[i:])
             break
         if lt > i:
-            cur.add(html[i:lt], link_depth > 0)
+            add_text(html[i:lt])
         i = lt
         nxt_ch = html[lt + 1 : lt + 2]  # one char probe replaces 3 startswith
         if nxt_ch == "!":
@@ -268,124 +319,57 @@ def extract_html_blocks(data) -> List[Block]:
                 link_depth += 1
             continue
 
-        if name in _BLOCK_TAGS:
-            flush()
-            semantic = name if name in (_BOILER_CONTAINERS | _CONTENT_CONTAINERS) else None
-            if semantic:
-                if closing:
-                    if name in container_stack:
-                        while container_stack and container_stack[-1] != name:
-                            container_stack.pop()
-                        if container_stack:
-                            container_stack.pop()
-                elif not self_closing:
-                    container_stack.append(name)
-                cur.container = container_stack[-1] if container_stack else "body"
+        if name not in _BLOCK_TAGS:
+            continue  # inline tags: their text flows through
+        flush()
+        if name in _SEMANTIC_CONTAINERS:
+            if closing:
+                if name in container_stack:
+                    while container_stack and container_stack[-1] != name:
+                        container_stack.pop()
+                    if container_stack:
+                        container_stack.pop()
+            elif not self_closing:
+                container_stack.append(name)
+            cur.container = container_stack[-1] if container_stack else "body"
+
+        # table, tr, td and th are block tags too: the table stack
+        if name == "table":
+            if closing:
+                if tstack:
+                    close_table()
+            elif not self_closing:
+                tstack.append([[], None, None])
+        elif tstack and name == "tr":
+            close_row()
+            if not closing:
+                tstack[-1][1] = []
+        elif tstack and name in ("td", "th"):
+            close_cell()
+            if not closing:
+                if tstack[-1][1] is None:  # cell before any <tr>: implicit row
+                    tstack[-1][1] = []
+                tstack[-1][2] = []
     flush()
-    return _classify(blocks)
+    # truncated markup: close whatever table is still open, outermost last
+    while tstack:
+        close_table()
+    return _classify(blocks), tables
 
 
-def extract_html_text(data: bytes) -> str:
-    """Main-content text: classified content blocks joined with ``"\\n"``."""
-    return "\n".join(b.text for b in extract_html_blocks(data) if b.is_content)
+def extract_html_blocks(data) -> List[Block]:
+    """Classified text blocks of HTML bytes or ``str``."""
+    return extract_html_blocks_and_tables(data)[0]
 
 
 def extract_html_tables(data) -> List[List[List[str]]]:
-    """``<table>`` structure → rows of entity-decoded, tag-stripped cell
-    strings — the HTML twin of the PDF span-cluster table detection, so an
-    HTML bank statement feeds the SAME table→transactions strategy chain
-    (``fields.transactions_from_table_rows``) as a PDF one. Accepts bytes
-    or an already-decoded ``str`` (decode-once callers).
+    """``<table>`` rows of cell strings of HTML bytes or ``str``."""
+    return extract_html_blocks_and_tables(data)[1]
 
-    Tolerances matching real markup: unclosed ``<td>``/``<tr>`` (implicitly
-    closed by the next cell/row/table boundary, as browsers do), ``<th>``
-    treated as a cell, nested tables (inner table is its own entry; its
-    cells don't leak into the outer row), raw-text elements dropped,
-    comments skipped. Tables with no rows are omitted.
-    """
-    html = data if isinstance(data, str) else _decode_html_bytes(data)
-    lower = html.translate(_ASCII_LOWER)
-    out: List[List[List[str]]] = []
-    # stack of open tables: each is [rows, cur_row_or_None, cell_pieces_or_None]
-    stack: List[list] = []
 
-    def close_cell() -> None:
-        t = stack[-1]
-        if t[2] is not None:
-            t[1].append(_clean_text("".join(t[2])).strip())
-            t[2] = None
-
-    def close_row() -> None:
-        t = stack[-1]
-        close_cell()
-        if t[1] is not None:
-            if any(c for c in t[1]):
-                t[0].append(t[1])
-            t[1] = None
-
-    i = 0
-    n = len(html)
-    while i < n:
-        lt = html.find("<", i)
-        if lt < 0:
-            if stack and stack[-1][2] is not None:
-                stack[-1][2].append(html[i:])
-            break
-        if lt > i and stack and stack[-1][2] is not None:
-            stack[-1][2].append(html[i:lt])
-        i = lt
-        if html.startswith("<!--", i):
-            end = html.find("-->", i + 4)
-            i = n if end < 0 else end + 3
-            continue
-        gt = html.find(">", i + 1)
-        if gt < 0:
-            break
-        tag_body = html[i + 1 : gt]
-        i = gt + 1
-        m = _TAG_NAME_RE.match(tag_body)
-        if not m:
-            continue
-        name = m.group(1).lower()
-        closing = tag_body.startswith("/")
-        self_closing = tag_body.rstrip().endswith("/") or name in _VOID_TAGS
-        if not closing and name in _RAW_TEXT_TAGS and not self_closing:
-            end = lower.find("</" + name, i)
-            if end < 0:
-                break
-            i = lower.find(">", end)
-            i = n if i < 0 else i + 1
-            continue
-        if name == "table":
-            if closing:
-                if stack:
-                    close_row()
-                    rows = stack.pop()[0]
-                    if rows:
-                        out.append(rows)
-            elif not self_closing:
-                stack.append([[], None, None])
-            continue
-        if not stack:
-            continue
-        if name == "tr":
-            close_row()
-            if not closing:
-                stack[-1][1] = []
-        elif name in ("td", "th"):
-            close_cell()
-            if not closing:
-                if stack[-1][1] is None:  # cell before any <tr>: implicit row
-                    stack[-1][1] = []
-                stack[-1][2] = []
-        # all other tags inside a cell are stripped (their text flows through)
-    # truncated markup: close whatever is still open, outermost last
-    while stack:
-        close_row()
-        rows = stack.pop()[0]
-        if rows:
-            out.append(rows)
-    return out
+def extract_html_text(data) -> str:
+    """Main-content text: classified content blocks joined with ``"\\n"``."""
+    return "\n".join(b.text for b in extract_html_blocks(data) if b.is_content)
 
 
 # ---------------------------------------------------------------------------

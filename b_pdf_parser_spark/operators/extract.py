@@ -49,10 +49,12 @@ import re as _re
 
 from .. import fields
 from . import arrow_batch, arrow_kernel
-from ..htmlmodel import _decode_html_bytes, extract_html_blocks, extract_html_tables
-
-_TABLE_HINT_RE = _re.compile(r"<table", _re.I)
+from ..htmlmodel import extract_html_blocks_and_tables
 from ..pdfmodel import PdfError, extract_pdf_pages_and_tables
+
+# the kernel walks every HTML page once for blocks and tables together; only
+# perfbench/replay.py imports this table hint, to time its table pass apart
+_TABLE_HINT_RE = _re.compile(r"<table", _re.I)
 
 __all__ = [
     "EXTRACTED_SCHEMA",
@@ -136,25 +138,16 @@ def _extract_one(url: str, payload: Optional[bytes]) -> dict:
             row["tables"] = tables
         else:
             row["kind"] = "html"
-            # decode ONCE: blocks, the table hint and the table walk all
-            # read the same decoded string (a raw-byte hint would miss
-            # UTF-16 pages, whose tag bytes are interleaved with NULs)
-            html = _decode_html_bytes(payload)
-            blocks = extract_html_blocks(html)
+            # one tag walk yields the blocks and the <table> rows; HTML
+            # tables feed the same table→transactions strategy as PDF
+            # span-cluster tables (an HTML bank statement and a PDF one are
+            # the same document to the field layer)
+            blocks, row["tables"] = extract_html_blocks_and_tables(payload)
             row["text"] = "\n".join(b.text for b in blocks if b.is_content)
-            # label scans (metadata, summary totals) run over ALL blocks:
-            # header label/value lines are short and link-poor, so the
-            # boilerplate classifier rightly drops them from the content
-            # text — but they are exactly what the field extractor needs
+            # label scans (metadata, summary totals) run over ALL blocks
+            # (see fields.document_fields)
             row["first_page"] = "\n".join(b.text for b in blocks)
             row["n_pages"] = 1
-            # HTML <table> rows feed the same table→transactions strategy
-            # as PDF span-cluster tables (an HTML bank statement and a PDF
-            # one are the same document to the field layer). One cheap
-            # C-level scan gates the full table walk — most pages have no
-            # table at all
-            if _TABLE_HINT_RE.search(html):
-                row["tables"] = extract_html_tables(html)
     except PdfError as e:
         row["kind"] = "error"
         row["error"] = f"pdf: {e}"
@@ -188,63 +181,12 @@ def make_extract_batch(verify: bool = True):
             rows = []
             for d, url in zip(per_doc, urls):
                 full_text = d["text"] or ""
-                meta = fields.extract_metadata(d["first_page"] or "")
-                meta["account_no"] = fields.account_no_from_url(_url_stem(url), meta["account_no"])
-                # strategy fallback chain (S2 semantics): cell tables first
-                # (pdfplumber_parser.py:212-250 tries extract_tables() before
-                # any text strategy), then the column-layout cursor walk, then
-                # inline one-line rows. NOTE on text strategies: the
-                # reference's pdfplumber path tries inline before the column
-                # walk; we deliberately invert — the column walk takes
-                # precedence for pymupdf parity (the primary backend). Orders
-                # coincide whenever exactly one strategy matches (true for
-                # the whole corpus).
-                txns, strategy = [], "none"
-                if d["tables"]:
-                    txns = fields.transactions_from_table_rows(d["tables"])
-                    if txns:
-                        strategy = "table"
-                if not txns and full_text:
-                    txns = fields.extract_transactions(full_text)
-                    if txns:
-                        strategy = "column"
-                if not txns and d["kind"] == "pdf" and full_text:
-                    txns = fields.extract_transactions_inline(full_text)
-                    if txns:
-                        strategy = "inline"
-                # summary labels live in ALL blocks for html (the content
-                # classifier rightly drops short label lines); for pdf the
-                # full multi-page text is the scan surface
-                scan_text = (
-                    (d["first_page"] or "") if d["kind"] == "html" else full_text
-                )
-                summary = (
-                    fields.extract_summary_totals(scan_text)
-                    if scan_text
-                    else dict.fromkeys(
-                        ("total_debit", "total_credit", "opening_balance", "closing_balance")
-                    )
-                )
-                for k in ("total_debit", "total_credit", "opening_balance", "closing_balance"):
-                    meta[k] = summary.get(k) or ""  # merge rule: only truthy values
-                # summary passed through: the line scan already ran above
-                ver = fields.verify_turnover(txns, 0.01, summary=summary) if verify else None
-                rows.append(
-                    {
-                        "kind": d["kind"],
-                        "text": d["text"],
-                        "metadata": meta,
-                        "transactions": txns,
-                        "n_transactions": len(txns),
-                        "txn_strategy": strategy,
-                        "valid": fields.is_valid_parse(meta, txns),
-                        "verification": ver,
-                        "n_pages": d["n_pages"],
-                        "payload_bytes": d["payload_bytes"],
-                        "n_tokens": len(full_text.split()),
-                        "error": d["error"],
-                    }
-                )
+                row = fields.document_fields(d["kind"], full_text, d["first_page"],
+                                             d["tables"], _url_stem(url), verify)
+                for k in ("kind", "text", "n_pages", "payload_bytes", "error"):
+                    row[k] = d[k]
+                row["n_tokens"] = len(full_text.split())
+                rows.append(row)
             cols = {k: [r[k] for r in rows] for k in _BODY_COLUMNS}
             for k in ("url", "warc_ts", "partition_id"):
                 cols[k] = b[k]

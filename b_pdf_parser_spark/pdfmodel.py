@@ -38,6 +38,7 @@ the batch).
 
 from __future__ import annotations
 
+import math
 import re
 import struct
 import zlib
@@ -268,8 +269,9 @@ def parse_value(buf: bytes, i: int) -> Tuple[Any, int]:
 # ---------------------------------------------------------------------------
 
 
-# output cap of one Flate stream: zlib reaches ~1030:1, so a small stream in
-# outside input could otherwise inflate to gigabytes inside a worker
+# output cap of one Flate or LZW stream: zlib reaches ~1030:1 and LZW past
+# 2000:1, so a small stream in outside input could otherwise inflate to
+# gigabytes inside a worker
 _FLATE_MAX = 256 << 20
 
 
@@ -293,7 +295,9 @@ def _flate(data: bytes) -> bytes:
 def _lzw(data: bytes, early_change: int = 1) -> bytes:
     """LZWDecode (PDF 1.7 §7.4.4 — the TIFF/GIF variable-code LZW with
     9→12-bit codes, clear=256, EOD=257, and the spec's EarlyChange code-width
-    bump one code before the table fills). Common in 1990s-era web PDFs."""
+    bump one code before the table fills). Common in 1990s-era web PDFs.
+    The table stops growing at 4,096 entries (12-bit codes reach no
+    further) and the output is capped at ``_FLATE_MAX``."""
     out = bytearray()
     table: List[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     width = 9
@@ -319,13 +323,16 @@ def _lzw(data: bytes, early_change: int = 1) -> bytes:
                 entry = table[code]
             elif code < len(table):
                 entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):
+                if len(table) < 4096:
+                    table.append(prev + entry[:1])
+            elif code == len(table):  # KwKwK: a 12-bit code keeps it ≤ 4,095
                 entry = prev + prev[:1]
                 table.append(entry)
             else:
                 raise PdfError("LZW: code out of range")
             out += entry
+            if len(out) > _FLATE_MAX:
+                raise PdfError(f"LZW stream decodes past {_FLATE_MAX} bytes")
             prev = entry
             if len(table) + early_change >= (1 << width) and width < 12:
                 width += 1
@@ -1409,10 +1416,10 @@ def _glyph_char(name: str, code: int) -> str:
         return got
     m = _UNI_NAME_RE.match(name)
     if m:
-        try:
-            return chr(int(m.group(1) or m.group(2), 16))
-        except (ValueError, OverflowError):
-            pass
+        cp = int(m.group(1) or m.group(2), 16)
+        # surrogates and values past Unicode name no character
+        if cp <= 0x10FFFF and not 0xD800 <= cp <= 0xDFFF:
+            return chr(cp)
     return chr(code)
 
 
@@ -1540,9 +1547,11 @@ class _Type0Decoder:
             code = int.from_bytes(raw[i : i + step], "big")
             s = get(code)
             if s is None:
-                # identity fallback; codes beyond Unicode (possible at
-                # 3-4 byte widths) have no codepoint → replacement char
-                s = chr(code) if 0 < code <= 0x10FFFF else ("�" if code else "")
+                # identity fallback; surrogate codes and codes beyond
+                # Unicode (possible at 3-4 byte widths) have no codepoint →
+                # replacement char, as the fast path's 'replace' yields
+                ok = 0 < code <= 0x10FFFF and not 0xD800 <= code <= 0xDFFF
+                s = chr(code) if ok else ("�" if code else "")
             out.append(s)
         return "".join(out)
 
@@ -1579,6 +1588,8 @@ def _extract_spans(
         if text == "":
             return
         m = tm if ctm is _IDENTITY else _mat_mul(tm, ctm)
+        if not (math.isfinite(m[4]) and math.isfinite(m[5])):
+            return  # a number past float range: no place on the page
         spans.append(_Span(m[4], m[5], text, seq))
         seq += 1
 

@@ -157,6 +157,36 @@ def test_extract_html_tables_total(data):
             assert all(isinstance(c, str) for c in row)
 
 
+def test_one_walk_feeds_blocks_and_tables():
+    # a cell's text is both a block and a table cell; text between the
+    # table tags reaches the blocks only
+    from b_pdf_parser_spark.htmlmodel import extract_html_blocks_and_tables
+
+    html = (b"<p>intro <b>bold</b></p><table>stray<tr><td>01/01/24</td>"
+            b"<td><a href='/x'>A &amp; B</a></td></tr></table><p>tail")
+    blocks, tables = extract_html_blocks_and_tables(html)
+    assert [b.text for b in blocks] == ["intro bold", "stray", "01/01/24",
+                                        "A & B", "tail"]
+    assert blocks[3].link_chars == len("A & B")
+    assert tables == [[["01/01/24", "A & B"]]]
+
+
+def test_surrogate_entity_keeps_its_reference_text():
+    # a surrogate code point is no character; Arrow cannot encode a lone
+    # one, so a decoded &#xD800; once failed the whole extraction batch
+    import pandas as pd
+
+    from b_pdf_parser_spark.operators.extract import make_extract_batch
+
+    html = b"<article><p>bad &#xD800; x &#55296;</p></article>"
+    assert extract_html_blocks(html)[0].text == "bad &#xD800; x &#55296;"
+    frame = pd.DataFrame({"url": ["http://x/s.html"], "html": [html],
+                          "warc_ts": [None], "partition_id": [0]})
+    (batch,) = list(make_extract_batch()(iter([frame])))
+    (row,) = batch.to_pylist()
+    assert row["kind"] == "html" and row["error"] is None
+
+
 def test_tables_survive_unicode_case_length_changes():
     # İ before a <style> block once desynced the raw-text skip offsets,
     # mis-framing the following <table>

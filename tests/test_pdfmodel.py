@@ -292,6 +292,41 @@ def test_flate_output_capped(monkeypatch):
     assert pm._flate(zlib.compress(bytes(1 << 16))) == bytes(1 << 16)
 
 
+def _lzw_codes(codes):
+    # MSB-first 9→12-bit LZWDecode packing with EarlyChange 1, one table
+    # entry per code after the first (no clear codes)
+    acc = nbits = 0
+    out = bytearray()
+    size, width = 258, 9
+    for k, code in enumerate(codes):
+        acc, nbits = (acc << width) | code, nbits + width
+        while nbits >= 8:
+            nbits -= 8
+            out.append((acc >> nbits) & 0xFF)
+        acc &= (1 << nbits) - 1
+        size += k > 0 and size < 4096
+        if size + 1 >= 1 << width and width < 12:
+            width += 1
+    if nbits:
+        out.append((acc << (8 - nbits)) & 0xFF)
+    return bytes(out)
+
+
+def test_lzw_output_capped(monkeypatch):
+    # a run of zeros: each code repeats the newest entry, one byte longer,
+    # until the table is full; then code 4095 repeats the longest entry
+    codes = [0] + list(range(258, 4096)) + [4095] * 5000
+    size = sum(range(1, 3840)) + 3839 * 5000
+    bomb = _lzw_codes(codes)
+    assert len(bomb) < 14000 and size > 1500 * len(bomb)
+    monkeypatch.setattr(pm, "_FLATE_MAX", 1 << 16)
+    with pytest.raises(pm.PdfError, match="decodes past"):
+        pm._lzw(bomb)
+    # under the cap it decodes; the full table stops growing at 4,096
+    monkeypatch.setattr(pm, "_FLATE_MAX", size)
+    assert pm._lzw(bomb) == bytes(size)
+
+
 def test_flate_bomb_is_an_error_row(monkeypatch):
     import pandas as pd
 
@@ -363,6 +398,18 @@ def test_type0_identity_fallback_without_tounicode():
     assert dec(b"\x00A\x00B") == "AB"
     dec2 = pm._Type0Decoder({0x41: "Z"}, 2)
     assert dec2(b"\x00A\x00B") == "ZB"
+    # an unmapped surrogate-range code has no codepoint: U+FFFD, on the
+    # generic path (a map key past U+D800) as on the fast one
+    for cmap in ({}, {0xE000: "x"}):
+        assert pm._Type0Decoder(cmap, 2)(b"\xd8\x00\x00A") == "\ufffdA"
+
+
+def test_surrogate_glyph_names_fall_back_to_the_code():
+    # a lone surrogate in a span would make the row unencodable for Arrow
+    assert pm._glyph_char("uniD800", 65) == "A"
+    assert pm._glyph_char("uDFFF", 66) == "B"
+    assert pm._glyph_char("u110000", 67) == "C"
+    assert pm._glyph_char("uni20AC", 68) == "€"
 
 
 def test_pages_and_tables_roundtrip():
@@ -666,9 +713,19 @@ def test_long_digit_run_in_content_stream():
     # as one number (an infinite float), and the fused matrix alternatives
     # must not retry every split of the run
     content = b"BT /F1 10 Tf 1 0 0 1 72 700 Tm " + b"7" * 6000 + b"> (ok) Tj ET"
-    assert pm.extract_pdf_text(_classic_pdf(
-        [b"<< /Type /Catalog /Pages 2 0 R >>", b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-         _LEAF_PAGE], content)) == "ok\n\n"
+    tree = [b"<< /Type /Catalog /Pages 2 0 R >>",
+            b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>", _LEAF_PAGE]
+    assert pm.extract_pdf_text(_classic_pdf(tree, content)) == "ok\n\n"
+    # a number past float range as a Tm coordinate puts its span at an
+    # infinite y; beside two 4-line columns the column split once raised
+    # OverflowError on it. The span has no place on the page and is dropped
+    cols = b"".join(b"1 0 0 1 %d %d Tm (%s%d) Tj " % (x, y - 14 * k, side, k)
+                    for x, y, side in ((60, 760, b"L"), (330, 753, b"R"))
+                    for k in range(4))
+    content = (b"BT /F1 10 Tf " + cols + b"1 0 0 1 10 " + b"1" * 400
+               + b".0 Tm (far) Tj ET")
+    assert pm.extract_pdf_text(_classic_pdf(tree, content)) == (
+        "L0\nL1\nL2\nL3\nR0\nR1\nR2\nR3\n\n")
 
 
 def test_odd_length_tounicode_hex_raises_nothing_but_pdferror():

@@ -24,7 +24,10 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from b_pdf_parser_spark import fields  # noqa: E402
-from b_pdf_parser_spark.htmlmodel import extract_html_text  # noqa: E402
+from b_pdf_parser_spark.htmlmodel import (  # noqa: E402
+    extract_html_blocks_and_tables,
+    extract_html_text,
+)
 from b_pdf_parser_spark.pdfmodel import extract_pdf_pages_and_tables  # noqa: E402
 from b_pdf_parser_spark.pdfwriter import build_pdf, pdf_from_lines  # noqa: E402
 from b_pdf_parser_spark.sources.pages import html_page, statement_lines  # noqa: E402
@@ -66,18 +69,8 @@ def freeze_pdf(name: str, payload: bytes) -> None:
     (FIXDIR / f"{name}.pdf").write_bytes(payload)
     pages, tables = extract_pdf_pages_and_tables(payload)
     full = "".join(p + "\n" for p in pages)
-    meta = fields.extract_metadata(pages[0])
-    meta["account_no"] = fields.account_no_from_url(name, meta["account_no"])
-    # same strategy chain as the extraction operator: tables → column → inline
-    txns = fields.transactions_from_table_rows(tables) if tables else []
-    if not txns:
-        txns = fields.extract_transactions(full)
-    if not txns:
-        txns = fields.extract_transactions_inline(full)
-    summary = fields.extract_summary_totals(full)
-    for k in ("total_debit", "total_credit", "opening_balance", "closing_balance"):
-        meta[k] = summary.get(k) or ""
-    ver = fields.verify_turnover(txns, 0.01, full)
+    f = fields.document_fields("pdf", full, pages[0], tables, name)
+    meta, txns, ver = f["metadata"], f["transactions"], f["verification"]
     (FIXDIR / f"{name}.expected_text.txt").write_bytes(full.encode("utf-8"))
     (FIXDIR / f"{name}.expected_meta.csv").write_text(metadata_csv(meta), newline="")
     (FIXDIR / f"{name}.expected_txns.csv").write_text(transactions_csv(txns), newline="")
@@ -95,19 +88,12 @@ def freeze_html(name: str, payload: bytes) -> None:
 def freeze_html_statement(name: str, payload: bytes) -> None:
     """HTML statement page: freezes the FULL field contract (meta/txns/
     verify CSVs, like freeze_pdf) through the html table path."""
-    from b_pdf_parser_spark.htmlmodel import extract_html_blocks, extract_html_tables
-
     (FIXDIR / f"{name}.html").write_bytes(payload)
-    blocks = extract_html_blocks(payload)
+    blocks, tables = extract_html_blocks_and_tables(payload)
     content = "\n".join(b.text for b in blocks if b.is_content)
     all_blocks = "\n".join(b.text for b in blocks)  # the label-scan surface
-    txns = fields.transactions_from_table_rows(extract_html_tables(payload))
-    meta = fields.extract_metadata(all_blocks)
-    meta["account_no"] = fields.account_no_from_url(name, meta["account_no"])
-    summary = fields.extract_summary_totals(all_blocks)
-    for k in ("total_debit", "total_credit", "opening_balance", "closing_balance"):
-        meta[k] = summary.get(k) or ""
-    ver = fields.verify_turnover(txns, 0.01, summary=summary)
+    f = fields.document_fields("html", content, all_blocks, tables, name)
+    meta, txns, ver = f["metadata"], f["transactions"], f["verification"]
     (FIXDIR / f"{name}.expected_text.txt").write_bytes(content.encode("utf-8"))
     (FIXDIR / f"{name}.expected_meta.csv").write_text(metadata_csv(meta), newline="")
     (FIXDIR / f"{name}.expected_txns.csv").write_text(transactions_csv(txns), newline="")
@@ -223,7 +209,7 @@ def main() -> None:
     # d17: bank statement as a WEB PAGE — header label paragraphs, a
     # transactions <table>, summary paragraphs, nav/footer boilerplate.
     # Pins the html face of the field layer: table→transactions through
-    # extract_html_tables, metadata/summary over the all-blocks text
+    # the html table rows, metadata/summary over the all-blocks text
     from b_pdf_parser_spark.sources.pages import html_statement_page
     payload17, _ = html_statement_page(random.Random(1717))
     freeze_html_statement("d17_html_statement", payload17)
