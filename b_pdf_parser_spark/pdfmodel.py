@@ -269,9 +269,10 @@ def parse_value(buf: bytes, i: int) -> Tuple[Any, int]:
 # ---------------------------------------------------------------------------
 
 
-# output cap of one Flate or LZW stream: zlib reaches ~1030:1 and LZW past
-# 2000:1, so a small stream in outside input could otherwise inflate to
-# gigabytes inside a worker
+# output cap of one Flate, LZW or RunLength stage: zlib reaches ~1030:1, LZW
+# past 2000:1 and each RunLength stage 64:1 (a filter chain multiplies them),
+# so a small stream in outside input could otherwise inflate to gigabytes
+# inside a worker
 _FLATE_MAX = 256 << 20
 
 
@@ -341,7 +342,8 @@ def _lzw(data: bytes, early_change: int = 1) -> bytes:
 
 def _runlength(data: bytes) -> bytes:
     """RunLengthDecode (PDF 1.7 §7.4.5): length byte 0-127 → copy n+1
-    literal bytes; 129-255 → repeat next byte 257-n times; 128 → EOD."""
+    literal bytes; 129-255 → repeat next byte 257-n times; 128 → EOD. The
+    output is capped at ``_FLATE_MAX``."""
     out = bytearray()
     i = 0
     n = len(data)
@@ -357,6 +359,8 @@ def _runlength(data: bytes) -> bytes:
             if i < n:
                 out += bytes([data[i]]) * (257 - l)
                 i += 1
+        if len(out) > _FLATE_MAX:
+            raise PdfError(f"RunLength stream decodes past {_FLATE_MAX} bytes")
     return bytes(out)
 
 

@@ -245,7 +245,10 @@ def main() -> None:
                          "segments per partition id under this directory")
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("extract-job").getOrCreate()
+    # Python workers talk over a Unix socket: over TCP a kernel's first small
+    # batch waits ~40 ms (Nagle's algorithm against delayed ACK) in every task
+    spark = (SparkSession.builder.appName("extract-job")
+             .config("spark.python.unix.domain.socket.enabled", "true").getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     if args.input_parquet:
         pages = spark.read.parquet(args.input_parquet)

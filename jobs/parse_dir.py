@@ -127,7 +127,10 @@ def main() -> None:
     ap.add_argument("--glob", default="*.pdf")
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("parse-dir").getOrCreate()
+    # Python workers talk over a Unix socket: over TCP a kernel's first small
+    # batch waits ~40 ms (Nagle's algorithm against delayed ACK) in every task
+    spark = (SparkSession.builder.appName("parse-dir")
+             .config("spark.python.unix.domain.socket.enabled", "true").getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     ext = parse_directory(spark, args.input, args.glob)
     n = write_per_document_csvs(ext, args.out)

@@ -171,3 +171,46 @@ def test_strip_boilerplate_actually_removes(spark):
     out = ALL_QUERIES["strip_boilerplate"](spark, SF_DIR)
     assert out.filter(F.col("n_dropped") < 1).count() == 0
     assert out.filter(F.col("clean_text").contains("newsletter for daily")).count() == 0
+
+
+def _jobs_in_group(spark, group, action):
+    """Job ids the status tracker records for ``action()`` run under ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener events
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_table_schema_is_inferred_once(spark, monkeypatch):
+    # inferring a Parquet file's schema runs a job; a second read of the
+    # same file reuses the schema and runs none, but is its own relation
+    monkeypatch.setattr(entry, "_SCHEMAS", {})
+    reads = []
+    assert _jobs_in_group(spark, "schema:first", lambda: reads.append(
+        entry._t(spark, SF_DIR, "nation")))
+    assert not _jobs_in_group(spark, "schema:second", lambda: reads.append(
+        entry._t(spark, SF_DIR, "nation")))
+    a, b = reads
+    assert a.schema == b.schema
+
+    def attrs(df):  # e.g. "List(n_nationkey#12L, n_name#13, ...)"
+        return df._jdf.queryExecution().analyzed().output().toString()
+
+    assert attrs(a) != attrs(b)
+
+
+def test_rewritten_table_is_reinferred(spark, monkeypatch, tmp_path):
+    import pandas as pd
+
+    monkeypatch.setattr(entry, "_SCHEMAS", {})
+    path = tmp_path / "documents.parquet"
+    pd.DataFrame({"doc_id": [1, 2]}).to_parquet(path)
+    assert entry._t(spark, str(tmp_path), "documents").columns == ["doc_id"]
+    pd.DataFrame({"doc_id": [1, 2], "text": ["a", "b"]}).to_parquet(path)
+    again = entry._t(spark, str(tmp_path), "documents")
+    assert again.columns == ["doc_id", "text"]
+    assert sorted(again.collect()) == [(1, "a"), (2, "b")]

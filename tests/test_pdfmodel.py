@@ -270,17 +270,22 @@ def test_flate_robustness():
     assert pm._flate(raw.compress(b"raw") + raw.flush()) == b"raw"
 
 
-def _bomb_pdf(n: int) -> bytes:
-    bomb = zlib.compress(bytes(n), 9)
-    assert n >= 1000 * len(bomb)
+def _stream_pdf(filters: bytes, raw: bytes) -> bytes:
+    """One page whose content stream is ``raw`` under ``/Filter filters``."""
     return (
         b"%%PDF-1.4\n"
         b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
         b"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
         b"3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>\nendobj\n"
-        b"4 0 obj\n<< /Filter /FlateDecode /Length %d >>\nstream\n%s\nendstream\nendobj\n"
-        b"trailer\n<< /Root 1 0 R >>\n%%%%EOF\n" % (len(bomb), bomb)
+        b"4 0 obj\n<< /Filter %s /Length %d >>\nstream\n%s\nendstream\nendobj\n"
+        b"trailer\n<< /Root 1 0 R >>\n%%%%EOF\n" % (filters, len(raw), raw)
     )
+
+
+def _bomb_pdf(n: int) -> bytes:
+    bomb = zlib.compress(bytes(n), 9)
+    assert n >= 1000 * len(bomb)
+    return _stream_pdf(b"/FlateDecode", bomb)
 
 
 def test_flate_output_capped(monkeypatch):
@@ -325,6 +330,19 @@ def test_lzw_output_capped(monkeypatch):
     # under the cap it decodes; the full table stops growing at 4,096
     monkeypatch.setattr(pm, "_FLATE_MAX", size)
     assert pm._lzw(bomb) == bytes(size)
+
+
+def test_runlength_chain_output_capped(monkeypatch):
+    # 0x81 repeats the next byte 128 times, so bytes of 0x81 decode to 64
+    # times as many 0x81: each stage of a RunLength /Filter chain grows them
+    # 64-fold (20 B → 1,280 → 81,920 → 5.2 MB → ...)
+    bomb = b"\x81" * 20
+    assert pm._runlength(pm._runlength(bomb)) == b"\x81" * 81920
+    monkeypatch.setattr(pm, "_FLATE_MAX", 1 << 16)
+    with pytest.raises(pm.PdfError, match="decodes past"):
+        pm.extract_pdf_text(_stream_pdf(b"[" + b"/RunLengthDecode " * 3 + b"]", bomb))
+    # exactly at the cap still decodes
+    assert pm._runlength(b"\x81\x00" * 512) == bytes(1 << 16)
 
 
 def test_flate_bomb_is_an_error_row(monkeypatch):

@@ -189,6 +189,37 @@ def test_one_kernel_idiom():
     assert not bad, bad
 
 
+def test_oracle_checked_queries_return_unordered_sets():
+    """A registered query with an ``oracle_sql()`` twin is checked as an
+    unordered set, so its result ends in no presentation sort: no returned
+    method chain calls ``orderBy``/``sort`` unless a ``limit`` above it
+    consumes the order. Such a sort adds a range-sampling job and an
+    Exchange, and the sampler re-runs any Python kernel below it."""
+    import ast
+    import inspect
+    import textwrap
+
+    def sorted_at(expr):
+        while isinstance(expr, ast.Call) and isinstance(expr.func, ast.Attribute):
+            if expr.func.attr == "limit":
+                return None
+            if expr.func.attr in ("orderBy", "sort"):
+                return expr.lineno
+            expr = expr.func.value
+        return None
+
+    registry = entry.queries()
+    bad = []
+    for name in entry.oracle_sql():
+        fn = registry[name]
+        lines, first = inspect.getsourcelines(fn)
+        for node in ast.walk(ast.parse(textwrap.dedent("".join(lines)))):
+            line = isinstance(node, ast.Return) and sorted_at(node.value)
+            if line:
+                bad.append(f"{name}: {fn.__name__} sorts at line {first + line - 1}")
+    assert not bad, bad
+
+
 # the plan-building calls that hand Python code to executors
 _RUNS_PYTHON = {
     "mapInArrow", "applyInArrow", "arrow_udf", "applyInPandasWithState",
