@@ -29,9 +29,9 @@ Every registered query has an oracle. The extraction-pipeline queries (the
 PDF/HTML byte walk) are not SQL-expressible: they run on a deterministic
 synthetic corpus, and DuckDB recomputes the expected rows from the
 generator's formulas (``extract_corpus_audit`` states its counts as
-literals). So do the fake-codec media queries (payloads are pure functions
-of media_id, so DuckDB recomputes the expected output from ``range(200)``)
-and the hyperplane-LSH ANN (plane constants embedded as SQL literals).
+literals). So do the media and PDF-image decode queries (payloads are pure
+functions of their id, so DuckDB recomputes the expected pixel and sample
+sums) and the hyperplane-LSH ANN (plane constants embedded as SQL literals).
 """
 
 from __future__ import annotations
@@ -1530,12 +1530,6 @@ def q_canonical_urls(spark, sf):
     )
 
 
-def q_media_features(spark, sf):
-    from b_pdf_parser_spark.operators.multimodal import decode_features, synth_media_df
-
-    return decode_features(synth_media_df(spark, 200))
-
-
 def q_pdf_images(spark, sf):
     """Inventory of embedded image XObjects across 300 synthetic PDFs — the
     Spark path runs the REAL writer → parser roundtrip inside Arrow
@@ -1797,75 +1791,6 @@ def q_cms_heavy_hitters(spark, sf):
     )
 
 
-def q_gif_anim_frames(spark, sf):
-    """ANIMATED GIF with real inter-frame composition — 120 deterministic
-    animations whose strata rotate the four composition regimes of GIF89a:
-    disposal 1 (frames accumulate), disposal 2 (restore background over
-    the frame rect), disposal 3 (restore the pre-frame canvas), and
-    transparency + LOCAL color table (checkerboard indices where the
-    transparent half must leave the canvas untouched). The decoder
-    reconstructs every full-canvas frame a player would show; per-frame
-    per-channel pixel sums + GCE delays are checked against closed-form
-    expressions of the generator formulas — a wrong disposal, transparency
-    or palette-scope decision shifts a sum and breaks the hash."""
-    from b_pdf_parser_spark.operators import arrow_kernel
-
-    def gen(batches):
-        from b_pdf_parser_spark.mediacodec import (
-            decode_gif_frames,
-            encode_gif_frames,
-        )
-
-        for batch in batches:
-            rows = []
-            for i in batch["id"].tolist():
-                W = 8 + (i % 5) * 2
-                H = 6 + (i % 4) * 2
-                nF = 2 + i % 3
-                s = i % 4
-                pal = [((17 * k + i) % 256, (29 * k + 2 * i) % 256,
-                        (41 * k + 3 * i) % 256) for k in range(8)]
-                lpal = [((23 * k + 5 * i) % 256, (31 * k + i) % 256,
-                         (47 * k + 7 * i) % 256) for k in range(8)]
-                frames = []
-                for j in range(nF):
-                    delay = (i + j) % 100
-                    if s == 3:
-                        tc = 1 + (i + j) % 7
-                        idx = bytes(0 if x % 2 == 0 else tc for x in range(W))
-                        frames.append(dict(
-                            left=0, top=j, w=W, h=1, indices=idx,
-                            disposal=2, delay_cs=delay, transparent=0,
-                            palette=lpal,
-                        ))
-                    else:
-                        c = (i + j + 1) % 8
-                        disp = {0: 1, 1: 2,
-                                2: (1 if j == 0 else 3)}[s]
-                        frames.append(dict(
-                            left=0, top=j, w=W, h=1,
-                            indices=bytes([c]) * W,
-                            disposal=disp, delay_cs=delay,
-                        ))
-                data = encode_gif_frames(W, H, pal, i % 8, frames)
-                sw, sh, decoded = decode_gif_frames(data)
-                for j, f in enumerate(decoded):
-                    rgb = f["rgb"]
-                    rows.append({
-                        "media_id": i, "frame_ix": j,
-                        "width": sw, "height": sh, "n_frames": len(decoded),
-                        "delay_cs": f["delay_cs"],
-                        "r_sum": sum(rgb[0::3]), "g_sum": sum(rgb[1::3]),
-                        "b_sum": sum(rgb[2::3]),
-                    })
-            yield rows
-
-    schema = ("media_id LONG, frame_ix LONG, width LONG, height LONG, "
-              "n_frames LONG, delay_cs LONG, r_sum LONG, g_sum LONG, "
-              "b_sum LONG")
-    return arrow_kernel(spark.range(0, 120, 1, 8), gen, schema).orderBy("media_id", "frame_ix")
-
-
 def q_cc_luhn_scrub(spark, sf):
     """Luhn-validated credit-card scrubbing over 300 relational rows —
     the precision step a real PII pass needs: a 13–19-digit run redacts
@@ -2051,27 +1976,6 @@ def q_dsir_select(spark, sf):
     return dsir_select(_t(spark, sf, "documents"), F.col("lang") == "en", k=120)
 
 
-def q_avi_frame_sample(spark, sf):
-    """REAL video frame sampling (round 6 — the video leg of the
-    multimodal axis as an OPERATOR, not just a codec): 40 deterministic
-    MJPEG-in-AVI files (4-8 grayscale flat-block frames each, frame f
-    valued ``(i*31 + f*53 + b*17) % 256``), sampled every 2nd frame by
-    ``avicodec.sample_avi_frames`` — the unsampled frames' JPEG decode is
-    skipped entirely, which is the cost model a 100-TB video pipeline
-    needs — then each sampled frame reduced to exact integer features.
-    The DuckDB oracle regenerates the sampled (video, frame) grid and
-    the per-frame sums from the formulas: a bug in the RIFF walk, the
-    sampling stride, the frame indexing or the per-frame JPEG decode
-    breaks the hash. Grayscale by design: the color fixed-point chain is
-    pinned by real_media_decode's v0 stratum; THIS query pins sampling."""
-    from b_pdf_parser_spark.operators.multimodal import (
-        avi_frame_features,
-        synth_avi_df,
-    )
-
-    return avi_frame_features(synth_avi_df(spark, 40), every=2)
-
-
 def q_pdf_ccitt_decode(spark, sf):
     """The fax twin of ``pdf_jpeg_decode``: 120 deterministic PDFs embed
     REAL CCITT Group 4 (ITU-T T.6) bi-level images — pass/horizontal/
@@ -2089,39 +1993,6 @@ def q_pdf_ccitt_decode(spark, sf):
     )
 
     return pdf_pixel_features(synth_ccittdoc_df(spark, 120), "CCITTFaxDecode")
-
-
-def q_tiff_media_decode(spark, sf):
-    """REAL TIFF decode, value-oracled: 120 genuine TIFF 6.0 payloads.
-    Docs 0–59 rotate four strata — CCITT G4 fax strips in BOTH byte
-    orders (class F, the container scanned documents travel the web in;
-    strips are independent G4 blocks restarting from the imaginary white
-    row) and uncompressed 8-bit gray / 24-bit RGB — across three strip
-    layouts (whole-image, 3-row, 5-row). Docs 60–89 are the
-    Compression=5 extension: TIFF 6.0 §13 LZW strips (MSB-first
-    early-change codes — the wire twin of the PDF LZWDecode filter,
-    decoded by the SAME shared implementation) with and without
-    Predictor 2 horizontal differencing, gray and RGB, both endians.
-    Docs 90–119 are Compression=3 (CCITT Group 3) fax strips — 1-D and
-    2-D (T4Options bit 0) alternating with the byte order — under the
-    same bi-level pattern as the G4 strata, so the G3 EOL/tag framing
-    and per-strip restart are the hazards. The from-scratch IFD walk +
-    strip assembly + codecs reduce to exact integer features the DuckDB
-    oracle recomputes from the generating formulas; an endian, IFD
-    value-slot, strip-boundary, fax-coding, LZW-width or predictor bug
-    breaks the hash."""
-    from b_pdf_parser_spark.operators.multimodal import (
-        real_media_features,
-        synth_tiff_media_df,
-    )
-
-    return real_media_features(synth_tiff_media_df(spark, 120))
-
-
-def q_media_frame_sample(spark, sf):
-    from b_pdf_parser_spark.operators.multimodal import frame_sample, synth_media_df
-
-    return frame_sample(synth_media_df(spark, 200), every=2)
 
 
 def q_host_pagerank(spark, sf):
@@ -2471,8 +2342,6 @@ def queries() -> dict[str, _T]:
         # real PNG/BMP/WAV/GIF/μ-law/JPEG decode, value-oracled — round-5
         "real_media_decode": q_real_media_decode,
         # PDF walk × CCITT G4 fax codec, lossless pixel oracle — round-5
-        # (media_features' FAKE-container plumbing demo retired to extras;
-        # the real-decode rows above now carry the multimodal value checks)
         "pdf_ccitt_decode": q_pdf_ccitt_decode,
         # -- web / link graph ---------------------------------------------
         "outlinks": q_outlinks,
@@ -2589,10 +2458,8 @@ def extra_queries() -> dict[str, _T]:
         "simhash": q_simhash,
         "quality_filter": q_quality_filter,
         "robots_filter": q_robots_filter,
-        "media_frame_sample": q_media_frame_sample,
         "pdf_jpeg_decode": q_pdf_jpeg_decode,
         "pdf_jpx_decode": q_pdf_jpx_decode,
-        "avi_frame_sample": q_avi_frame_sample,
         "dsir_select": q_dsir_select,
         "pq_ann_topk": q_pq_ann_topk,
         "ivfpq_ann_topk": q_ivfpq_ann_topk,
@@ -2605,13 +2472,8 @@ def extra_queries() -> dict[str, _T]:
         "feed_items": q_feed_items,
         "host_hits": q_host_hits,
         "cc_luhn_scrub": q_cc_luhn_scrub,
-        "gif_anim_frames": q_gif_anim_frames,
         "hll_distinct": q_hll_distinct,
         "cms_heavy_hitters": q_cms_heavy_hitters,
-        "tiff_media_decode": q_tiff_media_decode,
-        # FAKE-container plumbing demo — retired round-5 for the
-        # pdf_ccitt_decode slot (real decode carries the value checks now)
-        "media_features": q_media_features,
         "link_hosts": q_link_hosts,
         "sitemap_urls": q_sitemap_urls,
         "length_histogram": q_length_histogram,
@@ -4813,36 +4675,6 @@ def _all_oracles() -> dict[str, str]:
                 SELECT 1 FROM documents b
                 WHERE b.doc_id % 2 = 0 AND md5(b.text) = r.content_hash)
         """,
-        # the fake-codec payload is a pure function of media_id, so the
-        # oracle regenerates the expected features from range(200) — the
-        # Arrow-kernel decode must agree with straight SQL arithmetic
-        "media_features": """
-            WITH m AS (SELECT range AS media_id FROM range(0, 200)),
-            dims AS (
-                SELECT media_id,
-                       ['img','aud','vid'][CAST(media_id % 3 AS INT) + 1] AS kind,
-                       CAST(4 + media_id % 13 AS INT) AS width,
-                       CAST(4 + media_id % 7 AS INT) AS height,
-                       CAST(1 + media_id % 3 AS INT) AS channels
-                FROM m),
-            px AS (
-                SELECT media_id,
-                       (media_id * 31 + unnest(range(0, width * height * channels)) * 7)
-                           % 251 AS byte
-                FROM dims),
-            counts AS (SELECT media_id, byte, COUNT(*) AS c FROM px GROUP BY 1, 2),
-            ent AS (
-                SELECT media_id,
-                       round(-SUM((CAST(c AS DOUBLE) / n) * log2(CAST(c AS DOUBLE) / n)), 6)
-                           AS byte_entropy
-                FROM (SELECT media_id, c, SUM(c) OVER (PARTITION BY media_id) AS n
-                      FROM counts) GROUP BY media_id)
-            SELECT d.media_id, d.kind, d.width, d.height, d.channels,
-                   CAST(12 + d.width * d.height * d.channels AS BIGINT) AS n_bytes,
-                   e.byte_entropy,
-                   CAST(NULL AS VARCHAR) AS error
-            FROM dims d JOIN ent e ON d.media_id = e.media_id
-        """,
         "tfidf_top_terms": f"""
             WITH toks AS (
                 SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
@@ -5058,73 +4890,6 @@ def _all_oracles() -> dict[str, str]:
         "host_hits": _hits_oracle(),
         "hll_distinct": _hll_oracle(),
         "cms_heavy_hitters": _cms_oracle(),
-        "gif_anim_frames": """
-            -- closed-form composition replay: per stratum, the visible
-            -- canvas of frame j is a known mix of background + painted
-            -- strips, so each channel sum is an exact integer expression
-            -- of the palette formulas (Rb = bg channel, Rc(k) = strip
-            -- color channel; s=0 accumulates strips 0..j, s=1 shows only
-            -- strip j, s=2 shows strip 0 + strip j, s=3 paints the odd
-            -- half of the strip from the LOCAL palette)
-            WITH d AS (SELECT range AS i FROM range(0, 120)),
-            fr AS (SELECT i, CAST(unnest(range(0, 2 + i % 3)) AS BIGINT)
-                          AS j
-                   FROM d),
-            base AS (SELECT i, j,
-                        CAST(8 + (i % 5) * 2 AS BIGINT) AS w,
-                        CAST(6 + (i % 4) * 2 AS BIGINT) AS h,
-                        CAST(2 + i % 3 AS BIGINT) AS nf,
-                        i % 4 AS s,
-                        (17 * (i % 8) + i) % 256 AS rb,
-                        (29 * (i % 8) + 2 * i) % 256 AS gb,
-                        (41 * (i % 8) + 3 * i) % 256 AS bb,
-                        (17 * ((i + j + 1) % 8) + i) % 256 AS rj,
-                        (29 * ((i + j + 1) % 8) + 2 * i) % 256 AS gj,
-                        (41 * ((i + j + 1) % 8) + 3 * i) % 256 AS bj,
-                        (17 * ((i + 1) % 8) + i) % 256 AS r0,
-                        (29 * ((i + 1) % 8) + 2 * i) % 256 AS g0,
-                        (41 * ((i + 1) % 8) + 3 * i) % 256 AS b0,
-                        (23 * (1 + (i + j) % 7) + 5 * i) % 256 AS rl,
-                        (31 * (1 + (i + j) % 7) + i) % 256 AS gl,
-                        (47 * (1 + (i + j) % 7) + 7 * i) % 256 AS bl
-                     FROM fr),
-            cum AS (SELECT b.i, b.j,
-                        SUM((17 * ((b.i + u.k + 1) % 8) + b.i) % 256) AS cr,
-                        SUM((29 * ((b.i + u.k + 1) % 8) + 2 * b.i) % 256)
-                            AS cg,
-                        SUM((41 * ((b.i + u.k + 1) % 8) + 3 * b.i) % 256)
-                            AS cb
-                    FROM base b, unnest(range(0, b.j + 1)) AS u(k)
-                    GROUP BY b.i, b.j)
-            SELECT base.i AS media_id, base.j AS frame_ix,
-                   w AS width, h AS height, nf AS n_frames,
-                   CAST((base.i + base.j) % 100 AS BIGINT) AS delay_cs,
-                   CAST(CASE s
-                     WHEN 0 THEN (h - (base.j + 1)) * w * rb + w * cum.cr
-                     WHEN 1 THEN (h - 1) * w * rb + w * rj
-                     WHEN 2 THEN CASE WHEN base.j = 0
-                          THEN (h - 1) * w * rb + w * r0
-                          ELSE (h - 2) * w * rb + w * r0 + w * rj END
-                     ELSE (w * h - w // 2) * rb + (w // 2) * rl
-                   END AS BIGINT) AS r_sum,
-                   CAST(CASE s
-                     WHEN 0 THEN (h - (base.j + 1)) * w * gb + w * cum.cg
-                     WHEN 1 THEN (h - 1) * w * gb + w * gj
-                     WHEN 2 THEN CASE WHEN base.j = 0
-                          THEN (h - 1) * w * gb + w * g0
-                          ELSE (h - 2) * w * gb + w * g0 + w * gj END
-                     ELSE (w * h - w // 2) * gb + (w // 2) * gl
-                   END AS BIGINT) AS g_sum,
-                   CAST(CASE s
-                     WHEN 0 THEN (h - (base.j + 1)) * w * bb + w * cum.cb
-                     WHEN 1 THEN (h - 1) * w * bb + w * bj
-                     WHEN 2 THEN CASE WHEN base.j = 0
-                          THEN (h - 1) * w * bb + w * b0
-                          ELSE (h - 2) * w * bb + w * b0 + w * bj END
-                     ELSE (w * h - w // 2) * bb + (w // 2) * bl
-                   END AS BIGINT) AS b_sum
-            FROM base JOIN cum ON cum.i = base.i AND cum.j = base.j
-        """,
         "cc_luhn_scrub": """
             -- generator-replay: the oracle rebuilds each row's valid card
             -- (same integer Luhn fold) and states the expected counts and
@@ -5436,37 +5201,6 @@ def _all_oracles() -> dict[str, str]:
                    CAST(logw AS DOUBLE) + CAST(gum AS DOUBLE) AS score
             FROM sc ORDER BY score DESC, doc_id LIMIT 120
         """,
-        "avi_frame_sample": """
-            -- the sampled (video, frame) grid: nf = 4 + i%5 frames,
-            -- stride 2 -> f in {0, 2, 4, 6}; grayscale flat 8x8 blocks
-            -- are bit-exact under DC quant 8, so the per-frame value is
-            -- the generating formula (i*31 + f*53 + b*17) % 256 itself
-            WITH m AS (SELECT range AS i FROM range(0, 40)),
-            dims AS (
-                SELECT i, 8 * (1 + i % 3) AS w, 8 * (1 + (i // 3) % 2) AS h,
-                       4 + i % 5 AS nf, 10 + (i % 3) * 5 AS fps
-                FROM m),
-            fr AS (
-                SELECT i, w, h, fps, unnest(range(0, nf)) AS f
-                FROM dims),
-            sam AS (SELECT * FROM fr WHERE f % 2 = 0),
-            vals AS (
-                SELECT i, w, h, fps, f, unnest(range(0, w * h)) AS k
-                FROM sam),
-            v AS (
-                SELECT i, f, w, h, fps, k,
-                       (i * 31 + f * 53
-                          + ((k // w) // 8 * (w // 8) + (k % w) // 8) * 17)
-                       % 256 AS val
-                FROM vals)
-            SELECT i AS media_id, CAST(f AS INT) AS frame_idx,
-                   CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-                   CAST(fps AS INT) AS fps,
-                   CAST(COUNT(*) AS BIGINT) AS n_values,
-                   CAST(SUM(val) AS BIGINT) AS value_sum,
-                   CAST(SUM((k + 1) * val) AS BIGINT) AS weighted_sum
-            FROM v GROUP BY i, f, w, h, fps
-        """,
         "pdf_jpx_decode": """
             WITH d AS (SELECT range AS i FROM range(0, 120)),
             imgs AS (
@@ -5596,68 +5330,5 @@ def _all_oracles() -> dict[str, str]:
                    s2.value_sum, s2.weighted_sum,
                    CAST(NULL AS VARCHAR) AS error
             FROM dims dm JOIN sums s2 USING (i, j)
-        """,
-        "tiff_media_decode": """
-            WITH m AS (SELECT range AS i FROM range(0, 120)),
-            dims AS (
-                -- i < 60: G4 fax / uncompressed strata; 60..89: LZW
-                -- (+Predictor 2); 90..119: G3 fax — compression and
-                -- predictor are decode-path hazards, the pixel formulas
-                -- are shared (comp selects which formula below)
-                SELECT i, 9 + i % 8 AS w, 7 + i % 6 AS h,
-                       CASE WHEN i < 60
-                            THEN CASE WHEN i % 4 = 3 THEN 3 ELSE 1 END
-                            WHEN i < 90
-                            THEN CASE WHEN i % 3 = 1 THEN 3 ELSE 1 END
-                            ELSE 1 END AS ch,
-                       CASE WHEN i < 60
-                            THEN CASE WHEN i % 4 IN (0, 1) THEN 4 ELSE 1 END
-                            WHEN i < 90 THEN 5
-                            ELSE 3 END AS comp
-                FROM m),
-            vals AS (
-                SELECT i, w, h, ch, comp,
-                       unnest(range(0, w * h * ch)) AS k
-                FROM dims),
-            -- fax strata: the bi-level generating pattern (G4 is
-            -- lossless); gray/RGB strata: the linear byte formula
-            pv AS (
-                SELECT i, k,
-                       CASE WHEN comp IN (3, 4)
-                            THEN CASE WHEN (((k % w) // 3 + (k // w) // 2
-                                             + i) % 5) < 3
-                                      THEN 255 ELSE 0 END
-                            ELSE (i * 31 + k * 7) % 251 END AS val
-                FROM vals),
-            sums AS (
-                SELECT i, COUNT(*) AS nv,
-                       CAST(SUM(val) AS BIGINT) AS value_sum,
-                       CAST(SUM((k + 1) * val) AS BIGINT) AS weighted_sum
-                FROM pv GROUP BY i)
-            SELECT d.i AS media_id, 'tiff' AS fmt,
-                   CAST(d.w AS INT) AS width, CAST(d.h AS INT) AS height,
-                   CAST(d.ch AS INT) AS channels,
-                   CAST(NULL AS INT) AS sample_rate,
-                   CAST(s.nv AS BIGINT) AS n_values,
-                   s.value_sum, s.weighted_sum,
-                   CAST(NULL AS VARCHAR) AS error
-            FROM dims d JOIN sums s USING (i)
-        """,
-        "media_frame_sample": """
-            WITH m AS (SELECT range AS media_id FROM range(0, 200)),
-            vids AS (
-                SELECT media_id,
-                       CAST(4 + media_id % 13 AS INT) AS w,
-                       CAST(4 + media_id % 7 AS INT) AS h,
-                       CAST(1 + media_id % 3 AS INT) AS ch
-                FROM m WHERE media_id % 3 = 2),
-            frames AS (
-                SELECT media_id, CAST(unnest(range(0, h, 2)) AS INT) AS frame,
-                       w * ch AS frame_len
-                FROM vids)
-            SELECT media_id, frame,
-                   CAST(12 + frame * frame_len AS BIGINT) AS offset,
-                   CAST(frame_len AS INT) AS length
-            FROM frames
         """,
     }

@@ -9,9 +9,7 @@ real, widely-used codec: MJPEG is plain intra-frame JPEG per frame, so
 the whole entropy/DCT surface is the already-value-oracled
 :mod:`b_pdf_parser_spark.jpegcodec`, and what this module adds — and
 what the corpus oracles check — is the container walk (chunk sizes,
-word alignment, header/stream agreement, the movi scan) and the
-frame-sampling semantics a training-data pipeline needs (decode every
-N-th frame, not the whole stream).
+word alignment, header/stream agreement, the movi scan).
 
 Deliberately out of scope (stated, not silently skipped): inter-frame
 codecs (H.26x/VPx/AV1 need entropy+motion machinery far beyond this
@@ -112,13 +110,13 @@ def _walk(data: bytes, pos: int, end: int):
         pos = body + ln + (ln % 2)  # word alignment
 
 
-def _decode_avi_sampled(
-    data: bytes, every: int
-) -> Tuple[int, int, int, int, List[Tuple[int, Tuple[int, int, int, bytes]]]]:
-    """Shared validated walk for :func:`decode_avi` (every=1) and
-    :func:`sample_avi_frames`: one header/stream/frame validation path so
-    the sampling API cannot silently accept what the full decode rejects.
-    → (width, height, fps, n_frames_total, [(frame_index, frame), ...]).
+@_fail_loud
+def decode_avi(data: bytes) -> Tuple[int, int, int, int, List[Tuple[int, int, int, bytes]]]:
+    """→ (width, height, fps, n_frames, [(w, h, channels, pixels), ...])
+    with every '00dc' MJPEG frame decoded through ``decode_jpeg``. The
+    header/stream/frame dimensions must agree and the frame count must
+    match avih's dwTotalFrames — disagreement fails loud rather than
+    rendering a silently-wrong video.
 
     Safety: the aggregate pixel budget is enforced CUMULATIVELY over the
     frames actually decoded — the avih frame count is attacker-controlled
@@ -126,8 +124,6 @@ def _decode_avi_sampled(
     must never be what the bomb guard trusts."""
     from .jpegcodec import decode_jpeg
 
-    if every < 1:
-        raise ValueError("AVI: sampling stride must be >= 1")
     if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not an AVI (RIFF/'AVI ' signature missing)")
     (riff_len,) = struct.unpack_from("<I", data, 4)
@@ -136,8 +132,7 @@ def _decode_avi_sampled(
     width = height = total = None
     scale = rate = None
     handler_ok = False
-    sampled: List[Tuple[int, Tuple[int, int, int, bytes]]] = []
-    fidx = 0
+    frames: List[Tuple[int, int, int, bytes]] = []
     budget_samples = 0
 
     for fourcc, body, ln in _walk(data, 12, end):
@@ -169,54 +164,27 @@ def _decode_avi_sampled(
                 raise ValueError("AVI: movi before complete headers")
             for f2, b2, l2 in _walk(data, body + 4, body + ln):
                 if f2 == b"00dc":
-                    if fidx % every == 0:
-                        # cumulative bomb guard over DECODED frames —
-                        # never over the (untrusted) declared count
-                        budget_samples += max(width, 1) * max(height, 1) * 3
-                        _check_pixel_budget(budget_samples)
-                        w, h, ch, px = decode_jpeg(data[b2 : b2 + l2])
-                        if (w, h) != (width, height):
-                            raise ValueError(
-                                f"AVI: frame {fidx} is {w}x{h}, "
-                                f"header says {width}x{height}"
-                            )
-                        sampled.append((fidx, (w, h, ch, px)))
-                    fidx += 1
+                    # cumulative bomb guard over DECODED frames —
+                    # never over the (untrusted) declared count
+                    budget_samples += max(width, 1) * max(height, 1) * 3
+                    _check_pixel_budget(budget_samples)
+                    w, h, ch, px = decode_jpeg(data[b2 : b2 + l2])
+                    if (w, h) != (width, height):
+                        raise ValueError(
+                            f"AVI: frame {len(frames)} is {w}x{h}, "
+                            f"header says {width}x{height}"
+                        )
+                    frames.append((w, h, ch, px))
                 elif f2 == b"00db":
                     raise ValueError("AVI: uncompressed DIB frames unsupported")
     if width is None:
         raise ValueError("AVI: no avih header found")
-    if not sampled:
+    if not frames:
         raise ValueError("AVI: no MJPEG frames found")
-    if total is not None and total != fidx:
+    if total is not None and total != len(frames):
         raise ValueError(
-            f"AVI: header promises {total} frames, movi has {fidx}"
+            f"AVI: header promises {total} frames, movi has {len(frames)}"
         )
     if not scale or not rate:
         raise ValueError("AVI: missing stream timing (dwScale/dwRate)")
-    return width, height, rate // scale, fidx, sampled
-
-
-@_fail_loud
-def decode_avi(data: bytes) -> Tuple[int, int, int, int, List[Tuple[int, int, int, bytes]]]:
-    """→ (width, height, fps, n_frames, [(w, h, channels, pixels), ...])
-    with every '00dc' MJPEG frame decoded through ``decode_jpeg``. The
-    header/stream/frame dimensions must agree and the frame count must
-    match avih's dwTotalFrames — disagreement fails loud rather than
-    rendering a silently-wrong video."""
-    w, h, fps, nf, sampled = _decode_avi_sampled(data, 1)
-    return w, h, fps, nf, [fr for _, fr in sampled]
-
-
-@_fail_loud
-def sample_avi_frames(
-    data: bytes, every: int = 2
-) -> Tuple[int, int, int, List[Tuple[int, Tuple[int, int, int, bytes]]]]:
-    """Frame sampling for training-data pipelines: decode only frames
-    ``0, every, 2*every, ...`` → (width, height, fps,
-    [(frame_index, (w, h, ch, pixels)), ...]). Runs the SAME validated
-    container walk as :func:`decode_avi` (header/stream/dimension/count
-    agreement, cumulative pixel budget); the saving is skipping the JPEG
-    decode of unsampled frames (the dominant cost at video scale)."""
-    w, h, fps, _nf, sampled = _decode_avi_sampled(data, every)
-    return w, h, fps, sampled
+    return width, height, rate // scale, len(frames), frames

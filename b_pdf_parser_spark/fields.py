@@ -30,9 +30,10 @@ label-capture guard (utils.py:158-183), ``-IDR`` suffix strip
 from __future__ import annotations
 
 import re
-from typing import Dict, List, Optional, Tuple
+from typing import TYPE_CHECKING, Dict, List, Optional, Tuple
 
-import pandas as pd
+if TYPE_CHECKING:
+    import pandas as pd
 
 __all__ = [
     "METADATA_KEYS",
@@ -135,7 +136,11 @@ def extract_metadata(text: str) -> Dict[str, str]:
 
 def extract_metadata_batch(texts: pd.Series) -> pd.DataFrame:
     """:func:`extract_metadata` over a Series of first-page texts (a
-    missing text reads as empty), one row per text, same index."""
+    missing text reads as empty), one row per text, same index. pandas is
+    imported here, not at module load, so the extraction kernel's workers
+    never pay for it."""
+    import pandas as pd
+
     return pd.DataFrame([extract_metadata(t) for t in texts.fillna("")],
                         columns=list(_META_RE), index=texts.index)
 

@@ -1,9 +1,8 @@
-"""From-scratch stdlib-only media codecs: PNG, BMP, WAV — REAL decoders.
+"""From-scratch stdlib-only media codecs: PNG, BMP, WAV, GIF — REAL decoders.
 
-The multimodal stub (operators/multimodal.py) honestly raised for "real
-codec decode" because PIL/ffmpeg/opencv are absent from this runtime. But
-three real container formats need nothing beyond the standard library, so
-their decode paths are implemented for real here, from the public specs:
+PIL/ffmpeg/opencv are absent from this runtime, but these container
+formats need nothing beyond the standard library, so their decode paths
+are implemented for real here, from the public specs:
 
 * **PNG** (RFC 2083 / W3C PNG spec): greyscale (depths 1/2/4/8, sub-byte
   samples scaled to canonical 8-bit by the exact ``255//(2**d-1)``
@@ -21,21 +20,13 @@ their decode paths are implemented for real here, from the public specs:
   ADPCM** (format 0x11 — the first compressed audio codec here: block
   header seed + 89-entry step-table walk); fmt/fact/data chunk walk
   (unknown chunks skipped per spec), any channel count for PCM/μ-law.
-* **GIF** (GIF89a): the LSB-first variable-code-width LZW that is the
-  bit-order twin of the PDF ``LZWDecode`` filter (pdfmodel._lzw is
-  MSB-first with EarlyChange; GIF packs codes little-endian with a
-  per-image minimum code size and no early change), global color table
-  lookup back to canonical RGB, sub-block reassembly, extension-block
-  skipping, and both sequential and 4-pass interlaced row order.
-* **TIFF** (TIFF 6.0 / class F): both byte orders, IFD walk with
-  inline-vs-offset value slots, strip organization (RowsPerStrip), 8-bit
-  gray/RGB uncompressed, Compression=5 **LZW** (§13 — wire-identical to
-  the PDF ``LZWDecode`` filter with EarlyChange 1, so decode reuses
-  ``pdfmodel._lzw``; Predictor 2 horizontal differencing — the PNG Sub
-  filter — honored via tag 317), and Compression=4 (Group 4) /
-  Compression=3 (Group 3, 1-D or 2-D per T4Options) fax strips routed through the from-scratch CCITT
-  codecs (``ccittcodec.py``) with PhotometricInterpretation honored —
-  the containers scanned documents actually travel the web in.
+* **GIF** (GIF89a, first image): the LSB-first variable-code-width LZW
+  that is the bit-order twin of the PDF ``LZWDecode`` filter
+  (pdfmodel._lzw is MSB-first with EarlyChange; GIF packs codes
+  little-endian with a per-image minimum code size and no early change),
+  global color table lookup back to canonical RGB, sub-block
+  reassembly, extension-block skipping, and both sequential and 4-pass
+  interlaced row order.
 
 Every decoder returns canonical values (top-down RGB pixel bytes / int16
 samples) so value-level oracles can recompute exact integer features
@@ -48,10 +39,9 @@ JPEG (entropy-coded DCT: baseline SOF0/SOF1, progressive SOF2, and —
 since round 6 — arithmetic-coded SOF9 via ``arithjpeg.py``) lives in
 the sibling module ``jpegcodec.py``, CCITT Group 3/Group 4 fax
 (ITU-T T.4/T.6) in ``ccittcodec.py``, and JPEG 2000 Part-1 codestreams
-in ``jpxcodec.py`` — all implemented from scratch. What remains stubbed
-— and why: every VIDEO compression codec still needs decoders we
-haven't built (or the absent native libs); those payloads take the
-honest NotImplementedError path in operators/multimodal.py.
+in ``jpxcodec.py`` — all implemented from scratch. A container with no
+decoder here takes the NotImplementedError path in
+operators/multimodal.py.
 """
 
 from __future__ import annotations
@@ -59,9 +49,9 @@ from __future__ import annotations
 import functools
 import struct
 import zlib
-from typing import Dict, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
-from .pdfmodel import PdfError, _lzw, _paeth, _png_unfilter_row
+from .pdfmodel import PdfError, _paeth, _png_unfilter_row
 
 
 def _fail_loud(fn):
@@ -94,17 +84,11 @@ __all__ = [
     "decode_bmp",
     "encode_wav",
     "decode_wav",
-    "encode_wav_adpcm",
     "encode_wav_adpcm_multi",
     "encode_wav_adpcm_nibbles",
-    "ima_adpcm_encode",
     "alaw_expand",
     "encode_gif",
     "decode_gif",
-    "encode_gif_frames",
-    "decode_gif_frames",
-    "encode_tiff",
-    "decode_tiff",
     "ulaw_expand",
 ]
 
@@ -619,31 +603,6 @@ def _ima_step(nibble: int, pred: int, idx: int) -> Tuple[int, int]:
     return pred, idx
 
 
-def ima_adpcm_encode(samples: List[int], pred: int, idx: int = 0) -> List[int]:
-    """Greedy standard IMA encoder: nibble per sample tracking the shared
-    predictor state (lossy — the decoder reproduces the encoder's internal
-    predictor exactly, not the input)."""
-    out = []
-    for s in samples:
-        step = _IMA_STEPS[idx]
-        delta = s - pred
-        n = 0
-        if delta < 0:
-            n = 8
-            delta = -delta
-        if delta >= step:
-            n |= 4
-            delta -= step
-        if delta >= step >> 1:
-            n |= 2
-            delta -= step >> 1
-        if delta >= step >> 2:
-            n |= 1
-        out.append(n)
-        pred, idx = _ima_step(n, pred, idx)
-    return out
-
-
 def encode_wav_adpcm_nibbles(
     sample_rate: int, first_sample: int, nibbles: List[int], index0: int = 0
 ) -> bytes:
@@ -724,15 +683,6 @@ def encode_wav_adpcm_multi(
         + (b"\x00" if len(body) % 2 else b"")
     )
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def encode_wav_adpcm(sample_rate: int, samples: List[int]) -> bytes:
-    """Mono IMA ADPCM WAV from int16 samples via the greedy encoder: the
-    first sample seeds the block header exactly; the rest are quantized."""
-    if not samples:
-        raise ValueError("need at least one sample")
-    nibbles = ima_adpcm_encode(list(samples[1:]), int(samples[0]), 0)
-    return encode_wav_adpcm_nibbles(sample_rate, int(samples[0]), nibbles)
 
 
 def ulaw_expand(b: int) -> int:
@@ -1105,541 +1055,3 @@ def decode_gif(data: bytes) -> Tuple[int, int, int, bytes]:
             out[3 * k], out[3 * k + 1], out[3 * k + 2] = pal[v]
         return w, h, 3, bytes(out)
     raise ValueError("GIF contains no image descriptor")
-
-
-def encode_gif_frames(
-    width: int,
-    height: int,
-    palette: List[Tuple[int, int, int]],
-    bg_index: int,
-    frames: List[dict],
-) -> bytes:
-    """ANIMATED GIF89a writer: NETSCAPE2.0 looping application extension +
-    per-frame graphic control extensions. Each frame dict:
-    ``{left, top, w, h, indices, disposal, delay_cs,
-    transparent (index or None), palette (local, or None)}``. The same
-    sub-block/LZW machinery as :func:`encode_gif`."""
-    psize = len(palette)
-    if psize < 2 or psize & (psize - 1):
-        raise ValueError("palette length must be a power of two in [2, 256]")
-    depth = psize.bit_length() - 1
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", width, height)
-    out += bytes((0x80 | ((depth - 1) & 7) << 4 | (depth - 1) & 7,
-                  bg_index, 0))
-    for r, g, b in palette:
-        out += bytes((r, g, b))
-    out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
-    for f in frames:
-        w, h = f["w"], f["h"]
-        if len(f["indices"]) != w * h:
-            raise ValueError("frame index buffer does not match its rect")
-        t = f.get("transparent")
-        gce_flags = (f["disposal"] & 7) << 2 | (1 if t is not None else 0)
-        out += bytes((0x21, 0xF9, 4, gce_flags))
-        out += struct.pack("<H", f.get("delay_cs", 0))
-        out += bytes((t if t is not None else 0, 0))
-        out += b"\x2c" + struct.pack(
-            "<HHHH", f["left"], f["top"], w, h
-        )
-        lpal = f.get("palette")
-        if lpal is not None:
-            n = len(lpal)
-            if n < 2 or n & (n - 1):
-                raise ValueError("local palette length must be a power of 2")
-            ldepth = n.bit_length() - 1
-            out += bytes((0x80 | (ldepth - 1) & 7,))
-            for r, g, b in lpal:
-                out += bytes((r, g, b))
-            mcs = max(2, ldepth)
-        else:
-            out += b"\x00"
-            mcs = max(2, depth)
-        out.append(mcs)
-        comp = _gif_lzw_compress(f["indices"], mcs)
-        for off in range(0, len(comp), 255):
-            block = comp[off : off + 255]
-            out.append(len(block))
-            out += block
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-@_fail_loud
-def decode_gif_frames(data: bytes) -> Tuple[int, int, List[dict]]:
-    """ANIMATED GIF decode with full inter-frame composition — disposal
-    methods 0/1 (leave), 2 (restore background color over the frame rect)
-    and 3 (restore the canvas state from before the frame drew),
-    transparency (index pixels leave the canvas unchanged) and local color
-    tables, per GIF89a + the de-facto NETSCAPE loop semantics. The canvas
-    initializes to the global background color. → ``(sw, sh, frames)``
-    where each frame is ``{delay_cs, disposal, rgb}`` with ``rgb`` the
-    FULL-CANVAS top-down snapshot after the frame draws (what a player
-    shows)."""
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    sw, sh = struct.unpack("<HH", data[6:10])
-    packed, bg_idx = data[10], data[11]
-    pos = 13
-    gct: List[Tuple[int, int, int]] = []
-    if packed & 0x80:
-        n = 2 << (packed & 7)
-        for j in range(n):
-            o = pos + 3 * j
-            gct.append((data[o], data[o + 1], data[o + 2]))
-        pos += 3 * n
-    _check_pixel_budget(sw * sh * 3)
-    bg = gct[bg_idx] if gct and bg_idx < len(gct) else (0, 0, 0)
-    canvas = bytearray(bg * (sw * sh)) if len(bg) == 3 else bytearray(sw * sh * 3)
-    frames: List[dict] = []
-    total_px = 0
-    delay_cs = 0
-    disposal = 0
-    transparent: Optional[int] = None
-    while pos < len(data):
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:
-            break
-        if block == 0x21:
-            label = data[pos]
-            pos += 1
-            if label == 0xF9 and data[pos] >= 4:
-                flags = data[pos + 1]
-                disposal = (flags >> 2) & 7
-                delay_cs = struct.unpack("<H", data[pos + 2 : pos + 4])[0]
-                transparent = data[pos + 4] if flags & 1 else None
-            while data[pos]:
-                pos += 1 + data[pos]
-            pos += 1
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{block:02x}")
-        left, top, w, h = struct.unpack("<HHHH", data[pos : pos + 8])
-        if left + w > sw or top + h > sh:
-            raise ValueError("GIF frame rect exceeds the logical screen")
-        flags = data[pos + 8]
-        pos += 9
-        pal = gct
-        if flags & 0x80:
-            n = 2 << (flags & 7)
-            pal = [
-                (data[pos + 3 * j], data[pos + 3 * j + 1], data[pos + 3 * j + 2])
-                for j in range(n)
-            ]
-            pos += 3 * n
-        if not pal:
-            raise ValueError("GIF frame has no color table")
-        total_px += w * h
-        _check_pixel_budget(total_px * 3)
-        mcs = data[pos]
-        pos += 1
-        comp = bytearray()
-        while data[pos]:
-            ln = data[pos]
-            comp += data[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        idx = _gif_lzw_decompress(bytes(comp), mcs, w * h)
-        if flags & 0x40:
-            ordered = bytearray(w * h)
-            for src, y in enumerate(_gif_interlace_order(h)):
-                ordered[y * w : (y + 1) * w] = idx[src * w : (src + 1) * w]
-            idx = bytes(ordered)
-        saved = bytes(canvas) if disposal == 3 else None
-        for k, v in enumerate(idx):
-            if v == transparent:
-                continue
-            if v >= len(pal):
-                raise ValueError("GIF palette index out of range")
-            x = left + k % w
-            y = top + k // w
-            o = 3 * (y * sw + x)
-            canvas[o], canvas[o + 1], canvas[o + 2] = pal[v]
-        frames.append({
-            "delay_cs": delay_cs,
-            "disposal": disposal,
-            "rgb": bytes(canvas),
-        })
-        if disposal == 2:
-            for y in range(top, top + h):
-                o = 3 * (y * sw + left)
-                canvas[o : o + 3 * w] = bytes(bg) * w
-        elif disposal == 3 and saved is not None:
-            canvas[:] = saved
-        delay_cs = 0
-        disposal = 0
-        transparent = None
-    if not frames:
-        raise ValueError("GIF contains no image descriptor")
-    return sw, sh, frames
-
-
-# ---------------------------------------------------------------------------
-# TIFF 6.0 (Adobe spec, public) — baseline strip-organized reader/writer in
-# both byte orders, plus TIFF class F: Compression=4 routes each strip
-# through the from-scratch CCITT Group 4 codec (ccittcodec.py), which is
-# how scanned documents actually travel the web (fax TIFFs). Strips are
-# independent G4 blocks (each restarts from the imaginary all-white row,
-# TIFF 6.0 §Section 11).
-# ---------------------------------------------------------------------------
-
-_TIFF_COMP_NONE = 1
-_TIFF_COMP_G3 = 3
-_TIFF_COMP_G4 = 4
-_TIFF_COMP_LZW = 5
-
-
-def _tiff_lzw_compress(data: bytes) -> bytes:
-    """TIFF 6.0 §13 LZW: MSB-first 9→12-bit codes, ClearCode 256, EOI 257,
-    with the spec's "early change" — the code width bumps one code before
-    the table fills (this is byte-identical to the PDF ``LZWDecode``
-    wire format with EarlyChange 1, so :func:`_tiff_lzw_decompress`
-    simply reuses ``pdfmodel._lzw``). The encoder emits ClearCode when
-    the next free slot reaches 4094, per the spec's table-full rule."""
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            nbits -= 8
-            out.append((acc >> nbits) & 0xFF)
-
-    table = {bytes([i]): i for i in range(256)}
-    next_code = 258
-    width = 9
-    emit(256, width)  # leading clear, per spec
-    w = b""
-    for byte in data:
-        wk = w + bytes([byte])
-        if wk in table:
-            w = wk
-            continue
-        emit(table[w], width)
-        table[wk] = next_code
-        next_code += 1
-        # early change: the decoder's next-free slot (one behind ours)
-        # hits (1<<width)-1 exactly when ours hits 1<<width
-        if next_code >= (1 << width) and width < 12:
-            width += 1
-        if next_code == 4094:
-            emit(256, width)  # clear: reset both sides' tables
-            table = {bytes([i]): i for i in range(256)}
-            next_code = 258
-            width = 9
-        w = bytes([byte])
-    if w:
-        emit(table[w], width)
-    emit(257, width)  # EOI
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
-def _tiff_lzw_decompress(data: bytes, expect: int) -> bytes:
-    """Inverse of :func:`_tiff_lzw_compress` via the shared PDF-filter
-    decoder (same wire format); length-checked against the strip's
-    expected byte count."""
-    try:
-        raw = _lzw(data, early_change=1)
-    except PdfError as e:
-        raise ValueError(f"TIFF LZW: {e}") from e
-    if len(raw) != expect:
-        raise ValueError(
-            f"TIFF LZW: strip decoded to {len(raw)} bytes, expected {expect}"
-        )
-    return raw
-
-
-def _predict2(row: bytearray, spp: int) -> None:
-    """Apply TIFF Predictor 2 (horizontal differencing) in place — this
-    is exactly the PNG Sub filter with bpp = samples/pixel (Sub ignores
-    the previous row), so delegate to the shared predictor code."""
-    row[:] = _filter_row(1, bytes(row), bytes(len(row)), spp)
-
-
-def encode_tiff(
-    width: int,
-    height: int,
-    channels: int,
-    pixels: bytes,
-    *,
-    compression: int = _TIFF_COMP_NONE,
-    big_endian: bool = False,
-    rows_per_strip: int | None = None,
-    predictor: int = 1,
-    g3_2d: bool = False,
-) -> bytes:
-    """Minimal-but-valid TIFF: 8-bit gray (ch 1) or RGB (ch 3) with
-    Compression=1 or Compression=5 (LZW, optionally with Predictor=2
-    horizontal differencing — tag 317 is written when it applies), or
-    bi-level fax (ch 1, bytes 0=black else white) with Compression=4
-    (CCITT G4, class F) or Compression=3 (CCITT G3 — 1-D Modified
-    Huffman, or the 2-D extension when ``g3_2d``, recorded in
-    T4Options tag 292 bit 0). Strip-organized; ``pixels`` is row-major
-    top-down; fax strips are independent streams (each restarts from
-    the imaginary white row / a fresh 1-D row)."""
-    if channels not in (1, 3):
-        raise ValueError("TIFF: only 1 or 3 samples/pixel supported")
-    if len(pixels) != width * height * channels:
-        raise ValueError("TIFF: pixel buffer size mismatch")
-    if compression in (_TIFF_COMP_G3, _TIFF_COMP_G4) and channels != 1:
-        raise ValueError("TIFF: fax compression is bi-level (1 sample)")
-    if compression not in (
-        _TIFF_COMP_NONE, _TIFF_COMP_G3, _TIFF_COMP_G4, _TIFF_COMP_LZW
-    ):
-        raise ValueError(f"TIFF: unsupported compression {compression}")
-    if predictor not in (1, 2):
-        raise ValueError(f"TIFF: unsupported predictor {predictor}")
-    if predictor == 2 and compression != _TIFF_COMP_LZW:
-        raise ValueError("TIFF: Predictor 2 only applies to LZW strips")
-    if g3_2d and compression != _TIFF_COMP_G3:
-        raise ValueError("TIFF: g3_2d only applies to Compression=3")
-    end = ">" if big_endian else "<"
-    rps = height if rows_per_strip is None else max(1, int(rows_per_strip))
-
-    strips: List[bytes] = []
-    row_bytes = width * channels
-    for y0 in range(0, height, rps):
-        rows = min(rps, height - y0)
-        raw = pixels[y0 * row_bytes : (y0 + rows) * row_bytes]
-        if compression == _TIFF_COMP_G4:
-            from .ccittcodec import encode_g4
-
-            strips.append(encode_g4(width, rows, raw))
-        elif compression == _TIFF_COMP_G3:
-            from .ccittcodec import encode_g3
-
-            strips.append(encode_g3(width, rows, raw, k=4 if g3_2d else 0))
-        elif compression == _TIFF_COMP_LZW:
-            buf = bytearray(raw)
-            if predictor == 2:
-                for r in range(rows):
-                    row = buf[r * row_bytes : (r + 1) * row_bytes]
-                    _predict2(row, channels)
-                    buf[r * row_bytes : (r + 1) * row_bytes] = row
-            strips.append(_tiff_lzw_compress(bytes(buf)))
-        else:
-            strips.append(raw)
-
-    # photometric: fax default 0 (WhiteIsZero); gray 1 (BlackIsZero); RGB 2
-    is_fax = compression in (_TIFF_COMP_G3, _TIFF_COMP_G4)
-    photometric = 0 if is_fax else (1 if channels == 1 else 2)
-    bits = 1 if is_fax else 8
-
-    def entry(tag: int, typ: int, count: int, value: int) -> bytes:
-        # value left-justified in its 4-byte slot per the spec
-        if typ == 3 and count == 1:  # SHORT
-            return struct.pack(end + "HHI", tag, typ, count) + struct.pack(
-                end + "HH", value, 0
-            )
-        return struct.pack(end + "HHII", tag, typ, count, value)
-
-    n_strips = len(strips)
-    # layout: header(8) | IFD | [bits array][strip offsets][strip counts] | strips
-    tags = [256, 257, 258, 259, 262, 273, 277, 278, 279]
-    if compression == _TIFF_COMP_G3:
-        tags.append(292)  # T4Options — ascending tag order per spec
-    if predictor == 2:
-        tags.append(317)
-    ifd_size = 2 + len(tags) * 12 + 4
-    extra = bytearray()
-    extra_base = 8 + ifd_size
-
-    def put_array(values: List[int], typ: int) -> int:
-        """Append a SHORT/LONG array to the extra area, return its offset."""
-        off = extra_base + len(extra)
-        fmt = "H" if typ == 3 else "I"
-        extra.extend(struct.pack(end + fmt * len(values), *values))
-        return off
-
-    if channels == 3:
-        bits_value = put_array([8, 8, 8], 3)
-        bits_entry = entry(258, 3, 3, bits_value)
-    else:
-        bits_entry = entry(258, 3, 1, bits)
-
-    # strip offset/count arrays (reserve now, fill after sizes are known)
-    data_base_guess = None
-    counts = [len(s) for s in strips]
-    if n_strips == 1:
-        counts_entry = entry(279, 4, 1, counts[0])
-    else:
-        counts_entry = entry(279, 4, n_strips, put_array(counts, 4))
-    # strip data begins after the extra area; offsets are computable now
-    # (extra grows only by the offsets array itself below, so account it)
-    off_array_len = 0 if n_strips == 1 else 4 * n_strips
-    data_base_guess = extra_base + len(extra) + off_array_len
-    offsets = []
-    pos = data_base_guess
-    for s in strips:
-        offsets.append(pos)
-        pos += len(s)
-    if n_strips == 1:
-        offsets_entry = entry(273, 4, 1, offsets[0])
-    else:
-        offsets_entry = entry(273, 4, n_strips, put_array(offsets, 4))
-
-    entries = [
-        entry(256, 4, 1, width),
-        entry(257, 4, 1, height),
-        bits_entry,
-        entry(259, 3, 1, compression),
-        entry(262, 3, 1, photometric),
-        offsets_entry,
-        entry(277, 3, 1, channels),
-        entry(278, 4, 1, rps),
-        counts_entry,
-    ]
-    if compression == _TIFF_COMP_G3:
-        entries.append(entry(292, 4, 1, 1 if g3_2d else 0))
-    if predictor == 2:
-        entries.append(entry(317, 3, 1, 2))
-    out = bytearray()
-    out += (b"MM" if big_endian else b"II") + struct.pack(end + "HI", 42, 8)
-    out += struct.pack(end + "H", len(entries))
-    for e in entries:
-        out += e
-    out += struct.pack(end + "I", 0)  # no next IFD
-    out += extra
-    for s in strips:
-        out += s
-    return bytes(out)
-
-
-@_fail_loud
-def decode_tiff(data: bytes) -> Tuple[int, int, int, bytes]:
-    """→ (width, height, channels, row-major top-down pixel bytes).
-    Handles both byte orders, multi-strip organization, Compression 1
-    (8-bit gray / 24-bit RGB), Compression 3 (CCITT G3 — 1-D or, per
-    T4Options bit 0, 2-D), Compression 4 (CCITT G4), both fax forms
-    bi-level via ``ccittcodec`` honoring PhotometricInterpretation, and
-    Compression 5 (LZW via the shared PDF-filter decoder, with
-    Predictor 2 horizontal differencing undone per row). Fails loud on
-    anything else."""
-    if len(data) < 8 or data[:2] not in (b"II", b"MM"):
-        raise ValueError("TIFF: bad byte-order mark")
-    end = "<" if data[:2] == b"II" else ">"
-    magic, ifd_off = struct.unpack_from(end + "HI", data, 2)
-    if magic != 42:
-        raise ValueError("TIFF: bad magic")
-    if ifd_off + 2 > len(data):
-        raise ValueError("TIFF: IFD offset out of range")
-    (n_entries,) = struct.unpack_from(end + "H", data, ifd_off)
-    tag_sizes = {1: 1, 3: 2, 4: 4}
-
-    def values(tag_typ: int, count: int, slot: bytes) -> List[int]:
-        size = tag_sizes.get(tag_typ)
-        if size is None:
-            raise ValueError(f"TIFF: unsupported field type {tag_typ}")
-        fmt = {1: "B", 3: "H", 4: "I"}[tag_typ]
-        total = size * count
-        if total <= 4:
-            return list(struct.unpack_from(end + fmt * count, slot, 0))
-        (off,) = struct.unpack_from(end + "I", slot, 0)
-        if off + total > len(data):
-            raise ValueError("TIFF: value offset out of range")
-        return list(struct.unpack_from(end + fmt * count, data, off))
-
-    tags: Dict[int, List[int]] = {}
-    for k in range(n_entries):
-        base = ifd_off + 2 + 12 * k
-        if base + 12 > len(data):
-            raise ValueError("TIFF: truncated IFD")
-        tag, typ, count = struct.unpack_from(end + "HHI", data, base)
-        tags[tag] = values(typ, count, data[base + 8 : base + 12])
-
-    def one(tag: int, default: int | None = None) -> int:
-        if tag not in tags:
-            if default is None:
-                raise ValueError(f"TIFF: required tag {tag} missing")
-            return default
-        return tags[tag][0]
-
-    width = one(256)
-    height = one(257)
-    comp = one(259, 1)
-    photometric = one(262)
-    channels = one(277, 1)
-    rps = one(278, height)
-    offsets = tags.get(273)
-    counts = tags.get(279)
-    if not offsets or not counts or len(offsets) != len(counts):
-        raise ValueError("TIFF: missing/mismatched strip tables")
-    bits = tags.get(258, [8])
-    if one(266, 1) != 1:  # FillOrder: LSB-first fax bytes would feed the
-        raise ValueError("TIFF: FillOrder 2 (LSB-first) unsupported")
-    predictor = one(317, 1)
-    if predictor not in (1, 2):
-        raise ValueError(f"TIFF: unsupported predictor {predictor}")
-    if predictor == 2 and comp != _TIFF_COMP_LZW:
-        raise ValueError("TIFF: Predictor 2 only applies to LZW strips")
-    if comp in (_TIFF_COMP_G3, _TIFF_COMP_G4):
-        if channels != 1 or bits != [1]:
-            raise ValueError("TIFF: fax must be 1 sample at 1 bit")
-        if photometric not in (0, 1):
-            raise ValueError(f"TIFF: fax photometric {photometric} invalid")
-    elif comp in (_TIFF_COMP_NONE, _TIFF_COMP_LZW):
-        if bits != [8] * channels or channels not in (1, 3):
-            raise ValueError("TIFF: only 8-bit gray/RGB for this compression")
-        if channels == 3 and photometric != 2:
-            raise ValueError(f"TIFF: RGB needs photometric 2, got {photometric}")
-        if channels == 1 and photometric not in (0, 1):
-            raise ValueError(f"TIFF: gray photometric {photometric} invalid")
-    else:
-        raise ValueError(f"TIFF: unsupported compression {comp}")
-
-    _check_pixel_budget(width * height * channels)
-    out = bytearray()
-    rows_done = 0
-    for off, cnt in zip(offsets, counts):
-        if off + cnt > len(data):
-            raise ValueError("TIFF: strip out of range")
-        strip = data[off : off + cnt]
-        rows = min(rps, height - rows_done)
-        if rows <= 0:
-            raise ValueError("TIFF: more strips than image rows")
-        if comp in (_TIFF_COMP_G3, _TIFF_COMP_G4):
-            if comp == _TIFF_COMP_G4:
-                from .ccittcodec import decode_g4
-
-                px = decode_g4(strip, width, rows)
-            else:
-                from .ccittcodec import decode_g3
-
-                # T4Options bit 0: 2-D coding in use; bit 1 would allow
-                # T.4 uncompressed mode inside the stream — unsupported
-                opt = one(292, 0)
-                if opt & 2:
-                    raise ValueError("TIFF: T.4 uncompressed mode unsupported")
-                px = decode_g3(strip, width, rows, k=1 if opt & 1 else 0)
-            if photometric == 1:  # BlackIsZero fax: invert our convention
-                px = bytes(255 - v for v in px)
-            out += px
-        else:
-            row_bytes = width * channels
-            if comp == _TIFF_COMP_LZW:
-                raw = bytearray(_tiff_lzw_decompress(strip, rows * row_bytes))
-                if predictor == 2:  # horizontal differencing = PNG Sub
-                    for r in range(rows):
-                        o = r * row_bytes
-                        raw[o : o + row_bytes] = _png_unfilter_row(
-                            1, raw[o : o + row_bytes], b"", channels
-                        )
-                strip = bytes(raw)
-            elif cnt != rows * row_bytes:
-                raise ValueError("TIFF: strip byte count mismatch")
-            if channels == 1 and photometric == 0:
-                # WhiteIsZero grayscale (some scanners): canonicalize
-                out += bytes(255 - v for v in strip)
-            else:
-                out += strip
-        rows_done += rows
-    if rows_done != height:
-        raise ValueError("TIFF: strips cover wrong number of rows")
-    return width, height, channels, bytes(out)

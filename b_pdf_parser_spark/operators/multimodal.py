@@ -18,25 +18,19 @@ Decode status, honestly labeled per format:
   in their chain) decode to pixels through one filter → codec table.
 * **STUBBED**: inter-frame VIDEO codecs need decoders we haven't built
   or the absent native libs (PIL/ffmpeg/opencv are not in this runtime)
-  — those payloads land in the ``error`` column, never crash the batch.
+  — those payloads, and every container ``_decode_media`` has no decoder
+  for, land in the ``error`` column, never crash the batch.
   No longer stubbed: compressed AUDIO (mono/stereo IMA ADPCM,
-  ``mediacodec.decode_wav`` format 0x11; FLAC, ``flaccodec``), TIFF
-  (``mediacodec.decode_tiff``), JPEG 2000 codestreams (``jpxcodec``),
-  arithmetic-coded JPEG (SOF9 + DAC, ``arithjpeg``) and MJPEG video in
-  AVI (``avicodec``, decoded or frame-sampled by ``avi_frame_features``).
+  ``mediacodec.decode_wav`` format 0x11; FLAC, ``flaccodec``), JPEG 2000
+  codestreams (``jpxcodec``), arithmetic-coded JPEG (SOF9 + DAC,
+  ``arithjpeg``) and MJPEG video in AVI (``avicodec``).
 
-Everything Spark-side is real and tested for both classes: schema, Arrow
-batch shape, partitioning, the ``arrow_kernel`` feature-extraction
-signature. The deterministic FAKE container
-(``b"FAKE" + kind(3s) + width(u16be) + height(u16be) + channels(u8) +
-pixels``) remains for pipeline plumbing tests where the codec itself is
-not the subject.
+Everything Spark-side is real and tested: schema, Arrow batch shape,
+partitioning, the ``arrow_kernel`` feature-extraction signature.
 """
 
 from __future__ import annotations
 
-import math
-import struct
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -45,27 +39,14 @@ from . import arrow_kernel
 
 __all__ = [
     "MEDIA_SCHEMA_DDL",
-    "FEATURES_SCHEMA_DDL",
     "REAL_FEATURES_SCHEMA_DDL",
-    "AVI_FRAME_SCHEMA_DDL",
     "IMAGEDOC_SCHEMA_DDL",
     "IMAGE_INV_SCHEMA_DDL",
     "PIXEL_SCHEMA_DDL",
-    "encode_fake_media",
-    "synth_media_df",
-    "decode_features",
-    "frame_sample",
     "real_media_dims",
     "encode_real_media",
     "synth_real_media_df",
     "real_media_features",
-    "avi_media_dims",
-    "encode_avi_media",
-    "synth_avi_df",
-    "avi_frame_features",
-    "tiff_media_dims",
-    "encode_tiff_media",
-    "synth_tiff_media_df",
     "synth_imagedoc_df",
     "pdf_image_features",
     "synth_jpegdoc_df",
@@ -75,24 +56,6 @@ __all__ = [
 ]
 
 MEDIA_SCHEMA_DDL = "media_id BIGINT, kind STRING, payload BINARY"
-FEATURES_SCHEMA_DDL = (
-    "media_id BIGINT, kind STRING, width INT, height INT, channels INT, "
-    "n_bytes BIGINT, byte_entropy DOUBLE, error STRING"
-)
-
-_MAGIC = b"FAKE"
-
-
-def _byte_entropy(buf: bytes) -> float:
-    """Shannon entropy (bits/byte) over a byte buffer — shared by the
-    fake-container and real-decode feature branches."""
-    if not buf:
-        return 0.0
-    counts: dict = {}
-    for byte in buf:
-        counts[byte] = counts.get(byte, 0) + 1
-    n = len(buf)
-    return round(-sum((c / n) * math.log2(c / n) for c in counts.values()), 6)
 
 
 def _value_features(vals) -> dict:
@@ -105,116 +68,6 @@ def _value_features(vals) -> dict:
         "value_sum": int(sum(vals)),
         "weighted_sum": int(sum((k + 1) * v for k, v in enumerate(vals))),
     }
-
-
-def encode_fake_media(media_id: int, kind: str = "img") -> bytes:
-    """Deterministic fake payload for ``media_id`` (no RNG, pure function)."""
-    w = 4 + (media_id % 13)
-    h = 4 + (media_id % 7)
-    ch = 1 + (media_id % 3)
-    pixels = bytes(((media_id * 31 + i * 7) % 251) for i in range(w * h * ch))
-    return (
-        _MAGIC
-        + kind.encode("ascii")[:3].ljust(3)
-        + w.to_bytes(2, "big")
-        + h.to_bytes(2, "big")
-        + bytes([ch])
-        + pixels
-    )
-
-
-def _synth_media_df(spark, n, num_partitions, kind, encode) -> DataFrame:
-    """The one media-corpus shell: row ``i`` is ``(i, kind(i), encode(i))``,
-    a pure function of ``i``."""
-    return arrow_kernel(
-        spark.range(0, n, 1, num_partitions),
-        lambda bs: ([
-            {"media_id": i, "kind": kind(i), "payload": encode(i)}
-            for i in b["id"].tolist()
-        ] for b in bs),
-        MEDIA_SCHEMA_DDL,
-    )
-
-
-def synth_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    kinds = ["img", "aud", "vid"]
-    return _synth_media_df(spark, n, num_partitions, lambda i: kinds[i % 3],
-                           lambda i: encode_fake_media(i, kinds[i % 3]))
-
-
-def _decode_one(media_id: int, kind: str, payload: Optional[bytes]) -> dict:
-    row = {
-        "media_id": media_id, "kind": kind, "width": None, "height": None,
-        "channels": None, "n_bytes": len(payload) if payload else 0,
-        "byte_entropy": None, "error": None,
-    }
-    if not payload:
-        row["error"] = "empty payload"
-        return row
-    if payload[:4] != _MAGIC:
-        try:
-            d = _decode_media(bytes(payload))
-            vals, ch = d["vals"], d["channels"]
-            if "width" not in d:  # sound: width = samples per channel
-                d["width"] = len(vals) // max(ch, 1)
-                vals = struct.pack(f"<{len(vals)}h", *vals)
-            row.update(width=d["width"], height=d.get("height"), channels=ch,
-                       byte_entropy=_byte_entropy(vals))
-        except Exception as e:
-            row["error"] = f"{type(e).__name__}: {e}"
-        return row
-    try:
-        w = int.from_bytes(payload[7:9], "big")
-        h = int.from_bytes(payload[9:11], "big")
-        ch = payload[11]
-        row.update(width=w, height=h, channels=ch,
-                   byte_entropy=_byte_entropy(payload[12:]))
-    except Exception as e:  # malformed container → error column
-        row["error"] = f"{type(e).__name__}: {e}"
-    return row
-
-
-def decode_features(media: DataFrame) -> DataFrame:
-    """Dims + byte-entropy features via Arrow batches (one Python dispatch
-    per payload, never per byte-row): the FAKE container by its header,
-    every real container through ``_decode_media``, the one container
-    table :func:`real_media_features` decodes with too."""
-
-    def run(batches):
-        for b in batches:
-            yield [
-                _decode_one(i, k, p) for i, k, p in zip(
-                    b["media_id"].tolist(), b["kind"].tolist(), b["payload"].tolist()
-                )
-            ]
-
-    return arrow_kernel(media, run, FEATURES_SCHEMA_DDL)
-
-
-def frame_sample(media: DataFrame, every: int = 2) -> DataFrame:
-    """Treat each pixel-row of a 'vid' payload as a frame; emit every k-th
-    frame's byte offset + length (the video-sampling plumbing, sans codec)."""
-
-    def run(batches):
-        for b in batches:
-            out = []
-            for i, k, p in zip(
-                b["media_id"].tolist(), b["kind"].tolist(), b["payload"].tolist()
-            ):
-                if k != "vid" or not p or p[:4] != _MAGIC:
-                    continue
-                w = int.from_bytes(p[7:9], "big")
-                h = int.from_bytes(p[9:11], "big")
-                ch = p[11]
-                frame_len = w * ch
-                for f in range(0, h, every):
-                    out.append({
-                        "media_id": int(i), "frame": f,
-                        "offset": 12 + f * frame_len, "length": frame_len,
-                    })
-            yield out
-
-    return arrow_kernel(media, run, "media_id BIGINT, frame INT, offset BIGINT, length INT")
 
 
 # ---------------------------------------------------------------------------
@@ -663,154 +516,17 @@ def encode_real_media(i: int) -> bytes:
 
 
 def synth_real_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    return _synth_media_df(spark, n, num_partitions,
-                           lambda i: real_media_dims(i)["fmt"], encode_real_media)
-
-
-def avi_media_dims(i: int) -> dict:
-    """Generating formulas for AVI video doc ``i`` in the frame-sampling
-    corpus — GRAYSCALE flat-block frames only (the color fixed-point
-    chain is already pinned by the ``v0`` stratum of
-    ``real_media_decode``; this corpus exists to oracle the SAMPLING
-    semantics, so it keeps the per-frame value a one-line formula):
-    ``4 + i%5`` frames of ``8*(1+i%3) × 8*(1+(i//3)%2)`` pixels, frame
-    ``f`` pixel value ``(i*31 + f*53 + b*17) % 256`` for 8×8 block
-    ``b``, fps ``10 + (i%3)*5``."""
-    return {
-        "w": 8 * (1 + i % 3), "h": 8 * (1 + (i // 3) % 2),
-        "nf": 4 + i % 5, "fps": 10 + (i % 3) * 5,
-    }
-
-
-def encode_avi_media(i: int) -> bytes:
-    from ..avicodec import encode_avi_mjpeg
-
-    d = avi_media_dims(i)
-    frames = [_jpeg_flat_pixels(i, d["w"], d["h"], 1, f=f)
-              for f in range(d["nf"])]
-    return encode_avi_mjpeg(d["w"], d["h"], 1, frames,
-                            fps=d["fps"], qtables=_q8_tables())
-
-
-def synth_avi_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    return _synth_media_df(spark, n, num_partitions, lambda i: "mjpeg", encode_avi_media)
-
-
-AVI_FRAME_SCHEMA_DDL = (
-    "media_id BIGINT, frame_idx INT, width INT, height INT, fps INT, "
-    "n_values BIGINT, value_sum BIGINT, weighted_sum BIGINT"
-)
-
-
-def avi_frame_features(media: DataFrame, every: int = 2) -> DataFrame:
-    """REAL video frame sampling: decode every ``every``-th MJPEG frame
-    of each AVI payload (``avicodec.sample_avi_frames`` — unsampled
-    frames' JPEG decode is skipped entirely, the saving that matters at
-    video scale) and reduce each sampled frame to exact integer features
-    one row per (video, frame). Same single-Arrow-batch-dispatch shape
-    as the other media operators; a malformed payload fails the batch
-    loud (this corpus is writer-emitted, so an error column would only
-    hide generator bugs)."""
-    from ..avicodec import sample_avi_frames
-
-    def run(batches):
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["media_id"].tolist(), b["payload"].tolist()):
-                w, h, fps, sampled = sample_avi_frames(bytes(payload), every=every)
-                for fidx, (fw, fh, fch, px) in sampled:
-                    rows.append({
-                        "media_id": int(mid), "frame_idx": int(fidx),
-                        "width": fw, "height": fh, "fps": fps,
-                        **_value_features(px),
-                    })
-            yield rows
-
-    return arrow_kernel(media, run, AVI_FRAME_SCHEMA_DDL)
-
-
-def tiff_media_dims(i: int) -> dict:
-    """Generating formulas for TIFF doc ``i`` — shared by the corpus
-    builder and the DuckDB oracle. Docs ``i < 60`` rotate four strata:
-    G4 fax in both byte orders (single- and multi-strip; bi-level
-    pattern ``white iff (x//3 + y//2 + i) % 5 < 3``) and uncompressed
-    8-bit gray / 24-bit RGB (``v[k] = (i*31 + k*7) % 251``). Docs
-    ``60 <= i < 90`` are the Compression=5 (TIFF 6.0 §13 LZW) extension —
-    gray without predictor, RGB with Predictor 2 horizontal
-    differencing, gray with Predictor 2 — alternating byte orders; the
-    pixel values keep the same byte-ramp formula, so LZW + predictor
-    are pure decode-path hazards under an unchanged value oracle. Docs
-    ``i >= 90`` are Compression=3 (CCITT G3) fax strips — 1-D
-    little-endian and 2-D (T4Options bit 0) big-endian alternating —
-    with the SAME bi-level pattern as the G4 strata, so the G3 per-strip
-    restart and EOL/tag framing are the hazards under the shared fax
-    formula."""
-    if i >= 90:
-        return {
-            "w": 9 + i % 8,
-            "h": 7 + i % 6,
-            "kind": ("g3_1d", "g3_2d")[i % 2],
-            "ch": 1,
-            "big_endian": i % 2 == 1,
-            "compression": 3,
-            "predictor": 1,
-            "g3_2d": i % 2 == 1,
-            "rows_per_strip": (None, 3, 5)[(i // 4) % 3],
-        }
-    if i >= 60:
-        st = i % 3
-        return {
-            "w": 9 + i % 8,
-            "h": 7 + i % 6,
-            "kind": ("lzwgray", "lzwrgb2", "lzwgray2")[st],
-            "ch": 3 if st == 1 else 1,
-            "big_endian": (i // 3) % 2 == 1,
-            "compression": 5,
-            "predictor": 1 if st == 0 else 2,
-            "rows_per_strip": (None, 3, 5)[(i // 4) % 3],
-        }
-    kind = i % 4
-    d = {
-        "w": 9 + i % 8,
-        "h": 7 + i % 6,
-        "kind": ("g4le", "g4be", "gray", "rgb")[kind],
-        "ch": 3 if kind == 3 else 1,
-        "big_endian": kind in (1, 3),
-        "compression": 4 if kind in (0, 1) else 1,
-        "predictor": 1,
-        # rotate strip layout: whole-image and small multi-row strips
-        "rows_per_strip": (None, 3, 5)[(i // 4) % 3],
-    }
-    return d
-
-
-def encode_tiff_media(i: int) -> bytes:
-    """Real TIFF payload for doc ``i`` (pure function, no RNG)."""
-    from ..mediacodec import encode_tiff
-
-    d = tiff_media_dims(i)
-    w, h, ch = d["w"], d["h"], d["ch"]
-    if d["compression"] in (3, 4):
-        px = bytes(
-            255 if ((x // 3 + y // 2 + i) % 5) < 3 else 0
-            for y in range(h)
-            for x in range(w)
-        )
-    else:
-        px = bytes((i * 31 + k * 7) % 251 for k in range(w * h * ch))
-    return encode_tiff(
-        w, h, ch, px,
-        compression=d["compression"],
-        big_endian=d["big_endian"],
-        rows_per_strip=d["rows_per_strip"],
-        predictor=d["predictor"],
-        g3_2d=d.get("g3_2d", False),
+    """Row ``i`` is ``(i, real_media_dims(i)["fmt"], encode_real_media(i))``,
+    a pure function of ``i``."""
+    return arrow_kernel(
+        spark.range(0, n, 1, num_partitions),
+        lambda bs: ([
+            {"media_id": i, "kind": real_media_dims(i)["fmt"],
+             "payload": encode_real_media(i)}
+            for i in b["id"].tolist()
+        ] for b in bs),
+        MEDIA_SCHEMA_DDL,
     )
-
-
-def synth_tiff_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
-    return _synth_media_df(spark, n, num_partitions,
-                           lambda i: tiff_media_dims(i)["kind"], encode_tiff_media)
 
 
 def _decode_media(payload: bytes) -> dict:
@@ -856,16 +572,12 @@ def _decode_media(payload: bytes) -> dict:
     elif payload[:3] == b"\xff\xd8\xff":
         from ..jpegcodec import decode_jpeg as decode
         fmt = "jpeg"
-    elif payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from ..mediacodec import decode_tiff as decode
-        fmt = "tiff"
     elif payload[:4] == b"\xff\x4f\xff\x51":
         from ..jpxcodec import decode_jpx as decode
         fmt = "jp2k"
     else:
         raise NotImplementedError(
-            "no from-scratch decoder for this container (compressed VIDEO "
-            "stays stubbed)"
+            f"no from-scratch decoder for this container (magic {payload[:4]!r})"
         )
     w, h, ch, vals = decode(payload)
     return {"fmt": fmt, "width": w, "height": h, "channels": ch, "vals": vals}
@@ -888,7 +600,7 @@ def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
 
 
 def real_media_features(media: DataFrame) -> DataFrame:
-    """REAL decode (``_decode_media``: PNG/BMP/GIF/JPEG/TIFF/JPEG 2000,
+    """REAL decode (``_decode_media``: PNG/BMP/GIF/JPEG/JPEG 2000,
     WAV/μ-law/A-law/ADPCM/FLAC, MJPEG AVI) → exact integer features per
     payload.
 

@@ -122,94 +122,96 @@ def run_extract_job(
     """
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # restored in the finally: a wave that raises must not leave dynamic
+    # overwrite behind in the caller's session
+    try:
+        done = set(load_manifest(out_dir))
+        pending = [p for p in range(checkpoint_partitions) if p not in done]
+        wave_size = max(1, (len(pending) + waves - 1) // waves) if pending else 1
 
-    done = set(load_manifest(out_dir))
-    pending = [p for p in range(checkpoint_partitions) if p not in done]
-    wave_size = max(1, (len(pending) + waves - 1) // waves) if pending else 1
-
-    out_data = str(Path(out_dir) / "extracted")
-    processed: List[int] = []
-    wave_sizes: List[int] = []
-    ema: Optional[float] = None  # seconds per partition, exponentially smoothed
-    cursor = 0
-    t_job = time.time()
-    while cursor < len(pending) and (max_waves is None or len(wave_sizes) < max_waves):
-        ids: Sequence[int] = pending[cursor : cursor + wave_size]
-        cursor += len(ids)
-        wave_sizes.append(len(ids))
-        t0 = time.time()
-        subset = pages.filter(partition_id_col(checkpoint_partitions).isin(list(ids)))
-        ext = extract_pages(
-            subset,
-            num_partitions=num_partitions,
-            checkpoint_partitions=checkpoint_partitions,
-            verify=verify,
-        )
-        ext.write.partitionBy("partition_id").mode("overwrite").parquet(out_data)
-        # metrics for the wave, keyed by the stable partition id. Explicit
-        # schema: a wave whose pids matched no urls writes zero files, and
-        # schema inference on an empty directory would throw.
-        stats = (
-            spark.read.schema(EXTRACTED_SCHEMA).parquet(out_data)
-            .filter(F.col("partition_id").isin(list(ids)))
-            .groupBy("partition_id")
-            .agg(
-                F.count("*").alias("docs"),
-                F.sum("payload_bytes").alias("bytes"),
-                F.sum("n_tokens").alias("tokens"),
-                F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
+        out_data = str(Path(out_dir) / "extracted")
+        processed: List[int] = []
+        wave_sizes: List[int] = []
+        ema: Optional[float] = None  # seconds per partition, exponentially smoothed
+        cursor = 0
+        t_job = time.time()
+        while cursor < len(pending) and (max_waves is None or len(wave_sizes) < max_waves):
+            ids: Sequence[int] = pending[cursor : cursor + wave_size]
+            cursor += len(ids)
+            wave_sizes.append(len(ids))
+            t0 = time.time()
+            subset = pages.filter(partition_id_col(checkpoint_partitions).isin(list(ids)))
+            ext = extract_pages(
+                subset,
+                num_partitions=num_partitions,
+                checkpoint_partitions=checkpoint_partitions,
+                verify=verify,
             )
-            .collect()
-        )
-        by_pid = {r["partition_id"]: r for r in stats}
-        if wet_dir:
-            import shutil
-
-            from b_pdf_parser_spark.sources.warc import write_wet
-
-            for pid in ids:
-                sub = Path(wet_dir) / f"partition_id={int(pid)}"
-                shutil.rmtree(sub, ignore_errors=True)
-                # a clear that silently failed (non-POSIX mount, permission
-                # skew between driver and executors) would duplicate every
-                # record of this wave on resume — fail loud instead
-                if sub.exists() and any(sub.iterdir()):
-                    raise RuntimeError(
-                        f"stale WET segments survived the pre-write clear of "
-                        f"{sub} — wet_dir must be a filesystem shared between "
-                        f"driver and executors (see run_extract_job docstring)"
-                    )
-            wave_rows = (
+            ext.write.partitionBy("partition_id").mode("overwrite").parquet(out_data)
+            # metrics for the wave, keyed by the stable partition id. Explicit
+            # schema: a wave whose pids matched no urls writes zero files, and
+            # schema inference on an empty directory would throw.
+            stats = (
                 spark.read.schema(EXTRACTED_SCHEMA).parquet(out_data)
                 .filter(F.col("partition_id").isin(list(ids)))
-                .select("url", "warc_ts", "text", "partition_id")
+                .groupBy("partition_id")
+                .agg(
+                    F.count("*").alias("docs"),
+                    F.sum("payload_bytes").alias("bytes"),
+                    F.sum("n_tokens").alias("tokens"),
+                    F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
+                )
+                .collect()
             )
-            # the tiny per-segment manifest is the write's action
-            write_wet(wave_rows, wet_dir, partition_col="partition_id").collect()
-        t1 = time.time()
-        for pid in ids:
-            r = by_pid.get(pid)
-            _commit_manifest(
-                out_dir,
-                {
-                    "partition_id": int(pid),
-                    "docs": int(r["docs"]) if r else 0,
-                    "bytes": int(r["bytes"] or 0) if r else 0,
-                    "tokens": int(r["tokens"] or 0) if r else 0,
-                    "errors": int(r["errors"] or 0) if r else 0,
-                    "started": t0,
-                    "finished": t1,
-                    "lineage": lineage or f"app={_APP_VERSION};P={checkpoint_partitions}",
-                },
-            )
-            processed.append(int(pid))
+            by_pid = {r["partition_id"]: r for r in stats}
+            if wet_dir:
+                import shutil
 
-        if target_wave_seconds is not None:
-            rate = (t1 - t0) / max(len(ids), 1)
-            ema = rate if ema is None else 0.5 * ema + 0.5 * rate
-            wave_size = max(1, int(target_wave_seconds / max(ema, 1e-9)))
+                from b_pdf_parser_spark.sources.warc import write_wet
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+                for pid in ids:
+                    sub = Path(wet_dir) / f"partition_id={int(pid)}"
+                    shutil.rmtree(sub, ignore_errors=True)
+                    # a clear that silently failed (non-POSIX mount, permission
+                    # skew between driver and executors) would duplicate every
+                    # record of this wave on resume — fail loud instead
+                    if sub.exists() and any(sub.iterdir()):
+                        raise RuntimeError(
+                            f"stale WET segments survived the pre-write clear of "
+                            f"{sub} — wet_dir must be a filesystem shared between "
+                            f"driver and executors (see run_extract_job docstring)"
+                        )
+                wave_rows = (
+                    spark.read.schema(EXTRACTED_SCHEMA).parquet(out_data)
+                    .filter(F.col("partition_id").isin(list(ids)))
+                    .select("url", "warc_ts", "text", "partition_id")
+                )
+                # the tiny per-segment manifest is the write's action
+                write_wet(wave_rows, wet_dir, partition_col="partition_id").collect()
+            t1 = time.time()
+            for pid in ids:
+                r = by_pid.get(pid)
+                _commit_manifest(
+                    out_dir,
+                    {
+                        "partition_id": int(pid),
+                        "docs": int(r["docs"]) if r else 0,
+                        "bytes": int(r["bytes"] or 0) if r else 0,
+                        "tokens": int(r["tokens"] or 0) if r else 0,
+                        "errors": int(r["errors"] or 0) if r else 0,
+                        "started": t0,
+                        "finished": t1,
+                        "lineage": lineage or f"app={_APP_VERSION};P={checkpoint_partitions}",
+                    },
+                )
+                processed.append(int(pid))
+
+            if target_wave_seconds is not None:
+                rate = (t1 - t0) / max(len(ids), 1)
+                ema = rate if ema is None else 0.5 * ema + 0.5 * rate
+                wave_size = max(1, int(target_wave_seconds / max(ema, 1e-9)))
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     manifest = load_manifest(out_dir)
     return {
         "processed_partitions": processed,

@@ -1,16 +1,12 @@
-"""MJPEG-in-AVI container codec: RIFF walk round-trips, frame order and
-sampling semantics, header/stream/frame agreement enforcement, and loud
-failure on out-of-scope streams (see b_pdf_parser_spark/avicodec.py)."""
+"""MJPEG-in-AVI container codec: RIFF walk round-trips, frame order,
+header/stream/frame agreement enforcement, and loud failure on
+out-of-scope streams (see b_pdf_parser_spark/avicodec.py)."""
 
 import struct
 
 import pytest
 
-from b_pdf_parser_spark.avicodec import (
-    decode_avi,
-    encode_avi_mjpeg,
-    sample_avi_frames,
-)
+from b_pdf_parser_spark.avicodec import decode_avi, encode_avi_mjpeg
 from b_pdf_parser_spark.jpegcodec import (
     QUANT_CHROMA,
     QUANT_LUM,
@@ -47,19 +43,6 @@ def test_roundtrip_matches_per_frame_jpeg(ch):
         )
     if ch == 1:  # grayscale flat blocks are bit-exact
         assert [d[3] for d in decoded] == frames
-
-
-def test_frame_sampling_skips_decodes_but_keeps_indices():
-    w, h = 8, 8
-    frames = [_flat_frame(3, f, w, h, 1) for f in range(5)]
-    data = encode_avi_mjpeg(w, h, 1, frames, fps=10, qtables=_Q8)
-    _, _, _, _, full = decode_avi(data)
-    dw, dh, fps, sampled = sample_avi_frames(data, every=2)
-    assert (dw, dh, fps) == (w, h, 10)
-    assert [ix for ix, _ in sampled] == [0, 2, 4]
-    assert [fr for _, fr in sampled] == [full[0], full[2], full[4]]
-    _, _, _, all_frames = sample_avi_frames(data, every=1)
-    assert [fr for _, fr in all_frames] == full
 
 
 def test_header_frame_count_disagreement_fails_loud():
@@ -104,23 +87,6 @@ def test_not_an_avi():
         decode_avi(b"RIFF\x04\x00\x00\x00WAVE")
     with pytest.raises(ValueError):
         decode_avi(b"garbage")
-
-
-def test_sampling_api_validates_like_full_decode():
-    # sample_avi_frames shares decode_avi's validated walk: a lying
-    # dwTotalFrames or a foreign handler must fail there too
-    data = bytearray(encode_avi_mjpeg(8, 8, 1, [_flat_frame(1, 0, 8, 8, 1)] * 3,
-                                      qtables=_Q8))
-    pos = bytes(data).index(b"avih") + 8
-    struct.pack_into("<I", data, pos + 16, 9)  # dwTotalFrames lie
-    with pytest.raises(ValueError, match="promises 9 frames"):
-        sample_avi_frames(bytes(data), every=2)
-    data2 = bytearray(encode_avi_mjpeg(8, 8, 1, [_flat_frame(1, 0, 8, 8, 1)],
-                                       qtables=_Q8))
-    hp = bytes(data2).index(b"MJPG")
-    data2[hp : hp + 4] = b"XVID"
-    with pytest.raises(ValueError, match="only MJPG"):
-        sample_avi_frames(bytes(data2), every=1)
 
 
 def test_pixel_budget_is_cumulative_not_header_trusted(monkeypatch):

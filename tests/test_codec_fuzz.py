@@ -20,12 +20,10 @@ from b_pdf_parser_spark.mediacodec import (
     decode_bmp,
     decode_gif,
     decode_png,
-    decode_tiff,
     decode_wav,
     encode_bmp,
     encode_gif,
     encode_png,
-    encode_tiff,
     encode_wav,
     encode_wav_adpcm_nibbles,
 )
@@ -51,14 +49,6 @@ SAMPLES = {
                   decode_wav),
     "wav_adpcm": (encode_wav_adpcm_nibbles(8000, 5, [k % 16 for k in range(60)]),
                   decode_wav),
-    "tiff_lzw_pred": (
-        encode_tiff(9, 7, 1, bytes((k * 7) % 251 for k in range(63)),
-                    compression=5, predictor=2),
-        decode_tiff),
-    "tiff_g3_2d": (
-        encode_tiff(9, 7, 1, bytes(255 if k % 3 else 0 for k in range(63)),
-                    compression=3, g3_2d=True),
-        decode_tiff),
     "jpeg": (encode_jpeg(16, 8, 3, bytes((k * 31) % 256 for k in range(16 * 8 * 3))),
              decode_jpeg),
 }

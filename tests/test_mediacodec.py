@@ -116,60 +116,31 @@ def test_wav_rejects_non_pcm():
 
 
 def test_decode_features_real_formats_through_spark(spark):
-    # the generic decode_features path must REALLY decode PNG/BMP/WAV
-    # payloads inside arrow_kernel (dims filled, no error), and keep the
-    # honest stub error for entropy-coded containers
-    import pyspark.sql.functions as F
-
+    # real_media_features must REALLY decode the real corpus inside
+    # arrow_kernel (no error row), and turn a malformed or undecodable
+    # payload into an error row instead of failing the batch
     from b_pdf_parser_spark.operators.multimodal import (
-        decode_features,
-        synth_real_media_df,
-    )
-
-    out = decode_features(synth_real_media_df(spark, 24)).collect()
-    assert len(out) == 24 and all(r["error"] is None for r in out)
-    # byte_entropy == 0 is legitimate for single-block flat JPEGs (all
-    # decoded pixels identical); every other corpus payload has spread
-    assert all(r["channels"] is not None and r["byte_entropy"] >= 0 for r in out)
-    assert sum(1 for r in out if r["byte_entropy"] > 0) >= 20
-    # a truncated JPEG now hits the REAL decoder and must fail loudly
-    bad_jpeg = spark.createDataFrame(
-        [(0, "img", bytearray(b"\xff\xd8\xff\xe0" + bytes(32)))],
-        "media_id LONG, kind STRING, payload BINARY",
-    )
-    err = decode_features(bad_jpeg).collect()[0]["error"]
-    assert err and "ValueError" in err
-    # still-stubbed container (JPEG2000 signature box) keeps the honest stub
-    jp2 = spark.createDataFrame(
-        [(0, "img", bytearray(b"\x00\x00\x00\x0cjP  \r\n\x87\n" + bytes(32)))],
-        "media_id LONG, kind STRING, payload BINARY",
-    )
-    err = decode_features(jp2).collect()[0]["error"]
-    assert err and "NotImplementedError" in err
-
-
-def test_decode_features_decodes_every_container_real_media_features_does(spark):
-    # one container table behind both kernels: a TIFF, FLAC, JPEG 2000 or
-    # AVI payload decodes in decode_features too, with the same dimensions
-    from b_pdf_parser_spark.operators.multimodal import (
-        decode_features,
+        MEDIA_SCHEMA_DDL,
         real_media_features,
         synth_real_media_df,
-        synth_tiff_media_df,
     )
 
-    tiff = decode_features(synth_tiff_media_df(spark, 12)).collect()
-    assert len(tiff) == 12 and all(r["error"] is None for r in tiff)
-    media = synth_real_media_df(spark, 216)
-    real = {r["media_id"]: r for r in real_media_features(media).collect()}
-    fmts = {r["fmt"] for r in real.values() if r["error"] is None}
-    assert {"flac", "jp2k", "mjpeg"} <= fmts
-    for r in decode_features(media).collect():
-        want = real[r["media_id"]]
-        assert (r["error"] is None) == (want["error"] is None), (r, want)
-        if want["width"] is not None:  # pictures; sound rows count samples
-            assert (r["width"], r["height"], r["channels"]) == (
-                want["width"], want["height"], want["channels"])
+    out = real_media_features(synth_real_media_df(spark, 24)).collect()
+    assert len(out) == 24 and all(r["error"] is None for r in out)
+    assert all(r["channels"] is not None and r["n_values"] > 0 for r in out)
+
+    def error_of(payload):
+        df = spark.createDataFrame([(0, "img", bytearray(payload))], MEDIA_SCHEMA_DDL)
+        return real_media_features(df).collect()[0]["error"]
+
+    # a truncated JPEG hits the REAL decoder and must fail loudly
+    err = error_of(b"\xff\xd8\xff\xe0" + bytes(32))
+    assert err and "ValueError" in err
+    # containers with no decoder keep the honest stub: a JPEG 2000
+    # signature box, and TIFF in either byte order
+    for magic in (b"\x00\x00\x00\x0cjP  \r\n\x87\n", b"II*\x00", b"MM\x00*"):
+        err = error_of(magic + bytes(32))
+        assert err and "NotImplementedError" in err, (magic, err)
 
 
 def test_bmp_top_down_negative_height():
@@ -188,113 +159,6 @@ def test_bmp_top_down_negative_height():
 
 
 # ---------------------------------------------------------------------------
-# TIFF 6.0 / class F (both byte orders, strips, G4 fax via ccittcodec)
-# ---------------------------------------------------------------------------
-
-def test_tiff_gray_rgb_roundtrip_both_endians_and_strips():
-    from b_pdf_parser_spark.mediacodec import decode_tiff, encode_tiff
-
-    for be in (False, True):
-        for rps in (None, 2, 5):
-            for ch in (1, 3):
-                w, h = 11, 7
-                px = _pixels(9 if be else 4, w * h * ch)
-                enc = encode_tiff(w, h, ch, px, big_endian=be, rows_per_strip=rps)
-                assert enc[:2] == (b"MM" if be else b"II")
-                assert decode_tiff(enc) == (w, h, ch, px)
-
-
-def test_tiff_g4_fax_roundtrip_and_multistrip_independence():
-    from b_pdf_parser_spark.mediacodec import decode_tiff, encode_tiff
-
-    w, h = 21, 12  # non-byte-aligned width
-    px = bytes(255 if ((x // 3 + y // 2) % 5) < 3 else 0
-               for y in range(h) for x in range(w))
-    whole = encode_tiff(w, h, 1, px, compression=4)
-    stripped = encode_tiff(w, h, 1, px, compression=4, big_endian=True,
-                           rows_per_strip=3)
-    assert decode_tiff(whole) == (w, h, 1, px)
-    # strips are INDEPENDENT G4 blocks (each restarts from the imaginary
-    # white row) — a decoder that carries the reference row across a
-    # strip boundary decodes different pixels
-    assert decode_tiff(stripped) == (w, h, 1, px)
-    assert whole[8:] != stripped[8:]  # layouts genuinely differ
-
-
-def test_tiff_g4_photometric_blackiszero_inverts():
-    from b_pdf_parser_spark.mediacodec import decode_tiff, encode_tiff
-
-    w, h = 16, 4
-    px = bytes(255 if x < 8 else 0 for _ in range(h) for x in range(w))
-    enc = bytearray(encode_tiff(w, h, 1, px, compression=4))
-    # flip PhotometricInterpretation 0 -> 1 in the IFD (tag 262)
-    n = int.from_bytes(enc[8:10], "little")
-    for k in range(n):
-        base = 10 + 12 * k
-        if int.from_bytes(enc[base:base + 2], "little") == 262:
-            assert enc[base + 8] == 0
-            enc[base + 8] = 1
-            break
-    else:
-        raise AssertionError("photometric tag not found")
-    inv = decode_tiff(bytes(enc))
-    assert inv == (w, h, 1, bytes(255 - v for v in px))
-
-
-def test_tiff_bad_inputs_raise():
-    import pytest as _pytest
-
-    from b_pdf_parser_spark.mediacodec import decode_tiff, encode_tiff
-
-    good = encode_tiff(8, 8, 1, _pixels(1, 64))
-    with _pytest.raises(ValueError):
-        decode_tiff(b"ZZ" + good[2:])  # bad byte-order mark
-    with _pytest.raises(ValueError):
-        decode_tiff(good[:20])  # truncated IFD
-    with _pytest.raises(ValueError):
-        encode_tiff(8, 8, 3, bytes(64), compression=4)  # G4 needs 1 sample
-    with _pytest.raises(ValueError):
-        encode_tiff(8, 8, 1, bytes(63))  # size mismatch
-    # strip table out of range
-    bad = bytearray(good)
-    bad[-1] ^= 0  # keep bytes, then truncate the strip data entirely
-    with _pytest.raises(ValueError):
-        decode_tiff(bytes(bad[:-32]))
-
-
-def test_tiff_gray_whiteiszero_inverts_and_fillorder2_rejected():
-    import pytest as _pytest
-
-    from b_pdf_parser_spark.mediacodec import decode_tiff, encode_tiff
-
-    w, h = 6, 5
-    px = _pixels(2, w * h)
-    enc = bytearray(encode_tiff(w, h, 1, px))
-    n = int.from_bytes(enc[8:10], "little")
-    for k in range(n):
-        base = 10 + 12 * k
-        if int.from_bytes(enc[base:base + 2], "little") == 262:
-            assert enc[base + 8] == 1  # gray default BlackIsZero
-            enc[base + 8] = 0          # -> WhiteIsZero
-            break
-    # scanner-style WhiteIsZero gray canonicalizes by inversion
-    assert decode_tiff(bytes(enc)) == (w, h, 1, bytes(255 - v for v in px))
-    # FillOrder=2 (LSB-first) is unsupported and must fail loud: splice a
-    # FillOrder entry over the RowsPerStrip tag slot (tag 278 -> 266)
-    enc2 = bytearray(encode_tiff(w, h, 1, px))
-    for k in range(n):
-        base = 10 + 12 * k
-        if int.from_bytes(enc2[base:base + 2], "little") == 278:
-            enc2[base:base + 2] = (266).to_bytes(2, "little")
-            enc2[base + 2:base + 4] = (3).to_bytes(2, "little")  # SHORT
-            enc2[base + 4:base + 8] = (1).to_bytes(4, "little")
-            enc2[base + 8:base + 12] = (2).to_bytes(2, "little") + b"\x00\x00"
-            break
-    with _pytest.raises(ValueError):
-        decode_tiff(bytes(enc2))
-
-
-# ---------------------------------------------------------------------------
 # Round-5-close PNG extensions: palette (PLTE), sub-byte depths, Adam7
 # ---------------------------------------------------------------------------
 
@@ -302,10 +166,33 @@ from b_pdf_parser_spark.mediacodec import (  # noqa: E402
     _IMA_STEPS,
     _ima_step,
     decode_wav as _decode_wav,
-    encode_wav_adpcm,
     encode_wav_adpcm_nibbles,
-    ima_adpcm_encode,
 )
+
+
+def _ima_adpcm_encode(samples, pred, idx=0):
+    """Greedy standard IMA encoder: nibble per sample tracking the shared
+    predictor state (lossy — the decoder reproduces the encoder's internal
+    predictor exactly, not the input)."""
+    out = []
+    for s in samples:
+        step = _IMA_STEPS[idx]
+        delta = s - pred
+        n = 0
+        if delta < 0:
+            n = 8
+            delta = -delta
+        if delta >= step:
+            n |= 4
+            delta -= step
+        if delta >= step >> 1:
+            n |= 2
+            delta -= step >> 1
+        if delta >= step >> 2:
+            n |= 1
+        out.append(n)
+        pred, idx = _ima_step(n, pred, idx)
+    return out
 
 
 @pytest.mark.parametrize("interlace", [False, True])
@@ -413,12 +300,12 @@ def test_adpcm_greedy_encoder_tracks_slew_bounded_signal():
     sig = [0]
     for k in range(800):
         sig.append(sig[-1] + (3 if (k // 40) % 2 == 0 else -3))
-    rate, ch, dec = _decode_wav(encode_wav_adpcm(22050, sig))
+    nibs = _ima_adpcm_encode(sig[1:], sig[0], 0)
+    rate, ch, dec = _decode_wav(encode_wav_adpcm_nibbles(22050, sig[0], nibs))
     assert len(dec) == len(sig) and dec[0] == sig[0]
     # decode must equal the encoder's internal predictor trajectory, and
     # that trajectory must stay within one step of the input everywhere
     pred, idx = sig[0], 0
-    nibs = ima_adpcm_encode(sig[1:], sig[0], 0)
     traj = [pred]
     for s, nb in zip(sig[1:], nibs):
         step = _IMA_STEPS[idx]
@@ -448,103 +335,6 @@ def test_adpcm_bad_step_index_rejected():
     data[off] = 89
     with pytest.raises(ValueError, match="index"):
         _decode_wav(bytes(data))
-
-
-# ---------------------------------------------------------------------------
-# TIFF Compression=5 (LZW) + Predictor 2
-# ---------------------------------------------------------------------------
-
-from b_pdf_parser_spark.mediacodec import (  # noqa: E402
-    _tiff_lzw_compress,
-    _tiff_lzw_decompress,
-    decode_tiff,
-    encode_tiff,
-)
-
-
-def test_tiff_lzw_known_answer_and_pdf_filter_parity():
-    # the wire format is the PDF LZWDecode variant (EarlyChange 1): the
-    # spec's classic '-----A---B' example must survive, decoded by the
-    # SHARED pdfmodel._lzw implementation
-    enc = _tiff_lzw_compress(b"-----A---B")
-    assert _tiff_lzw_decompress(enc, 10) == b"-----A---B"
-    from b_pdf_parser_spark.pdfmodel import _lzw
-    assert _lzw(enc, early_change=1) == b"-----A---B"
-
-
-def test_tiff_lzw_width_growth_and_table_reset():
-    import random
-    rng = random.Random(7)
-    for data in (
-        bytes(rng.randrange(256) for _ in range(30000)),  # forces 12-bit + clear
-        b"ab" * 15000,
-        bytes((k * 7) % 251 for k in range(25000)),
-        b"", b"A",
-    ):
-        assert _tiff_lzw_decompress(_tiff_lzw_compress(data), len(data)) == data
-
-
-def test_tiff_lzw_wrong_length_rejected():
-    enc = _tiff_lzw_compress(b"abcabc")
-    with pytest.raises(ValueError, match="expected"):
-        _tiff_lzw_decompress(enc, 7)
-
-
-@pytest.mark.parametrize("predictor", [1, 2])
-@pytest.mark.parametrize("ch", [1, 3])
-def test_tiff_lzw_roundtrip_predictor_strips_endians(ch, predictor):
-    for be in (False, True):
-        for rps in (None, 3):
-            for w, h in ((9, 7), (16, 5), (1, 4)):
-                px = bytes((31 + k * 7) % 251 for k in range(w * h * ch))
-                t = encode_tiff(w, h, ch, px, compression=5, big_endian=be,
-                                rows_per_strip=rps, predictor=predictor)
-                assert decode_tiff(t) == (w, h, ch, px), (ch, predictor, be, rps, w, h)
-
-
-def test_tiff_predictor_changes_wire_not_pixels():
-    # a smooth ramp compresses differently under differencing, but the
-    # decoded pixels are identical — predictor is wire-only
-    px = bytes(k % 251 for k in range(16 * 8))
-    a = encode_tiff(16, 8, 1, px, compression=5, predictor=1)
-    b = encode_tiff(16, 8, 1, px, compression=5, predictor=2)
-    assert a != b
-    assert decode_tiff(a) == decode_tiff(b) == (16, 8, 1, px)
-
-
-def test_tiff_predictor_without_lzw_rejected():
-    px = bytes(12)
-    with pytest.raises(ValueError, match="Predictor"):
-        encode_tiff(4, 3, 1, px, predictor=2)  # uncompressed + predictor
-
-
-@pytest.mark.parametrize("g3_2d", [False, True])
-def test_tiff_g3_fax_roundtrip_strips_endians(g3_2d):
-    for be in (False, True):
-        for rps in (None, 3, 5):
-            for w, h in ((9, 7), (16, 5), (23, 11)):
-                px = bytes(255 if ((x // 3 + y // 2 + w) % 5) < 3 else 0
-                           for y in range(h) for x in range(w))
-                t = encode_tiff(w, h, 1, px, compression=3, big_endian=be,
-                                rows_per_strip=rps, g3_2d=g3_2d)
-                assert decode_tiff(t) == (w, h, 1, px), (g3_2d, be, rps, w, h)
-
-
-def test_tiff_g3_t4options_uncompressed_mode_rejected():
-    t = bytearray(encode_tiff(9, 7, 1, bytes(63), compression=3, g3_2d=True))
-    # flip T4Options to claim bit 1 (T.4 uncompressed mode): must refuse
-    i = t.find(struct.pack("<HHI", 292, 4, 1))
-    assert i > 0
-    t[i + 8] |= 2
-    with pytest.raises(ValueError, match="uncompressed mode"):
-        decode_tiff(bytes(t))
-
-
-def test_tiff_g3_flags_rejected_on_wrong_compression():
-    with pytest.raises(ValueError, match="g3_2d"):
-        encode_tiff(4, 3, 1, bytes(12), compression=1, g3_2d=True)
-    with pytest.raises(ValueError, match="bi-level"):
-        encode_tiff(4, 3, 3, bytes(36), compression=3)
 
 
 # ---------------------------------------------------------------------------
@@ -788,62 +578,3 @@ def test_wav_float32_exact_family_and_clamp():
 def test_encode_wav_float32_conflicts_rejected():
     with pytest.raises(ValueError, match="at most one"):
         encode_wav(8000, 1, [0.0], float32=True, ulaw=True)
-
-
-# ---------------------------------------------------------------------------
-# animated GIF: inter-frame composition
-# ---------------------------------------------------------------------------
-
-
-def test_gif_frames_disposal_semantics():
-    from b_pdf_parser_spark.mediacodec import decode_gif_frames, encode_gif_frames
-
-    pal = [(10, 20, 30), (200, 100, 50), (0, 0, 0), (255, 255, 255)]
-    frames = [
-        dict(left=0, top=0, w=4, h=1, indices=bytes([1]) * 4,
-             disposal=1, delay_cs=10),
-        dict(left=0, top=1, w=4, h=1, indices=bytes([3]) * 4,
-             disposal=2, delay_cs=20),
-        dict(left=2, top=2, w=2, h=1, indices=bytes([0, 1]),
-             disposal=3, delay_cs=30, transparent=0),
-    ]
-    sw, sh, out = decode_gif_frames(encode_gif_frames(4, 3, pal, 0, frames))
-    assert (sw, sh) == (4, 3) and [f["delay_cs"] for f in out] == [10, 20, 30]
-
-    def row_r(f, y):
-        return [f["rgb"][3 * (y * 4 + x)] for x in range(4)]
-
-    assert row_r(out[0], 0) == [200] * 4          # frame 0 paints row 0
-    assert row_r(out[1], 1) == [255] * 4          # disposal 1 left row 0...
-    assert row_r(out[1], 0) == [200] * 4          # ...visible under frame 1
-    assert row_r(out[2], 1) == [10] * 4           # disposal 2 restored bg
-    # transparency: index 0 leaves the canvas (bg), index 1 paints
-    assert row_r(out[2], 2) == [10, 10, 10, 200]
-
-
-def test_gif_frames_local_palette_and_single_frame_matches_static():
-    from b_pdf_parser_spark.mediacodec import (
-        decode_gif,
-        decode_gif_frames,
-        encode_gif,
-        encode_gif_frames,
-    )
-
-    gpal = [(1, 2, 3), (9, 8, 7)]
-    lpal = [(100, 110, 120), (130, 140, 150)]
-    g = encode_gif_frames(2, 2, gpal, 0, [
-        dict(left=0, top=0, w=2, h=1, indices=bytes([1, 0]),
-             disposal=0, palette=lpal),
-    ])
-    sw, sh, out = decode_gif_frames(g)
-    # local palette scopes to its frame only; untouched rows keep global bg
-    assert out[0]["rgb"][0:6] == bytes([130, 140, 150, 100, 110, 120])
-    assert out[0]["rgb"][6:9] == bytes([1, 2, 3])
-
-    # a 1-frame full-canvas animation equals the static decoder's pixels
-    idx = bytes([0, 1, 1, 0])
-    static = decode_gif(encode_gif(2, 2, gpal, idx))
-    _, _, anim = decode_gif_frames(encode_gif_frames(2, 2, gpal, 0, [
-        dict(left=0, top=0, w=2, h=2, indices=idx, disposal=0),
-    ]))
-    assert static[3] == anim[0]["rgb"]

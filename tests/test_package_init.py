@@ -212,3 +212,15 @@ def test_first_kernel_ships_in_a_fresh_session(name, tmp_path):
     got = pd.read_parquet(got_path)
     assert len(got) > 0
     assert _rows(got) == _rows(exp)
+
+
+def test_extraction_kernel_import_leaves_pandas_out():
+    """Importing the extraction kernel, as every fresh Python worker does,
+    must not load pandas: only ``fields.extract_metadata_batch`` uses it,
+    and it imports pandas itself."""
+    code = ("import sys; import b_pdf_parser_spark.operators.extract; "
+            "print('pandas' in sys.modules)")
+    proc = subprocess.run([sys.executable, "-c", code], cwd=PKGDIR.parent,
+                          timeout=120, capture_output=True, text=True)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.strip() == "False"

@@ -6,6 +6,7 @@ import sys
 from pathlib import Path
 
 import pyspark.sql.functions as F
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -75,6 +76,23 @@ def test_overwrite_mode_restored(spark, tmp_path):
     pages = synth_pages_df(spark, 12, seed=4, num_partitions=2)
     run_extract_job(spark, pages, str(tmp_path / "j"), checkpoint_partitions=4,
                     waves=1, num_partitions=2)
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == prev
+
+
+def test_overwrite_mode_restored_when_a_wave_raises(spark, tmp_path, monkeypatch):
+    # a raising wave (write failure, stale WET segments) must not leave
+    # dynamic partition overwrite behind in the caller's session
+    import jobs.extract
+
+    def boom(*a, **kw):
+        raise RuntimeError("wave failed")
+
+    monkeypatch.setattr(jobs.extract, "extract_pages", boom)
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    pages = synth_pages_df(spark, 12, seed=4, num_partitions=2)
+    with pytest.raises(RuntimeError, match="wave failed"):
+        run_extract_job(spark, pages, str(tmp_path / "j"), checkpoint_partitions=4,
+                        waves=1, num_partitions=2)
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == prev
 
 
