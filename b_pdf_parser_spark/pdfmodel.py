@@ -19,10 +19,12 @@ so the full object model is implemented here from the public PDF 1.7 spec:
 * page-tree walk with attribute inheritance
 * content-stream interpreter for the text operators
   ``BT ET Tf Td TD Tm T* TL Tj TJ ' "`` and the graphics operators
-  ``q Q cm`` (everything else is consumed and ignored): the tokenizer
-  (``_content_ops``) yields one event per operator, operands already
-  counted and coerced, whether a fused regex alternative or the generic
-  token path read it; an unterminated literal string runs to the end of the
+  ``q Q cm`` (everything else is consumed and ignored): one loop
+  (``_extract_spans``) matches the content tokenizer and applies each
+  operator straight to the text state, whether a fused regex alternative
+  or the generic token path read it, and appends each shown string as a
+  ``(-y, x, seq, text)`` tuple; ``q``/``Q`` save and restore the CTM, font
+  and leading; an unterminated literal string runs to the end of the
   stream, so each stream is scanned once
 * XY-cut-style line assembly: positioned spans are clustered into lines by
   baseline Y, sorted left-to-right, and lines are emitted top-to-bottom.
@@ -42,7 +44,8 @@ import math
 import re
 import struct
 import zlib
-from typing import Any, Dict, Iterator, List, Optional, Tuple, Union
+from operator import itemgetter
+from typing import Any, Dict, List, Optional, Tuple, Union
 
 from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
 from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
@@ -1138,33 +1141,37 @@ def _pre_translate(m: Matrix, tx: float, ty: float) -> Matrix:
 # fused-path separators exclude \x00 on purpose: bytes.split() (used to cut
 # the matched run into numbers) only splits ASCII whitespace, so the regex
 # must not accept more than split() handles; \x00-separated streams take the
-# generic token path instead
-_NUM_WS = _NUMBER + rb"[\t\n\x0c\r ]+"
+# generic token path instead. A number's whitespace is possessive and the
+# number runs are spelled out, not counted: sre matches a fixed sequence
+# faster than a repeated group, and neither changes what matches
+_NUM_WS = _NUMBER + rb"[\t\n\x0c\r ]++"
 _OP_END = rb"(?![A-Za-z0-9'\"*])"  # an operator ends at a non-operator byte
 _CTOK_RE = re.compile(
     _WSB + rb"*"  # leading whitespace folded into every token
     # one alternative covers ALL "a b c d e f Tm" forms, with the show fused
     # in as an OPTIONAL suffix: the 6 numbers are parsed exactly once whether
     # the Tm stands alone, precedes an escape-free "(text) Tj", or precedes a
-    # "<hex> Tj" (Type0/CID)
-    rb"(?:(?P<tm6>(?:" + _NUM_WS + rb"){6})Tm" + _OP_END
+    # "<hex> Tj" (Type0/CID). A translation's "1 0 0 1 " (the dominant
+    # spelling) is tried as literal bytes before the four numbers it spells
+    rb"(?:(?P<tm6>(?:1 0 0 1 |" + _NUM_WS * 4 + rb")" + _NUM_WS * 2 + rb")Tm" + _OP_END
     + rb"(?:" + _WSB + rb"*"
     rb"(?:\((?P<tmtjs>[^()\\]*)\)" + _WSB + rb"*Tj" + _OP_END
     + rb"|<(?P<tmhs>[0-9A-Fa-f\x00\t\n\x0c\r ]*)>" + _WSB + rb"*"
     rb"Tj" + _OP_END + rb"))?"
     rb"|\((?P<tjs>[^()\\]*)\)" + _WSB + rb"*Tj" + _OP_END
-    # fused "<hex> Tj" show (the dominant idiom of Type0/CID text streams)
+    # fused "<hex> Tj" and "<hex> '" shows (the idioms of Type0/CID text)
     + rb"|<(?P<tjh>[0-9A-Fa-f\x00\t\n\x0c\r ]*)>" + _WSB + rb"*Tj" + _OP_END
+    + rb"|<(?P<tqh>[0-9A-Fa-f\x00\t\n\x0c\r ]*)>" + _WSB + rb"*'" + _OP_END
     # fused "(text) '" next-line-show and "x y Td" text-move; Td takes the
     # same optional fused-show suffix as Tm. tqs accepts ESCAPED strings too
     # (unrolled-loop pattern, no nested bare parens): the corpus's next-line
     # shows are exactly where escape sequences occur
     + rb"|\((?P<tqs>[^()\\]*(?:\\.[^()\\]*)*)\)" + _WSB + rb"*'" + _OP_END
-    + rb"|(?P<td2>(?:" + _NUM_WS + rb"){2})Td" + _OP_END
+    + rb"|(?P<td2>" + _NUM_WS * 2 + rb")Td" + _OP_END
     + rb"(?:" + _WSB + rb"*"
     rb"\((?P<tdjs>[^()\\]*)\)" + _WSB + rb"*Tj" + _OP_END + rb")?"
     # fused "a b c d e f cm" and "/F n Tf" (each otherwise 7 / 3 matches)
-    rb"|(?P<cm6>(?:" + _NUM_WS + rb"){6})cm" + _OP_END
+    rb"|(?P<cm6>" + _NUM_WS * 6 + rb")cm" + _OP_END
     + rb"|/(?P<tfn>" + _REGULAR + rb"*)" + _WSB + rb"+"
     + _NUM_WS + rb"Tf" + _OP_END
     + rb"|%[^\r\n]*"
@@ -1182,9 +1189,6 @@ _CTOK_RE = re.compile(
 # end of an inline image's binary payload: whitespace-delimited EI operator
 _INLINE_EI_RE = re.compile(_WSB + rb"EI" + _OP_END)
 
-# the operators that take no operands, as their events
-_BARE_OPS = {op: (op.decode(),) for op in (b"T*", b"BT", b"ET", b"q", b"Q")}
-
 
 def _num(v: Any) -> float:
     # a numeric operand: the tokenizer reads every number as a float
@@ -1192,158 +1196,19 @@ def _num(v: Any) -> float:
 
 
 def _matrix(nums: bytes) -> Matrix:
+    # six numbers a fused alternative matched, each followed by whitespace
+    if nums[:8] == b"1 0 0 1 ":  # a translation, the dominant Tm spelling
+        e, f = nums[8:].split()
+        return (1.0, 0.0, 0.0, 1.0, float(e), float(f))
     p = nums.split()
     return (float(p[0]), float(p[1]), float(p[2]), float(p[3]), float(p[4]), float(p[5]))
 
 
 def _hex_show(h: bytes) -> bytes:
-    # a fused "<hex> Tj" string: the regex admits only hex digits and whitespace
+    # a fused "<hex> Tj" or "<hex> '" string: the regex admits only hex
+    # digits and whitespace
     h = h.translate(None, _WS)
     return bytes.fromhex((h + b"0" if len(h) % 2 else h).decode("ascii"))
-
-
-def _content_ops(buf: bytes) -> Iterator[Tuple[Any, ...]]:
-    """Yield one event per operator of a content stream that the interpreter reads.
-
-    ``("Tm"|"cm", matrix)``, ``("Td"|"TD", dx, dy)``, ``("TL", leading)``,
-    ``("Tj"|"'"|"TJ", shown bytes or None)`` (``"`` is ``'``; TJ's strings
-    come joined), ``("Tf", font name or None)``, ``("T*"|"BT"|"ET"|"q"|"Q",)``.
-    A fused ``_CTOK_RE`` alternative yields the events of its generic spelling.
-    Operands wait on a stack that every operator clears: numbers are floats, a
-    non-number where a number belongs reads as 0, and an operator short of
-    operands yields nothing. Arrays (TJ operands) are assembled inline;
-    dictionaries (BDC/gs property lists) go to ``parse_value``. Stray bytes
-    are skipped; an unterminated literal string runs to the end of the stream.
-    """
-    pos = 0
-    n = len(buf)
-    stack: List[Any] = []  # operands since the last operator
-    arr: Optional[List[Any]] = None
-    scan = _CTOK_RE.match
-    while pos < n:
-        m = scan(buf, pos)
-        end = m.end()
-        if end == pos:  # lone '$' match at EOF guard
-            break
-        pos = end
-        kind = m.lastgroup
-        if kind is None:  # whitespace / comment / stray byte
-            continue
-        if kind == "num":
-            v: Any = float(m.group("num"))
-        elif kind == "op":
-            op = m.group("op")
-            k = len(stack)
-            if op == b"Tj" or op == b"'" or op == b'"':
-                if k >= (3 if op == b'"' else 1):
-                    v = stack[-1]
-                    yield ("Tj" if op == b"Tj" else "'", v if type(v) is bytes else None)
-            elif op == b"Tm" or op == b"cm":
-                if k >= 6:
-                    yield (op.decode(), tuple(map(_num, stack[-6:])))
-            elif op == b"Td" or op == b"TD":
-                if k >= 2:
-                    yield (op.decode(), _num(stack[-2]), _num(stack[-1]))
-            elif op == b"TJ":
-                if k:
-                    v = stack[-1]
-                    yield ("TJ", b"".join(e for e in v if type(e) is bytes)
-                           if type(v) is list else None)
-            elif op == b"TL":
-                if k:
-                    yield ("TL", _num(stack[-1]))
-            elif op == b"Tf":
-                if k >= 2:
-                    v = stack[-2]
-                    yield ("Tf", v if type(v) is Name else None)
-            elif op in _BARE_OPS:
-                yield _BARE_OPS[op]
-            elif op == b"ID":
-                # inline image payload (BI <params> ID <binary> EI,
-                # §8.9.7): raw sample bytes that must be skipped wholesale
-                # — tokenizing them would let a stray '(' swallow the rest
-                # of the stream as a string or fabricate phantom text from
-                # pixel bytes that happen to spell '(x) Tj'. Data starts
-                # after the single whitespace byte following ID and ends
-                # at a whitespace-delimited EI (the same heuristic real
-                # readers use when /L is absent).
-                em = _INLINE_EI_RE.search(buf, pos)
-                pos = em.end() if em else n
-            # all other operators (Tc Tw Tz Ts Tr re W n Do gs colors...)
-            # only drop their operands
-            stack.clear()
-            continue
-        elif kind == "name":
-            raw = m.group("name")[1:]
-            if b"#" in raw:
-                v, _ = _parse_name(buf, m.start("name") + 1)
-            else:
-                v = Name(raw.decode("latin-1"))
-        elif kind == "lit":
-            try:
-                v, pos = _parse_literal_string(buf, pos)
-            except PdfError:
-                # an unterminated string runs to the end of the stream (as
-                # in pdf.js's lexer), so the stream is scanned once
-                break
-        elif kind == "arr":
-            if m.group("arr") == b"[":
-                arr = []
-                continue
-            v, arr = (arr if arr is not None else []), None
-        elif kind == "hex":
-            try:
-                v, pos = _parse_hex_string(buf, pos)
-            except PdfError:
-                continue
-        elif kind == "dct":  # '<<' dictionary
-            try:
-                v, pos = parse_value(buf, m.start("dct"))
-            except PdfError:
-                continue
-        else:  # a fused alternative: its events, and the operands are dropped
-            stack.clear()
-            if kind == "tmtjs" or kind == "tm6" or kind == "tmhs":
-                yield ("Tm", _matrix(m.group("tm6")))
-                if kind == "tmtjs":
-                    yield ("Tj", m.group("tmtjs"))
-                elif kind == "tmhs":
-                    yield ("Tj", _hex_show(m.group("tmhs")))
-            elif kind == "tjs":
-                yield ("Tj", m.group("tjs"))
-            elif kind == "td2" or kind == "tdjs":
-                dx, dy = m.group("td2").split()
-                yield ("Td", float(dx), float(dy))
-                if kind == "tdjs":
-                    yield ("Tj", m.group("tdjs"))
-            elif kind == "tjh":
-                yield ("Tj", _hex_show(m.group("tjh")))
-            elif kind == "tqs":
-                s = m.group("tqs")
-                if b"\\" in s:  # a regex-matched string is terminated: no raise
-                    s = _parse_literal_string(buf, m.start("tqs"))[0]
-                yield ("'", s)
-            elif kind == "cm6":
-                yield ("cm", _matrix(m.group("cm6")))
-            else:  # "tfn": "/Name size Tf"
-                raw = m.group("tfn")
-                yield ("Tf", _parse_name(buf, m.start("tfn"))[0] if b"#" in raw
-                       else Name(raw.decode("latin-1")))
-            continue
-        if arr is not None:
-            arr.append(v)
-        else:
-            stack.append(v)
-
-
-class _Span:
-    __slots__ = ("x", "y", "text", "seq")
-
-    def __init__(self, x: float, y: float, text: str, seq: int):
-        self.x = x
-        self.y = y
-        self.text = text
-        self.seq = seq
 
 
 def _decode_text(raw: bytes) -> str:
@@ -1560,28 +1425,216 @@ class _Type0Decoder:
         return "".join(out)
 
 
-def _extract_spans(
-    content: bytes, fonts: Optional[Dict[str, "_Type0Decoder"]] = None
-) -> List[_Span]:
-    spans: List[_Span] = []
+# a span is the tuple (-y, x, seq, text): a plain sort orders spans by
+# baseline top-down, then left to right, then in stream order (seq is unique,
+# so the text never decides); the layout functions read it by these indices
+Span = Tuple[float, float, int, str]
+_NY, _X, _SEQ, _TEXT = range(4)
+_BY_X = itemgetter(_X, _SEQ)
+
+
+def _extract_spans(content: bytes, fonts: Optional[Dict[str, Any]] = None) -> List[Span]:
+    """Interpret a content stream's text operators into positioned spans.
+
+    One loop over ``_CTOK_RE`` matches applies each operator straight to the
+    text state (``tm``, ``tlm``, ``ctm``, leading, font decoder, ``in_text``);
+    a fused alternative does exactly what its generic spelling does. Operands
+    wait on a stack that every operator clears: numbers are floats, a
+    non-number where a number belongs reads as 0, and an operator short of
+    operands does nothing. ``TJ`` arrays are assembled inline; dictionaries
+    (BDC/gs property lists) go to ``parse_value``; an inline image's
+    ``BI … ID … EI`` payload is skipped; stray bytes are skipped; an
+    unterminated literal string runs to the end of the stream, so each stream
+    is scanned once. ``q``/``Q`` save and restore the CTM, the font and the
+    leading (the text state is part of the graphics state, §8.4.1). A show
+    inside ``BT``/``ET`` appends one span unless its text is empty or its
+    position is not finite. ``fonts`` maps a resource name to its decoder; a
+    font without one shows single-byte latin-1 (or a UTF-16BE text string).
+    """
+    spans: List[Span] = []
     seq = 0
     ctm: Matrix = _IDENTITY
-    gstack: List[Matrix] = []
+    gstack: List[Tuple[Matrix, Any, float]] = []  # (ctm, dec, leading) per q
     tm: Matrix = _IDENTITY
     tlm: Matrix = _IDENTITY
     leading = 0.0
     in_text = False
-    # current composite-font decoder, switched by Tf (None → single-byte
-    # default). Tracked per content stream — font selection is graphics
-    # state, but the corpus (and our writer) always sets Tf inside each BT.
-    cur_dec: Optional[_Type0Decoder] = None
-
-    def emit(raw: Optional[bytes]) -> None:
-        nonlocal seq
-        if raw is None:
-            return
-        if cur_dec is not None:  # Type0/CID: 2-byte codes via ToUnicode
-            text = cur_dec(raw)
+    dec: Any = None  # the decoder Tf selected; None → single-byte default
+    stack: List[Any] = []  # operands since the last operator
+    arr: Optional[List[Any]] = None  # the open TJ array
+    pos = 0
+    n = len(content)
+    scan = _CTOK_RE.match
+    isfinite = math.isfinite
+    while pos < n:
+        m = scan(content, pos)
+        end = m.end()
+        if end == pos:  # lone '$' match at EOF guard
+            break
+        pos = end
+        kind = m.lastgroup
+        if kind is None:  # whitespace / comment / stray byte
+            continue
+        # the operators, most frequent first: a fused alternative, or a
+        # generic one; a show falls through to the tail with its bytes in raw
+        if kind == "tmtjs":
+            tm = tlm = _matrix(m["tm6"])
+            raw = m["tmtjs"]
+        elif kind == "op":
+            op = m["op"]
+            k = len(stack)
+            if op == b"'" or op == b'"':
+                if k < (1 if op == b"'" else 3):
+                    stack.clear()
+                    continue
+                raw = stack[-1]
+                tlm = _pre_translate(tlm, 0.0, -leading)
+                tm = tlm
+            elif op == b"Tj":
+                if not k:
+                    continue
+                raw = stack[-1]
+            elif op == b"TJ":
+                if not k:
+                    continue
+                raw = stack[-1]
+                raw = b"".join(e for e in raw if type(e) is bytes) if type(raw) is list else None
+            else:
+                if op == b"BT":
+                    in_text = True
+                    tm = tlm = _IDENTITY
+                elif op == b"ET":
+                    in_text = False
+                elif op == b"q":
+                    gstack.append((ctm, dec, leading))
+                elif op == b"Q":
+                    if gstack:
+                        ctm, dec, leading = gstack.pop()
+                elif op == b"TL":
+                    if k:
+                        leading = _num(stack[-1])
+                elif op == b"T*":
+                    tlm = _pre_translate(tlm, 0.0, -leading)
+                    tm = tlm
+                elif op == b"Td" or op == b"TD":
+                    if k >= 2:
+                        dy = _num(stack[-1])
+                        if op == b"TD":
+                            leading = -dy
+                        tlm = _pre_translate(tlm, _num(stack[-2]), dy)
+                        tm = tlm
+                elif op == b"Tm" or op == b"cm":
+                    if k >= 6:
+                        mat = tuple(map(_num, stack[-6:]))
+                        if op == b"Tm":
+                            tm = tlm = mat
+                        else:
+                            ctm = _mat_mul(mat, ctm)
+                elif op == b"Tf":
+                    if k >= 2 and fonts:
+                        v = stack[-2]
+                        dec = fonts.get(v) if type(v) is Name else None
+                elif op == b"ID":
+                    # inline image payload (BI <params> ID <binary> EI,
+                    # §8.9.7): raw sample bytes that must be skipped wholesale
+                    # — tokenizing them would let a stray '(' swallow the rest
+                    # of the stream as a string or fabricate phantom text from
+                    # pixel bytes that happen to spell '(x) Tj'. Data starts
+                    # after the single whitespace byte following ID and ends
+                    # at a whitespace-delimited EI (the same heuristic real
+                    # readers use when /L is absent).
+                    em = _INLINE_EI_RE.search(content, pos)
+                    pos = em.end() if em else n
+                # all other operators (Tc Tw Tz Ts Tr re W n Do gs colors...)
+                # only drop their operands
+                stack.clear()
+                continue
+            stack.clear()
+            if type(raw) is not bytes:
+                continue
+        elif kind == "tmhs":
+            tm = tlm = _matrix(m["tm6"])
+            raw = _hex_show(m["tmhs"])
+        elif kind == "tqs" or kind == "tqh":
+            tlm = _pre_translate(tlm, 0.0, -leading)
+            tm = tlm
+            if kind == "tqh":
+                raw = _hex_show(m["tqh"])
+            else:
+                raw = m["tqs"]
+                if b"\\" in raw:  # a regex-matched string is terminated: no raise
+                    raw = _parse_literal_string(content, m.start("tqs"))[0]
+        elif kind == "tdjs" or kind == "td2":
+            dx, dy = m["td2"].split()
+            tlm = _pre_translate(tlm, float(dx), float(dy))
+            tm = tlm
+            if kind == "td2":
+                stack.clear()
+                continue
+            raw = m["tdjs"]
+        elif kind == "tjs":
+            raw = m["tjs"]
+        elif kind == "tjh":
+            raw = _hex_show(m["tjh"])
+        elif kind == "tm6":
+            tm = tlm = _matrix(m["tm6"])
+            stack.clear()
+            continue
+        elif kind == "cm6":
+            ctm = _mat_mul(_matrix(m["cm6"]), ctm)
+            stack.clear()
+            continue
+        elif kind == "tfn":  # "/Name size Tf"
+            if fonts:
+                nm = m["tfn"]
+                dec = fonts.get(_parse_name(content, m.start("tfn"))[0] if b"#" in nm
+                                else nm.decode("latin-1"))
+            stack.clear()
+            continue
+        else:  # an operand
+            if kind == "num":
+                v = float(m["num"])
+            elif kind == "hex":
+                try:
+                    v, pos = _parse_hex_string(content, pos)
+                except PdfError:
+                    continue
+            elif kind == "name":
+                nm = m["name"][1:]
+                if b"#" in nm:
+                    v = _parse_name(content, m.start("name") + 1)[0]
+                else:
+                    v = Name(nm.decode("latin-1"))
+            elif kind == "lit":
+                try:
+                    v, pos = _parse_literal_string(content, pos)
+                except PdfError:
+                    # an unterminated string runs to the end of the stream (as
+                    # in pdf.js's lexer), so the stream is scanned once
+                    break
+            elif kind == "arr":
+                if m["arr"] == b"[":
+                    arr = []
+                    continue
+                v, arr = (arr if arr is not None else []), None
+            else:  # "dct": a '<<' dictionary
+                try:
+                    v, pos = parse_value(content, m.start("dct"))
+                except PdfError:
+                    continue
+            if arr is not None:
+                arr.append(v)
+            else:
+                stack.append(v)
+            continue
+        # a show: every operator clears the operands; text shows only
+        # between BT and ET
+        if stack:
+            stack.clear()
+        if not in_text:
+            continue
+        if dec is not None:  # Type0/CID via ToUnicode, or a /Differences font
+            text = dec(raw)
         elif raw[:2] == b"\xfe\xff":  # UTF-16BE text string (PDF 1.7 §7.9.2.2)
             try:
                 text = raw[2:].decode("utf-16-be")
@@ -1589,71 +1642,36 @@ def _extract_spans(
                 text = raw.decode("latin-1")
         else:
             text = raw.decode("latin-1")
-        if text == "":
-            return
-        m = tm if ctm is _IDENTITY else _mat_mul(tm, ctm)
-        if not (math.isfinite(m[4]) and math.isfinite(m[5])):
-            return  # a number past float range: no place on the page
-        spans.append(_Span(m[4], m[5], text, seq))
-        seq += 1
-
-    for ev in _content_ops(content):
-        op = ev[0]
-        if op == "Tj" or op == "TJ":
-            if in_text:
-                emit(ev[1])
-        elif op == "Tm":
-            tm = tlm = ev[1]
-        elif op == "Td":
-            tlm = _pre_translate(tlm, ev[1], ev[2])
-            tm = tlm
-        elif op == "'":  # next line, then show
-            tlm = _pre_translate(tlm, 0.0, -leading)
-            tm = tlm
-            if in_text:
-                emit(ev[1])
-        elif op == "TD":
-            leading = -ev[2]
-            tlm = _pre_translate(tlm, ev[1], ev[2])
-            tm = tlm
-        elif op == "TL":
-            leading = ev[1]
-        elif op == "T*":
-            tlm = _pre_translate(tlm, 0.0, -leading)
-            tm = tlm
-        elif op == "BT":
-            in_text = True
-            tm = tlm = _IDENTITY
-        elif op == "ET":
-            in_text = False
-        elif op == "q":
-            gstack.append(ctm)
-        elif op == "Q":
-            if gstack:
-                ctm = gstack.pop()
-        elif op == "cm":
-            ctm = _mat_mul(ev[1], ctm)
-        elif fonts:  # "Tf"
-            cur_dec = fonts.get(ev[1])
+        if not text:
+            continue
+        if ctm is _IDENTITY:
+            x = tm[4]
+            y = tm[5]
+        else:  # the translation row of tm · ctm
+            x = tm[4] * ctm[0] + tm[5] * ctm[2] + ctm[4]
+            y = tm[4] * ctm[1] + tm[5] * ctm[3] + ctm[5]
+        if isfinite(x) and isfinite(y):  # a number past float range has no place
+            spans.append((-y, x, seq, text))
+            seq += 1
     return spans
 
 
 _LINE_Y_TOL = 2.0
 
 
-def _cluster_lines(spans: List[_Span]) -> List[List[_Span]]:
+def _cluster_lines(spans: List[Span]) -> List[List[Span]]:
     """XY-cut-lite: cluster spans into baselines (Y desc), X order inside."""
     if not spans:
         return []
-    spans = sorted(spans, key=lambda s: (-s.y, s.x, s.seq))
-    lines: List[List[_Span]] = []
-    cur: List[_Span] = [spans[0]]
-    cur_y = spans[0].y
+    spans = sorted(spans)
+    lines: List[List[Span]] = []
+    cur: List[Span] = [spans[0]]
+    cur_ny = spans[0][_NY]
     for s in spans[1:]:
-        if cur_y - s.y > _LINE_Y_TOL:
+        if s[_NY] - cur_ny > _LINE_Y_TOL:
             lines.append(cur)
             cur = [s]
-            cur_y = s.y
+            cur_ny = s[_NY]
         else:
             cur.append(s)
     lines.append(cur)
@@ -1679,19 +1697,20 @@ _MIN_GUTTER = 30.0
 _MIN_SIDE_LINES = 3
 
 
-def _find_column_split(spans: List[_Span]) -> Optional[float]:
-    iv = sorted((s.x, s.x + _CHAR_W * len(s.text)) for s in spans)
+def _find_column_split(spans: List[Span]) -> Optional[float]:
+    iv = sorted([(s[_X], s[_X] + _CHAR_W * len(s[_TEXT])) for s in spans])
     gaps = []
     cur_end = iv[0][1]
     for a, b in iv[1:]:
         if a > cur_end + _MIN_GUTTER:
             gaps.append((cur_end + a) / 2.0)
-        cur_end = max(cur_end, b)
+        if b > cur_end:
+            cur_end = b
     for mid in gaps:
-        left = [s for s in spans if s.x < mid]
-        right = [s for s in spans if s.x >= mid]
-        ly = {int(s.y / _LINE_Y_TOL) for s in left}
-        ry = {int(s.y / _LINE_Y_TOL) for s in right}
+        left = [s for s in spans if s[_X] < mid]
+        right = [s for s in spans if s[_X] >= mid]
+        ly = {int(s[_NY] / _LINE_Y_TOL) for s in left}
+        ry = {int(s[_NY] / _LINE_Y_TOL) for s in right}
         if len(ly) < _MIN_SIDE_LINES or len(ry) < _MIN_SIDE_LINES:
             continue
         if len(ly & ry) / min(len(ly), len(ry)) >= 0.5:
@@ -1700,22 +1719,21 @@ def _find_column_split(spans: List[_Span]) -> Optional[float]:
     return None
 
 
-def _xy_cut_lines(spans: List[_Span], depth: int = 0) -> List[List[_Span]]:
+def _xy_cut_lines(spans: List[Span], depth: int = 0) -> List[List[Span]]:
     if len(spans) < 2 * _MIN_SIDE_LINES or depth >= 4:
         return _cluster_lines(spans)
     mid = _find_column_split(spans)
     if mid is None:
         return _cluster_lines(spans)
-    left = [s for s in spans if s.x < mid]
-    right = [s for s in spans if s.x >= mid]
+    left = [s for s in spans if s[_X] < mid]
+    right = [s for s in spans if s[_X] >= mid]
     return _xy_cut_lines(left, depth + 1) + _xy_cut_lines(right, depth + 1)
 
 
-def _join_line(spans: List[_Span]) -> str:
+def _join_line(spans: List[Span]) -> str:
     if len(spans) == 1:
-        return spans[0].text
-    spans = sorted(spans, key=lambda s: (s.x, s.seq))
-    return " ".join(s.text for s in spans)
+        return spans[0][_TEXT]
+    return " ".join(s[_TEXT] for s in sorted(spans, key=_BY_X))
 
 
 # A "table" is a run of >=2 consecutive baselines that each carry >=6
@@ -1727,12 +1745,12 @@ _TABLE_MIN_COLS = 6
 _TABLE_MIN_ROWS = 2
 
 
-def _detect_tables(line_spans: List[List[_Span]]) -> List[List[List[str]]]:
+def _detect_tables(line_spans: List[List[Span]]) -> List[List[List[str]]]:
     tables: List[List[List[str]]] = []
     run: List[List[str]] = []
     for ls in line_spans + [[]]:  # sentinel flushes the last run
         if len(ls) >= _TABLE_MIN_COLS:
-            cells = [s.text for s in sorted(ls, key=lambda s: (s.x, s.seq))]
+            cells = [s[_TEXT] for s in sorted(ls, key=_BY_X)]
             run.append(cells)
         else:
             if len(run) >= _TABLE_MIN_ROWS:
