@@ -25,6 +25,12 @@ Sorts that feed a ``limit``, window orderings and the sorts in
 ``extra_queries()`` stay. Tables are read through ``_read``, which infers a
 table file's schema once per driver process.
 
+The queries that ``perfbench/board.py`` times follow the build rule of
+``b_pdf_parser_spark/operators`` (one Py4J crossing per expression): their
+aggregates (``_dec_sum`` returns the money rule above as SQL text), window
+frames (``OVER (…)``) and computed columns are SQL text, and
+``tests/test_build_budget.py`` holds each one's build to a budget.
+
 Every registered query has an oracle. The extraction-pipeline queries (the
 PDF/HTML byte walk) are not SQL-expressible: they run on a deterministic
 synthetic corpus, and DuckDB recomputes the expected rows from the
@@ -70,8 +76,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read(spark, f"{sf_dir}/{name}.parquet")
 
 
-def _dec_sum(c) -> F.Column:
-    return F.sum(c.cast("decimal(18,4)")).cast("double")
+def _dec_sum(col: str) -> str:
+    """SQL text of the exact money sum of column ``col`` (the module
+    docstring's DECIMAL rule)."""
+    return f"CAST(SUM(CAST({col} AS DECIMAL(18,4))) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------------
@@ -84,11 +92,10 @@ def q_pricing_summary(spark, sf):  # A1/A2/A6: grouped sums + manual avg
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _dec_sum(F.col("l_quantity")).alias("sum_qty"),
-            _dec_sum(F.col("l_extendedprice")).alias("sum_base_price"),
-            F.count("*").alias("count_order"),
-            (F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double")
-             / F.count("*")).alias("avg_qty"),
+            F.expr(f"{_dec_sum('l_quantity')} AS sum_qty"),
+            F.expr(f"{_dec_sum('l_extendedprice')} AS sum_base_price"),
+            F.expr("count(*) AS count_order"),
+            F.expr(f"{_dec_sum('l_quantity')} / count(*) AS avg_qty"),
         )
     )
 
@@ -99,7 +106,7 @@ def q_top_customers(spark, sf):  # J1 broadcast join + O2 deterministic top-k
     return (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy("c_custkey", "c_name")
-        .agg(_dec_sum(F.col("o_totalprice")).alias("revenue"),
+        .agg(F.expr(f"{_dec_sum('o_totalprice')} AS revenue"),
              F.count("*").alias("n_orders"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
         .limit(10)
@@ -109,7 +116,7 @@ def q_top_customers(spark, sf):  # J1 broadcast join + O2 deterministic top-k
 def q_order_totals_check(spark, sf):  # A3 tolerance verification
     orders = _t(spark, sf, "orders")
     li = _t(spark, sf, "lineitem")
-    sums = li.groupBy("l_orderkey").agg(_dec_sum(F.col("l_extendedprice")).alias("calc_total"))
+    sums = li.groupBy("l_orderkey").agg(F.expr(f"{_dec_sum('l_extendedprice')} AS calc_total"))
     j = orders.join(sums, orders.o_orderkey == sums.l_orderkey, "left")
     status = (
         F.when(F.col("calc_total").isNull(), F.lit("not_available"))
@@ -129,20 +136,24 @@ def q_regional_revenue(spark, sf):  # multi-join star query
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("r_name")
-        .agg(F.count("*").alias("n_orders"), _dec_sum(F.col("o_totalprice")).alias("revenue"))
+        .agg(F.count("*").alias("n_orders"), F.expr(f"{_dec_sum('o_totalprice')} AS revenue"))
     )
 
 
 def q_sessionize_events(spark, sf):  # W1 sessionization window
-    ev = _t(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy("ts")
     # NTZ-minus-NTZ yields a day-time interval: timezone-free, so the gap is
     # identical to DuckDB's naive arithmetic regardless of driver TZ/DST
-    gap = F.col("ts") - F.lag("ts").over(w)
-    is_new = F.when(gap.isNull() | (gap > F.expr("INTERVAL 30 MINUTES")), 1).otherwise(0)
-    run = Window.partitionBy("user_id").orderBy("ts").rowsBetween(Window.unboundedPreceding, 0)
-    sess = ev.select("user_id", "event_id", F.sum(is_new).over(run).alias("session_id"))
-    return sess.groupBy("user_id", "session_id").agg(F.count("*").alias("n_events"))
+    gaps = _t(spark, sf, "events").selectExpr(
+        "user_id", "event_id", "ts",
+        "ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS gap",
+    )
+    sess = gaps.selectExpr(
+        "user_id", "event_id",
+        "SUM(CASE WHEN gap IS NULL OR gap > INTERVAL 30 MINUTES THEN 1 ELSE 0 END)"
+        " OVER (PARTITION BY user_id ORDER BY ts"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id",
+    )
+    return sess.groupBy("user_id", "session_id").agg(F.expr("count(*) AS n_events"))
 
 
 def q_first_purchase_after_signup(spark, sf):  # W2 first-value-after-label
@@ -164,7 +175,7 @@ def q_daily_event_stats(spark, sf):  # date agg (A4/A5 metrics analog)
     ev = _t(spark, sf, "events")
     return (
         ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type")
-        .agg(F.count("*").alias("n"), _dec_sum(F.col("value")).alias("total_value"))
+        .agg(F.count("*").alias("n"), F.expr(f"{_dec_sum('value')} AS total_value"))
     )
 
 
@@ -226,7 +237,7 @@ def q_rollup_revenue(spark, sf):  # grouping-sets capability (free in Spark)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     )
     return j.rollup("r_name", "o_orderstatus").agg(
-        F.count("*").alias("n_orders"), _dec_sum(F.col("o_totalprice")).alias("revenue")
+        F.count("*").alias("n_orders"), F.expr(f"{_dec_sum('o_totalprice')} AS revenue")
     )
 
 
@@ -295,9 +306,9 @@ def q_exact_dedup(spark, sf):
     d = _t(spark, sf, "documents")
     g = exact_dup_stats(d, "doc_id", "text")
     return g.agg(
-        F.count("*").alias("n_groups"),
-        F.sum("n_dups").alias("n_docs"),
-        F.sum(F.when(F.col("n_dups") > 1, 1).otherwise(0)).alias("n_dup_groups"),
+        F.expr("count(*) AS n_groups"),
+        F.expr("sum(n_dups) AS n_docs"),
+        F.expr("sum(CASE WHEN n_dups > 1 THEN 1 ELSE 0 END) AS n_dup_groups"),
     )
 
 
@@ -1204,8 +1215,8 @@ def q_crawl_frontier(spark, sf):
     )
     cand = (
         html_edges.unionByName(pdf_edges)
-        .select(canonical_url(F.col("raw_url")).alias("url"))
-        .withColumn("host", url_host(F.col("url")))
+        .select(canonical_url("raw_url").alias("url"))
+        .withColumn("host", url_host("url"))
         .distinct()
     )
     rules = spark.range(0, 20).select(
@@ -1451,16 +1462,11 @@ def q_bpe_tokens(spark, sf):
 
     d = _t(spark, sf, "documents").select("doc_id", "text")
     merges = _bpe_merges_spark(spark, sf)
-    return (
-        bpe_tokenize(d, "text", merges)
-        .select(
-            "doc_id",
-            F.size(
-                F.regexp_extract_all("text", F.lit(WORD_PATTERN), F.lit(0))
-            ).cast("long").alias("n_words"),
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            F.concat_ws("|", F.slice("tokens", 1, 8)).alias("first_tokens"),
-        )
+    return bpe_tokenize(d, "text", merges).selectExpr(
+        "doc_id",
+        f"CAST(size(regexp_extract_all(text, r'{WORD_PATTERN}', 0)) AS BIGINT) AS n_words",
+        "CAST(n_tokens AS BIGINT) AS n_tokens",
+        "concat_ws('|', slice(tokens, 1, 8)) AS first_tokens",
     )
 
 
@@ -1508,26 +1514,20 @@ def q_canonical_urls(spark, sf):
     300 deterministic messy variants, no UDF anywhere."""
     from b_pdf_parser_spark.functions.urls import canonical_url, url_host
 
-    base = spark.range(0, 300).select(F.col("id").alias("i"))
-    i_s = F.col("i").cast("string")
-    i7 = (F.col("i") % 7).cast("string")
-    raw = (
-        F.when(F.col("i") % 5 == 0,
-               F.concat(F.lit("HTTP://Host"), i7, F.lit(".Example:80/path/"),
-                        i_s, F.lit("#frag")))
-        .when(F.col("i") % 5 == 1,
-              F.concat(F.lit("https://host"), i7, F.lit(".example:443/?q="), i_s))
-        .when(F.col("i") % 5 == 2,
-              F.concat(F.lit("https://HOST"), i7, F.lit(".example")))
-        .when(F.col("i") % 5 == 3, F.lit("ftp://Files.Example:21/pub"))
-        .otherwise(F.concat(F.lit("not a url "), i_s))
+    # the messy URL is staged as a column, so both helpers read it by name
+    raw = spark.range(0, 300).selectExpr(
+        "id AS url_id",
+        """CASE
+             WHEN id % 5 = 0 THEN concat('HTTP://Host', CAST(id % 7 AS STRING),
+                                         '.Example:80/path/', CAST(id AS STRING), '#frag')
+             WHEN id % 5 = 1 THEN concat('https://host', CAST(id % 7 AS STRING),
+                                         '.example:443/?q=', CAST(id AS STRING))
+             WHEN id % 5 = 2 THEN concat('https://HOST', CAST(id % 7 AS STRING), '.example')
+             WHEN id % 5 = 3 THEN 'ftp://Files.Example:21/pub'
+             ELSE concat('not a url ', CAST(id AS STRING))
+           END AS raw""",
     )
-    return base.select(
-        F.col("i").alias("url_id"),
-        raw.alias("raw"),
-        canonical_url(raw).alias("canonical"),
-        url_host(raw).alias("host"),
-    )
+    return raw.withColumns({"canonical": canonical_url("raw"), "host": url_host("raw")})
 
 
 def q_pdf_images(spark, sf):

@@ -93,6 +93,6 @@ def bpe_tokenize(
             pa.list_(pa.string()),
         )
 
-    return df.withColumn(out_col, _encode(F.col(text_col))).withColumn(
+    return df.withColumn(out_col, _encode(text_col)).withColumn(
         "n_tokens", F.size(out_col)
     )

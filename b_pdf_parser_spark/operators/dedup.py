@@ -36,7 +36,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from . import arrow_kernel, spread
+from . import arrow_kernel, spread, sql_name
 
 __all__ = [
     "exact_dup_stats",
@@ -102,7 +102,7 @@ def _doc_signature_frame(
 
     per_band = (k // bands) if (k is not None and bands is not None) else None
     want_mh = k is not None
-    src = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")))
+    src = spread(df.selectExpr(f"{sql_name(id_col)} AS id", f"{sql_name(text_col)} AS text"))
     id_ddl = src.schema.fields[0].dataType.simpleString()
     ddl = f"id {id_ddl}" + (", grams array<string>" if with_grams else "") \
         + (", mhs array<string>" if want_mh else "") \
@@ -148,9 +148,9 @@ def _doc_signature_frame(
 def exact_dup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per content-hash group: size and representative (min id)."""
     return (
-        df.select(F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("content_hash"))
+        df.selectExpr(f"{sql_name(id_col)} AS id", f"md5({sql_name(text_col)}) AS content_hash")
         .groupBy("content_hash")
-        .agg(F.count("*").alias("n_dups"), F.min("id").alias("keep_id"))
+        .agg(F.expr("count(*) AS n_dups"), F.expr("min(id) AS keep_id"))
     )
 
 
@@ -197,14 +197,12 @@ def lsh_candidate_pairs(
         _doc_signature_frame(df, id_col, text_col, n, k=k, bands=bands)
         if sets_df is None else sets_df
     )
-    keys = sets.select("id", F.posexplode("band_keys").alias("band", "band_key"))
+    keys = sets.selectExpr("id", "posexplode(band_keys) AS (band, band_key)")
     a = keys.alias("a")
     b = keys.alias("b")
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.band_key") == F.col("b.band_key"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        a.join(b, F.expr("a.band = b.band AND a.band_key = b.band_key AND a.id < b.id"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .distinct()
     )
 
@@ -222,24 +220,22 @@ def ngram_jaccard_pairs(
     exploded shingle rows into an (id_b, shingle)-keyed join and
     re-aggregated. Values identical: |A∩B| over distinct arrays equals
     the old distinct-row intersection count, the sizes are the array
-    sizes, and the int/int → round(…, 4) arithmetic is unchanged."""
+    sizes, and the int/int → round(…, 4) arithmetic is unchanged. The
+    intersection size is staged as a named column (``_inter``), not
+    written into the ratio twice."""
     sets = _doc_signature_frame(
         df, id_col, text_col, n, k=DEFAULT_K, bands=DEFAULT_BANDS, with_grams=True
     ).localCheckpoint(eager=False)  # shared: band subtree + both confirm sides
     cands = lsh_candidate_pairs(df, id_col, text_col, n=n, sets_df=sets)
-    ga = sets.select(F.col("id").alias("id_a"), F.col("grams").alias("_ga"))
-    gb = sets.select(F.col("id").alias("id_b"), F.col("grams").alias("_gb"))
-    inter = F.size(F.array_intersect("_ga", "_gb"))
+    ga = sets.selectExpr("id AS id_a", "grams AS _ga")
+    gb = sets.selectExpr("id AS id_b", "grams AS _gb")
     return (
         cands.join(ga, "id_a")
         .join(gb, "id_b")
-        .select(
-            "id_a", "id_b",
-            F.round(
-                inter / (F.size("_ga") + F.size("_gb") - inter), 4
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        .selectExpr("id_a", "id_b", "size(array_intersect(_ga, _gb)) AS _inter",
+                    "size(_ga) + size(_gb) AS _sizes")
+        .selectExpr("id_a", "id_b", "round(_inter / (_sizes - _inter), 4) AS jaccard")
+        .filter(f"jaccard >= {float(threshold)!r}D")
     )
 
 
@@ -394,7 +390,7 @@ def winnow_fingerprints(
     global distinct). Values identical: same gram strings, same
     md5[:16] hashes, min over a window of ASCII hex strings is the same
     lexicographic min, full windows only, per-doc distinct."""
-    src = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")))
+    src = df.selectExpr(f"{sql_name(id_col)} AS id", f"{sql_name(text_col)} AS text")
     id_ddl = src.schema.fields[0].dataType.simpleString()
 
     def run(batches):
@@ -516,7 +512,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     tokens (empty ones dropped), same hex-digit parity votes, same sign
     rule; docs with no non-empty token emit nothing (the old groupBy had
     no rows for them)."""
-    src = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")))
+    src = df.selectExpr(f"{sql_name(id_col)} AS id", f"{sql_name(text_col)} AS text")
     id_ddl = src.schema.fields[0].dataType.simpleString()
     odd = set("13579bdf")
 

@@ -23,6 +23,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from . import sql_name
+
 __all__ = [
     "hash_threshold",
     "hash_sample",
@@ -318,21 +320,12 @@ def per_host_cap_threshold(
 
     Output mirrors ``per_host_cap``: (key, host, keep).
     """
-    counts = df.groupBy(host_col).agg(F.count("*").alias("_n"))
+    counts = df.groupBy(host_col).agg(F.expr("count(*) AS _n"))
+    key = sql_name(key_col)
     # floor(cap * 2^32 / n) as an 8-hex threshold; doubles are exact here
     # (cap * 2^32 ≲ 2^48 « 2^53)
-    thr = F.lpad(
-        F.lower(F.hex(F.floor(F.lit(cap) * F.lit(float(2**32)) / F.col("_n")))),
-        8, "0",
-    )
-    return (
-        df.join(counts, host_col)
-        .select(
-            key_col,
-            host_col,
-            (
-                (F.col("_n") <= cap)
-                | (F.substring(F.md5(F.col(key_col).cast("string")), 1, 8) < thr)
-            ).alias("keep"),
-        )
+    thr = f"lpad(lower(hex(floor({int(cap)} * {float(2**32)!r}D / _n))), 8, '0')"
+    return df.join(counts, host_col).selectExpr(
+        key, sql_name(host_col),
+        f"_n <= {int(cap)} OR substring(md5(CAST({key} AS STRING)), 1, 8) < {thr} AS keep",
     )

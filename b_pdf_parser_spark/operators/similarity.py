@@ -31,7 +31,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from . import arrow_kernel, spread
+from . import arrow_kernel, sql_name
 
 __all__ = [
     "cosine_topk",
@@ -231,7 +231,7 @@ def ivf_ann_topk(
     product and the full scan per query: shuffle keys are centroid ids.
     """
     centroids = [_hyperplane(dim, c, seed) for c in range(n_centroids)]
-    vecs = spread(emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")))
+    vecs = emb.selectExpr(f"{sql_name(id_col)} AS id", f"{sql_name(vec_col)} AS vec")
     vecs = vecs.localCheckpoint(eager=False)  # reused every iteration
 
     cids = list(range(n_centroids))
@@ -555,7 +555,7 @@ def semantic_dedup(
     import numpy as np
 
     spark = emb.sparkSession
-    vecs = spread(emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")))
+    vecs = emb.selectExpr(f"{sql_name(id_col)} AS id", f"{sql_name(vec_col)} AS vec")
     # frozen data-drawn quantizer: the n_centroids smallest ids ARE the
     # centroids (deterministic, SQL-restatable, distribution-matched);
     # orderBy+limit lowers to TakeOrderedAndProject — no global sort. The

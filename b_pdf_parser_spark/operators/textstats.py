@@ -22,7 +22,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from . import arrow_kernel
+from . import arrow_kernel, sql_name
 
 __all__ = [
     "STOPWORDS",
@@ -202,7 +202,7 @@ def langid_frame(
     wins if its vote is > 0 and ≥ every LOWER-priority language's vote,
     checked in the fixed en > de > fr > es > id order; zero votes
     everywhere (or null text) → 'und'."""
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    src = df.selectExpr(f"{sql_name(id_col)} AS doc_id", f"{sql_name(text_col)} AS text")
     id_ddl = src.schema.fields[0].dataType.simpleString()
     stop_sets = {lang: set(words) for lang, words in STOPWORDS.items()}
 

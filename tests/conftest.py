@@ -20,6 +20,9 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        # the worker transport of the job sessions (jobs/extract.py,
+        # jobs/parse_dir.py), so the tests run the Python kernels over it
+        .config("spark.python.unix.domain.socket.enabled", "true")
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")
