@@ -71,12 +71,11 @@ def ship_package(spark) -> None:
     one ``getattr``. The kernel boundary calls it, not its callers: every
     plan node that hands package code to executors ships on its input frame
     (``operators.arrow_kernel``; bloom's ``applyInArrow`` merges, the BPE
-    ``arrow_udf``, the sessions stream's ``applyInPandasWithState``), so the
-    first kernel of a session ships whatever query or job builds it. The
-    zip is named by a
-    digest of the package sources and written under a temporary name, then
-    renamed into place, so a zip left by another process or another version
-    of the sources is never shipped.
+    ``arrow_udf``), so the first kernel of a session ships whatever query
+    or job builds it. The zip is named by a digest of the package sources
+    and written under a temporary name, then renamed into place, so a zip
+    left by another process or another version of the sources is never
+    shipped.
     """
     import hashlib
     import os

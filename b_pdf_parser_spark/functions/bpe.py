@@ -36,7 +36,7 @@ Design choices, pinned for oracle restatability:
 
 from __future__ import annotations
 
-from typing import Dict, Iterable, List, Sequence, Tuple
+from typing import Dict, List, Sequence, Tuple
 
 __all__ = ["WORD_PATTERN", "train_bpe", "encode_word", "encode_text", "merge_ranks"]
 

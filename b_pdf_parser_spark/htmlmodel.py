@@ -16,8 +16,8 @@ with a DOM-heuristic override for ``nav/header/footer/aside/form`` — →
 main-content text = classified blocks joined with ``"\\n"``. An HTML page
 with a table is tokenized once: ``extract_html_blocks``,
 ``extract_html_tables`` and ``extract_html_text`` are views of
-``extract_html_blocks_and_tables``. ``extract_links`` and
-``extract_structured_data`` are separate scans with their own rules.
+``extract_html_blocks_and_tables``. ``extract_links`` is a separate scan
+with its own rules.
 
 Pure ``bytes -> str``; safe for an Arrow batch kernel (one Python dispatch
 per document).
@@ -29,8 +29,7 @@ import re
 from typing import List, NamedTuple, Tuple
 
 __all__ = ["Block", "extract_html_blocks", "extract_html_blocks_and_tables",
-           "extract_html_text", "extract_html_tables", "extract_links",
-           "extract_structured_data"]
+           "extract_html_text", "extract_html_tables", "extract_links"]
 
 
 class Block(NamedTuple):
@@ -443,80 +442,3 @@ def extract_links(data: bytes) -> List[dict]:
         # resume just past the open tag so a nested anchor is itself scanned
         i = gt + 1
     return out
-
-
-# ---------------------------------------------------------------------------
-# structured-data harvest: OpenGraph / canonical / JSON-LD
-# ---------------------------------------------------------------------------
-
-# one attribute: name = "double" | 'single' | unquoted (order-independent —
-# real-world meta tags put content= before property= about half the time)
-_TAG_ATTR_RE = re.compile(
-    r"""([a-zA-Z][a-zA-Z0-9_:-]*)\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s"'>]+))"""
-)
-_META_TAG_RE = re.compile(r"<meta\b([^>]*)>", re.I)
-_LINK_TAG_RE = re.compile(r"<link\b([^>]*)>", re.I)
-_TITLE_RE = re.compile(r"<title[^>]*>(.*?)</title", re.I | re.S)
-_JSONLD_RE = re.compile(
-    r"""<script\b[^>]*type\s*=\s*["']?application/ld\+json["']?[^>]*>(.*?)</script""",
-    re.I | re.S,
-)
-
-
-def _attrs(tag_body: str) -> dict:
-    out = {}
-    for m in _TAG_ATTR_RE.finditer(tag_body):
-        key = m.group(1).translate(_ASCII_LOWER)
-        if key not in out:  # first occurrence wins, as browsers do
-            val = m.group(2) if m.group(2) is not None else (
-                m.group(3) if m.group(3) is not None else m.group(4)
-            )
-            out[key] = _ENTITY_RE.sub(_decode_entity, val)
-    return out
-
-
-def extract_structured_data(data) -> dict:
-    """Head-metadata harvest — the structured-data surface a web crawler
-    feeds to knowledge/training pipelines: ``<title>``, OpenGraph
-    ``<meta property="og:*">`` pairs (``name=`` accepted as the fallback
-    key attribute, attribute order free, quoted or unquoted values),
-    the ``<link rel=canonical>`` target, and every
-    ``<script type="application/ld+json">`` block parsed with the stdlib
-    JSON parser. A block that fails to parse is skipped and flips
-    ``jsonld_ok`` False — malformed embedded JSON is routine on the real
-    web and must land in a flag, not an exception.
-
-    Returns ``{"title", "og", "canonical", "jsonld", "jsonld_ok"}`` where
-    ``jsonld`` is the list of successfully parsed top-level values in
-    document order. Accepts ``bytes`` (charset-sniffed like every other
-    extractor here) or an already-decoded ``str``."""
-    import json as _json
-
-    html = data if isinstance(data, str) else _decode_html_bytes(data)
-
-    m = _TITLE_RE.search(html)
-    title = _clean_text(m.group(1)).strip() if m else None
-
-    og = {}
-    for tm in _META_TAG_RE.finditer(html):
-        a = _attrs(tm.group(1))
-        key = a.get("property") or a.get("name")
-        if key and key.startswith("og:") and "content" in a and key not in og:
-            og[key] = a["content"]
-
-    canonical = None
-    for lm in _LINK_TAG_RE.finditer(html):
-        a = _attrs(lm.group(1))
-        if a.get("rel", "").translate(_ASCII_LOWER) == "canonical" and a.get("href"):
-            canonical = a["href"]
-            break
-
-    jsonld, ok = [], True
-    for sm in _JSONLD_RE.finditer(html):
-        try:
-            jsonld.append(_json.loads(sm.group(1)))
-        except ValueError:
-            ok = False
-
-    return {"title": title, "og": og, "canonical": canonical,
-            "jsonld": jsonld, "jsonld_ok": ok}

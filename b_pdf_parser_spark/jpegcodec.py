@@ -55,8 +55,6 @@ __all__ = [
     "encode_jpeg",
     "encode_jpeg_progressive",
     "decode_jpeg",
-    "rgb_to_ycbcr",
-    "ycbcr_to_rgb",
     "QUANT_LUM",
     "QUANT_CHROMA",
 ]
@@ -162,32 +160,6 @@ for _k in range(8):
         _C[_k, _n] = np.cos((2 * _n + 1) * _k * np.pi / 16) * (
             np.sqrt(0.125) if _k == 0 else 0.5
         )
-
-
-# ---------------------------------------------------------------------------
-# Fixed-point integer color conversion (SQL-restatable: only +, *, //)
-# ---------------------------------------------------------------------------
-
-def rgb_to_ycbcr(r: int, g: int, b: int) -> Tuple[int, int, int]:
-    """BT.601 full-range, 8-bit fixed point: ``(k·x + 128) >> 8`` with the
-    rounded 256-scaled coefficients. Pure integer — a SQL oracle restates
-    it verbatim with FLOOR((expr + 128) / 256)."""
-    y = (77 * r + 150 * g + 29 * b + 128) >> 8
-    cb = ((-43 * r - 85 * g + 128 * b + 128) >> 8) + 128
-    cr = ((128 * r - 107 * g - 21 * b + 128) >> 8) + 128
-    return (_clamp8(y), _clamp8(cb), _clamp8(cr))
-
-
-def ycbcr_to_rgb(y: int, cb: int, cr: int) -> Tuple[int, int, int]:
-    """Inverse fixed-point transform (same >> 8 convention)."""
-    r = y + ((359 * (cr - 128) + 128) >> 8)
-    g = y - ((88 * (cb - 128) + 183 * (cr - 128) + 128) >> 8)
-    b = y + ((454 * (cb - 128) + 128) >> 8)
-    return (_clamp8(r), _clamp8(g), _clamp8(b))
-
-
-def _clamp8(v: int) -> int:
-    return 0 if v < 0 else 255 if v > 255 else v
 
 
 # ---------------------------------------------------------------------------
@@ -384,7 +356,9 @@ def _prep_planes(
         r = img[:, :, 0].astype(np.int64)
         g = img[:, :, 1].astype(np.int64)
         b = img[:, :, 2].astype(np.int64)
-        # vectorized twin of rgb_to_ycbcr (>> floors like the scalar form)
+        # BT.601 full range in 8-bit fixed point, (k·x + 128) >> 8 with the
+        # rounded 256-scaled coefficients: integer-only, so a SQL oracle
+        # restates it with FLOOR((expr + 128) / 256)
         y = (77 * r + 150 * g + 29 * b + 128) >> 8
         cb = ((-43 * r - 85 * g + 128 * b + 128) >> 8) + 128
         cr = ((128 * r - 107 * g - 21 * b + 128) >> 8) + 128
@@ -1198,7 +1172,7 @@ def _planes_to_pixels(
     y = planes[0][:height, :width].astype(np.int64)
     cb = planes[1][:height, :width].astype(np.int64)
     cr = planes[2][:height, :width].astype(np.int64)
-    # vectorized twin of ycbcr_to_rgb
+    # inverse fixed-point transform (same >> 8 convention)
     r = y + ((359 * (cr - 128) + 128) >> 8)
     g = y - ((88 * (cb - 128) + 183 * (cr - 128) + 128) >> 8)
     b = y + ((454 * (cb - 128) + 128) >> 8)

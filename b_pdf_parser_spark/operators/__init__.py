@@ -64,8 +64,6 @@ def spread(df: DataFrame) -> DataFrame:
     row-order-independent (aggregations / joins / per-row maps whose
     outputs are hashed order-insensitively or re-sorted downstream).
     """
-    if df.isStreaming:  # no static partition count to inspect
-        return df
     p = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= p:
         return df

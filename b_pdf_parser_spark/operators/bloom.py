@@ -65,7 +65,6 @@ __all__ = [
     "bloom_bitmap",
     "bloom_bitmap_bytes",
     "probe_bloom",
-    "probe_and_confirm",
     "frontier_new_keys",
 ]
 
@@ -262,11 +261,11 @@ def probe_bloom(
 
     ``return_handle=True`` returns ``(DataFrame, Broadcast)`` so the
     caller can ``destroy()`` the broadcast deterministically once the
-    probe is materialized (:func:`probe_and_confirm` does). With the
+    probe is materialized (:func:`frontier_new_keys` does). With the
     default single return the broadcast is released by GC + the
     ContextCleaner — fine for one-shot probes, but an ITERATIVE caller
     at GB bitmap sizes should take the handle (or use
-    ``frontier_new_keys``/``probe_and_confirm``, which clean up).
+    ``frontier_new_keys``, which cleans up).
     """
     if len(bloom) * 8 != m_bits:
         raise ValueError(f"bitmap is {len(bloom) * 8} bits, expected {m_bits}")
@@ -330,42 +329,14 @@ def frontier_new_keys(
         base.select(key_col).distinct().persist(StorageLevel.MEMORY_AND_DISK)
     )
     bloom = bloom_bitmap_bytes(base_keys, key_col, m_bits, k, merge_groups)
-    return probe_and_confirm(candidates, key_col, bloom, m_bits, k, base_keys)
-
-
-def probe_and_confirm(
-    candidates: DataFrame,
-    key_col: str,
-    bloom: bytes,
-    m_bits: int,
-    k: int,
-    history: Optional[DataFrame],
-) -> DataFrame:
-    """The frontier kernel shared by the batch (:func:`frontier_new_keys`)
-    and streaming (``streaming/frontier_stream``) paths: probe distinct
-    candidates against a prebuilt bitmap, eagerly checkpoint the probe
-    (it feeds BOTH branches, and materializing it lets the bitmap
-    broadcast be destroyed deterministically right here), emit
-    bitmap-cleared rows join-free and anti-join only the ``maybe_seen``
-    sliver against ``history`` (``None`` → empty history, everything
-    ``maybe_seen`` is a false positive by construction)."""
     probed_raw, handle = probe_bloom(
         candidates.select(key_col).distinct(), key_col, bloom, m_bits, k,
         return_handle=True,
     )
+    # the probe feeds both branches below; materializing it lets the
+    # bitmap broadcast be destroyed here
     probed = probed_raw.localCheckpoint(eager=True)
     handle.destroy()
     fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed = (
-        suspects.join(history, key_col, "left_anti")
-        if history is not None
-        else suspects
-    )
-    out = fresh.unionByName(confirmed)
-    # deterministic-cleanup handle (same pattern as df._bloom_bc): once a
-    # caller re-materializes `out` (e.g. the stream's per-epoch eager
-    # checkpoint), the intermediate probe's blocks are garbage — expose
-    # the frame so the caller can free them NOW instead of at GC time
-    out._bloom_probe = probed
-    return out
+    return fresh.unionByName(suspects.join(base_keys, key_col, "left_anti"))

@@ -4,8 +4,7 @@ The quality-filter stage real LLM data pipelines run (LLaMA's
 "Wikipedia-likeness" classifier, GPT-3's WebText discriminator — public
 method: a linear classifier over cheap text features, trained to tell
 target-domain documents from the raw crawl, scoring every document).
-fastText-style hashed-ngram features live in [[dsir]]; this operator is the
-TRAINED-model counterpart: deterministic full-batch gradient descent on a
+This operator trains it: deterministic full-batch gradient descent on a
 small feature vector, entirely as Spark aggregation jobs.
 
 Training structure (the canonical distributed shape, same as the k-means in
@@ -13,7 +12,7 @@ Training structure (the canonical distributed shape, same as the k-means in
 aggregation producing the 5-number gradient; only that gradient ever
 reaches the driver (a documented driver-sized collect, like the k·dim
 centroid table). The per-row gradient contributions are rounded to 9
-decimals and summed as DECIMAL(28,9) — the [[dsir]] idiom — so the
+decimals and summed as DECIMAL(28,9), so the
 gradient, and therefore every subsequent weight, is bit-identical under any
 partitioning, and a DuckDB oracle can replay the whole optimization as
 unrolled CTEs: feature expressions, sigmoid, decimal-summed gradient and

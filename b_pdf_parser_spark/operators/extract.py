@@ -195,10 +195,6 @@ def make_extract_batch(verify: bool = True):
     return extract_batch
 
 
-# default instance (verification on) — used by the streaming lift
-extract_batch = make_extract_batch()
-
-
 def extract_pages(
     pages: DataFrame,
     *,
@@ -223,9 +219,9 @@ def extract_pages(
 
 def partition_id_col(checkpoint_partitions: int) -> Column:
     """The checkpoint/lineage unit ``pmod(xxhash64(url), P)`` as an int
-    column — the one definition the operator's tag, the resumable job's
-    wave filter and the streaming lift share, so a resumed run sees the
-    same ids the first run wrote."""
+    column — the one definition the operator's tag and the resumable job's
+    wave filter share, so a resumed run sees the same ids the first run
+    wrote."""
     return F.pmod(F.xxhash64("url"), F.lit(checkpoint_partitions)).cast("int")
 
 

@@ -27,10 +27,7 @@ from . import sql_name
 
 __all__ = [
     "hash_threshold",
-    "hash_sample",
     "stratified_sample",
-    "temperature_mix",
-    "chunk_documents",
     "per_host_cap",
     "per_host_cap_threshold",
     "token_shards",
@@ -49,11 +46,6 @@ def _bucket(key_col: str) -> F.Column:
     return F.substring(F.md5(F.col(key_col).cast("string")), 1, 8)
 
 
-def hash_sample(df: DataFrame, key_col: str, rate: float) -> DataFrame:
-    """Keep a deterministic ~``rate`` fraction keyed on ``key_col``."""
-    return df.filter(_bucket(key_col) < F.lit(hash_threshold(rate)))
-
-
 def stratified_sample(
     df: DataFrame,
     key_col: str,
@@ -68,117 +60,6 @@ def stratified_sample(
     for value, rate in sorted(rates.items()):
         thr = F.when(F.col(stratum_col) == value, F.lit(hash_threshold(rate))).otherwise(thr)
     return df.filter(_bucket(key_col) < thr)
-
-
-def temperature_mix(
-    df: DataFrame,
-    key_col: str,
-    stratum_col: str,
-    temperature: float,
-    target_max_rate: float = 1.0,
-) -> DataFrame:
-    """Temperature-scaled mixture sampling — the multilingual/multi-source
-    rebalancing rule of large-model data pipelines (the ``α = 1/T``
-    exponent of Lample & Conneau 2019 §3.1 / mT5): a stratum with raw
-    mass ``n_s`` is kept at a deterministic rate ∝ ``n_s^(1/T - 1)`` so
-    the RESULTING mixture follows ``p_s ∝ n_s^(1/T)``. ``T = 1`` keeps
-    the natural proportions (every stratum at ``target_max_rate``);
-    ``T → ∞`` approaches uniform across strata (head sources downsampled
-    toward the tail). The smallest stratum always keeps
-    ``target_max_rate`` of its docs — rates only shrink from there, so
-    no stratum needs upsampling/duplication.
-
-    Fully relational (counts → pow → broadcast join → md5-threshold
-    filter): no driver action, deterministic per (key, stratum counts),
-    and the per-row decision is the same monotone hash-threshold rule as
-    :func:`hash_sample` — RAISING T later only REMOVES docs from the big
-    strata (rates fall monotonically in T), never reshuffles kept sets.
-    One count shuffle + one broadcast join at any scale.
-    """
-    if temperature <= 0:
-        raise ValueError(f"temperature must be > 0, got {temperature}")
-    counts = df.groupBy(stratum_col).agg(F.count("*").alias("n_s"))
-    rel = counts.withColumn(
-        "rel", F.pow(F.col("n_s").cast("double"), F.lit(1.0 / temperature - 1.0))
-    )
-    max_rel = rel.agg(F.max("rel").alias("max_rel"))
-    rates = (
-        rel.crossJoin(F.broadcast(max_rel))
-        .select(
-            stratum_col,
-            "n_s",
-            # round: keeps the threshold integer stable against last-ulp
-            # pow() differences across engines (the oracle recomputes it)
-            F.round(
-                F.col("rel") / F.col("max_rel") * F.lit(target_max_rate), 9
-            ).alias("keep_rate"),
-        )
-    )
-    thr = F.lower(
-        F.lpad(
-            F.hex(
-                F.least(
-                    F.floor(F.col("keep_rate") * F.lit(2.0 ** 32)),
-                    F.lit(2 ** 32 - 1),
-                ).cast("bigint")
-            ),
-            8,
-            "0",
-        )
-    )
-    return (
-        df.join(F.broadcast(rates), stratum_col)
-        .filter(_bucket(key_col) < thr)
-        .drop("n_s", "keep_rate")
-    )
-
-
-def chunk_documents(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    tokens_per_chunk: int,
-    stride: int | None = None,
-) -> DataFrame:
-    """Fixed-token training chunks with optional overlap — the
-    context-window segmentation step between cleaning and tokenization
-    (documents longer than the model context are cut into windows; a
-    ``stride < tokens_per_chunk`` repeats the tail of each window at the
-    head of the next, the standard overlap trick so no span is only ever
-    seen split across a boundary).
-
-    MAP-ONLY at any scale: tokens split JVM-side, window starts are a
-    ``sequence`` ramp, each chunk a ``slice`` + ``concat_ws`` — the only
-    row expansion is the posexplode, there is no shuffle at all. Emits
-    ``(id, chunk_id, n_chunk_toks, chunk_text)``; chunk_id is the ordinal
-    of the window start, deterministic per document."""
-    if stride is None:
-        stride = tokens_per_chunk
-    if stride <= 0 or tokens_per_chunk <= 0:
-        raise ValueError("tokens_per_chunk and stride must be positive")
-    toks = F.split(F.trim(F.col(text_col)), " ")
-    starts = F.sequence(
-        F.lit(0), F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(stride)
-    )
-    # one slice per chunk: the struct carries the sliced array through the
-    # explode so the token count is size() of the SAME slice, not a second
-    # split pass over the emitted text
-    chunks = F.transform(
-        starts,
-        lambda s: F.struct(
-            F.slice(toks, s + F.lit(1), F.lit(tokens_per_chunk)).alias("toks")
-        ),
-    )
-    return (
-        df.filter(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col), F.posexplode(chunks).alias("chunk_id", "c"))
-        .select(
-            id_col,
-            F.col("chunk_id").cast("long"),
-            F.size("c.toks").cast("long").alias("n_chunk_toks"),
-            F.concat_ws(" ", F.col("c.toks")).alias("chunk_text"),
-        )
-    )
 
 
 def token_shards(
@@ -285,7 +166,7 @@ def per_host_cap(
     Shape at scale: one hash-partitioned window on the host key. Per-host
     state is only a running counter, but a mega-host (10^9 pages of one
     domain) still lands on one task — at that scale either pre-filter with
-    ``hash_sample`` to bring hosts under a partition's size, or trade
+    an md5-threshold sample to bring hosts under a partition's size, or trade
     exactness for a per-host threshold (cap/count quantile of the hash),
     which this module's threshold machinery expresses with two linear
     passes and no window. The exact window form is the contract here.

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Four search paths, plus SemDeDup pruning:
+Three search paths, plus SemDeDup pruning:
 
 * **Brute-force cosine top-k** — the exact baseline the approximate paths
   measure their recall against. Queries are a small subset →
@@ -13,11 +13,6 @@ Four search paths, plus SemDeDup pruning:
   jobs) → inverted lists keyed by centroid → nprobe-list probe + exact
   re-rank. Measured recall@3 ≈ 0.97 vs brute force on the test embeddings
   (16 lists, nprobe 4).
-* **PQ / IVFPQ ANN (ADC)** — product quantization (Jégou et al. 2011,
-  public): split the vector into ``m`` subspaces, quantize each against a
-  frozen data-drawn sub-codebook, store 1 code/subspace; a query
-  precomputes an (m × ksub) distance LUT and every comparison is ``m``
-  table lookups over the code columns, then an exact re-rank.
 
 Every distance and score is computed by the numpy batch kernels
 (``_np_*``) inside ``arrow_kernel``: squared L2 and dot products accumulate
@@ -37,8 +32,6 @@ __all__ = [
     "cosine_topk",
     "lsh_ann_topk",
     "ivf_ann_topk",
-    "ivfpq_ann_topk",
-    "pq_ann_topk",
     "semantic_dedup",
 ]
 
@@ -266,243 +259,6 @@ def ivf_ann_topk(
         "qvec", "nvec",
     )
     return _top_k(scored, k, F.desc("score"))
-
-
-def _pq_checked_vec(c: Column, dim: int) -> Column:
-    """Length-guarded vector: evaluates to the vector when its size is
-    ``dim`` and raises at execution otherwise. The check rides INSIDE the
-    value column so column pruning cannot optimize it away — without it a
-    caller whose embeddings are longer (or shorter) than ``dim`` gets
-    silently mis-sliced codebooks and a recall collapse with no error."""
-    return F.when(F.size(c) == dim, c).otherwise(
-        F.raise_error(f"PQ: embedding length != dim={dim}")
-    )
-
-
-def _pq_codebook(emb: DataFrame, id_col: str, vec_col: str,
-                 ksub: int, dim: int) -> list:
-    """Frozen data-drawn sub-codebook: the first ``ksub`` vectors in
-    md5(id) order (the deterministic-quantizer idiom shared with IVF and
-    semdedup; production would Lloyd-refine each subspace, same
-    structure). The ksub·dim table is driver-sized, like the IVF centroid
-    table; row ``cid`` of the returned list is centroid ``cid``."""
-    h = F.md5(F.col(id_col).cast("string"))
-    rows = (
-        emb.select(F.col(id_col).alias("src"),
-                   _pq_checked_vec(F.col(vec_col), dim).alias("cvec"),
-                   h.alias("h"))
-        .orderBy("h", "src")
-        .limit(ksub)
-        .collect()
-    )
-    return [[float(x) for x in r["cvec"]]
-            for r in sorted(rows, key=lambda r: (r["h"], r["src"]))]
-
-
-def _pq_sub_dists(df: DataFrame, C: list, keep: list, m: int, sub_d: int,
-                  codes: bool = False) -> DataFrame:
-    """Squared L2 of every row's ``vec`` to every centroid of the broadcast
-    sub-codebook ``C``, per subspace slice → (*keep, s, cid, d). With
-    ``codes`` the kernel keeps only the argmin per (row, subspace), ties to
-    the lowest centroid id — the PQ encoding → (*keep, s, cid)."""
-    import numpy as np
-
-    bc = df.sparkSession.sparkContext.broadcast(np.asarray(C, dtype=np.float64))
-    ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name in keep
-    ) + ", s int, cid int" + ("" if codes else ", d double")
-
-    def run(batches):
-        Cm = bc.value
-        ksub = Cm.shape[0]
-        for b in batches:
-            if not len(b):
-                continue
-            # (n, m, ksub): the fold over each subspace's dims
-            D = _np_sq_l2(_np_rows(b["vec"]).reshape(len(b), m, 1, sub_d),
-                          Cm.reshape(ksub, m, sub_d).transpose(1, 0, 2))
-            if codes:
-                per_row = m
-                cid = D.argmin(axis=2).ravel()
-            else:
-                per_row = m * ksub
-                cid = np.tile(np.arange(ksub), len(b) * m)
-            out = b.take(np.repeat(np.arange(len(b)), per_row))
-            yield {
-                **{c: out[c] for c in keep},
-                "s": np.repeat(np.tile(np.arange(m), len(b)), per_row // m),
-                "cid": cid,
-                "d": D.ravel(),  # dropped by the schema when ``codes``
-            }
-
-    return arrow_kernel(df, run, ddl)
-
-
-def _adc_shortlist(adc: DataFrame, rerank: int) -> DataFrame:
-    ws = Window.partitionBy("query_id").orderBy(F.asc("adist"),
-                                                F.asc("neighbor_id"))
-    return (
-        adc.withColumn("srank", F.row_number().over(ws))
-        .filter(F.col("srank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-
-
-def _pq_exact_rerank(shortlist: DataFrame, q: DataFrame, base: DataFrame,
-                     k: int) -> DataFrame:
-    """Exact squared-L2 re-rank of the ADC shortlist: only ``rerank``
-    true vectors per query are ever read."""
-    exact = _np_pair_score(
-        shortlist
-        .join(q.withColumnRenamed("vec", "qvec"), "query_id")
-        .join(base.select(F.col("id").alias("neighbor_id"),
-                          F.col("vec").alias("nvec")), "neighbor_id"),
-        "qvec", "nvec", "dist", _np_sq_l2,
-    )
-    return _top_k(exact, k, F.asc("dist"), "dist")
-
-
-def _pq_lut(q: DataFrame, C: list, m: int, sub_d: int) -> DataFrame:
-    """(query_id, s, cid, dd): the per-query ADC table, each entry rounded
-    and DECIMAL-cast so the per-pair ADC sum is exact decimal arithmetic."""
-    return _pq_sub_dists(q, C, ["query_id"], m, sub_d).select(
-        "query_id", "s", "cid",
-        F.round("d", 9).cast("decimal(28,9)").alias("dd"),
-    )
-
-
-def pq_ann_topk(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_pred: Column,
-    k: int = 3,
-    m: int = 16,
-    ksub: int = 64,
-    rerank: int = 32,
-    dim: int = 64,
-) -> DataFrame:
-    """Product-quantization ANN: ADC shortlist + exact re-rank (the
-    "ADC with re-ranking" pipeline of Jégou et al. 2011):
-    → (query_id, rank, neighbor_id, dist), ``dist`` the EXACT squared L2.
-
-    Index: the vector splits into ``m`` subspaces of ``dim//m`` dims;
-    each subspace has a FROZEN data-drawn sub-codebook (``_pq_codebook``)
-    and every vector stores one code per subspace (argmin squared-L2,
-    ties to the lowest centroid id): ``m`` small ints instead of ``dim``
-    floats — 16× compression at the defaults, and the full-vector scan
-    happens only over codes.
-
-    Query: precompute the (m × ksub) LUT of subspace distances; the ADC
-    pass is ``m`` LUT lookups + adds per code row and keeps only the
-    ``rerank`` best candidates per query, which are then re-ranked by
-    exact squared L2 on the true vectors (``rerank`` rows per query, not
-    the corpus). Measured on the test embeddings (UNCLUSTERED near-random
-    vectors — the hardest case for any quantizer): recall@3 ≈ 0.93 at
-    m=16/ksub=64/rerank=32, vs 0.03 for raw-ADC ordering alone — the
-    re-rank stage is not optional at this dimensionality, which is why it
-    is part of the operator and not left to the caller. Compose with IVF
-    inverted lists to prune the code scan at 10^12 scale
-    (``ivfpq_ann_topk`` is exactly that composition, sharing these
-    helpers).
-
-    Parity design: subspace/exact distances are the same sequential
-    float64 fold as IVF (bitwise-deterministic in both engines); the LUT
-    entries are rounded-and-DECIMAL-cast per row so the per-pair ADC SUM
-    is exact decimal arithmetic — independent of partitioning and
-    addition order (a float sum would not be). ``dim`` must equal the
-    embedding length (execution-time guarded) and divide by ``m``.
-    """
-    if dim % m:
-        raise ValueError("pq_ann_topk: dim must be divisible by m")
-    sub_d = dim // m
-    C = _pq_codebook(emb, id_col, vec_col, ksub, dim)
-    base = emb.select(F.col(id_col).alias("id"),
-                      _pq_checked_vec(F.col(vec_col), dim).alias("vec"))
-    codes = _pq_sub_dists(base, C, ["id"], m, sub_d, codes=True)
-
-    q = emb.filter(query_pred).select(
-        F.col(id_col).alias("query_id"),
-        _pq_checked_vec(F.col(vec_col), dim).alias("vec"),
-    )
-    adc = (
-        codes.join(F.broadcast(_pq_lut(q, C, m, sub_d)), ["s", "cid"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("dd").alias("adist"))  # exact decimal sum over m terms
-    )
-    return _pq_exact_rerank(_adc_shortlist(adc, rerank), q, base, k)
-
-
-def ivfpq_ann_topk(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_pred: Column,
-    k: int = 3,
-    n_coarse: int = 16,
-    nprobe: int = 6,
-    m: int = 16,
-    ksub: int = 64,
-    rerank: int = 24,
-    seed: int = 7,
-    dim: int = 64,
-) -> DataFrame:
-    """The 10^12-scale ANN composition: IVF inverted-list pruning + PQ
-    code scan + exact re-rank (the IVFADC pipeline of Jégou et al. 2011,
-    here without residual encoding — codes quantize the raw vectors, the
-    production refinement being PQ over per-list residuals with the SAME
-    plan shape): → (query_id, rank, neighbor_id, dist).
-
-    Plan shape, which is the point: the coarse assignment keys BOTH
-    sides by centroid id, so the ADC scan joins on (cid, s, code) —
-    queries only meet the ~nprobe/n_coarse fraction of code rows in
-    their probed lists (IVF prunes candidates), each surviving
-    comparison costs m LUT adds over 16×-compressed codes (PQ cuts
-    bytes), and only ``rerank`` true vectors per query are ever touched
-    (exact re-rank restores accuracy). Every stage is an equi-join or
-    partial aggregation — no stage holds corpus-proportional state.
-    Measured recall@3 ≈ 0.83 on the unclustered test embeddings (the
-    nprobe prune sets the ceiling).
-
-    Frozen deterministic quantizers throughout (coarse = the seeded
-    md5 hyperplanes shared with ``ivf_ann_topk``; sub-codebooks, codes,
-    shortlist and re-rank = the exact helpers ``pq_ann_topk`` uses) so
-    the DuckDB oracle restates the whole pipeline. Same float-parity
-    design as the family: sequential float64 folds + rounded-DECIMAL
-    LUT sums."""
-    if dim % m:
-        raise ValueError("ivfpq_ann_topk: dim must be divisible by m")
-    sub_d = dim // m
-    coarse = [_hyperplane(dim, c, seed) for c in range(n_coarse)]
-    ccids = list(range(n_coarse))
-    base = emb.select(F.col(id_col).alias("id"),
-                      _pq_checked_vec(F.col(vec_col), dim).alias("vec"))
-    lists = _assign_np(base, coarse, ccids, 1, "int").withColumnRenamed(
-        "cid", "ccid"
-    )  # (id, vec, ccid)
-    C = _pq_codebook(emb, id_col, vec_col, ksub, dim)
-    codes = _pq_sub_dists(lists, C, ["id", "ccid"], m, sub_d, codes=True)
-
-    q = emb.filter(query_pred).select(
-        F.col(id_col).alias("query_id"),
-        _pq_checked_vec(F.col(vec_col), dim).alias("vec"),
-    )
-    qprobe = _assign_np(q, coarse, ccids, nprobe, "int").withColumnRenamed(
-        "cid", "ccid"
-    )  # (query_id, vec, ccid)
-    adc = (
-        qprobe.select("query_id", "ccid")
-        .join(codes, "ccid")  # IVF pruning: only probed lists' codes
-        .join(F.broadcast(_pq_lut(q, C, m, sub_d)), ["query_id", "s", "cid"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("dd").alias("adist"))
-    )
-    return _pq_exact_rerank(_adc_shortlist(adc, rerank), q, base, k)
 
 
 def semantic_dedup(

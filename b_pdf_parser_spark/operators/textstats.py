@@ -13,14 +13,14 @@ so every operator has a DuckDB oracle in ``__spark_entry__.py``:
 
 Scale: the per-document operators are map-only (no shuffle); they pipeline
 into the same stage as the scan, and columnar parquet scans prune to
-``text`` only. The LM, retrieval and boilerplate operators aggregate across
-the corpus and say so in their docstrings.
+``text`` only. The boilerplate operator aggregates across the corpus and
+says so in its docstring.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 
 from . import arrow_kernel, sql_name
 
@@ -35,15 +35,9 @@ __all__ = [
     "gopher_quality_frame",
     "fingerprint",
     "langid_frame",
-    "unigram_logprob",
-    "bm25_topk",
-    "with_cc_scrub",
-    "bigram_logprob",
-    "word_ngrams",
     "intra_doc_repetition",
     "quality_decisions",
     "strip_boilerplate_lines",
-    "with_compression_ratio",
 ]
 
 # small fixed stopword sets; the langid vote is a heuristic, not a model
@@ -232,259 +226,6 @@ def langid_frame(
     return arrow_kernel(src, run, f"doc_id {id_ddl}, {out_col} string")
 
 
-def unigram_logprob(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document mean negative log2-probability under the corpus's own
-    unigram LM (the CCNet-style perplexity proxy: low bits → repetitive /
-    boilerplate, high bits → rare-token noise; the training-mix filter
-    keeps the middle band).
-
-    Unlike the column ops above this is a DataFrame op with two shuffles,
-    both linear and skew-benign at 10^12 docs:
-
-    1. ``explode → groupBy(token)`` for corpus term frequencies — map-side
-       partial aggregation collapses each partition to its distinct tokens
-       before the exchange, so the shuffle carries ~|vocab| rows per
-       partition, not ~|tokens|;
-    2. tokens ⋈ vocab on the token key + ``groupBy(doc)`` — the vocab side
-       is Zipf-skewed but the join is a plain equi-join whose hot keys AQE
-       splits; the per-doc re-aggregation is again partially aggregated
-       map-side.
-
-    The corpus total enters as a broadcast 1-row crossJoin (no driver
-    collect). Determinism: count/total is int/int → identical IEEE double;
-    log2 agrees between engines (same convention as the entropy oracle);
-    the mean is rounded to 4 decimals.
-    """
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), " ")).alias("tok"),
-    )
-    vocab = toks.groupBy("tok").agg(F.count("*").alias("tf"))
-    total = vocab.agg(F.sum("tf").alias("n_total"))
-    priced = vocab.crossJoin(F.broadcast(total))
-    return (
-        toks.join(priced, "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.round(-F.avg(F.log2(F.col("tf") / F.col("n_total"))), 4).alias("nll_bits"),
-            F.count("*").alias("n_toks"),
-        )
-    )
-
-
-def bigram_logprob(
-    df: DataFrame,
-    target_pred: Column,
-    lam: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """CCNet-shaped LM perplexity scoring, the interpolated-BIGRAM form of
-    :func:`unigram_logprob`: the LM trains on the TARGET subset (CCNet
-    trains on Wikipedia and scores the crawl — ``target_pred`` marks the
-    in-domain rows) and every document is scored by its mean negative
-    log2-probability under ``p(w2|w1) = λ·c(w1w2)/c(w1·) +
-    (1−λ)·(c(w2)+1)/(N+V)`` — maximum-likelihood bigram interpolated with
-    an add-one unigram floor, so unseen words and unseen continuations
-    stay finite. → (doc_id, n_bigrams, nll_bits); documents with fewer
-    than two tokens have no bigrams and are excluded.
-
-    Scale shape: the model side is two map-side-combined aggregations
-    over the target subset (distinct bigrams / unigrams — the CCNet LM
-    is corpus-vocabulary-sized, not corpus-sized); scoring is equi-joins
-    on the gram keys (Zipf-hot keys are AQE-splittable) + one doc-keyed
-    partial aggregation. Determinism: counts are integers, the
-    interpolation is fixed-expression IEEE arithmetic on identical
-    doubles in both engines, and the per-doc mean is rounded to 4
-    decimals (the same absorption the unigram oracle has used since
-    round 2)."""
-    text = F.col(text_col)
-    grams = df.select(
-        F.col(id_col).alias("doc_id"),
-        target_pred.alias("is_t"),
-        F.explode(word_ngrams(text, 2)).alias("g"),
-    ).select(
-        "doc_id", "is_t",
-        F.split("g", " ").getItem(0).alias("w1"),
-        F.split("g", " ").getItem(1).alias("w2"),
-    )
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        target_pred.alias("is_t"),
-        F.explode(F.split(F.lower(F.trim(text)), " ")).alias("tok"),
-    )
-    big = (
-        grams.filter("is_t").groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("cb"))
-    )
-    w1tot = big.groupBy("w1").agg(F.sum("cb").alias("cw1"))
-    uni = (
-        toks.filter("is_t").groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cu"))
-    )
-    scal = uni.agg(
-        F.sum("cu").alias("n_total"), F.count(F.lit(1)).alias("v_size")
-    )
-    p = (
-        F.lit(lam)
-        * F.coalesce(F.col("cb") / F.col("cw1"), F.lit(0.0))
-        + F.lit(1.0 - lam)
-        * (F.coalesce(F.col("cu"), F.lit(0)) + 1)
-        / (F.col("n_total") + F.col("v_size"))
-    )
-    return (
-        grams.drop("is_t")
-        .join(big, ["w1", "w2"], "left")
-        .join(w1tot, "w1", "left")
-        .join(uni.withColumnRenamed("tok", "w2"), "w2", "left")
-        .crossJoin(F.broadcast(scal))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(-F.avg(F.log2(p)), 4).alias("nll_bits"),
-        )
-    )
-
-
-def bm25_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """BM25 top-``k`` retrieval (Robertson–Spärck Jones, the Lucene
-    ``ln(1 + (N−df+0.5)/(df+0.5))`` idf variant) — the retrieval op a
-    training-data pipeline runs for benchmark decontamination-by-retrieval
-    and nearest-neighbour data selection. ``queries`` is a small
-    ``(qid, term)`` relation; every query gets its ``k`` best documents by
-    ``Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl))``.
-
-    Scale shape: ``tf`` is the posting list — the broadcast query side
-    prunes it to matched terms BEFORE the df/dl joins, so the scored
-    relation is |postings of query terms|, not |corpus|; df/avgdl are
-    map-side-combined corpus aggregates; the (N, avgdl) scalar frame is
-    broadcast; per-query top-k is a window over the tiny scored set.
-    Determinism: each per-term contribution is one fixed-shape IEEE
-    expression rounded to 9 decimals and cast to DECIMAL(28,9) before the
-    per-doc SUM (the [[dsir]] idiom — exact, partition-order-independent),
-    and ranking ties break on doc_id. → (qid, rank, doc_id, n_hit, bm25)."""
-    toks = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(_toks(F.col(text_col))).alias("tok")
-    )
-    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    dfs = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    q = queries.select("qid", F.col("term").alias("tok")).distinct()
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
-    tf_d = F.col("tf").cast("double")
-    tfn = (tf_d * F.lit(k1 + 1.0)) / (
-        tf_d
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / F.col("avgdl")))
-    )
-    contrib = (
-        tf.join(F.broadcast(q), "tok")
-        .join(dfs, "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "qid",
-            "doc_id",
-            F.round(idf * tfn, 9).cast("decimal(28,9)").alias("c"),
-        )
-    )
-    scores = contrib.groupBy("qid", "doc_id").agg(
-        F.count(F.lit(1)).alias("n_hit"), F.sum("c").alias("sc")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sc"), F.asc("doc_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid",
-            "rank",
-            "doc_id",
-            "n_hit",
-            F.round(F.col("sc").cast("double"), 4).alias("bm25"),
-        )
-    )
-
-
-# Luhn mod-10 checksum as a pure Spark-SQL expression over a digit-string
-# lambda variable `x` (ISO/IEC 7812 — public): double every 2nd digit from
-# the right, subtract 9 when the double exceeds 9, valid iff sum % 10 == 0.
-# Integer-only arithmetic → bit-exact in any engine; the DuckDB oracle
-# restates the identical formula with list_sum/list_transform.
-_LUHN_X = (
-    "aggregate(sequence(1, length(x)), 0, (acc, p) -> acc + "
-    "(CASE WHEN p % 2 = 0 THEN "
-    "CASE WHEN (ascii(substr(reverse(x), p, 1)) - 48) * 2 > 9 "
-    "THEN (ascii(substr(reverse(x), p, 1)) - 48) * 2 - 9 "
-    "ELSE (ascii(substr(reverse(x), p, 1)) - 48) * 2 END "
-    "ELSE ascii(substr(reverse(x), p, 1)) - 48 END)) % 10 = 0"
-)
-
-
-def with_cc_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Credit-card scrubbing with LUHN VALIDATION — the precision step a
-    real PII pass needs: a 13–19-digit run is only a card number if its
-    mod-10 checksum holds, so order ids, tracking numbers and timestamps
-    survive while genuine PANs redact. Appends ``n_candidates`` (digit
-    runs seen), ``n_valid`` (Luhn-passing) and ``scrubbed`` (only the
-    valid ones replaced by ``<CC>``). Entirely relational — the candidate
-    extraction, the checksum fold and the replacement fold are codegen'd
-    higher-order expressions, no UDF, no shuffle."""
-    out = (
-        df.withColumn(
-            "_cands",
-            F.expr(
-                f"regexp_extract_all({text_col},"
-                " '\\\\b\\\\d{13,19}\\\\b', 0)"
-            ),
-        )
-        .withColumn("_valid", F.expr(f"filter(_cands, x -> {_LUHN_X})"))
-    )
-    return out.select(
-        *df.columns,
-        F.size("_cands").alias("n_candidates"),
-        F.size("_valid").alias("n_valid"),
-        # boundary-anchored per-candidate replace: a bare replace() would
-        # also rewrite the same digits INSIDE a longer (non-candidate or
-        # invalid) run — '...9<PAN>9...' must survive intact
-        F.expr(
-            f"aggregate(_valid, {text_col}, (acc, x) ->"
-            " regexp_replace(acc, concat('\\\\b', x, '\\\\b'), '<CC>'))"
-        ).alias("scrubbed"),
-    )
-
-
-def word_ngrams(c: Column, n: int) -> Column:
-    """Array of word ``n``-grams of the lowercased text — a map-only array
-    expression (no explode/shuffle at this stage). Empty array for texts
-    with fewer than ``n`` tokens (``sequence`` would otherwise count
-    backwards and fabricate grams)."""
-    toks = _toks(c)
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - n + 1),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def intra_doc_repetition(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -502,7 +243,7 @@ def intra_doc_repetition(
     Scale shape (round-7): both signals are PER-DOCUMENT, so the whole
     operator is one Arrow batch kernel — map-only, zero Exchanges (the old
     plan paid two (doc, gram) groupBys + two (doc) groupBys + a join, and
-    its ``word_ngrams`` lambda evaluated interpreted). The fractions stay
+    its n-gram lambda evaluated interpreted). The fractions stay
     unrounded int/int IEEE doubles (Python and JVM divide identical exact
     integers), so the DuckDB oracle remains bit-identical.
     """
@@ -650,35 +391,3 @@ def strip_boilerplate_lines(
             F.sum(F.when(F.col("bp"), 1).otherwise(0)).alias("n_dropped"),
         )
     )
-
-
-def with_compression_ratio(
-    df: DataFrame, text_col: str = "text", out_col: str = "zlib_ratio", level: int = 6
-) -> DataFrame:
-    """zlib compressed-size / raw-size per document — the redundancy signal
-    RefinedWeb/MassiveText use to catch machine-generated or template text
-    (which compresses far below natural language's ~0.3–0.5 band).
-
-    No SQL engine exposes zlib, so this is the one textstats op without a
-    DuckDB oracle; it is instead pinned by a unit test against direct
-    ``zlib.compress`` on the same strings. Runs as an Arrow batch kernel
-    (one Python dispatch per batch; zlib itself is C), and
-    the compression level is pinned so results are reproducible across
-    runs and cluster sizes. Empty/null text → ratio 0.0.
-    """
-    import zlib
-
-    import pyarrow as pa
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(list(df.schema.fields) + [StructField(out_col, DoubleType())])
-
-    def ratios(batches):
-        for b in batches:
-            raws = [(t or "").encode("utf-8") for t in b[text_col].tolist()]
-            yield b.append_column(out_col, pa.array(
-                [len(zlib.compress(r, level)) / len(r) if r else 0.0 for r in raws],
-                pa.float64(),
-            ))
-
-    return arrow_kernel(df, ratios, out_schema)

@@ -57,7 +57,6 @@ __all__ = [
     "StreamObject",
     "PdfDocument",
     "extract_pdf_pages",
-    "extract_pdf_text",
 ]
 
 
@@ -1895,10 +1894,3 @@ def extract_pdf_pages_and_tables(
         texts.append("".join(_join_line(ls) + "\n" for ls in line_spans))
         tables.extend(_detect_tables(line_spans))
     return texts, tables
-
-
-def extract_pdf_text(data: bytes) -> str:
-    """Full-document text with the reference's page join: every page's text
-    is suffixed with one extra ``"\\n"``
-    (``/root/reference/pdfparser/pymupdf_parser.py:74-77``)."""
-    return "".join(pt + "\n" for pt in extract_pdf_pages(data))

@@ -24,7 +24,6 @@ Statement content mirrors the shapes in the reference's corpus/generator
 from __future__ import annotations
 
 import random
-import zlib
 from datetime import datetime, timedelta
 from functools import lru_cache
 from typing import Any, Dict, List, Optional, Tuple
@@ -37,8 +36,6 @@ __all__ = [
     "formula_statement_lines",
     "formula_statement_pdf",
     "formula_statement_html",
-    "structured_page",
-    "feed_page",
     "html_page",
     "html_statement_page",
     "make_page_row",
@@ -425,118 +422,6 @@ def formula_statement_html(i: int) -> bytes:
         "</body></html>"
     )
     return html.encode("utf-8")
-
-
-def structured_page(i: int) -> bytes:
-    """Head-metadata stratum for the structured-data harvest
-    (``html_structured_data`` extras row): an article page whose
-    OpenGraph tags, canonical link and JSON-LD block are pure integer
-    functions of ``i``, with the hazards the real web rotates —
-    attribute order flipped on odd ids (``content=`` first), single vs
-    double quoting, an unquoted canonical ``href`` (i%10==7), an
-    HTML-entity ``&amp;`` inside og:title (i%9==2), a MISSING OpenGraph
-    set (i%6==0), a missing canonical (i%13==4), no JSON-LD at all
-    (i%7==3), a TRUNCATED (unparseable) JSON-LD body (i%11==5), and a
-    second JSON-LD block (i%8==1). The DuckDB oracle recomputes every
-    extracted value from the same formulas."""
-    import json as _json
-
-    og_title = f"Article {(i * 7) % 1000}" + (" & more" if i % 9 == 2 else "")
-    og_type = ("article", "video.movie", "website")[i % 3]
-    locale = ("en_US", "de_DE", "fr_FR", "es_ES", "id_ID")[i % 5]
-    canonical = f"https://site{i % 13}.example/posts/{i}"
-    metas: List[str] = []
-    if i % 6 != 0:
-        title_attr = og_title.replace("&", "&amp;")
-        if i % 2 == 0:
-            metas += [
-                f'<meta property="og:title" content="{title_attr}">',
-                f'<meta property="og:type" content="{og_type}">',
-            ]
-        else:  # attribute order flipped + single quotes: parser must not care
-            metas += [
-                f"<meta content='{title_attr}' property='og:title'>",
-                f"<meta content='{og_type}' property='og:type'>",
-            ]
-        metas.append(f'<meta property="og:locale" content="{locale}">')
-    if i % 13 != 4:
-        if i % 10 == 7:
-            metas.append(f"<link rel=canonical href={canonical}>")
-        else:
-            metas.append(f'<link rel="canonical" href="{canonical}">')
-    if i % 7 != 3:
-        body = _json.dumps({
-            "@context": "https://schema.org",
-            "@type": ("Article", "NewsArticle", "BlogPosting", "Report")[i % 4],
-            "wordCount": 100 + (i * 31) % 900,
-        })
-        if i % 11 == 5:
-            body = body[:-1]  # truncated on purpose: must flag, not throw
-        metas.append(f'<script type="application/ld+json">{body}</script>')
-        if i % 8 == 1:
-            extra = _json.dumps({"@type": "BreadcrumbList", "numberOfItems": i % 5})
-            metas.append(f'<script type="application/ld+json">{extra}</script>')
-    html = (
-        f"<!DOCTYPE html><html><head><title>Structured Doc {i}</title>\n"
-        + "\n".join(metas)
-        + f"</head><body>\n<article><p>synthetic paragraph {i} for the "
-        "structured data stratum with enough words to look like an "
-        "article body.</p></article>\n</body></html>"
-    )
-    return html.encode("utf-8")
-
-
-def feed_page(i: int) -> bytes:
-    """Syndication-feed stratum (``feed_items`` extras row): an RSS 2.0
-    (even ``i``) or Atom 1.0 (odd ``i``) feed whose every item field is a
-    pure integer function of ``(i, j)``, rotating the real-web hazards —
-    ``<![CDATA[...]]>`` titles carrying raw markup (j%3==1),
-    entity-escaped ``&amp;`` titles (j%3==2), a missing date on the first
-    item (i%13==9), and a TRUNCATED final item missing its close tag
-    (i%11==6 — must be dropped, never parsed as garbage). The DuckDB
-    oracle recomputes every surviving row from the same formulas."""
-    import datetime as _dt
-
-    kind = "rss" if i % 2 == 0 else "atom"
-    n_items = 3 + i % 5
-    base = _dt.date(2024, 1, 1)
-    items: List[str] = []
-    for j in range(n_items):
-        if j % 3 == 1:
-            title_xml = f"<![CDATA[Item {i}-{j} <raw>]]>"
-        elif j % 3 == 2:
-            title_xml = f"Item {i}-{j} &amp; co"
-        else:
-            title_xml = f"Item {i}-{j}"
-        link = f"https://feed{i % 9}.example/{kind}/{i}/{j}"
-        d = base + _dt.timedelta(days=(i + 3 * j) % 400)
-        no_date = i % 13 == 9 and j == 0
-        if kind == "rss":
-            pd_tag = "" if no_date else (
-                "<pubDate>" + d.strftime("%a, %d %b %Y 08:00:00 GMT")
-                + "</pubDate>")
-            body = (f"<item>\n  <title>{title_xml}</title>\n"
-                    f"  <link>{link}</link>\n"
-                    f"  <guid>urn:feed:{i}:{j}</guid>\n  {pd_tag}\n</item>")
-        else:
-            upd_tag = "" if no_date else (
-                f"<updated>{d.isoformat()}T08:00:00Z</updated>")
-            body = (f'<entry xml:lang="en">\n'
-                    f'  <title type="text">{title_xml}</title>\n'
-                    f'  <link rel="alternate" href="{link}"/>\n'
-                    f"  <id>urn:feed:{i}:{j}</id>\n  {upd_tag}\n</entry>")
-        if i % 11 == 6 and j == n_items - 1:
-            body = body.rsplit("</", 1)[0]  # truncated on purpose
-        items.append(body)
-    if kind == "rss":
-        xml = ('<?xml version="1.0"?>\n<rss version="2.0"><channel>\n'
-               f"<title>Feed {i}</title>\n" + "\n".join(items)
-               + "\n</channel></rss>")
-    else:
-        xml = ('<?xml version="1.0"?>\n'
-               '<feed xmlns="http://www.w3.org/2005/Atom">\n'
-               f"<title>Feed {i}</title>\n" + "\n".join(items) + "\n</feed>")
-    return xml.encode("utf-8")
 
 
 def report_pdf(rng: random.Random) -> bytes:

@@ -41,66 +41,3 @@ def test_training_is_partitioning_independent(spark):
     w1 = train_logreg(standardize(base.repartition(1))[0], n_iter=5)
     w2 = train_logreg(standardize(base.repartition(13))[0], n_iter=5)
     assert w1 == w2  # decimal-exact sums: bit-identical trajectories
-
-
-# ---------------------------------------------------------------------------
-# HyperLogLog sketch (same file: the round-6 algorithmic operators)
-# ---------------------------------------------------------------------------
-
-
-def test_hll_sketches_merge_by_register_max(spark):
-    from b_pdf_parser_spark.operators.sketches import hll_estimate, hll_registers
-
-    keys = spark.range(0, 5000).select(
-        (F.col("id") % 3331).cast("string").alias("k")
-    )
-    whole = hll_registers(keys, "k")
-    a = hll_registers(keys.filter(F.col("id") < 2500), "k")
-    b = hll_registers(keys.filter(F.col("id") >= 2500), "k")
-    merged = a.unionByName(b).groupBy("reg").agg(F.max("mx").alias("mx"))
-    # merge = element-wise max: the merged sketch IS the whole-data sketch
-    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, whole.collect()))
-    est = hll_estimate(merged).first()
-    assert abs(est.estimate - 3331) / 3331 < 0.15  # ~1.04/sqrt(256) regime
-
-
-def test_hll_small_range_uses_linear_counting(spark):
-    from b_pdf_parser_spark.operators.sketches import hll_estimate, hll_registers
-
-    keys = spark.range(0, 1000).select((F.col("id") % 40).cast("string").alias("k"))
-    est = hll_estimate(hll_registers(keys, "k")).first()
-    assert est.v_zero > 0 and abs(est.estimate - 40) < 8
-
-
-def test_cms_merge_and_overestimate_guarantee(spark):
-    from b_pdf_parser_spark.operators.sketches import cms_counters, cms_estimate
-
-    keys = spark.range(0, 3000).select(
-        (F.col("id") % 50).cast("string").alias("k")
-    )
-    whole = cms_counters(keys, "k")
-    half_a = cms_counters(keys.filter(F.col("id") < 1500), "k")
-    half_b = cms_counters(keys.filter(F.col("id") >= 1500), "k")
-    merged = (half_a.unionByName(half_b)
-              .groupBy("row", "col").agg(F.sum("cnt").alias("cnt")))
-    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, whole.collect()))
-    qs = spark.createDataFrame([(str(k),) for k in range(50)], "k string")
-    est = {r.key: r.cms_count for r in cms_estimate(whole, qs, "k").collect()}
-    # CMS never undercounts: every key appears exactly 60 times
-    assert all(v >= 60 for v in est.values())
-    assert min(est.values()) == 60  # some row is collision-free at this load
-
-
-def test_cms_unseen_key_counts_zero(spark):
-    from b_pdf_parser_spark.operators.sketches import cms_counters, cms_estimate
-
-    keys = spark.range(0, 200).select((F.col("id") % 5).cast("string").alias("k"))
-    sketch = cms_counters(keys, "k")
-    probes = spark.createDataFrame(
-        [("0",), ("never-ingested-key",)], "k string"
-    )
-    est = {r.key: r.cms_count for r in cms_estimate(sketch, probes, "k").collect()}
-    assert est["0"] == 40
-    # an untouched cell is a ZERO, not a dropped join row: a never-seen
-    # key must answer 0 (and must not vanish from the output)
-    assert est["never-ingested-key"] == 0

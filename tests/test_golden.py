@@ -258,19 +258,12 @@ def test_d20_utf16_bom_precedence(fixtures_dir):
 
 def test_writer_encrypted_bytes_identical(tmp_path, monkeypatch, fixtures_dir):
     """The writer's encrypted output (RC4, AES-128, AES-256 key material and
-    payloads) regenerates byte for byte. d15_kitchen_sink is left out: it
-    regenerates 51 bytes longer with identical extracted text. The cause:
-    the writer now emits its CCITT image XObject (object 9, the only
-    plaintext object that differs) as ``/DeviceGray /BitsPerComponent 1
-    /DecodeParms << /K -1 /Columns 24 /Rows 24 >>``, while the frozen file
-    has ``/DeviceRGB /BitsPerComponent 8`` and no ``/DecodeParms``; the
-    encrypt dictionary's ``/U`` differs only because the file ID does.
-    Adding d15 here needs a deliberate refreeze of that fixture."""
+    payloads) regenerates byte for byte."""
     from tools import genfixtures
 
     monkeypatch.setattr(genfixtures, "FIXDIR", tmp_path)
     genfixtures.main()
     for name in ("d11_encrypted_rc4", "d13_encrypted_aes128",
-                 "d14_encrypted_aes256", "d19_enc_inline_diffs"):
+                 "d14_encrypted_aes256", "d15_kitchen_sink", "d19_enc_inline_diffs"):
         got = (tmp_path / f"{name}.pdf").read_bytes()
         assert got == (fixtures_dir / f"{name}.pdf").read_bytes(), name

@@ -12,11 +12,30 @@ from b_pdf_parser_spark.jpegcodec import (
     decode_jpeg,
     encode_jpeg,
     encode_jpeg_progressive,
-    rgb_to_ycbcr,
-    ycbcr_to_rgb,
 )
 
 _Q8 = ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
+
+
+def _clamp8(v: int) -> int:
+    return 0 if v < 0 else 255 if v > 255 else v
+
+
+def rgb_to_ycbcr(r: int, g: int, b: int):
+    """Scalar form of the codec's fixed-point BT.601 transform:
+    ``(k·x + 128) >> 8`` with the rounded 256-scaled coefficients."""
+    y = (77 * r + 150 * g + 29 * b + 128) >> 8
+    cb = ((-43 * r - 85 * g + 128 * b + 128) >> 8) + 128
+    cr = ((128 * r - 107 * g - 21 * b + 128) >> 8) + 128
+    return (_clamp8(y), _clamp8(cb), _clamp8(cr))
+
+
+def ycbcr_to_rgb(y: int, cb: int, cr: int):
+    """Scalar inverse of :func:`rgb_to_ycbcr` (same >> 8 convention)."""
+    r = y + ((359 * (cr - 128) + 128) >> 8)
+    g = y - ((88 * (cb - 128) + 183 * (cr - 128) + 128) >> 8)
+    b = y + ((454 * (cb - 128) + 128) >> 8)
+    return (_clamp8(r), _clamp8(g), _clamp8(b))
 
 
 def _flat_gray(i, w, h):
@@ -126,21 +145,18 @@ def test_bad_inputs_raise():
 
 
 def test_ycbcr_fixed_point_twins_match_scalar_vs_vectorized():
-    # encoder/decoder use vectorized numpy forms of the scalar functions;
-    # pin the pair so they can't drift apart
-    rng = np.random.RandomState(5)
-    for _ in range(200):
-        r, g, b = (int(v) for v in rng.randint(0, 256, 3))
-        y, cb, cr = rgb_to_ycbcr(r, g, b)
-        rr = np.array([r], dtype=np.int64)
-        gg = np.array([g], dtype=np.int64)
-        bb = np.array([b], dtype=np.int64)
-        yv = int(((77 * rr + 150 * gg + 29 * bb + 128) >> 8)[0])
-        cbv = int((((-43 * rr - 85 * gg + 128 * bb + 128) >> 8) + 128)[0])
-        crv = int((((128 * rr - 107 * gg - 21 * bb + 128) >> 8) + 128)[0])
-        assert (y, cb, cr) == (yv, cbv, crv)
-        r2, g2, b2 = ycbcr_to_rgb(y, cb, cr)
-        assert max(abs(r2 - r), abs(g2 - g), abs(b2 - b)) <= 3
+    # the codec's vectorized transforms (forward in _prep_planes, inverse in
+    # _planes_to_pixels) equal the scalar helpers above pixel for pixel
+    from b_pdf_parser_spark.jpegcodec import _planes_to_pixels, _prep_planes
+
+    w, h = 25, 8
+    px = np.random.RandomState(5).randint(0, 256, w * h * 3).astype(np.uint8).tobytes()
+    planes, _, _, _ = _prep_planes(w, h, 3, px, None)
+    ycc = [tuple(int(p[i // w, i % w]) for p in planes) for i in range(w * h)]
+    assert ycc == [rgb_to_ycbcr(*px[3 * i:3 * i + 3]) for i in range(w * h)]
+    back = _planes_to_pixels(planes, w, h)[3]
+    assert back == b"".join(bytes(ycbcr_to_rgb(*t)) for t in ycc)
+    assert max(abs(a - b) for a, b in zip(back, px)) <= 3
 
 
 # ---------------------------------------------------------------------------

@@ -130,7 +130,7 @@ def test_pdf_jpeg_decode_flat_blocks_roundtrip_and_decoy_routing():
     assert [r["filter"] for r in recs] == ["DCTDecode", "CCITTFaxDecode"]
     w, h, ch, out = decode_jpeg(recs[0]["data"])
     assert (w, h, ch) == (16, 8, 3)
-    from b_pdf_parser_spark.jpegcodec import rgb_to_ycbcr, ycbcr_to_rgb
+    from test_jpegcodec import rgb_to_ycbcr, ycbcr_to_rgb
 
     exp = bytearray()
     for k in range(0, len(px), 3):

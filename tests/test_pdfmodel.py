@@ -12,6 +12,12 @@ from b_pdf_parser_spark import pdfmodel as pm
 from b_pdf_parser_spark.pdfwriter import build_pdf, pdf_from_lines
 
 
+def _pdf_text(data: bytes) -> str:
+    """Whole-document text as the extraction kernel joins it: every page's
+    text followed by one extra ``"\\n"``."""
+    return "".join(pt + "\n" for pt in pm.extract_pdf_pages(data))
+
+
 # ---- lexer ----------------------------------------------------------------
 
 def test_parse_basic_values():
@@ -340,7 +346,7 @@ def test_runlength_chain_output_capped(monkeypatch):
     assert pm._runlength(pm._runlength(bomb)) == b"\x81" * 81920
     monkeypatch.setattr(pm, "_FLATE_MAX", 1 << 16)
     with pytest.raises(pm.PdfError, match="decodes past"):
-        pm.extract_pdf_text(_stream_pdf(b"[" + b"/RunLengthDecode " * 3 + b"]", bomb))
+        _pdf_text(_stream_pdf(b"[" + b"/RunLengthDecode " * 3 + b"]", bomb))
     # exactly at the cap still decodes
     assert pm._runlength(b"\x81\x00" * 512) == bytes(1 << 16)
 
@@ -368,7 +374,7 @@ def test_roundtrip_all_variants(xref_stream, td_ops, compress):
     pdf = pdf_from_lines(lines, xref_stream=xref_stream, td_ops=td_ops, compress=compress)
     pages = pm.extract_pdf_pages(pdf)
     assert pages == ["alpha beta\ngamma (delta)\n1.234.567,89\n", "page two\n"]
-    assert pm.extract_pdf_text(pdf) == (
+    assert _pdf_text(pdf) == (
         "alpha beta\ngamma (delta)\n1.234.567,89\n\npage two\n\n"
     )
 
@@ -377,7 +383,7 @@ def test_xref_recovery_from_corrupt_table():
     pdf = pdf_from_lines([["recovered text"]])
     # smash the startxref offset → forces brute-force object scan
     broken = pdf.replace(b"startxref", b"startxrEF", 1)
-    assert pm.extract_pdf_text(broken) == "recovered text\n\n"
+    assert _pdf_text(broken) == "recovered text\n\n"
 
 
 def test_type0_roundtrip_all_variants():
@@ -473,24 +479,24 @@ def test_bare_lf_xref_entries():
     head, sep, tail = pdf.partition(b"xref\n0 ")
     bare = head + sep + tail.replace(b" n \n", b" n\n").replace(b" f \n", b" f\n")
     assert bare != pdf
-    assert pm.extract_pdf_text(bare) == "bare lf xref\n\n"
+    assert _pdf_text(bare) == "bare lf xref\n\n"
 
 
 def test_same_line_spans_sorted_by_x():
     pdf = build_pdf([[(200.0, 700.0, "right"), (72.0, 700.0, "left")]])
-    assert pm.extract_pdf_text(pdf) == "left right\n\n"
+    assert _pdf_text(pdf) == "left right\n\n"
 
 
 def test_line_y_clustering():
     pdf = build_pdf([[(72.0, 700.0, "a"), (120.0, 699.0, "b"), (72.0, 680.0, "c")]])
-    assert pm.extract_pdf_text(pdf) == "a b\nc\n\n"
+    assert _pdf_text(pdf) == "a b\nc\n\n"
 
 
 def test_errors_raise_pdferror():
     for payload in (b"", b"%PDF-1.4 mock PDF content", b"\x00" * 64,
                     pdf_from_lines([["x"]])[:150]):
         with pytest.raises(pm.PdfError):
-            pm.extract_pdf_text(payload)
+            _pdf_text(payload)
 
 
 # ---- property tests ---------------------------------------------------------
@@ -499,7 +505,7 @@ def test_errors_raise_pdferror():
 @given(st.binary(max_size=2048))
 def test_never_raises_anything_but_pdferror(data):
     try:
-        pm.extract_pdf_text(b"%PDF-" + data)
+        _pdf_text(b"%PDF-" + data)
     except pm.PdfError:
         pass
 
@@ -694,7 +700,7 @@ def test_bogus_encrypt_dict_rejected():
     pdf = pdf_from_lines([["secret"]])
     broken = pdf.replace(b"/Root 1 0 R", b"/Root 1 0 R /Encrypt 9 0 R")
     with pytest.raises(pm.PdfError, match="Encrypt"):
-        pm.extract_pdf_text(broken)
+        _pdf_text(broken)
 
 
 def test_xy_cut_two_column_reading_order():
@@ -702,7 +708,7 @@ def test_xy_cut_two_column_reading_order():
     left = [(60.0, 760.0 - 14 * i, f"left {i} alpha beta") for i in range(5)]
     right = [(330.0, 753.0 - 14 * i, f"right {i} gamma delta") for i in range(5)]
     pdf = build_pdf([left + right])
-    lines = pm.extract_pdf_text(pdf).strip().split("\n")
+    lines = _pdf_text(pdf).strip().split("\n")
     assert lines == [f"left {i} alpha beta" for i in range(5)] + [
         f"right {i} gamma delta" for i in range(5)
     ]
@@ -761,8 +767,8 @@ def _enc_sample(**kw):
 @pytest.mark.parametrize("mode", [True, "rc4-40"])
 @pytest.mark.parametrize("xs", [False, True])
 def test_encrypted_roundtrip_matches_plaintext(mode, xs):
-    plain = pm.extract_pdf_text(_enc_sample(xref_stream=xs))
-    got = pm.extract_pdf_text(_enc_sample(xref_stream=xs, encrypt=mode))
+    plain = _pdf_text(_enc_sample(xref_stream=xs))
+    got = _pdf_text(_enc_sample(xref_stream=xs, encrypt=mode))
     assert got == plain
     assert "Account Number" in got
 
@@ -771,7 +777,7 @@ def test_encrypted_strings_not_in_cleartext_on_disk():
     # the point of the feature: without decryption the text is unreadable
     data = _enc_sample(encrypt=True, compress=False)
     assert b"Account Statement" not in data
-    assert pm.extract_pdf_text(data).startswith("Account Statement")
+    assert _pdf_text(data).startswith("Account Statement")
 
 
 def test_encrypted_wrong_user_password_raises():
@@ -780,13 +786,13 @@ def test_encrypted_wrong_user_password_raises():
     i = data.find(b"/U (")
     tampered = data[: i + 4] + bytes([data[i + 4] ^ 0xFF]) + data[i + 5 :]
     with pytest.raises(pm.PdfError, match="password"):
-        pm.extract_pdf_text(tampered)
+        _pdf_text(tampered)
 
 
 def test_encrypted_aes_rejected_loud():
     data = _enc_sample(encrypt=True).replace(b"/V 2 /R 3 /Length 128", b"/V 4 /R 4 /Length 128", 1)
     with pytest.raises(pm.PdfError, match="AES|unsupported"):
-        pm.extract_pdf_text(data)
+        _pdf_text(data)
 
 
 @settings(max_examples=40, deadline=None)
@@ -795,7 +801,7 @@ def test_encrypted_byte_splice_keeps_pdferror_contract(pos, junk):
     data = _enc_sample(encrypt=True, xref_stream=True)
     spliced = data[: pos % len(data)] + junk + data[pos % len(data) :]
     try:
-        pm.extract_pdf_text(spliced)
+        _pdf_text(spliced)
     except pm.PdfError:
         pass
 
@@ -813,7 +819,7 @@ def test_corrupt_xref_stream_fields_raise_pdferror(old, new):
     data = _enc_sample(encrypt=True, xref_stream=True)
     assert data.count(old) == 1
     try:
-        pm.extract_pdf_text(data.replace(old, new))
+        _pdf_text(data.replace(old, new))
     except pm.PdfError:
         pass
 
@@ -830,7 +836,7 @@ def test_malformed_encryption_fields_raise_pdferror(old, new):
     data = _enc_sample(encrypt=True)
     assert data.count(old) == 1
     with pytest.raises(pm.PdfError, match="malformed encryption dictionary"):
-        pm.extract_pdf_text(data.replace(old, new))
+        _pdf_text(data.replace(old, new))
 
 
 def test_long_digit_run_in_content_stream():
@@ -840,7 +846,7 @@ def test_long_digit_run_in_content_stream():
     content = b"BT /F1 10 Tf 1 0 0 1 72 700 Tm " + b"7" * 6000 + b"> (ok) Tj ET"
     tree = [b"<< /Type /Catalog /Pages 2 0 R >>",
             b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>", _LEAF_PAGE]
-    assert pm.extract_pdf_text(_classic_pdf(tree, content)) == "ok\n\n"
+    assert _pdf_text(_classic_pdf(tree, content)) == "ok\n\n"
     # a number past float range as a Tm coordinate puts its span at an
     # infinite y; beside two 4-line columns the column split once raised
     # OverflowError on it. The span has no place on the page and is dropped
@@ -849,7 +855,7 @@ def test_long_digit_run_in_content_stream():
                     for k in range(4))
     content = (b"BT /F1 10 Tf " + cols + b"1 0 0 1 10 " + b"1" * 400
                + b".0 Tm (far) Tj ET")
-    assert pm.extract_pdf_text(_classic_pdf(tree, content)) == (
+    assert _pdf_text(_classic_pdf(tree, content)) == (
         "L0\nL1\nL2\nL3\nR0\nR1\nR2\nR3\n\n")
 
 
@@ -860,7 +866,7 @@ def test_odd_length_tounicode_hex_raises_nothing_but_pdferror():
 
     data = formula_statement_pdf(10)
     try:
-        pm.extract_pdf_text(data[:964] + b"\x00" + data[964:])
+        _pdf_text(data[:964] + b"\x00" + data[964:])
     except pm.PdfError:
         pass
 
@@ -882,7 +888,7 @@ def test_formula_hazard_splice_keeps_pdferror_contract(i, pos, junk):
     data = formula_statement_pdf(i)
     spliced = data[: pos % len(data)] + junk + data[pos % len(data) :]
     try:
-        pm.extract_pdf_text(spliced)
+        _pdf_text(spliced)
     except pm.PdfError:
         pass
 
@@ -915,7 +921,7 @@ def test_seeded_syntax_splice_scan_raises_only_pdferror():
                             else bytes([rng.randrange(256)]) for _ in range(rng.randint(1, 16)))
         pos = rng.randrange(len(data))
         try:
-            pm.extract_pdf_text(data[:pos] + junk + data[pos:])
+            _pdf_text(data[:pos] + junk + data[pos:])
         except pm.PdfError:
             pass
         except Exception as e:  # noqa: BLE001 - the contract under test
@@ -933,7 +939,7 @@ def test_formula_aes256_stratum_text_identical():
         clean = formula_statement_pdf(i, aes256=False)
         enc = formula_statement_pdf(i, aes256=True)
         assert b"/AESV3" in enc and b"/AESV3" not in clean
-        assert pm.extract_pdf_text(enc) == pm.extract_pdf_text(clean)
+        assert _pdf_text(enc) == _pdf_text(clean)
     # non-stratum docs are byte-identical under the flag
     assert formula_statement_pdf(4, aes256=True) == formula_statement_pdf(4)
 
@@ -1002,13 +1008,13 @@ def test_rc4_every_pdf_key_length():
     zero = data.replace(b"/V 2 /R 3 /Length 128", b"/V 2 /R 3 /Length   0", 1)
     assert zero != data
     with pytest.raises(pm.PdfError, match="RC4 key of 0 bytes"):
-        pm.extract_pdf_text(zero)
+        _pdf_text(zero)
 
 
 @pytest.mark.parametrize("mode", ["aes-128", "aes-256"])
 def test_aes_encrypted_roundtrip_matches_plaintext(mode):
-    plain = pm.extract_pdf_text(_enc_sample(xref_stream=True))
-    got = pm.extract_pdf_text(_enc_sample(xref_stream=True, encrypt=mode))
+    plain = _pdf_text(_enc_sample(xref_stream=True))
+    got = _pdf_text(_enc_sample(xref_stream=True, encrypt=mode))
     assert got == plain
 
 
@@ -1017,7 +1023,7 @@ def test_aes256_wrong_user_password_raises():
     i = data.find(b"/U (")
     tampered = data[: i + 4] + bytes([data[i + 4] ^ 0xFF]) + data[i + 5 :]
     with pytest.raises(pm.PdfError, match="password"):
-        pm.extract_pdf_text(tampered)
+        _pdf_text(tampered)
 
 
 # -- LZW / RunLength filters (§7.4.4 / §7.4.5) -------------------------------
@@ -1104,12 +1110,12 @@ def test_decode_stream_lzw_and_runlength_filters():
         b"trailer\n<< /Root 1 0 R >>\n"
     ) % (len(_lzw_encode(content)), _lzw_encode(content))
     # no xref at all → exercises the rebuild path too
-    assert pm.extract_pdf_text(lzw_pdf) == "lzw works\n\n"
+    assert _pdf_text(lzw_pdf) == "lzw works\n\n"
     rl = bytes([len(content) - 1]) + content + bytes([128])
     rl_pdf = lzw_pdf.replace(b"/Filter /LZWDecode /Length %d" % len(_lzw_encode(content)),
                              b"/Filter /RunLengthDecode /Length %d" % len(rl)).replace(
         b"stream\n" + _lzw_encode(content), b"stream\n" + rl)
-    assert pm.extract_pdf_text(rl_pdf) == "lzw works\n\n"
+    assert _pdf_text(rl_pdf) == "lzw works\n\n"
 
 
 def test_aes_bad_padding_raises():
@@ -1141,13 +1147,13 @@ def test_aes_v4_key_length_from_stdcf_only():
     # a V4 file may declare the key size only in the StdCF crypt filter
     # (/Length there is a BYTE count per spec); blanking the top-level
     # /Length with same-width spaces keeps every xref offset valid
-    plain = pm.extract_pdf_text(_enc_sample())
+    plain = _pdf_text(_enc_sample())
     data = _enc_sample(encrypt="aes-128")
     marker = b"/V 4 /R 4 /Length 128"
     assert marker in data
     stripped = data.replace(marker, b"/V 4 /R 4            ", 1)
     assert len(stripped) == len(data)
-    assert pm.extract_pdf_text(stripped) == plain
+    assert _pdf_text(stripped) == plain
 
 
 def test_inline_images_skipped_not_tokenized():
@@ -1158,7 +1164,7 @@ def test_inline_images_skipped_not_tokenized():
 
     lines = [["Account Statement", "Account Number: 777-IDR",
               "01.02.2023 10:11 Payment to ACME (cafe) 100,50 200,00"]]
-    plain = pm.extract_pdf_text(pdf_from_lines(lines))
+    plain = _pdf_text(pdf_from_lines(lines))
     evil = (bytes(range(256))
             + b"(swallow) 1 0 0 1 5 5 Tm (phantom) Tj BT ET zzEIzz <be> Tj")
     for compress in (False, True):
@@ -1166,7 +1172,7 @@ def test_inline_images_skipped_not_tokenized():
             data = pdf_from_lines(
                 lines, inline_images=[(0, evil), (0, b"\x00\x01EI9(")],
                 compress=compress, encrypt=enc)
-            assert pm.extract_pdf_text(data) == plain, (compress, enc)
+            assert _pdf_text(data) == plain, (compress, enc)
 
 
 def test_differences_encoding_roundtrip():
@@ -1180,12 +1186,12 @@ def test_differences_encoding_roundtrip():
               "Account Number: 777-IDR"]]
     for xs in (False, True):
         for enc in (False, "aes-128"):
-            got = pm.extract_pdf_text(
+            got = _pdf_text(
                 pdf_from_lines(lines, differences=diffs, xref_stream=xs, encrypt=enc))
             assert "€99" in got and "“smart”" in got and "café über…" in got
             assert "Account Number: 777-IDR" in got
     # uniXXXX glyph names resolve; unknown names fall back to the base code
-    got = pm.extract_pdf_text(
+    got = _pdf_text(
         pdf_from_lines([["X€Y"]], differences={140: "uni20AC", 141: "bogusname"}))
     assert "X€Y" in got
 
@@ -1198,13 +1204,13 @@ def test_differences_remap_of_ascii_codes():
     diffs = {65: "zero", 48: "A"}  # swap 'A' and '0'
     data = pdf_from_lines([["A0A0 balance 100"]], differences=diffs, compress=False)
     assert b"(0A0A" in data  # bytes on the page are swapped...
-    assert "A0A0 balance 100" in pm.extract_pdf_text(data)  # ...decode restores
+    assert "A0A0 balance 100" in _pdf_text(data)  # ...decode restores
 
 
 def test_v4_toplevel_length_40_is_bits_not_bytes():
     # top-level /Length is defined in BITS; 40 is legal (RC4-40) and must
     # NOT be scaled by the StdCF bytes->bits heuristic
-    plain = pm.extract_pdf_text(_enc_sample())
+    plain = _pdf_text(_enc_sample())
     data = _enc_sample(encrypt="rc4-40")
     assert b"/V 1 /R 2" in data or b"/Length 40" in data
-    assert pm.extract_pdf_text(data) == plain
+    assert _pdf_text(data) == plain

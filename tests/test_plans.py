@@ -62,7 +62,9 @@ def test_filter_pushdown_on_pages(spark, pages_parquet):
 
 
 def test_broadcast_joins_in_dimension_queries(spark):
-    for name in ("top_customers", "regional_revenue"):
+    # order_totals_check: the 1.5k-row orders table broadcasts by size (no
+    # hint); crawl_frontier: the politeness-rules dimension carries a hint
+    for name in ("order_totals_check", "crawl_frontier"):
         plan = _plan(ALL_Q[name](spark, "/root/testdata/sf0.001"))
         assert "BroadcastHashJoin" in plan, name
 
@@ -167,22 +169,19 @@ def _program_files(root):
 def test_one_kernel_idiom():
     """Every Python batch kernel goes through ``operators.arrow_kernel``:
     no pandas interchange (``mapInPandas``, ``applyInPandas``,
-    ``pandas_udf``) and no ``mapInArrow`` outside the helper. The one
-    exception is ``applyInPandasWithState`` in the sessions stream —
-    PySpark has no Arrow state API."""
+    ``pandas_udf``, ``applyInPandasWithState``) and no ``mapInArrow``
+    outside the helper."""
     import ast
     from pathlib import Path
 
     root = Path(__file__).resolve().parent.parent
     helper = root / "b_pdf_parser_spark" / "operators" / "__init__.py"
-    stateful = root / "b_pdf_parser_spark" / "streaming" / "sessions_stream.py"
     bad = []
     for path in _program_files(root):
         for name, fn, line in _named_calls(ast.parse(path.read_text())):
             where = f"{path.relative_to(root)}:{line} {name}"
-            if name in ("mapInPandas", "applyInPandas", "pandas_udf"):
-                bad.append(where)
-            elif name == "applyInPandasWithState" and path != stateful:
+            if name in ("mapInPandas", "applyInPandas", "pandas_udf",
+                        "applyInPandasWithState"):
                 bad.append(where)
             elif name == "mapInArrow" and (path != helper or fn != "arrow_kernel"):
                 bad.append(where)

@@ -123,78 +123,3 @@ def test_semantic_dedup_partition_invariant(spark):
     a = sorted(map(tuple, semantic_dedup(e.coalesce(1)).collect()))
     b = sorted(map(tuple, semantic_dedup(e.repartition(16)).collect()))
     assert a == b
-
-
-def test_pq_ann_rerank_recall_vs_exact_l2(spark):
-    import numpy as np
-
-    from b_pdf_parser_spark.operators.similarity import pq_ann_topk
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    pred = F.col("vec_id") % 50 == 0
-    approx = {(r["query_id"], r["neighbor_id"])
-              for r in pq_ann_topk(e, query_pred=pred, k=3).collect()}
-    rows = sorted(e.collect(), key=lambda r: r["vec_id"])
-    ids = np.array([r["vec_id"] for r in rows])
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    exact = set()
-    for qi, q in zip(ids, X):
-        if qi % 50:
-            continue
-        d = ((X - q) ** 2).sum(1)
-        d[ids == qi] = np.inf
-        exact |= {(int(qi), int(ids[j])) for j in np.lexsort((ids, d))[:3]}
-    per_q = {}
-    for q, _ in approx:
-        per_q[q] = per_q.get(q, 0) + 1
-    assert set(per_q.values()) == {3}
-    recall = len(exact & approx) / len(exact)
-    # measured 0.93 at m=16/ksub=64/rerank=32 on these unclustered
-    # vectors; raw ADC ordering alone measures 0.03 — the re-rank stage
-    # carries the accuracy, exactly as in the paper's ADC+R variant
-    assert recall >= 0.8, recall
-
-
-def test_pq_ann_partition_invariant(spark):
-    from b_pdf_parser_spark.operators.similarity import pq_ann_topk
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    pred = F.col("vec_id") % 100 == 0
-    a = {(r["query_id"], r["rank"], r["neighbor_id"], r["dist"])
-         for r in pq_ann_topk(e, query_pred=pred, k=3).collect()}
-    b = {(r["query_id"], r["rank"], r["neighbor_id"], r["dist"])
-         for r in pq_ann_topk(e.repartition(17), query_pred=pred, k=3).collect()}
-    assert a == b
-
-
-def test_ivfpq_recall_and_partition_invariance(spark):
-    import numpy as np
-
-    from b_pdf_parser_spark.operators.similarity import ivfpq_ann_topk
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    pred = F.col("vec_id") % 50 == 0
-    got = ivfpq_ann_topk(e, query_pred=pred, k=3).collect()
-    ap = {(r["query_id"], r["neighbor_id"]) for r in got}
-    per_q = {}
-    for q, _ in ap:
-        per_q[q] = per_q.get(q, 0) + 1
-    assert set(per_q.values()) == {3}
-    rows = sorted(e.collect(), key=lambda r: r["vec_id"])
-    ids = np.array([r["vec_id"] for r in rows])
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    exact = set()
-    for qi, q in zip(ids, X):
-        if qi % 50:
-            continue
-        d = ((X - q) ** 2).sum(1)
-        d[ids == qi] = np.inf
-        exact |= {(int(qi), int(ids[j])) for j in np.lexsort((ids, d))[:3]}
-    recall = len(exact & ap) / len(exact)
-    # measured 0.833 (nprobe 6/16 prunes the candidate ceiling; the ADC
-    # shortlist + exact rerank recovers everything the probe didn't drop)
-    assert recall >= 0.7, recall
-    b = {(r["query_id"], r["rank"], r["neighbor_id"], r["dist"])
-         for r in ivfpq_ann_topk(e.repartition(19), query_pred=pred, k=3).collect()}
-    assert {(r["query_id"], r["rank"], r["neighbor_id"], r["dist"])
-            for r in got} == b

@@ -48,10 +48,6 @@ SHOW = {
         "windowless per-host cap: two linear shuffles (count + broadcast "
         "threshold join), no single-host giant task"
     ),
-    "chunk_documents": (
-        "context chunking: map-only split → sequence → slice → posexplode, "
-        "ZERO Exchanges"
-    ),
     "extract_corpus_audit": (
         "corpus-scale audit (round 5): cached-parquet scan → the SAME salted "
         "extraction exchange → map-only Arrow walk → one partial-aggregated "
@@ -72,59 +68,12 @@ SHOW = {
         "pass ran at plan-build time as its own map-side-combined "
         "TakeOrderedAndProject job (driver holds <= top_words rows)"
     ),
-    "bigram_perplexity": (
-        "CCNet-shaped bigram LM scoring (round 6): the model side is two "
-        "map-side-combined aggregations over the TARGET subset only "
-        "(vocabulary-sized); scoring joins on the gram keys + one doc-keyed "
-        "partial agg; the (N, V) scalar frame enters as a broadcast "
-        "nested-loop, never a driver collect"
-    ),
-    "bm25_retrieval": (
-        "BM25 retrieval (round 6): the broadcast query relation prunes the "
-        "tf posting list BEFORE the df/dl joins, so the scored set is "
-        "|postings of query terms|, not |corpus|; per-term contributions "
-        "are DECIMAL(28,9) summed (partition-order-proof); per-query top-k "
-        "is a window over the pruned set"
-    ),
-    "web_pipeline": (
-        "curation-funnel capstone (round 6): dedup semi-join → codegen'd "
-        "quality CASE → bigram-LM joins → map-only hash-threshold mix, all "
-        "one declarative plan; the funnel is five 1-row aggregates unioned "
-        "— no driver-side counting"
-    ),
-    "cc_luhn_scrub": (
-        "Luhn-validated PII scrub (round 6): corpus construction, candidate "
-        "extraction, the mod-10 checksum fold and the replacement fold are "
-        "ONE map-only codegen'd projection — zero Exchanges, zero Python"
-    ),
-    "host_hits": (
-        "HITS fixed point (round 6): per iteration two equi-joins + two "
-        "host-keyed partial-aggregated groupBys; L1 totals enter as 1-row "
-        "broadcast crossJoins — integer arithmetic end to end"
-    ),
-    "feed_items": (
-        "RSS/Atom harvest (round 6): Arrow-batch XML generation, then the "
-        "whole parse is regexp_extract_all + posexplode + codegen'd "
-        "projections — no Python in the parse path"
-    ),
     "quality_classifier": (
         "trained LR quality filter (round 6, board): the shown plan is the "
         "final REPORT (weights union + accuracy agg); the 8 GD iterations "
         "and 2 standardize passes each ran as their own map-side-combined "
         "aggregation collecting <= 6 numbers — no data ever reaches the "
         "driver"
-    ),
-    "hll_distinct": (
-        "from-scratch HyperLogLog (round 6): register extraction is a "
-        "codegen'd integer CASE chain in the scan stage; the sketch "
-        "aggregate partial-combines to <= m rows per partition; the "
-        "estimate is one decimal-summed agg + a 1-row join"
-    ),
-    "cms_heavy_hitters": (
-        "Count-Min sketch (round 6): ONE corpus pass builds all depth "
-        "cells (explode over an inline struct array); the cell table "
-        "broadcasts to the probe side, so point queries are map-only + "
-        "one tiny groupBy"
     ),
     "token_shards_bucketed": (
         "token-budget sharding re-priced in BPE tokens (round 6): encode is "
