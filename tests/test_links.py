@@ -35,14 +35,22 @@ def test_extract_links_empty_and_binary():
     assert extract_links(b"\xff\xfe<\x00a\x00 \x00h\x00r\x00e\x00f\x00=\x00x\x00>\x00") != []
 
 
-def test_extract_outlinks_edge_count(spark):
+def test_host_degrees(spark):
     from b_pdf_parser_spark.operators.links import extract_outlinks, synth_linkdoc_df
 
     edges = extract_outlinks(synth_linkdoc_df(spark, 40, num_partitions=4)).collect()
     # sum over i<40 of i%5 = 8 * (0+1+2+3+4)
     assert len(edges) == 80
-    hosts = {r.href.split("/")[2] for r in edges}
+    # per-host in-degree of the outlink graph: (edges, distinct source docs)
+    hosts = {}
+    for r in edges:
+        deg = hosts.setdefault(r.href.split("/")[2], [0, set()])
+        deg[0] += 1
+        deg[1].add(r.doc_id)
     assert all(h.startswith("host") and h.endswith(".example") for h in hosts)
+    assert sum(n for n, _ in hosts.values()) == 80
+    # every host's distinct-doc count is bounded by its inlink count
+    assert all(len(d) <= n for n, d in hosts.values())
 
 
 # ---- error-contract property tests ------------------------------------------
