@@ -993,84 +993,20 @@ def q_frontier_new(spark, sf):
 
 
 def q_real_media_decode(spark, sf):
-    """REAL media decode, value-oracled (round 5 — the un-stubbing of the
-    decodable third of the multimodal axis): 60 genuine PNG/BMP/WAV/GIF/
-    μ-law/JPEG payloads built by the from-scratch encoders (PNG row
-    filters rotating over all 5 types, split IDAT, CRC-verified chunks;
-    BMP bottom-up BGR with row padding; WAV chunk walk past a junk LIST
-    chunk; GIF LSB-first variable-width LZW — the bit-order twin of the
-    PDF LZWDecode filter — with 4 palette sizes, extension blocks and
-    4-pass interlace rotation; G.711 μ-law code bytes; baseline JFIF
-    JPEG with Annex-K Huffman entropy coding, restart-marker rotation,
-    and flat 8×8 blocks whose DC-quant-8 decode is bit-exact), decoded
-    by the from-scratch decoders in ``b_pdf_parser_spark.mediacodec``
-    and ``.jpegcodec``, reduced to exact integer features —
-    dimensions/rate/channel counts plus order-SENSITIVE (k+1)-weighted
-    value sums — that the DuckDB oracle recomputes from the generating
-    formulas (the G.711 complement/exponent/mantissa expansion and the
-    JPEG fixed-point integer YCbCr round trip restated as SQL integer
-    arithmetic). Half the restart-free JPEG docs are PROGRESSIVE (SOF2,
-    Annex-G spectral-selection + successive-approximation scan script) —
-    the coefficient pipeline is shared with baseline so the oracle
-    formulas hold unchanged while the multi-scan decode is value-checked.
-    A row-order, channel-order, padding, filter, palette, interlace,
-    Huffman, restart-resync, scan-script or chunk-walk bug changes the
-    hash. Docs 60–95 are the round-5-close EXTENSION strata: palette PNG
-    (PLTE, depth 8 and sub-byte 1/2/4), sub-byte greyscale (exact
-    255//(2^d-1) scaling), RGBA and depth-2-greyscale Adam7 interlace,
-    and mono IMA ADPCM audio — the first COMPRESSED audio codec, decoded
-    by the general 89-step table walk but fed a nibble stream whose
-    ``nibble&7 <= 3`` pins the step index at 0 so the decode is a closed
-    form the SQL restates as a windowed prefix sum (the lossy-codec
-    tractable-slice trick, same as flat-block JPEG).
-    Docs 96-107 complete the G.711 pair and the PCM family:
-    A-law code bytes through the XOR-0x55 segment/mantissa expansion
-    (restated as SQL integer arithmetic, like the mu-law branch) and
-    UNSIGNED 8-bit PCM canonicalized as (v-128)*256. Docs 108-119 are
-    8-bit INDEXED BMP: the same palette formulas as GIF/palette-PNG
-    through a BGRX color table and bottom-up padded rows — one palette
-    oracle, three containers. Docs 120-131 are palette PNG WITH tRNS
-    transparency: canonical output becomes RGBA, alpha from the tRNS
-    formula for low palette entries and 255 (the spec's opaque default
-    past the tRNS end) for the rest. Docs 132-143 are 16-BIT PNG
-    (gray/RGB/RGBA, big-endian samples, Adam7 rotation) canonicalized to
-    the high byte, so the oracle value is the sample formula // 256.
-    Docs 144-155 are STEREO IMA ADPCM: per-channel block headers +
-    interleaved 4-byte nibble groups, each channel its own index-pinned
-    closed form — two prefix sums interleaved sample-major, a
-    channel-partitioned window SUM in the SQL. Docs 156-167 are IEEE
-    float32 WAV (format 3): the exactly-representable n/32768 family,
-    so the 2^15-scaled int16 canonicalization recovers n bit-exactly
-    and the oracle is the integer formula itself. Docs 168-179 are
-    JPEG 2000 codestreams (round 6, from-scratch jpxcodec: MQ coder +
-    EBCOT Tier-1 + reversible 5/3 — LOSSLESS, so the oracle value is
-    the %251 ramp itself) with the decomposition level rotating 0/1/2
-    as a pure decode-path hazard. Docs 180-191 are ARITHMETIC-coded
-    JPEG (round 6, from-scratch arithjpeg: T.81 Annex-D QM coder +
-    Annex-F DC/AC statistical models, SOF9 + DAC markers, restart
-    rotation 0/2/3): arithmetic coding is lossless entropy coding over
-    the SAME quantized-coefficient pipeline as baseline, so the
-    flat-block formulas apply unchanged while the QM decode path is
-    value-checked — the last still-stubbed IMAGE entropy coding,
-    closed. Docs 192-203 are MJPEG VIDEO in AVI containers (round 6,
-    from-scratch avicodec: RIFF hdrl/strl/movi/idx1 walk, word-aligned
-    chunks, header/stream/frame-count agreement enforced, per-frame
-    baseline JPEG): 2-4 flat-block frames per file with an f*53 frame
-    term, canonical values in presentation order, so the weighted sum
-    pins frame ORDER as well as content — compressed VIDEO, the last
-    stubbed multimodal class, now decodes for real (inter-frame codecs
-    stay out of scope, stated in avicodec.py). Docs 204-215 are FLAC
-    (round 6, from-scratch flaccodec: Rice-coded residual partitions,
-    fixed 0-4 / verbatim / LPC subframes, left-side / mid-side stereo
-    decorrelation, frame CRC-8/16 + STREAMINFO MD5 all VERIFIED by the
-    decoder): lossless, so the oracle value is the PCM sample formula
-    while the whole strategy surface rotates underneath it."""
+    """24 stand-alone image payloads through the codecs of the PDF image
+    path (``multimodal.real_media_dims``): JPEGs of flat 8×8 blocks —
+    gray and colour, baseline SOF0 with restart intervals 0/2/3 and
+    progressive SOF2 — and lossless JPEG 2000 codestreams with 0/1/2
+    wavelet levels. Each decodes to exact integer features (dimensions,
+    channels and order-sensitive value sums) that the DuckDB oracle
+    recomputes from the generating formulas, the JPEG ones through the
+    codec's fixed-point YCbCr round trip."""
     from b_pdf_parser_spark.operators.multimodal import (
         real_media_features,
         synth_real_media_df,
     )
 
-    return real_media_features(synth_real_media_df(spark, 216))
+    return real_media_features(synth_real_media_df(spark, 24))
 
 
 _PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -1597,7 +1533,7 @@ def queries() -> dict[str, _T]:
         # -- PDF / multimodal ---------------------------------------------
         "pdf_images": q_pdf_images,
         "pdf_outlinks": q_pdf_outlinks,
-        # real PNG/BMP/WAV/GIF/μ-law/JPEG decode, value-oracled — round-5
+        # stand-alone JPEG / JPEG 2000 decode, value-oracled
         "real_media_decode": q_real_media_decode,
         # PDF walk × CCITT G4 fax codec, lossless pixel oracle — round-5
         "pdf_ccitt_decode": q_pdf_ccitt_decode,
@@ -1675,9 +1611,11 @@ def extra_queries() -> dict[str, _T]:
     (``test_every_extra_is_oracle_checked`` rejects one that only runs)."""
     return {
         # (a) the quadratic brute-force ANN baseline the LSH/IVF tests
-        # measure recall against, and the LSH stage the runners warm up
+        # measure recall against, the LSH stage the runners warm up, and
+        # the PDF walk × JPEG 2000 codec path they warm up
         "ann_topk": q_ann_topk,
         "lsh_candidates": q_lsh_candidates,
+        "pdf_jpx_decode": q_pdf_jpx_decode,
         # (b)
         "minhash_signatures": q_minhash_signatures,
         "shingle_overlap_jaccard": q_shingle_overlap_jaccard,
@@ -1692,7 +1630,6 @@ def extra_queries() -> dict[str, _T]:
         "quality_cut": q_quality_cut,
         "corpus_card": q_corpus_card,
         "pdf_jpeg_decode": q_pdf_jpeg_decode,
-        "pdf_jpx_decode": q_pdf_jpx_decode,
     }
 
 
@@ -1785,6 +1722,44 @@ def _cos(a: str, b: str) -> str:
         f"{_DOT64.format(a=a, b=b)} / "
         f"(sqrt({_DOT64.format(a=a, b=a)}) * sqrt({_DOT64.format(a=b, b=b)}))"
     )
+
+
+def _jpeg_flat_ctes(keys: str, src: str) -> str:
+    """CTEs ``jp``, ``jy`` and ``jv``: the flat-block JPEG decode restated
+    over ``src`` rows ``(<keys>, w, ch, s, k)``. The block index comes from
+    the value position ``k``, each block's flat RGB from
+    ``multimodal._jpeg_flat_pixels`` seeded ``s``, and colour goes through
+    the codec's fixed-point integer YCbCr round trip
+    (``(a*x+128)>>8 == FLOOR(../256)``); grayscale skips it. DC quant 8
+    makes flat blocks bit-exact, so ``jv.val`` is the decoded value."""
+    block = "((((k // ch) // w) // 8) * (w // 8) + (((k // ch) % w) // 8)) * 17"
+    return f"""
+            jp AS (
+                SELECT {keys}, k, ch, k % ch AS c,
+                       (s * 31 + {block}) % 256 AS r0,
+                       (s * 31 + {block} + 101) % 256 AS g0,
+                       (s * 31 + {block} + 202) % 256 AS b0
+                FROM {src}),
+            jy AS (
+                SELECT {keys}, k, ch, c, r0,
+                       CAST(FLOOR((77 * r0 + 150 * g0 + 29 * b0 + 128) / 256.0)
+                            AS BIGINT) AS y,
+                       CAST(FLOOR((-43 * r0 - 85 * g0 + 128 * b0 + 128) / 256.0)
+                            AS BIGINT) + 128 AS cb,
+                       CAST(FLOOR((128 * r0 - 107 * g0 - 21 * b0 + 128) / 256.0)
+                            AS BIGINT) + 128 AS cr
+                FROM jp),
+            jv AS (
+                SELECT {keys}, k,
+                       CASE WHEN ch = 1 THEN r0
+                            WHEN c = 0 THEN LEAST(255, GREATEST(0, y +
+                                 CAST(FLOOR((359 * (cr - 128) + 128) / 256.0) AS BIGINT)))
+                            WHEN c = 1 THEN LEAST(255, GREATEST(0, y -
+                                 CAST(FLOOR((88 * (cb - 128) + 183 * (cr - 128) + 128) / 256.0) AS BIGINT)))
+                            ELSE LEAST(255, GREATEST(0, y +
+                                 CAST(FLOOR((454 * (cb - 128) + 128) / 256.0) AS BIGINT)))
+                       END AS val
+                FROM jy)"""
 
 
 def _lsh_ann_oracle(n_planes: int = 6, dim: int = 64, seed: int = 7) -> str:
@@ -2353,365 +2328,33 @@ def _all_oracles() -> dict[str, str]:
             SELECT DISTINCT c.url AS url
             FROM cand c ANTI JOIN base b USING (url)
         """,
+        # JPEG docs (i < 12) through the flat-block YCbCr restatement;
+        # JPEG 2000 is lossless, so its values ARE the %251 ramp
         "real_media_decode": """
-            WITH m AS (SELECT range AS i FROM range(0, 216)),
+            WITH m AS (SELECT range AS i FROM range(0, 24)),
             dims AS (
-                -- base corpus (i < 60): formulas unchanged since round 5 mid
-                SELECT i, 'b' AS st,
-                       CASE i % 6 WHEN 0 THEN 'png' WHEN 1 THEN 'bmp'
-                            WHEN 2 THEN 'wav' WHEN 3 THEN 'gif'
-                            WHEN 4 THEN 'ulaw' ELSE 'jpeg' END AS fmt,
-                       CASE WHEN i % 6 IN (2, 4) THEN NULL
-                            WHEN i % 6 = 5 THEN 8 * (1 + (i // 6) % 3)
-                            ELSE 9 + i % 8 END AS w,
-                       CASE WHEN i % 6 IN (2, 4) THEN NULL
-                            WHEN i % 6 = 5 THEN 8 * (1 + ((i // 6) // 3) % 2)
-                            ELSE 7 + i % 6 END AS h,
-                       CASE i % 6
-                            WHEN 0 THEN ([1, 3, 4])[CAST((i // 6) % 3 AS INT) + 1]
-                            WHEN 2 THEN 1 + i % 2
-                            WHEN 4 THEN 1 + i % 2
-                            WHEN 5 THEN CASE WHEN (i // 6) % 2 = 0 THEN 1 ELSE 3 END
-                            ELSE 3 END AS ch,
-                       CASE WHEN i % 6 IN (2, 4)
-                            THEN 8000 + ((i // 6) % 3) * 4000
-                            ELSE NULL END AS rate,
-                       CASE i % 6
-                            WHEN 2 THEN (200 + i % 77) * (1 + i % 2)
-                            WHEN 4 THEN (150 + i % 60) * (1 + i % 2)
-                            WHEN 0 THEN (9 + i % 8) * (7 + i % 6) *
-                                 ([1, 3, 4])[CAST((i // 6) % 3 AS INT) + 1]
-                            WHEN 5 THEN 8 * (1 + (i // 6) % 3)
-                                 * 8 * (1 + ((i // 6) // 3) % 2)
-                                 * (CASE WHEN (i // 6) % 2 = 0 THEN 1 ELSE 3 END)
-                            ELSE (9 + i % 8) * (7 + i % 6) * 3
-                            END AS nv,
-                       CASE WHEN i % 6 = 3
-                            THEN ([4, 16, 64, 256])[CAST((i // 6) % 4 AS INT) + 1]
-                            ELSE NULL END AS psize,
-                       8 AS depth
-                FROM m WHERE i < 60
-                UNION ALL
-                -- extension strata (i >= 60): palette / sub-byte / Adam7
-                -- PNGs (interlace & filter choice don't change canonical
-                -- values, so they don't appear here) and IMA ADPCM
-                SELECT i, 'e' || CAST((i - 60) % 6 AS VARCHAR) AS st,
-                       CASE WHEN (i - 60) % 6 = 4 THEN 'adpcm'
-                            ELSE 'png' END AS fmt,
-                       CASE WHEN (i - 60) % 6 = 4 THEN NULL
-                            ELSE 9 + i % 8 END AS w,
-                       CASE WHEN (i - 60) % 6 = 4 THEN NULL
-                            ELSE 7 + i % 6 END AS h,
-                       ([3, 3, 1, 4, 1, 1])[CAST((i - 60) % 6 AS INT) + 1] AS ch,
-                       CASE WHEN (i - 60) % 6 = 4
-                            THEN 8000 + (((i - 60) // 6) % 3) * 4000
-                            ELSE NULL END AS rate,
-                       CASE (i - 60) % 6
-                            WHEN 0 THEN (9 + i % 8) * (7 + i % 6) * 3
-                            WHEN 1 THEN (9 + i % 8) * (7 + i % 6) * 3
-                            WHEN 2 THEN (9 + i % 8) * (7 + i % 6)
-                            WHEN 3 THEN (9 + i % 8) * (7 + i % 6) * 4
-                            WHEN 4 THEN 161 + 2 * (i % 20)
-                            ELSE (9 + i % 8) * (7 + i % 6)
-                            END AS nv,
-                       CASE (i - 60) % 6
-                            WHEN 0 THEN ([4, 16, 64, 256])[CAST(((i - 60) // 6) % 4 AS INT) + 1]
-                            WHEN 1 THEN 1 << ([1, 2, 4])[CAST(((i - 60) // 6) % 3 AS INT) + 1]
-                            ELSE NULL END AS psize,
-                       CASE (i - 60) % 6
-                            WHEN 1 THEN ([1, 2, 4])[CAST(((i - 60) // 6) % 3 AS INT) + 1]
-                            WHEN 2 THEN ([1, 2, 4])[CAST(((i - 60) // 6) % 3 AS INT) + 1]
-                            WHEN 5 THEN 2
-                            ELSE 8 END AS depth
-                FROM m WHERE i >= 60 AND i < 96
-                UNION ALL
-                -- G.711 A-law / unsigned PCM8 strata (i >= 96)
-                SELECT i, CASE WHEN i % 2 = 0 THEN 'a0' ELSE 'a1' END AS st,
-                       CASE WHEN i % 2 = 0 THEN 'alaw' ELSE 'pcm8' END AS fmt,
-                       NULL AS w, NULL AS h,
-                       1 + ((i - 96) // 2) % 2 AS ch,
-                       8000 + (((i - 96) // 2) % 3) * 4000 AS rate,
-                       (150 + i % 60) * (1 + ((i - 96) // 2) % 2) AS nv,
-                       NULL AS psize, 8 AS depth
-                FROM m WHERE i >= 96 AND i < 108
-                UNION ALL
-                -- 8-bit indexed BMP strata (i >= 108): GIF/PNG palette
-                -- formulas through a third container
-                SELECT i, 'p0' AS st, 'bmp' AS fmt,
-                       9 + i % 8 AS w, 7 + i % 6 AS h, 3 AS ch,
-                       NULL AS rate,
-                       (9 + i % 8) * (7 + i % 6) * 3 AS nv,
-                       ([4, 16, 64, 256])[CAST((i - 108) % 4 AS INT) + 1] AS psize,
-                       8 AS depth
-                FROM m WHERE i >= 108 AND i < 120
-                UNION ALL
-                -- palette PNG with tRNS (i >= 120): RGBA canonical form
-                SELECT i, 't0' AS st, 'png' AS fmt,
-                       9 + i % 8 AS w, 7 + i % 6 AS h, 4 AS ch,
-                       NULL AS rate,
-                       (9 + i % 8) * (7 + i % 6) * 4 AS nv,
-                       1 << ([2, 4, 8])[CAST((i - 120) % 3 AS INT) + 1] AS psize,
-                       ([2, 4, 8])[CAST((i - 120) % 3 AS INT) + 1] AS depth
-                FROM m WHERE i >= 120 AND i < 132
-                UNION ALL
-                -- 16-bit PNG strata (i >= 132): high-byte canonical form
-                SELECT i, 's0' AS st, 'png' AS fmt,
-                       9 + i % 8 AS w, 7 + i % 6 AS h,
-                       ([1, 3, 4])[CAST((i - 132) % 3 AS INT) + 1] AS ch,
-                       NULL AS rate,
-                       (9 + i % 8) * (7 + i % 6)
-                           * ([1, 3, 4])[CAST((i - 132) % 3 AS INT) + 1] AS nv,
-                       NULL AS psize, 16 AS depth
-                FROM m WHERE i >= 132 AND i < 144
-                UNION ALL
-                -- stereo IMA ADPCM strata (i >= 144)
-                SELECT i, 'u0' AS st, 'adpcm' AS fmt,
-                       NULL AS w, NULL AS h, 2 AS ch,
-                       8000 + (((i - 144) // 2) % 3) * 4000 AS rate,
-                       2 * (97 + 2 * (i % 20)) AS nv,
-                       NULL AS psize, 8 AS depth
-                FROM m WHERE i >= 144 AND i < 156
-                UNION ALL
-                -- IEEE float32 WAV strata (i >= 156): exact n/32768 family
-                SELECT i, 'f0' AS st, 'float32' AS fmt,
-                       NULL AS w, NULL AS h,
-                       1 + (i - 156) % 2 AS ch,
-                       8000 + (((i - 156) // 2) % 3) * 4000 AS rate,
-                       (120 + i % 40) * (1 + (i - 156) % 2) AS nv,
-                       NULL AS psize, 32 AS depth
-                FROM m WHERE i >= 156 AND i < 168
-                UNION ALL
-                -- JPEG 2000 strata (i >= 168, round 6): lossless 5/3+MQ,
-                -- value IS the %251 ramp; levels rotation is decode-only
-                SELECT i, 'j0' AS st, 'jp2k' AS fmt,
-                       9 + i % 8 AS w, 7 + i % 6 AS h,
-                       CASE WHEN i % 2 = 0 THEN 1 ELSE 3 END AS ch,
-                       NULL AS rate,
-                       (9 + i % 8) * (7 + i % 6)
-                           * (CASE WHEN i % 2 = 0 THEN 1 ELSE 3 END) AS nv,
-                       NULL AS psize, 8 AS depth
-                FROM m WHERE i >= 168 AND i < 180
-                UNION ALL
-                -- arithmetic-coded JPEG strata (i >= 180, round 6):
-                -- SOF9 + DAC, lossless ENTROPY coding over the same
-                -- quantized-coefficient pipeline as baseline, so the
-                -- flat-block jp/jy/jv chain below applies unchanged
-                SELECT i, 'ja' AS st, 'jpeg' AS fmt,
-                       8 * (1 + (i - 180) % 3) AS w,
-                       8 * (1 + ((i - 180) // 3) % 2) AS h,
-                       CASE WHEN (i - 180) % 2 = 0 THEN 1 ELSE 3 END AS ch,
-                       NULL AS rate,
-                       8 * (1 + (i - 180) % 3)
-                           * 8 * (1 + ((i - 180) // 3) % 2)
-                           * (CASE WHEN (i - 180) % 2 = 0 THEN 1 ELSE 3 END) AS nv,
-                       NULL AS psize, 8 AS depth
-                FROM m WHERE i >= 180 AND i < 192
-                UNION ALL
-                -- MJPEG-in-AVI video strata (i >= 192, round 6): frames
-                -- in presentation order; the generalized jp chain below
-                -- adds the f*53 frame term via k // (w*h*ch)
-                SELECT i, 'v0' AS st, 'mjpeg' AS fmt,
-                       8 * (1 + (i - 192) % 3) AS w,
-                       8 * (1 + ((i - 192) // 3) % 2) AS h,
-                       CASE WHEN (i - 192) % 2 = 0 THEN 1 ELSE 3 END AS ch,
-                       10 + ((i - 192) % 3) * 5 AS rate,
-                       (2 + (i - 192) % 3)
-                           * 8 * (1 + (i - 192) % 3)
-                           * 8 * (1 + ((i - 192) // 3) % 2)
-                           * (CASE WHEN (i - 192) % 2 = 0 THEN 1 ELSE 3 END) AS nv,
-                       NULL AS psize, 8 AS depth
-                FROM m WHERE i >= 192 AND i < 204
-                UNION ALL
-                -- FLAC strata (i >= 204, round 6): lossless, value IS
-                -- the WAV sample formula; subframe strategy / Rice
-                -- partition order / stereo decorrelation rotate as
-                -- decode-path hazards under the unchanged oracle
-                SELECT i, 'f1' AS st, 'flac' AS fmt,
-                       NULL AS w, NULL AS h,
-                       1 + (i - 204) % 2 AS ch,
-                       8000 + (((i - 204) // 2) % 3) * 4000 AS rate,
-                       (180 + i % 50) * (1 + (i - 204) % 2) AS nv,
-                       NULL AS psize, 16 AS depth
-                FROM m WHERE i >= 204),
+                SELECT i, CASE WHEN i < 12 THEN 'jpeg' ELSE 'jp2k' END AS fmt,
+                       CASE WHEN i < 12 THEN 8 * (1 + i % 3) ELSE 9 + i % 8 END AS w,
+                       CASE WHEN i < 12 THEN 8 * (1 + (i // 3) % 2) ELSE 7 + i % 6 END AS h,
+                       CASE WHEN i % 2 = 0 THEN 1 ELSE 3 END AS ch
+                FROM m),
             vals AS (
-                SELECT d.i, d.st, d.fmt, d.psize, d.depth, d.w, d.h, d.ch,
-                       unnest(range(0, d.nv)) AS k
-                FROM dims d),
-            -- JPEG flat 8x8 blocks: block index from pixel position, flat
-            -- RGB per block, then the codec's documented fixed-point
-            -- integer YCbCr round trip ((k*x+128)>>8 == FLOOR(../256)).
-            -- Grayscale (ch=1) skips color conversion entirely; DC quant 8
-            -- makes flat blocks bit-exact, so this IS the decoded output.
-            -- generalized for video: f = k // (w*h*ch) is the frame index
-            -- (0 for single-frame jpeg docs, so their terms are unchanged)
-            -- and kk = k % (w*h*ch) the within-frame position
-            jp AS (
-                SELECT i, k, ch, (k % (w * h * ch)) % ch AS c,
-                       (i * 31 + (k // (w * h * ch)) * 53
-                          + (((((k % (w * h * ch)) // ch) // w) // 8) * (w // 8)
-                             + ((((k % (w * h * ch)) // ch) % w) // 8)) * 17) % 256 AS r0,
-                       (i * 31 + (k // (w * h * ch)) * 53
-                          + (((((k % (w * h * ch)) // ch) // w) // 8) * (w // 8)
-                             + ((((k % (w * h * ch)) // ch) % w) // 8)) * 17 + 101) % 256 AS g0,
-                       (i * 31 + (k // (w * h * ch)) * 53
-                          + (((((k % (w * h * ch)) // ch) // w) // 8) * (w // 8)
-                             + ((((k % (w * h * ch)) // ch) % w) // 8)) * 17 + 202) % 256 AS b0
-                FROM vals WHERE fmt IN ('jpeg', 'mjpeg')),
-            jy AS (
-                SELECT i, k, ch, c, r0,
-                       CAST(FLOOR((77 * r0 + 150 * g0 + 29 * b0 + 128) / 256.0)
-                            AS BIGINT) AS y,
-                       CAST(FLOOR((-43 * r0 - 85 * g0 + 128 * b0 + 128) / 256.0)
-                            AS BIGINT) + 128 AS cb,
-                       CAST(FLOOR((128 * r0 - 107 * g0 - 21 * b0 + 128) / 256.0)
-                            AS BIGINT) + 128 AS cr
-                FROM jp),
-            jv AS (
-                SELECT i, k,
-                       CASE WHEN ch = 1 THEN r0
-                            WHEN c = 0 THEN LEAST(255, GREATEST(0, y +
-                                 CAST(FLOOR((359 * (cr - 128) + 128) / 256.0) AS BIGINT)))
-                            WHEN c = 1 THEN LEAST(255, GREATEST(0, y -
-                                 CAST(FLOOR((88 * (cb - 128) + 183 * (cr - 128) + 128) / 256.0) AS BIGINT)))
-                            ELSE LEAST(255, GREATEST(0, y +
-                                 CAST(FLOOR((454 * (cb - 128) + 128) / 256.0) AS BIGINT)))
-                       END AS val
-                FROM jy),
-            -- extension PNG strata: palette lookup (e0/e1 — the GIF
-            -- palette formulas through a PLTE), sub-byte greyscale
-            -- scaled by the exact 255//(2^d-1) factor (e2/e5), RGBA
-            -- ramp (e3); Adam7 and filter rotation are decode-path
-            -- hazards that leave canonical values unchanged
-            ve AS (
-                SELECT i, k,
-                       CASE WHEN st = 'f0' THEN
-                            ((i * 29 + k * 23) % 65535) - 32767
-                       WHEN st = 's0' THEN
-                            ((i * 4099 + k * 2053) % 65536) // 256
-                       WHEN st = 't0' THEN
-                            CASE k % 4
-                            WHEN 0 THEN (i * 7 + ((i * 31 + (k // 4) * 7) % psize) * 3) % 256
-                            WHEN 1 THEN (i * 11 + ((i * 31 + (k // 4) * 7) % psize) * 5) % 256
-                            WHEN 2 THEN (i * 13 + ((i * 31 + (k // 4) * 7) % psize) * 9) % 256
-                            ELSE CASE WHEN ((i * 31 + (k // 4) * 7) % psize)
-                                      < GREATEST(1, psize // 2)
-                                 THEN (i * 19 + ((i * 31 + (k // 4) * 7) % psize) * 7) % 256
-                                 ELSE 255 END
-                            END
-                       WHEN st IN ('e0', 'e1', 'p0') THEN
-                            CASE k % 3
-                            WHEN 0 THEN (i * 7 + ((i * 31 + (k // 3) * 7) % psize) * 3) % 256
-                            WHEN 1 THEN (i * 11 + ((i * 31 + (k // 3) * 7) % psize) * 5) % 256
-                            ELSE (i * 13 + ((i * 31 + (k // 3) * 7) % psize) * 9) % 256
-                            END
-                       WHEN st IN ('e2', 'e5') THEN
-                            ((i * 31 + k * 7) % (1 << depth))
-                            * (255 // ((1 << depth) - 1))
-                       ELSE (i * 31 + k * 7) % 251
-                       END AS val
-                FROM vals WHERE (st LIKE 'e%' AND st != 'e4')
-                   OR st IN ('p0', 't0', 's0', 'f0', 'j0')),
-            -- G.711 A-law expansion as pure integer SQL (u = code XOR
-            -- 0x55; segment 0 linear +8, else mantissa under an implicit
-            -- leading 1 shifted by segment-1; MSB set = positive), and
-            -- unsigned PCM8 canonicalized as (v-128)*256
-            va AS (
-                SELECT i, k,
-                       CASE WHEN st = 'a1'
-                            THEN (((i * 23 + k * 5) % 256) - 128) * 256
-                       ELSE
-                            (CASE WHEN xor((i * 17 + k * 11) % 256, 85) >= 128
-                                  THEN 1 ELSE -1 END)
-                            * (CASE ((xor((i * 17 + k * 11) % 256, 85)) // 16) % 8
-                               WHEN 0 THEN (xor((i * 17 + k * 11) % 256, 85) % 16) * 16 + 8
-                               WHEN 1 THEN (xor((i * 17 + k * 11) % 256, 85) % 16) * 16 + 264
-                               ELSE ((xor((i * 17 + k * 11) % 256, 85) % 16) * 16 + 264)
-                                    * (1 << CAST((((xor((i * 17 + k * 11) % 256, 85)) // 16) % 8) - 1 AS INT))
-                               END)
-                       END AS val
-                FROM vals WHERE st IN ('a0', 'a1')),
-            -- IMA ADPCM (e4): nibble&7 <= 3 pins the step index at 0
-            -- (step 7), so sample m is the closed form
-            -- first + sum of signed (3*bit1 + bit0) over nibbles < m —
-            -- a windowed prefix sum (sample 0 is the block-header seed)
-            ad AS (
-                SELECT i, k,
-                       CASE WHEN k = 0 THEN 0
-                            ELSE (CASE WHEN (i + k - 1) % 7 < 3 THEN -1 ELSE 1 END)
-                                 * (3 * (((i * 5 + (k - 1) * 3) % 4) // 2)
-                                    + ((i * 5 + (k - 1) * 3) % 4) % 2)
-                       END AS sd
-                FROM vals WHERE st = 'e4'),
-            adv AS (
-                SELECT i, k,
-                       (((i * 13) % 2003) - 1001)
-                       + CAST(SUM(sd) OVER (PARTITION BY i ORDER BY k
-                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS val
-                FROM ad),
-            -- stereo ADPCM (u0): k alternates channels (c = k % 2,
-            -- per-channel sample index m = k // 2); each channel is its
-            -- own index-pinned prefix sum over its nibble formula
-            ad2 AS (
-                SELECT i, k, k % 2 AS c,
-                       CASE WHEN k // 2 = 0 THEN 0
-                            WHEN k % 2 = 0 THEN
-                            (CASE WHEN (i + (k // 2) - 1) % 7 < 3
-                                  THEN -1 ELSE 1 END)
-                            * (3 * (((i * 5 + ((k // 2) - 1) * 3) % 4) // 2)
-                               + ((i * 5 + ((k // 2) - 1) * 3) % 4) % 2)
-                       ELSE
-                            (CASE WHEN (i + (k // 2) - 1) % 5 < 2
-                                  THEN -1 ELSE 1 END)
-                            * (3 * (((i * 3 + ((k // 2) - 1) * 5) % 4) // 2)
-                               + ((i * 3 + ((k // 2) - 1) * 5) % 4) % 2)
-                       END AS sd
-                FROM vals WHERE st = 'u0'),
-            adv2 AS (
-                SELECT i, k,
-                       (CASE WHEN k % 2 = 0 THEN ((i * 13) % 2003) - 1001
-                             ELSE ((i * 17) % 1999) - 999 END)
-                       + CAST(SUM(sd) OVER (PARTITION BY i, c ORDER BY k
-                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS val
-                FROM ad2),
+                SELECT i, fmt, w, ch, i AS s, unnest(range(0, w * h * ch)) AS k
+                FROM dims),
+            """ + _jpeg_flat_ctes("i", "(SELECT * FROM vals WHERE fmt = 'jpeg')") + """,
             v AS (
-                SELECT i, k,
-                       CASE fmt
-                       WHEN 'wav' THEN ((i * 13 + k * 7) % 2003) - 1001
-                       -- FLAC is lossless: the decode is the formula
-                       WHEN 'flac' THEN ((i * 13 + k * 7) % 2003) - 1001
-                       -- G.711 mu-law expansion as pure integer SQL:
-                       -- u = complement byte, mag = ((u%16)*8+132)<<exp - 132
-                       WHEN 'ulaw' THEN
-                            (CASE WHEN (255 - ((i * 17 + k * 11) % 256)) >= 128
-                                  THEN -1 ELSE 1 END)
-                            * (((255 - ((i * 17 + k * 11) % 256)) % 16 * 8 + 132)
-                               * (1 << CAST(((255 - ((i * 17 + k * 11) % 256)) // 16) % 8 AS INT))
-                               - 132)
-                       -- GIF: palette index idx = (i*31 + pixel*7) % psize,
-                       -- value stream is RGB per pixel (k = 3*pixel + channel)
-                       WHEN 'gif' THEN
-                            CASE k % 3
-                            WHEN 0 THEN (i * 7 + ((i * 31 + (k // 3) * 7) % psize) * 3) % 256
-                            WHEN 1 THEN (i * 11 + ((i * 31 + (k // 3) * 7) % psize) * 5) % 256
-                            ELSE (i * 13 + ((i * 31 + (k // 3) * 7) % psize) * 9) % 256
-                            END
-                       ELSE (i * 31 + k * 7) % 251 END AS val
-                FROM vals WHERE (st = 'b' AND fmt != 'jpeg') OR st = 'f1'
-                UNION ALL SELECT i, k, val FROM jv
-                UNION ALL SELECT i, k, val FROM ve
-                UNION ALL SELECT i, k, val FROM adv
-                UNION ALL SELECT i, k, val FROM adv2
-                UNION ALL SELECT i, k, val FROM va),
+                SELECT i, k, val FROM jv
+                UNION ALL
+                SELECT i, k, (i * 31 + k * 7) % 251 AS val FROM vals WHERE fmt = 'jp2k'),
             sums AS (
-                SELECT i,
+                SELECT i, COUNT(*) AS nv,
                        CAST(SUM(val) AS BIGINT) AS value_sum,
                        CAST(SUM((k + 1) * val) AS BIGINT) AS weighted_sum
                 FROM v GROUP BY i)
             SELECT d.i AS media_id, d.fmt AS fmt,
                    CAST(d.w AS INT) AS width, CAST(d.h AS INT) AS height,
                    CAST(d.ch AS INT) AS channels,
-                   CAST(d.rate AS INT) AS sample_rate,
-                   CAST(d.nv AS BIGINT) AS n_values,
+                   CAST(s.nv AS BIGINT) AS n_values,
                    s.value_sum, s.weighted_sum,
                    CAST(NULL AS VARCHAR) AS error
             FROM dims d JOIN sums s USING (i)
@@ -3595,38 +3238,7 @@ def _all_oracles() -> dict[str, str]:
             vals AS (
                 SELECT i, j, w, ch, s, unnest(range(0, w * h * ch)) AS k
                 FROM dims),
-            -- flat-block JPEG decode, restated: block index from pixel
-            -- position, seed-s flat RGB per block, fixed-point integer
-            -- YCbCr round trip (identical to the real_media_decode oracle)
-            jp AS (
-                SELECT i, j, k, ch, k % ch AS c,
-                       (s * 31 + ((((k // ch) // w) // 8) * (w // 8)
-                                  + (((k // ch) % w) // 8)) * 17) % 256 AS r0,
-                       (s * 31 + ((((k // ch) // w) // 8) * (w // 8)
-                                  + (((k // ch) % w) // 8)) * 17 + 101) % 256 AS g0,
-                       (s * 31 + ((((k // ch) // w) // 8) * (w // 8)
-                                  + (((k // ch) % w) // 8)) * 17 + 202) % 256 AS b0
-                FROM vals),
-            jy AS (
-                SELECT i, j, k, ch, c, r0,
-                       CAST(FLOOR((77 * r0 + 150 * g0 + 29 * b0 + 128) / 256.0)
-                            AS BIGINT) AS y,
-                       CAST(FLOOR((-43 * r0 - 85 * g0 + 128 * b0 + 128) / 256.0)
-                            AS BIGINT) + 128 AS cb,
-                       CAST(FLOOR((128 * r0 - 107 * g0 - 21 * b0 + 128) / 256.0)
-                            AS BIGINT) + 128 AS cr
-                FROM jp),
-            jv AS (
-                SELECT i, j, k,
-                       CASE WHEN ch = 1 THEN r0
-                            WHEN c = 0 THEN LEAST(255, GREATEST(0, y +
-                                 CAST(FLOOR((359 * (cr - 128) + 128) / 256.0) AS BIGINT)))
-                            WHEN c = 1 THEN LEAST(255, GREATEST(0, y -
-                                 CAST(FLOOR((88 * (cb - 128) + 183 * (cr - 128) + 128) / 256.0) AS BIGINT)))
-                            ELSE LEAST(255, GREATEST(0, y +
-                                 CAST(FLOOR((454 * (cb - 128) + 128) / 256.0) AS BIGINT)))
-                       END AS val
-                FROM jy),
+            """ + _jpeg_flat_ctes("i, j", "vals") + """,
             sums AS (
                 SELECT i, j, COUNT(*) AS nv,
                        CAST(SUM(val) AS BIGINT) AS value_sum,

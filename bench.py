@@ -234,9 +234,8 @@ def _ab_rep(cpus: int, corpus: str, pkg_dir: str | None) -> float:
 
 
 def _code_ab(corpus: str, old_tar: Path, label: str,
-             new_tar: Path | None = None, n_pairs: int = AB_PAIRS) -> dict:
-    """Paired same-window code A/B: frozen ``old_tar`` package vs HEAD
-    (or vs a second frozen package — the retro r4-vs-r5 mode).
+             n_pairs: int = AB_PAIRS) -> dict:
+    """Paired same-window code A/B: frozen ``old_tar`` package vs HEAD.
 
     Methodology matches the scaling probe's N-vs-4N pairing: each pair is
     two clean-process reps over the SAME cached corpus, old/new order
@@ -248,19 +247,14 @@ def _code_ab(corpus: str, old_tar: Path, label: str,
     import tarfile
     import tempfile
 
-    def _unpack(tar: Path) -> str:
-        d = tempfile.mkdtemp(prefix="ab_pkg_", dir="/dev/shm")
-        with tarfile.open(tar) as t:
-            t.extractall(d)
-        return d
-
-    old_dir = _unpack(old_tar)
-    new_dir = _unpack(new_tar) if new_tar is not None else None
+    old_dir = tempfile.mkdtemp(prefix="ab_pkg_", dir="/dev/shm")
+    with tarfile.open(old_tar) as t:
+        t.extractall(old_dir)
     olds: list[float] = []
     news: list[float] = []
     try:
         for i in range(n_pairs):
-            sides = [("old", old_dir), ("new", new_dir)]
+            sides = [("old", old_dir), ("new", None)]
             if i % 2 == 1:
                 sides.reverse()
             got = {}
@@ -272,8 +266,6 @@ def _code_ab(corpus: str, old_tar: Path, label: str,
         # /dev/shm is RAM-backed AND Spark's local dir — leaked package
         # trees would eat the very space shuffles spill into
         shutil.rmtree(old_dir, ignore_errors=True)
-        if new_dir is not None:
-            shutil.rmtree(new_dir, ignore_errors=True)
     pairs = [n / o for o, n in zip(olds, news)]
     return {
         "baseline": label,
@@ -391,7 +383,7 @@ def main() -> None:
     reg = entry.queries()
     extras = entry.extra_queries()
     _noop(extras["ann_topk"](spark, small_sf))  # retired to extras round-6
-    _noop(reg["real_media_decode"](spark, SF_DIR))
+    _noop(extras["pdf_jpx_decode"](spark, SF_DIR))
     # the first LSH-family / k-means / semantic-dedup plans pay ~10s of
     # one-time window/join codegen — pay it here, untimed, so per-query
     # numbers reflect steady state

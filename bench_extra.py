@@ -63,7 +63,7 @@ def _warmup(spark, entry):
     extras = entry.extra_queries()
     small_sf = "/root/testdata/sf0.01"
     _noop(extras["ann_topk"](spark, small_sf))
-    _noop(reg["real_media_decode"](spark, SF_DIR))
+    _noop(extras["pdf_jpx_decode"](spark, SF_DIR))
     _noop(extras["lsh_candidates"](spark, small_sf))
     _noop(reg["ivf_ann_topk"](spark, small_sf))
     _noop(reg["semantic_dedup"](spark, small_sf))
