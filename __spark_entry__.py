@@ -993,20 +993,23 @@ def q_frontier_new(spark, sf):
 
 
 def q_real_media_decode(spark, sf):
-    """24 stand-alone image payloads through the codecs of the PDF image
-    path (``multimodal.real_media_dims``): JPEGs of flat 8×8 blocks —
-    gray and colour, baseline SOF0 with restart intervals 0/2/3 and
-    progressive SOF2 — and lossless JPEG 2000 codestreams with 0/1/2
-    wavelet levels. Each decodes to exact integer features (dimensions,
-    channels and order-sensitive value sums) that the DuckDB oracle
-    recomputes from the generating formulas, the JPEG ones through the
-    codec's fixed-point YCbCr round trip."""
+    """72 stand-alone image payloads (``multimodal.real_media_dims``):
+    JPEGs of flat 8×8 blocks — gray and colour, baseline SOF0 with
+    restart intervals 0/2/3 and progressive SOF2 — and lossless JPEG 2000
+    codestreams with 0/1/2 wavelet levels, through the codecs of the PDF
+    image path; PNG (8-bit grey/RGB/RGBA, palette with and without tRNS,
+    sub-byte grey and 16-bit, row filters rotating, Adam7 on every other
+    doc) and BMP (24-bit and 8-bit indexed) through ``mediacodec``. Each
+    decodes to exact integer features (dimensions, channels and
+    order-sensitive value sums) that the DuckDB oracle recomputes from
+    the generating formulas, the JPEG ones through the codec's
+    fixed-point YCbCr round trip."""
     from b_pdf_parser_spark.operators.multimodal import (
         real_media_features,
         synth_real_media_df,
     )
 
-    return real_media_features(synth_real_media_df(spark, 24))
+    return real_media_features(synth_real_media_df(spark, 72))
 
 
 _PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -2328,24 +2331,58 @@ def _all_oracles() -> dict[str, str]:
             SELECT DISTINCT c.url AS url
             FROM cand c ANTI JOIN base b USING (url)
         """,
-        # JPEG docs (i < 12) through the flat-block YCbCr restatement;
-        # JPEG 2000 is lossless, so its values ARE the %251 ramp
+        # JPEG docs (i < 12) through the flat-block YCbCr restatement; the
+        # lossless codecs' values are the generating formulas themselves
+        # (palette docs through the palette and tRNS alpha formulas)
         "real_media_decode": """
-            WITH m AS (SELECT range AS i FROM range(0, 24)),
+            WITH m AS (SELECT range AS i FROM range(0, 72)),
             dims AS (
-                SELECT i, CASE WHEN i < 12 THEN 'jpeg' ELSE 'jp2k' END AS fmt,
+                SELECT i,
+                       CASE WHEN i < 12 THEN 'jpeg' WHEN i < 24 THEN 'jp2k'
+                            WHEN i < 60 THEN 'png' ELSE 'bmp' END AS fmt,
+                       CASE WHEN i < 12 THEN 'flat'
+                            WHEN i < 36 OR (i >= 60 AND i % 2 = 0) THEN 'ramp'
+                            WHEN i < 48 OR i >= 60 THEN 'palette'
+                            WHEN i < 54 THEN 'gray' ELSE 'deep' END AS kind,
                        CASE WHEN i < 12 THEN 8 * (1 + i % 3) ELSE 9 + i % 8 END AS w,
                        CASE WHEN i < 12 THEN 8 * (1 + (i // 3) % 2) ELSE 7 + i % 6 END AS h,
-                       CASE WHEN i % 2 = 0 THEN 1 ELSE 3 END AS ch
+                       CASE WHEN i < 24 THEN (CASE WHEN i % 2 = 0 THEN 1 ELSE 3 END)
+                            WHEN i < 36 OR (i >= 54 AND i < 60)
+                                 THEN ([1, 3, 4])[CAST(i % 3 AS INT) + 1]
+                            WHEN i < 48 THEN (CASE WHEN (i // 4) % 2 = 1 THEN 4 ELSE 3 END)
+                            WHEN i < 54 THEN 1 ELSE 3 END AS ch,
+                       CASE WHEN i >= 60 THEN ([4, 16, 64, 256])[CAST((i // 2) % 4 AS INT) + 1]
+                            ELSE 1 << ([1, 2, 4, 8])[CAST(i % 4 AS INT) + 1] END AS psize,
+                       ([1, 2, 4])[CAST(i % 3 AS INT) + 1] AS depth
                 FROM m),
             vals AS (
-                SELECT i, fmt, w, ch, i AS s, unnest(range(0, w * h * ch)) AS k
+                SELECT i, kind, w, ch, psize, depth, i AS s,
+                       unnest(range(0, w * h * ch)) AS k
                 FROM dims),
-            """ + _jpeg_flat_ctes("i", "(SELECT * FROM vals WHERE fmt = 'jpeg')") + """,
+            """ + _jpeg_flat_ctes("i", "(SELECT * FROM vals WHERE kind = 'flat')") + """,
+            pal AS (
+                SELECT i, k, k % ch AS c, psize, (i * 31 + (k // ch) * 7) % psize AS j
+                FROM vals WHERE kind = 'palette'),
             v AS (
                 SELECT i, k, val FROM jv
                 UNION ALL
-                SELECT i, k, (i * 31 + k * 7) % 251 AS val FROM vals WHERE fmt = 'jp2k'),
+                SELECT i, k,
+                       CASE kind
+                       WHEN 'ramp' THEN (i * 31 + k * 7) % 251
+                       WHEN 'gray' THEN ((i * 31 + k * 7) % (1 << depth))
+                                        * (255 // ((1 << depth) - 1))
+                       ELSE ((i * 4099 + k * 2053) % 65536) // 256 END AS val
+                FROM vals WHERE kind IN ('ramp', 'gray', 'deep')
+                UNION ALL
+                SELECT i, k,
+                       CASE c
+                       WHEN 0 THEN (i * 7 + j * 3) % 256
+                       WHEN 1 THEN (i * 11 + j * 5) % 256
+                       WHEN 2 THEN (i * 13 + j * 9) % 256
+                       ELSE CASE WHEN j < GREATEST(1, psize // 2)
+                                 THEN (i * 19 + j * 7) % 256 ELSE 255 END
+                       END AS val
+                FROM pal),
             sums AS (
                 SELECT i, COUNT(*) AS nv,
                        CAST(SUM(val) AS BIGINT) AS value_sum,

@@ -9,7 +9,7 @@ features by the package's from-scratch codecs.
   /JPXDecode → ``jpxcodec`` (JPEG 2000) and /CCITTFaxDecode →
   ``ccittcodec`` (Group 3 and 4 fax).
 * ``real_media_features`` decodes stand-alone JPEG and JPEG 2000 payloads
-  with the same codecs.
+  with the same codecs, and PNG and BMP payloads with ``mediacodec``.
 
 Each corpus here (``synth_*_df``) is a pure function of the row index, so
 a DuckDB oracle recomputes the exact pixel sums from the generating
@@ -59,7 +59,8 @@ def _value_features(vals) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Stand-alone image payloads through the PDF path's JPEG and JPEG 2000 codecs
+# Stand-alone image payloads: JPEG and JPEG 2000 through the PDF path's
+# codecs, PNG and BMP through ``mediacodec``
 # ---------------------------------------------------------------------------
 
 REAL_FEATURES_SCHEMA_DDL = (
@@ -70,19 +71,53 @@ REAL_FEATURES_SCHEMA_DDL = (
 
 def real_media_dims(i: int) -> dict:
     """The generating formulas for stand-alone payload ``i``, shared by the
-    corpus builder and the DuckDB oracle. Docs ``i < 12`` are JPEGs of
-    flat 8×8 blocks (``_jpeg_flat_pixels`` seeded ``i``; DC quant 8 makes
-    the decode bit-exact, through the codec's fixed-point YCbCr round trip
-    for colour): baseline SOF0 with restart interval 0/2/3, progressive
-    SOF2 on the restart-free docs below 6. Later docs are JPEG 2000
-    codestreams of the ramp ``(i*31 + k*7) % 251``, lossless through the
-    reversible 5/3 path, with 0/1/2 wavelet levels."""
+    corpus builder and the DuckDB oracle. Every block is 12 docs:
+
+    * ``i < 12`` — JPEGs of flat 8×8 blocks (``_jpeg_flat_pixels`` seeded
+      ``i``; DC quant 8 makes the decode bit-exact, through the codec's
+      fixed-point YCbCr round trip for colour): baseline SOF0 with
+      restart interval 0/2/3, progressive SOF2 on the restart-free docs
+      below 6;
+    * ``12 <= i < 24`` — JPEG 2000 codestreams of the ramp
+      ``(i*31 + k*7) % 251``, lossless through the reversible 5/3 path,
+      with 0/1/2 wavelet levels;
+    * ``24 <= i < 36`` — 8-bit grey/RGB/RGBA PNG of the same ramp;
+    * ``36 <= i < 48`` — palette PNG (depth 1/2/4/8): index
+      ``(i*31 + p*7) % psize`` for pixel ``p`` through
+      ``_shared_palette``, with a tRNS chunk (``_trns_alpha``) on half
+      the docs, which makes the canonical output RGBA;
+    * ``48 <= i < 54`` — sub-byte greyscale PNG: sample
+      ``(i*31 + k*7) % 2**d`` scaled by the exact ``255 // (2**d - 1)``;
+    * ``54 <= i < 60`` — 16-bit grey/RGB/RGBA PNG: sample
+      ``(i*4099 + k*2053) % 65536`` canonicalised to its high byte;
+    * ``60 <= i < 72`` — BMP: 24-bit of the ``% 251`` ramp on even ``i``,
+      8-bit indexed through ``_shared_palette`` on odd ``i``.
+
+    The PNG row filter rotates from ``i`` and Adam7 interlace alternates;
+    BMP widths 9..16 hit every row padding. Neither changes the decoded
+    values, so neither appears in the oracle."""
     ch = (1, 3)[i % 2]
-    if i >= 12:
-        return {"fmt": "jp2k", "w": 9 + i % 8, "h": 7 + i % 6, "ch": ch,
-                "levels": i % 3}
-    return {"fmt": "jpeg", "w": 8 * (1 + i % 3), "h": 8 * (1 + (i // 3) % 2),
-            "ch": ch, "restart": (0, 2, 3)[i % 3], "prog": i % 3 == 0 and i < 6}
+    if i < 12:
+        return {"fmt": "jpeg", "w": 8 * (1 + i % 3), "h": 8 * (1 + (i // 3) % 2),
+                "ch": ch, "restart": (0, 2, 3)[i % 3], "prog": i % 3 == 0 and i < 6}
+    d = {"w": 9 + i % 8, "h": 7 + i % 6, "interlace": i % 2 == 1}
+    if i < 24:
+        return {**d, "fmt": "jp2k", "ch": ch, "levels": i % 3}
+    if i < 36:
+        return {**d, "fmt": "png", "kind": "ramp", "ch": (1, 3, 4)[i % 3], "depth": 8}
+    if i < 48:
+        depth = (1, 2, 4, 8)[i % 4]
+        trns = (i // 4) % 2 == 1
+        return {**d, "fmt": "png", "kind": "palette", "ch": 4 if trns else 3,
+                "depth": depth, "psize": 1 << depth, "trns": trns}
+    if i < 54:
+        return {**d, "fmt": "png", "kind": "gray", "ch": 1, "depth": (1, 2, 4)[i % 3]}
+    if i < 60:
+        return {**d, "fmt": "png", "kind": "deep", "ch": (1, 3, 4)[i % 3], "depth": 16}
+    if i % 2 == 0:
+        return {**d, "fmt": "bmp", "kind": "ramp", "ch": 3}
+    return {**d, "fmt": "bmp", "kind": "palette", "ch": 3,
+            "psize": (4, 16, 64, 256)[(i // 2) % 4]}
 
 
 def _jpeg_flat_pixels(i: int, w: int, h: int, ch: int) -> bytes:
@@ -109,21 +144,61 @@ def _q8_tables():
     return ((8,) + QUANT_LUM[1:], (8,) + QUANT_CHROMA[1:])
 
 
+def _shared_palette(i: int, psize: int):
+    """Entry ``j`` of doc ``i``'s palette, for palette PNG and 8-bit BMP
+    alike; the oracle restates it."""
+    return [
+        ((i * 7 + j * 3) % 256, (i * 11 + j * 5) % 256, (i * 13 + j * 9) % 256)
+        for j in range(psize)
+    ]
+
+
+def _trns_alpha(i: int, psize: int):
+    """tRNS alpha for the first ``psize // 2`` palette entries (at least
+    one); the entries past its end decode opaque (255), as the spec says."""
+    return [(i * 19 + j * 7) % 256 for j in range(max(1, psize // 2))]
+
+
 def encode_real_media(i: int) -> bytes:
-    """The JPEG or JPEG 2000 payload of doc ``i`` (pure function, no RNG)."""
+    """The payload of doc ``i`` (pure function, no RNG)."""
     d = real_media_dims(i)
+    w, h, ch = d["w"], d["h"], d["ch"]
+    ramp = bytes((i * 31 + k * 7) % 251 for k in range(w * h * ch))
+    if d["fmt"] == "jpeg":
+        from ..jpegcodec import encode_jpeg, encode_jpeg_progressive
+
+        px = _jpeg_flat_pixels(i, w, h, ch)
+        if d["prog"]:
+            return encode_jpeg_progressive(w, h, ch, px, qtables=_q8_tables())
+        return encode_jpeg(w, h, ch, px, qtables=_q8_tables(),
+                           restart_interval=d["restart"])
     if d["fmt"] == "jp2k":
         from ..jpxcodec import encode_jpx
 
-        px = bytes((i * 31 + k * 7) % 251 for k in range(d["w"] * d["h"] * d["ch"]))
-        return encode_jpx(d["w"], d["h"], d["ch"], px, levels=d["levels"])
-    from ..jpegcodec import encode_jpeg, encode_jpeg_progressive
+        return encode_jpx(w, h, ch, ramp, levels=d["levels"])
+    if d["fmt"] == "bmp":
+        from ..mediacodec import encode_bmp
 
-    px = _jpeg_flat_pixels(i, d["w"], d["h"], d["ch"])
-    if d["prog"]:
-        return encode_jpeg_progressive(d["w"], d["h"], d["ch"], px, qtables=_q8_tables())
-    return encode_jpeg(d["w"], d["h"], d["ch"], px, qtables=_q8_tables(),
-                       restart_interval=d["restart"])
+        if d["kind"] == "ramp":
+            return encode_bmp(w, h, ramp)
+        idx = bytes((i * 31 + p * 7) % d["psize"] for p in range(w * h))
+        return encode_bmp(w, h, idx, palette=_shared_palette(i, d["psize"]))
+    from ..mediacodec import encode_png
+
+    kw = {"filter_seed": i, "interlace": d["interlace"]}
+    if d["kind"] == "ramp":
+        return encode_png(w, h, ch, ramp, **kw)
+    if d["kind"] == "palette":
+        psize = d["psize"]
+        idx = bytes((i * 31 + p * 7) % psize for p in range(w * h))
+        return encode_png(w, h, 1, idx, palette=_shared_palette(i, psize),
+                          depth=d["depth"],
+                          trns=_trns_alpha(i, psize) if d["trns"] else None, **kw)
+    if d["kind"] == "gray":
+        px = bytes((i * 31 + k * 7) % (1 << d["depth"]) for k in range(w * h))
+        return encode_png(w, h, 1, px, depth=d["depth"], **kw)
+    vals = [(i * 4099 + k * 2053) % 65536 for k in range(w * h * ch)]
+    return encode_png(w, h, ch, vals, depth=16, **kw)
 
 
 def synth_real_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
@@ -141,8 +216,8 @@ def synth_real_media_df(spark, n: int, num_partitions: int = 8) -> DataFrame:
 
 
 def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
-    """Magic bytes → the PDF path's codec (``_PIXEL_CODECS``) → one feature
-    row; an empty, unknown or corrupt payload becomes an error row."""
+    """Magic bytes → codec → one feature row; an empty, unknown or corrupt
+    payload becomes an error row."""
     row = {
         "media_id": media_id, "fmt": None, "width": None, "height": None,
         "channels": None, "n_values": None, "value_sum": None,
@@ -151,12 +226,20 @@ def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
     try:
         data = bytes(payload or b"")
         if data[:3] == b"\xff\xd8\xff":
-            fmt, decode = "jpeg", _decode_dct
+            from ..jpegcodec import decode_jpeg as decode
+            fmt = "jpeg"
         elif data[:4] == b"\xff\x4f\xff\x51":
-            fmt, decode = "jp2k", _decode_jpx
+            from ..jpxcodec import decode_jpx as decode
+            fmt = "jp2k"
+        elif data[:8] == b"\x89PNG\r\n\x1a\n":
+            from ..mediacodec import decode_png as decode
+            fmt = "png"
+        elif data[:2] == b"BM":
+            from ..mediacodec import decode_bmp as decode
+            fmt = "bmp"
         else:
             raise NotImplementedError(f"no decoder for this payload (magic {data[:4]!r})")
-        w, h, ch, vals = decode({"data": data})
+        w, h, ch, vals = decode(data)
         row.update(_value_features(vals), fmt=fmt, width=w, height=h, channels=ch)
     except Exception as e:  # malformed/unsupported → error row, batch survives
         row["error"] = f"{type(e).__name__}: {e}"
@@ -164,10 +247,10 @@ def _real_decode_one(media_id: int, payload: Optional[bytes]) -> dict:
 
 
 def real_media_features(media: DataFrame) -> DataFrame:
-    """Decode each stand-alone JPEG / JPEG 2000 payload → exact integer
-    features (dimensions, channels and the order-sensitive value sums of
-    the top-down interleaved pixels), one Arrow-batch Python dispatch per
-    payload."""
+    """Decode each stand-alone JPEG, JPEG 2000, PNG or BMP payload → exact
+    integer features (dimensions, channels and the order-sensitive value
+    sums of the top-down interleaved pixels), one Arrow-batch Python
+    dispatch per payload."""
 
     def run(batches):
         for b in batches:

@@ -377,8 +377,9 @@ def _paeth(a: int, b: int, c: int) -> int:
 def _png_unfilter_row(ft: int, row: bytearray, prev: bytes, bpp: int) -> bytearray:
     """Invert PNG row filter ``ft`` (RFC 2083 §6) on ``row`` in place;
     ``prev`` is the previous unfiltered row (zeros before the first) and
-    ``bpp`` the bytes per complete pixel. The one PNG unfilter, which
-    the Flate/LZW predictors call."""
+    ``bpp`` the bytes per complete pixel. The one PNG unfilter: the
+    Flate/LZW predictors here and ``mediacodec``'s PNG decoder both call
+    it."""
     n = len(row)
     if ft == 1:  # Sub
         for k in range(bpp, n):

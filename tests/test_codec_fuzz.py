@@ -1,7 +1,7 @@
 """Malformed-input fuzz across every from-scratch image decoder: the
 public contract is ValueError (or NotImplementedError) — never
-IndexError / KeyError / struct.error escaping to callers (normalized at
-the boundary by ``mediacodec._fail_loud``). Mutations: truncation at
+IndexError / KeyError / struct.error / zlib.error escaping to callers
+(normalized at the boundary by ``mediacodec._fail_loud``). Mutations: truncation at
 every region, single-bit flips, and mid-stream garbage splices; a
 mutation that still decodes cleanly is fine — the assertion is only
 about HOW failures fail. Seeds derive from crc32, NOT hash(): str
@@ -19,11 +19,28 @@ from test_arithjpeg import encode_jpeg_arith
 from b_pdf_parser_spark.ccittcodec import decode_g3, decode_g4, encode_g3, encode_g4
 from b_pdf_parser_spark.jpegcodec import decode_jpeg, encode_jpeg
 from b_pdf_parser_spark.jpxcodec import decode_jpx, encode_jpx
-from b_pdf_parser_spark.mediacodec import _MAX_SAMPLES
+from b_pdf_parser_spark.mediacodec import (
+    _MAX_SAMPLES,
+    decode_bmp,
+    decode_png,
+    encode_bmp,
+    encode_png,
+)
 
 _RGB = bytes((k * 31) % 256 for k in range(16 * 8 * 3))
+_PAL = [(j * 7 % 256, j * 11 % 256, j * 13 % 256) for j in range(16)]
 
 SAMPLES = {
+    "png": (encode_png(9, 7, 3, bytes((k * 7) % 251 for k in range(189))),
+            decode_png),
+    "png_pal_interlaced": (
+        encode_png(9, 7, 1, bytes(k % 16 for k in range(63)),
+                   palette=_PAL, depth=4, interlace=True),
+        decode_png),
+    "bmp24": (encode_bmp(9, 7, bytes((k * 7) % 251 for k in range(189))),
+              decode_bmp),
+    "bmp8": (encode_bmp(9, 7, bytes(k % 16 for k in range(63)), palette=_PAL),
+             decode_bmp),
     "jpeg": (encode_jpeg(16, 8, 3, _RGB), decode_jpeg),
     "jpx": (encode_jpx(11, 9, 3, bytes((k * 29) % 256 for k in range(11 * 9 * 3)),
                        levels=1),
@@ -97,3 +114,16 @@ def test_dimension_bomb_guard():
     with pytest.raises(ValueError, match="bomb"):
         decode_g3(encode_g3(9, 7, _FAX_PX, k=0), cols, rows, k=0)
     assert cols * rows > _MAX_SAMPLES
+
+    # PNG: forge an IHDR with a huge width (CRC recomputed so the claim
+    # is "valid" as far as the chunk layer knows)
+    png = bytearray(encode_png(4, 4, 3, bytes(48)))
+    i = png.index(b"IHDR")
+    body = bytearray(png[i + 4 : i + 4 + 13])
+    body[0:4] = struct.pack(">I", 1 << 24)
+    png[i + 4 : i + 4 + 13] = body
+    png[i + 4 + 13 : i + 4 + 17] = (
+        zlib.crc32(b"IHDR" + bytes(body)) & 0xFFFFFFFF).to_bytes(4, "big")
+    with pytest.raises(ValueError, match="bomb"):
+        decode_png(bytes(png))
+    assert (1 << 24) * 4 * 3 > _MAX_SAMPLES

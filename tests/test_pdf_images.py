@@ -224,34 +224,3 @@ def test_pixel_kernel_never_decodes_the_images_it_skips(spark):
     assert row.error is None, row.error
     assert (row.name, row.width, row.height, row.n_values, row.value_sum) == (
         "Im0", 8, 8, 64, sum(px))
-
-
-def test_real_media_features_through_spark(spark):
-    # real_media_features decodes the stand-alone corpus inside arrow_kernel
-    # (no error row), and turns a malformed or undecodable payload into an
-    # error row instead of failing the batch
-    from b_pdf_parser_spark.operators.multimodal import (
-        MEDIA_SCHEMA_DDL,
-        real_media_features,
-        synth_real_media_df,
-    )
-
-    out = real_media_features(synth_real_media_df(spark, 24, num_partitions=4)).collect()
-    assert len(out) == 24 and all(r["error"] is None for r in out)
-    assert {r["fmt"] for r in out} == {"jpeg", "jp2k"}
-    assert all(r["channels"] in (1, 3) and r["n_values"] > 0 for r in out)
-
-    def error_of(payload):
-        df = spark.createDataFrame([(0, "img", bytearray(payload))], MEDIA_SCHEMA_DDL)
-        return real_media_features(df).collect()[0]["error"]
-
-    # a truncated JPEG hits the real decoder and must fail loudly
-    err = error_of(b"\xff\xd8\xff\xe0" + bytes(32))
-    assert err and "ValueError" in err
-    # payloads no codec here decodes: PNG, a JPEG 2000 signature box
-    # (only bare codestreams decode), TIFF in either byte order, and empty
-    for magic in (b"\x89PNG\r\n\x1a\n", b"\x00\x00\x00\x0cjP  \r\n\x87\n",
-                  b"II*\x00", b"MM\x00*"):
-        err = error_of(magic + bytes(32))
-        assert err and "NotImplementedError" in err, (magic, err)
-    assert "NotImplementedError" in error_of(b"")
