@@ -1,14 +1,9 @@
-"""Native column expressions for the reference's number semantics.
+"""Native column expression for the reference's number semantics.
 
-* :func:`parse_id_number_col` — P12 (utils.py:527-548): Indonesian-format
-  parse with silent 0.0 on malformed input.
-* :func:`normalize_number_col` — P11 (utils.py:363-425): CSV normalization
-  (``1.000.000,00`` / ``1,000,000.00`` → ``1000000``; non-numbers pass
-  through; trailing ``.00`` stripped).
-
-Both are pure Catalyst expressions (whole-stage codegen, no UDF); their
-behavior is pinned against the scalar Python twins in fields.py by fuzz
-tests (tests/test_functions.py).
+:func:`parse_id_number_col` — P12 (utils.py:527-548): Indonesian-format
+parse with silent 0.0 on malformed input. A pure Catalyst expression
+(whole-stage codegen, no UDF); its behavior is pinned against the scalar
+``fields.parse_id_number`` by tests/test_functions.py.
 """
 
 from __future__ import annotations
@@ -16,45 +11,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-__all__ = ["parse_id_number_col", "normalize_number_col"]
+__all__ = ["parse_id_number_col"]
 
 
 def parse_id_number_col(c: Column) -> Column:
     """strip → drop '.' (thousands) → ','→'.' → try_cast → 0.0 fallback."""
     cleaned = F.replace(F.replace(F.trim(c), F.lit("."), F.lit("")), F.lit(","), F.lit("."))
     return F.coalesce(cleaned.try_cast("double"), F.lit(0.0))
-
-
-def _fmt2(d: Column) -> Column:
-    """``f"{x:.2f}"`` equivalent, with the trailing ``.00`` strip."""
-    s = F.format_string("%.2f", d)
-    return F.regexp_replace(s, r"\.00$", "")
-
-
-def normalize_number_col(c: Column) -> Column:
-    s = F.trim(c)
-    has_digit = s.rlike(r"[0-9]")
-    comma = F.length(s) - F.locate(",", F.reverse(s))  # rfind(','), -len if absent
-    period = F.length(s) - F.locate(".", F.reverse(s))
-    has_comma = F.locate(",", s) > 0
-    has_period = F.locate(".", s) > 0
-
-    id_parse = parse_id_number_col(s)  # comma-decimal path (never NULL)
-    us_source = F.replace(s, F.lit(","), F.lit(""))
-    us_parse = us_source.try_cast("double")
-    plain_parse = s.try_cast("double")
-
-    id_ok = F.replace(F.replace(s, F.lit("."), F.lit("")), F.lit(","), F.lit("."))\
-        .try_cast("double").isNotNull()
-
-    return (
-        F.when(c.isNull() | (F.trim(c) == ""), F.lit(""))
-        .when(~has_digit, c)
-        .when(
-            has_comma & has_period,
-            F.when(comma > period, F.when(id_ok, _fmt2(id_parse)).otherwise(_fmt2(F.lit(0.0))))
-            .otherwise(F.when(us_parse.isNotNull(), _fmt2(us_parse)).otherwise(s)),
-        )
-        .when(has_comma, F.when(us_parse.isNotNull(), _fmt2(us_parse)).otherwise(s))
-        .otherwise(F.when(plain_parse.isNotNull(), _fmt2(plain_parse)).otherwise(s))
-    )

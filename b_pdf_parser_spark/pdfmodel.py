@@ -56,7 +56,7 @@ __all__ = [
     "Ref",
     "StreamObject",
     "PdfDocument",
-    "extract_pdf_pages",
+    "extract_pdf_pages_and_tables",
 ]
 
 
@@ -1865,22 +1865,16 @@ def link_annotations(data: bytes) -> List[Dict[str, Any]]:
     return out
 
 
-def extract_pdf_pages(data: bytes) -> List[str]:
-    """Parse ``data`` and return one reading-order text string per page.
-
-    Each page text has one ``"\\n"``-terminated line per assembled baseline
-    (the page-text contract of the reference backends, e.g.
-    ``/root/reference/pdfparser/pymupdf_parser.py:57,76``).
-    """
-    return extract_pdf_pages_and_tables(data)[0]
-
-
 def extract_pdf_pages_and_tables(
     data: bytes,
 ) -> Tuple[List[str], List[List[List[str]]]]:
-    """Like :func:`extract_pdf_pages`, plus detected cell tables (document
-    order across pages). One parse, one span extraction — the table scan is
-    a length check per assembled baseline."""
+    """Parse ``data`` into one reading-order text string per page and the
+    detected cell tables (document order across pages).
+
+    Each page text has one ``"\\n"``-terminated line per assembled baseline
+    (the page-text contract of the reference backends, e.g.
+    ``pdfparser/pymupdf_parser.py:57,76``). One parse, one span extraction
+    — the table scan is a length check per assembled baseline."""
     doc = PdfDocument(data)
     pages = doc.pages()
     if not pages:

@@ -10,11 +10,13 @@ North-rule requirements implemented here (BASELINE.json):
   wave writes ``out/extracted/partition_id=K/`` via **dynamic partition
   overwrite** (idempotent: a wave killed mid-write is simply redone, never
   duplicated) and then commits one manifest JSON per completed partition
-  (atomic tmp+rename), carrying lineage + per-partition token/byte/error
-  metrics.
+  (atomic tmp+rename), carrying ``checkpoint_partitions``, lineage and
+  per-partition token/byte/error metrics.
 * **Resume**: on start, completed ids are read from the manifest and
   dropped from the plan (the left-anti-join of SURVEY §2.3 J-note, realized
-  as an id filter since the manifest is tiny and driver-side).
+  as an id filter since the manifest is tiny and driver-side). An id only
+  names the same urls under the same ``P``, so a resume with another
+  ``checkpoint_partitions`` raises before any wave runs.
 
 Reference analog: the reference's ``batch_parse`` restarts from zero when
 killed (batch.py:292-414 has no checkpoint); this job is the scale-correct
@@ -66,8 +68,8 @@ def load_manifest(out_dir: str) -> dict:
 def load_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     """The per-partition metrics table, as a DataFrame (A4/A8 surface)."""
     rows = list(load_manifest(out_dir).values())
-    schema = ("partition_id INT, docs BIGINT, bytes BIGINT, tokens BIGINT, "
-              "errors BIGINT, started DOUBLE, finished DOUBLE, lineage STRING")
+    schema = ("partition_id INT, checkpoint_partitions INT, docs BIGINT, bytes BIGINT, "
+              "tokens BIGINT, errors BIGINT, started DOUBLE, finished DOUBLE, lineage STRING")
     return spark.createDataFrame(rows, schema=schema) if rows else spark.createDataFrame([], schema)
 
 
@@ -120,12 +122,23 @@ def run_extract_job(
     one wave of work — argues for SHORT waves). A time target keeps both
     bounded regardless of how document cost varies across the keyspace.
     """
+    manifest = load_manifest(out_dir)
+    # a partition id means a different key range under another P: resuming
+    # across P would skip the wrong urls and never complete
+    other = {rec.get("checkpoint_partitions") for rec in manifest.values()} - {checkpoint_partitions}
+    if other:
+        raise ValueError(
+            f"{out_dir} holds partitions committed with checkpoint_partitions="
+            f"{', '.join(map(str, sorted(other, key=str)))}; this run asks for "
+            f"checkpoint_partitions={checkpoint_partitions} — resume with the same "
+            "value or write to a new directory"
+        )
+    done = set(manifest)
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # restored in the finally: a wave that raises must not leave dynamic
     # overwrite behind in the caller's session
     try:
-        done = set(load_manifest(out_dir))
         pending = [p for p in range(checkpoint_partitions) if p not in done]
         wave_size = max(1, (len(pending) + waves - 1) // waves) if pending else 1
 
@@ -195,6 +208,7 @@ def run_extract_job(
                     out_dir,
                     {
                         "partition_id": int(pid),
+                        "checkpoint_partitions": checkpoint_partitions,
                         "docs": int(r["docs"]) if r else 0,
                         "bytes": int(r["bytes"] or 0) if r else 0,
                         "tokens": int(r["tokens"] or 0) if r else 0,

@@ -12,7 +12,7 @@ import pytest
 
 from b_pdf_parser_spark import fields
 from b_pdf_parser_spark.htmlmodel import extract_html_text
-from b_pdf_parser_spark.pdfmodel import extract_pdf_pages, extract_pdf_pages_and_tables
+from b_pdf_parser_spark.pdfmodel import extract_pdf_pages_and_tables
 
 from tools.genfixtures import metadata_csv, transactions_csv
 
@@ -39,7 +39,7 @@ def _extract(payload):
 @pytest.mark.parametrize("name", PDF_DOCS)
 def test_pdf_text_byte_identical(name, fixtures_dir):
     payload = (fixtures_dir / f"{name}.pdf").read_bytes()
-    pages = extract_pdf_pages(payload)
+    pages = extract_pdf_pages_and_tables(payload)[0]
     full = "".join(p + "\n" for p in pages)
     expected = (fixtures_dir / f"{name}.expected_text.txt").read_bytes()
     assert full.encode("utf-8") == expected
@@ -129,7 +129,7 @@ def test_d16_intersection_features_all_present(fixtures_dir):
     assert any(isinstance(v, _SimpleFontDecoder) for v in fonts.values())
     content = doc.page_content(page)
     assert b"BI /W" in content and b"(phantom) Tj" in content
-    text = "".join(p + "\n" for p in __import__("b_pdf_parser_spark.pdfmodel", fromlist=["x"]).extract_pdf_pages(payload))
+    text = "".join(p + "\n" for p in extract_pdf_pages_and_tables(payload)[0])
     assert "phantom" not in text and "swallow" not in text
     assert "No. Rekening" in text
 
@@ -230,7 +230,7 @@ def test_d19_intersection_features_all_present(fixtures_dir):
     image whose payload carries fake text operators, and a /Differences
     table remapping live codes."""
     from b_pdf_parser_spark.pdfmodel import (PdfDocument, _SimpleFontDecoder,
-                                             extract_pdf_pages)
+                                             extract_pdf_pages_and_tables)
 
     payload = (fixtures_dir / "d19_enc_inline_diffs.pdf").read_bytes()
     assert b"/AESV2" in payload
@@ -242,7 +242,7 @@ def test_d19_intersection_features_all_present(fixtures_dir):
     assert b"BI /W" in content and b"(phantom) Tj" in content
     fonts = doc.page_fonts(page)
     assert any(isinstance(v, _SimpleFontDecoder) for v in fonts.values())
-    text = "".join(p + "\n" for p in extract_pdf_pages(payload))
+    text = "".join(p + "\n" for p in extract_pdf_pages_and_tables(payload)[0])
     assert "phantom" not in text and "swallow" not in text
     assert "No. Rekening" in text
 

@@ -5,7 +5,7 @@ tests/test_entry_oracle.py.)"""
 
 import pytest
 
-from b_pdf_parser_spark.pdfmodel import extract_pdf_pages, image_inventory
+from b_pdf_parser_spark.pdfmodel import extract_pdf_pages_and_tables, image_inventory
 from b_pdf_parser_spark.pdfwriter import build_pdf, make_image
 
 SPANS = [
@@ -38,8 +38,8 @@ def test_image_roundtrip_all_modes(xref_stream, type0):
 def test_images_do_not_perturb_text(xref_stream, type0):
     with_imgs = build_pdf(SPANS, xref_stream=xref_stream, type0=type0, images=IMAGES)
     without = build_pdf(SPANS, xref_stream=xref_stream, type0=type0)
-    assert extract_pdf_pages(with_imgs) == extract_pdf_pages(without)
-    assert extract_pdf_pages(with_imgs)[0] == "Hello world\nLine two\n"
+    assert extract_pdf_pages_and_tables(with_imgs)[0] == extract_pdf_pages_and_tables(without)[0]
+    assert extract_pdf_pages_and_tables(with_imgs)[0][0] == "Hello world\nLine two\n"
     assert image_inventory(without) == []
 
 

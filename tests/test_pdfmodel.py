@@ -15,7 +15,7 @@ from b_pdf_parser_spark.pdfwriter import build_pdf, pdf_from_lines
 def _pdf_text(data: bytes) -> str:
     """Whole-document text as the extraction kernel joins it: every page's
     text followed by one extra ``"\\n"``."""
-    return "".join(pt + "\n" for pt in pm.extract_pdf_pages(data))
+    return "".join(pt + "\n" for pt in pm.extract_pdf_pages_and_tables(data)[0])
 
 
 # ---- lexer ----------------------------------------------------------------
@@ -372,7 +372,7 @@ def test_flate_bomb_is_an_error_row(monkeypatch):
 def test_roundtrip_all_variants(xref_stream, td_ops, compress):
     lines = [["alpha beta", "gamma (delta)", "1.234.567,89"], ["page two"]]
     pdf = pdf_from_lines(lines, xref_stream=xref_stream, td_ops=td_ops, compress=compress)
-    pages = pm.extract_pdf_pages(pdf)
+    pages = pm.extract_pdf_pages_and_tables(pdf)[0]
     assert pages == ["alpha beta\ngamma (delta)\n1.234.567,89\n", "page two\n"]
     assert _pdf_text(pdf) == (
         "alpha beta\ngamma (delta)\n1.234.567,89\n\npage two\n\n"
@@ -391,7 +391,7 @@ def test_type0_roundtrip_all_variants():
     for xs in (False, True):
         for td in (False, True):
             pdf = pdf_from_lines(lines, type0=True, xref_stream=xs, td_ops=td)
-            assert pm.extract_pdf_pages(pdf) == [
+            assert pm.extract_pdf_pages_and_tables(pdf)[0] == [
                 "alpha beta\ngamma (delta)\n1.234.567,89\n", "page two\n"
             ], (xs, td)
     # the payload carries no literal text — decode must walk the CMap
@@ -456,8 +456,6 @@ def test_pages_and_tables_roundtrip():
                             "0,00", "5.000,00", "1.000,00"]
     assert "No. Rekening\n" in pages[0]
     assert "01/01/24 10:00:00 TRANSFER MASUK 1234567 0,00 5.000,00 1.000,00\n" in pages[0]
-    # text-only API unchanged (no tables in its output)
-    assert pm.extract_pdf_pages(pdf) == pages
 
 
 def test_tables_need_min_rows_and_cols():
@@ -523,7 +521,7 @@ def test_never_raises_anything_but_pdferror(data):
 def test_writer_parser_roundtrip_property(pagelines, xs, td):
     # strip() because layout join collapses leading/trailing whitespace
     pdf = pdf_from_lines(pagelines, xref_stream=xs, td_ops=td)
-    got = pm.extract_pdf_pages(pdf)
+    got = pm.extract_pdf_pages_and_tables(pdf)[0]
     expected = [
         "".join(" ".join(ln.split()) + "\n" for ln in page if ln.split()) for page in pagelines
     ]

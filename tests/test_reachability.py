@@ -13,8 +13,10 @@ its definition). A name that several imports in one module bind, such as
 one local alias per function, resolves to every one of them. Only an
 attribute the resolver cannot place (``obj.method``) falls back to every
 top-level definition of that name, so a live definition does not keep a
-same-named dead one in another module alive. A definition only a test
-calls is test-only code: it goes, or moves into the test that uses it."""
+same-named dead one in another module alive. There is no exemption: a
+definition only a test calls is test-only code, and it goes or moves into
+the test that uses it (a reference a test compares the package against
+lives in that test)."""
 
 import ast
 from pathlib import Path
@@ -24,21 +26,6 @@ MODULES = [*sorted(ROOT.glob("b_pdf_parser_spark/**/*.py")), ROOT / "__spark_ent
 RUNNERS = [*ROOT.glob("jobs/*.py"), *ROOT.glob("perfbench/*.py"), *ROOT.glob("tools/*.py"),
            ROOT / "bench.py", ROOT / "bench_extra.py"]
 CONTRACT = {"entry", "queries", "extra_queries", "oracle_sql", "extra_oracle_sql"}
-
-# kept with no caller outside tests: a whole module, or ``module::name``
-ALLOWED = {
-    "b_pdf_parser_spark/plans/transactions_relational.py":
-        "the relational transaction extraction the kernel's strategy chain is compared against",
-    "b_pdf_parser_spark/sources/warc.py":
-        "WARC/WET container readers (and the writers their tests build input with)",
-    "b_pdf_parser_spark/sources/sinks.py":
-        "the reference's CSV/JSONL outputs S7-S9 and the bucketed sink",
-    "b_pdf_parser_spark/functions/numbers.py::normalize_number_col":
-        "the reference's number normalisation behind its CSV outputs",
-    "b_pdf_parser_spark/pdfmodel.py::extract_pdf_pages":
-        "the reference backends' per-page text contract",
-}
-
 
 def _module_path(dotted: str):
     """``a.b.c`` → ``a/b/c.py`` or ``a/b/c/__init__.py`` under the repo root,
@@ -180,10 +167,6 @@ def _walk(table: dict, roots: set) -> set:
 def test_every_definition_is_reached_outside_tests():
     table = {p.relative_to(ROOT).as_posix(): _scan(p) for p in MODULES}
     roots = {("__spark_entry__.py", None, ("name", n)) for n in CONTRACT}
-    for key in ALLOWED:
-        mod, _, name = key.partition("::")
-        assert mod in table and (not name or name in table[mod][0]), f"stale allowlist entry {key}"
-        roots |= {(mod, None, ("name", d)) for d in ([name] if name else table[mod][0])}
     for path in RUNNERS:  # a runner is read whole: everything it names is a root
         tree = ast.parse(path.read_text())
         table[path.relative_to(ROOT).as_posix()] = ({}, _refs(tree), _imports(path, [tree]))

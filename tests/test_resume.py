@@ -61,6 +61,21 @@ def test_rerun_of_complete_job_is_noop(spark, tmp_path):
     assert spark.read.parquet(f"{out}/extracted").count() == 40
 
 
+def test_resume_with_other_checkpoint_partitions_raises(spark, tmp_path):
+    # an id names a different key range under another P: a resume at P=4 of
+    # a P=8 run would skip ids 0-3 as done and never report complete
+    out = str(tmp_path / "job_p")
+    pages = synth_pages_df(spark, 40, seed=11, num_partitions=2)
+    run_extract_job(spark, pages, out, checkpoint_partitions=8, waves=4,
+                    max_waves=1, num_partitions=4)
+    before = load_manifest(out)
+    with pytest.raises(ValueError, match=r"checkpoint_partitions=8\b.*checkpoint_partitions=4\b"):
+        run_extract_job(spark, pages, out, checkpoint_partitions=4, waves=2, num_partitions=4)
+    assert load_manifest(out) == before  # no wave ran
+    assert {r["checkpoint_partitions"] for r in before.values()} == {8}
+    assert load_metrics(spark, out).select("checkpoint_partitions").distinct().collect()[0][0] == 8
+
+
 def test_empty_wave_does_not_crash(spark, tmp_path):
     # 10 docs over 64 partitions / 8 waves: most waves match zero urls —
     # the metrics read-back must tolerate an output dir with no files yet
@@ -139,8 +154,9 @@ def test_wet_output_resumes_without_duplicates(spark, tmp_path):
     # into exactly-once WET coverage (per-pid subdirs cleared and rewritten)
     import pyspark.sql.functions as F
 
+    from conftest import read_wet
+
     from b_pdf_parser_spark.sources.pages import synth_pages_df
-    from b_pdf_parser_spark.sources.warc import read_wet
 
     pages = synth_pages_df(spark, 200, seed=5, num_partitions=4)
     out = str(tmp_path / "job")
